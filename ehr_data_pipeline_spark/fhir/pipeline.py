@@ -9,10 +9,9 @@ route → extract → clean — that executes exactly once, when the sink
 writes it. Consequences at 100 TB:
 
 - ONE distributed parse of the bundle files total: the direct path
-  persists the shared exploded scan (``single_parse``, SURVEY §2.2 P1 —
-  "6× filter over one cached exploded scan"), the staged path lands it
-  as bronze parquet; ``single_parse=False`` opts back into fully
-  independent per-entity plans (6 parses);
+  persists the shared exploded scan (SURVEY §2.2 P1 — "6× filter over
+  one cached exploded scan"), the staged path lands it as bronze
+  parquet;
 - cleaning row counts (the reference's ``len(df)`` logging, A6) ride
   along as ``observe()`` metrics on the write action instead of forcing
   extra ``count()`` scans;
@@ -28,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ehr_data_pipeline_spark.fhir.clean import CLEANERS
 from ehr_data_pipeline_spark.fhir.extract import extract_all
-from ehr_data_pipeline_spark.fhir.ingest import read_and_route
 from ehr_data_pipeline_spark.fhir.quality import fhir_quality_report
 from ehr_data_pipeline_spark.operators.quality import row_count_observer
 from ehr_data_pipeline_spark.sinks import write_entity_tables
@@ -41,8 +39,8 @@ class PipelineResult:
     report (lazy; collect to render).
 
     ``source`` is the persisted exploded-entry frame (pruned to the
-    consumed-field union) when the direct single-parse path was taken
-    (``stage_dir=None, single_parse=True``); its cache lives until
+    consumed-field union) when the direct path was taken
+    (``stage_dir=None``); its cache lives until
     :meth:`release`, an explicit ``spark.catalog.clearCache()``, or
     session end. Call ``release()`` once you are done re-running the
     returned plans. On the sink path (``output_dir`` set) the pipeline
@@ -58,7 +56,7 @@ class PipelineResult:
 
     def release(self) -> None:
         """Unpersist the shared exploded-entry cache (no-op for the
-        staged path or ``single_parse=False``). The returned plans stay
+        staged path). The returned plans stay
         runnable afterwards — they fall back to re-parsing the input."""
         if self.source is not None:
             self.source.unpersist()
@@ -103,7 +101,6 @@ def run_pipeline(
     fmt: str = "parquet",
     quality: bool = True,
     stage_dir: str | None = None,
-    single_parse: bool = True,
 ) -> PipelineResult:
     """Run the full ETL over a directory of FHIR bundle JSON files.
 
@@ -120,16 +117,13 @@ def run_pipeline(
     At 100 TB this is the recommended pattern (raw JSON → durable bronze
     columnar once; re-runs never touch the raw files again).
 
-    ``single_parse`` (direct path only, default on) persists the shared
-    exploded-entry scan so the six entity plans materialize it ONCE
+    Without ``stage_dir`` (the direct path) the shared exploded-entry
+    scan is persisted so the six entity plans materialize it ONCE
     instead of each re-running the multiLine JSON parse — SURVEY §2.2's
     P1 mapping ("6× filter over one cached exploded scan"). The persist
     is lazy, so plan laziness is fully preserved (nothing executes until
     an action); the only semantic addition is an explicit cache lifetime,
-    surfaced as ``PipelineResult.source`` / ``.release()``. Set
-    ``single_parse=False`` to get six independent re-parsing plans (the
-    pre-r9 behavior — right only when a single entity will ever be
-    forced). Sizing note: the cache is MEMORY_AND_DISK over the exploded
+    surfaced as ``PipelineResult.source`` / ``.release()``. Sizing note: the cache is MEMORY_AND_DISK over the exploded
     entries PRUNED to the consumed-field union
     (:func:`~ehr_data_pipeline_spark.fhir.ingest.prune_unconsumed` —
     photo/narrative/identifier never reach the cache), so cluster
@@ -163,7 +157,7 @@ def run_pipeline(
             )
         ).write.mode("overwrite").parquet(stage_dir)
         routed = route_resources(spark.read.parquet(stage_dir))
-    elif single_parse:
+    else:
         from pyspark import StorageLevel
 
         from ehr_data_pipeline_spark.fhir.ingest import (
@@ -210,8 +204,6 @@ def run_pipeline(
             )
         ).persist(StorageLevel.MEMORY_AND_DISK)
         routed = route_resources(entries_view(source))
-    else:
-        routed = read_and_route(spark, input_dir)
     extracted = extract_all(routed)
     report = fhir_quality_report(extracted) if quality else None
 

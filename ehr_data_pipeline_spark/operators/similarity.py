@@ -488,7 +488,6 @@ def lsh_near_dup_pairs(
     n_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_groups: bool = True,
 ) -> DataFrame:
     """Approximate embedding-cosine near-dup pairs — the 100 TB path.
     Candidate pairs are rows sharing a hyperplane-LSH bucket in ANY of
@@ -527,18 +526,16 @@ def lsh_near_dup_pairs(
 
     Invalid vectors are excluded at entry per the embeddings contract
     (functions/measurement.py); ``dim=None`` infers it from the data.
-    ``persist_groups`` caches the identical-vector grouping (it feeds
-    the rep pipeline plus both expansion joins — 3 consumers; without
-    the cache the scan + group window recompute per consumer); cache
-    lifetime as documented at ``text_dedup.release_builder_caches``."""
+    The identical-vector grouping is persisted (it feeds the rep
+    pipeline plus both expansion joins — 3 consumers; without the cache
+    the scan + group window recompute per consumer); cache lifetime as
+    documented at ``text_dedup.release_builder_caches``."""
     from ehr_data_pipeline_spark.operators.text_dedup import _persist_tracked
 
     dim = _resolve_dim(df, dim, id_col, vec_col)
     if dim is None:
         return _empty_pairs(df, id_col)
-    mem = _vector_groups(df, id_col, vec_col, dim)
-    if persist_groups:
-        mem = _persist_tracked(mem)
+    mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
     pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
     ma = mem.select(F.col("__rid").alias("ra"), F.col("__id").alias("__ma"))
     mb = mem.select(F.col("__rid").alias("rb"), F.col("__id").alias("__mb"))
@@ -564,7 +561,6 @@ def lsh_near_dup_groups(
     n_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_groups: bool = True,
 ) -> DataFrame:
     """Near-dup GROUP membership — the production dedup surface
     (VERDICT r7 #1): (id, group_id) for every vector that belongs to a
@@ -595,9 +591,7 @@ def lsh_near_dup_groups(
         return df.select(
             F.col(id_col), F.col(id_col).alias("group_id")
         ).limit(0)
-    mem = _vector_groups(df, id_col, vec_col, dim)
-    if persist_groups:
-        mem = _persist_tracked(mem)
+    mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
     cross = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables).where(
         F.col("ra") != F.col("rb")
     )
@@ -624,17 +618,6 @@ def lsh_near_dup_groups(
     )
 
 
-def _sq_dist_to_literal_d(v: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance from an already-double vector to a literal
-    centroid — zip_with/aggregate fold."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _double_sql(x: float) -> str:
     """Lossless Spark-SQL DOUBLE literal: ``repr`` is Python's shortest
     round-trip decimal and Java's ``parseDouble`` is correctly rounded,
@@ -647,9 +630,10 @@ def _double_sql(x: float) -> str:
 
 
 def _sq_dist_sql(v: str, centroid: list[float]) -> str:
-    """SQL text of :func:`_sq_dist_to_literal_d` over the bound variable
-    ``v`` — the identical aggregate/zip_with fold, rendered as ONE parse
-    unit instead of ~4·dim py4j expression-builder calls."""
+    """SQL text of the squared L2 distance from the already-double bound
+    variable ``v`` to a literal centroid — an aggregate/zip_with fold,
+    rendered as ONE parse unit instead of ~4·dim py4j expression-builder
+    calls."""
     arr = ", ".join(_double_sql(x) for x in centroid)
     return (
         f"aggregate(zip_with({v}, array({arr}), (x, y) -> (x - y) * (x - y)), "
@@ -658,50 +642,31 @@ def _sq_dist_sql(v: str, centroid: list[float]) -> str:
 
 
 def _centroid_dists(
-    vec: "Column | str", centroids: list[tuple[int, list[float]]]
+    vec: str, centroids: list[tuple[int, list[float]]]
 ) -> Column:
-    """Array of (squared distance, centroid id) structs — sortable, so
-    argmin = element 1 of array_sort (distance first, id tiebreak). The
-    double-cast vector is let-bound once across all centroid folds.
+    """Array of (squared distance, centroid id) structs for the vector
+    column named ``vec`` — sortable, so argmin = element 1 of array_sort
+    (distance first, id tiebreak). The double-cast vector is let-bound
+    once across all centroid folds.
 
-    Pass the vector COLUMN NAME (str) on production paths: the whole
-    k·dim-literal expression is then rendered as one SQL string and
+    The whole k·dim-literal expression is rendered as one SQL string and
     parsed in a single ``F.expr`` call — the r15 fix for the measured
     driver-side construction tax (building the same tree through the
     Column API is ~k·dim py4j round trips ≈ 1.3–1.8 s per ivf_knn call
     at k=8, dim=64, and it serializes on the driver, which is why
     emb_semantic_dedup scaled BACKWARDS with cores in PERF_r14). The
-    parsed expression is operator-identical — same aggregate/zip_with
-    fold, same named_struct/array_sort, double literals round-trip via
-    repr — pinned against the Column form in
-    tests/test_r15_optimizations.py. A Column argument keeps the
-    original builder (the reference twin the tests compare against)."""
-    from ehr_data_pipeline_spark.operators.text_analysis import let_bound
-
-    if isinstance(vec, str):
-        structs = ", ".join(
-            f"named_struct('dist', {_sq_dist_sql('__vd', cvec)}, 'cid', {int(cid)})"
-            for cid, cvec in centroids
-        )
-        return F.expr(
-            f"transform(array(transform(`{vec}`, x -> CAST(x AS DOUBLE))), "
-            f"__vd -> array_sort(array({structs})))[0]"
-        )
-
-    def dists(v: Column) -> Column:
-        return F.array_sort(
-            F.array(
-                *[
-                    F.struct(
-                        _sq_dist_to_literal_d(v, cvec).alias("dist"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, cvec in centroids
-                ]
-            )
-        )
-
-    return let_bound(to_double(vec), dists)
+    parsed expression is operator-identical to the Column-builder form —
+    same aggregate/zip_with fold, same named_struct/array_sort, double
+    literals round-trip via repr — pinned against that reference in
+    tests/test_similarity.py."""
+    structs = ", ".join(
+        f"named_struct('dist', {_sq_dist_sql('__vd', cvec)}, 'cid', {int(cid)})"
+        for cid, cvec in centroids
+    )
+    return F.expr(
+        f"transform(array(transform(`{vec}`, x -> CAST(x AS DOUBLE))), "
+        f"__vd -> array_sort(array({structs})))[0]"
+    )
 
 
 # Above this many literal-fold multiplications per row (k centroids ×
@@ -950,7 +915,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: "int | None" = None,
-    persist_groups: bool = True,
     target_cluster_size: int = 1024,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1014,9 +978,7 @@ def semantic_dedup(
 
     if dim is None:
         return empty()
-    mem = _vector_groups(df, id_col, vec_col, dim)
-    if persist_groups:
-        mem = _persist_tracked(mem)
+    mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
     if n_clusters is None:
         # exact distinct-vector count as ONE map-side-partial aggregate
         # over the source scan — NOT a count over the group frame, which
@@ -1041,14 +1003,12 @@ def semantic_dedup(
     # assignment is consumed three times (both pairwise sides + the
     # member join); persist so the argmin — the dominant term once k
     # scales with the corpus — runs once per rep, not three times
-    assigned = _assign_cells(
+    assigned = _persist_tracked(_assign_cells(
         mem.where(F.col("__id") == F.col("__rid")).select(
             F.col("__id").alias("__rid"), F.col("__v").alias("__rv")
         ),
         centroids, "__rv", "__cid",
-    )
-    if persist_groups:
-        assigned = _persist_tracked(assigned)
+    ))
     a = assigned.select(
         F.col("__rid").alias("__xa"), F.col("__rv").alias("__va"), "__cid"
     )
@@ -1326,78 +1286,6 @@ def _round_half_up_6(arr):
     return fast
 
 
-def brute_force_knn_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy — the vectorized
-    alternative to :func:`brute_force_knn` for when per-element Catalyst
-    folds become the bottleneck (wide vectors × large corpora): each
-    mapInPandas batch scores ALL queries against its corpus slice with
-    ONE BLAS matmul instead of |Q|·|C| interpreted folds, then a partial
-    top-k per partition bounds the shuffle to k rows per (query,
-    partition); the final window rank merges partials. Same output
-    contract and the same ROUND(cosine,6)+id tiebreak as the native path
-    (equivalence asserted in tests). The query set collects to the driver
-    and broadcasts inside the closure — same smallness assumption the
-    native path's F.broadcast makes."""
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = [r[0] for r in q_rows]
-    q_mat = [[float(x) for x in r[1]] for r in q_rows]
-    out_schema = "query_id long, neighbor_id long, cosine double"
-
-    def score(batches):
-        import numpy as np
-
-        qm = np.asarray(q_mat, dtype=np.float64)
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        qid = np.asarray(q_ids)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = _round_half_up_6(qn @ cn.T)  # |Q| × |batch|
-            cid = pdf[id_col].to_numpy()
-            frames = []
-            for i in range(len(qid)):
-                mask = cid != qid[i]
-                s = sims[i][mask]
-                ids = cid[mask]
-                # partial top-k (value desc, id asc) within the batch
-                order = np.lexsort((ids, -s))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid[i],
-                            "neighbor_id": ids[order],
-                            "cosine": s[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    partials = ensure_min_partitions(corpus).select(id_col, vec_col).mapInPandas(
-        score, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
 def cosine_near_dup_pairs_arrow(
     df: DataFrame,
     threshold: float = 0.4,
@@ -1413,10 +1301,10 @@ def cosine_near_dup_pairs_arrow(
     matrix collects to the driver and broadcasts inside the closure —
     the same all-pairs-verification smallness assumption the native twin
     makes (the 100 TB path is :func:`lsh_near_dup_pairs`). Rounding uses
-    the HALF_UP parity helper, so values agree with the native path to
-    the same tolerance ``brute_force_knn_arrow`` is tested to.
+    the HALF_UP parity helper, so values agree with the native path
+    (pinned in tests/test_similarity.py).
 
-    The corpus collects EAGERLY (at construction, like the kNN twin) and
+    The corpus collects EAGERLY (at construction) and
     ships to executors as a numpy sparkContext.broadcast — one transfer
     and one driver-side normalization, not a pickled list-of-lists
     re-converted inside every task."""

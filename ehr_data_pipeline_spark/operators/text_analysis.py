@@ -143,7 +143,7 @@ def bpe_pair_counts(
             # lookahead captures the 2-gram at every position — exactly
             # the old transform(sequence, substring(w, i, 2)) values in
             # order, without an interpreted substring per position
-            # (pinned in tests/test_r15_optimizations.py)
+            # (pinned in tests/test_text_analysis.py)
             F.explode(
                 F.regexp_extract_all(
                     F.col("__w"), F.lit("(?s)(?=(.{2}))."), F.lit(1)
@@ -334,7 +334,7 @@ def bpe_symbol_pair_counts(
             # element_at i, element_at i+1)) whose interpreted element_at
             # pair ran per symbol position. Same (l, r) rows in the same
             # order — slice(a,1,m)[j] = a[j], slice(a,2,m)[j] = a[j+1] —
-            # pinned in tests/test_r15_optimizations.py.
+            # pinned in tests/test_text_analysis.py.
             F.explode(
                 F.arrays_zip(
                     F.slice(F.col("__a"), 1, m).alias("l"),
@@ -410,92 +410,17 @@ def bpe_trainer_rounds(
     sep: str = BPE_SEP,
     pretokenizer: str = "word",
 ) -> DataFrame:
-    """END-TO-END distributed BPE vocabulary training for ``n_rounds``
-    merges (VERDICT r10 #5 — the round-k retokenizer that was the
-    missing piece): each round counts adjacent symbol pairs across the
-    corpus (:func:`bpe_symbol_pair_counts`), takes the argmax under the
-    total order (count desc, l asc, r asc), and RETOKENIZES the state by
-    fusing every leftmost non-overlapping occurrence of that pair —
-    exact left-greedy merge-apply over WHOLE symbols via
-    :func:`_bpe_apply_merge` (boundary-anchored replaces for l != r,
-    a left fold for same-symbol merges; see its docstring for why a
-    bare substring replace is wrong). Sequentiality across rounds is
-    inherent to BPE (round k's statistics are over round k-1's state);
-    the distributed part — the corpus-wide count and rewrite — is what
-    runs on the cluster, and the driver holds only the k-row merge
-    table, exactly like production trainers.
-
-    Returns one row per executed round: ``round, merge_left,
-    merge_right, merged, n_pairs`` (the pair's adjacency count when
-    selected) and ``corpus_tokens_after`` (total symbols after applying
-    the merge — each round strictly decreases it by the pair's
-    non-overlapping occurrence count). Stops early if no pairs remain.
-
-    ``pretokenizer`` selects the round-0 state builder: ``"word"``
-    (:func:`bpe_initial_state` — normalized ASCII word pretokens,
-    char symbols) or ``"byte"`` (:func:`bpe_initial_state_bytes` —
-    GPT-2-style case/whitespace-preserving pretokens, UTF-8 bytes as
-    hex-pair symbols). Every round downstream is symbol-agnostic, so
-    the two share ALL the state machinery — the byte path differs only
-    in its initial state, exactly the contract production tokenizers
-    (GPT-2/tiktoken) follow.
-
-    Scale: each round persists its state (one narrow rewrite of the
-    previous), runs one bounded-key groupBy and one scalar aggregate,
-    and unpersists the predecessor — peak storage is two corpus-sized
-    states, per-round cost is linear, and nothing driver-sized but the
-    merge table itself. CORPUS-size scaling is measured (SCALE_RATIOS:
-    wall ×6.4 at input ×10, shuffle/input ≈ 0); the VOCAB-size bound is
-    the 2 driver-coordinated Spark jobs per merge — exact and fine at
-    small k, ~100k job launches at a production 50k-merge vocabulary
-    (each cheap, but driver-round-trip-bound). For large vocabularies
-    use :func:`bpe_batched_trainer_rounds`, which selects up to
-    ``batch_size`` pairwise-compatible merges per round from one count
-    pass (the standard fast-BPE batching trick), amortizing the job
-    count to 2 per ROUND (VERDICT r12 #3)."""
-    builders = {"word": bpe_initial_state, "byte": bpe_initial_state_bytes}
-    if pretokenizer not in builders:
-        raise ValueError(
-            f"pretokenizer must be one of {sorted(builders)}, "
-            f"got {pretokenizer!r}"
-        )
-    spark = df.sparkSession
-    state = builders[pretokenizer](df, text_col, sep).persist()
-    rows: list = []
-    retained = [state]
-    try:
-        for rnd in range(1, n_rounds + 1):
-            top = (
-                bpe_symbol_pair_counts(state, sep)
-                .orderBy(
-                    F.col("n_pairs").desc(),
-                    F.col("l").asc(),
-                    F.col("r").asc(),
-                )
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            l, r, n = top[0]["l"], top[0]["r"], top[0]["n_pairs"]
-            state = state.withColumn(
-                "syms", _bpe_apply_merge(F.col("syms"), l, r, sep)
-            ).persist()
-            retained.append(state)
-            tokens_after = state.agg(
-                F.sum(F.size(F.split(F.col("syms"), sep))).alias("n")
-            ).collect()[0]["n"]
-            rows.append((rnd, l, r, l + r, n, tokens_after))
-            # predecessor no longer feeds anything — release it
-            retained.pop(0).unpersist()
-    finally:
-        for s in retained:
-            s.unpersist()
-    return spark.createDataFrame(
-        rows,
-        "round int, merge_left string, merge_right string, merged string, "
-        "n_pairs bigint, corpus_tokens_after bigint",
-    )
+    """Sequential BPE training — ``n_rounds`` merges, ONE per round:
+    :func:`bpe_batched_trainer_rounds` with ``batch_size=1`` (the
+    compatibility filter is vacuous, so every merge is the exact argmax
+    over the previous merge's state). Returns one row per executed
+    round: ``round, merge_left, merge_right, merged, n_pairs,
+    corpus_tokens_after`` — each round strictly decreases the token
+    count by the pair's non-overlapping occurrence count. Stops early if
+    no pairs remain."""
+    return bpe_batched_trainer_rounds(
+        df, text_col, n_rounds, 1, sep, pretokenizer
+    ).drop("pos")
 
 
 def _select_compatible_pairs(
@@ -537,57 +462,61 @@ def bpe_batched_trainer_rounds(
     batch_size: int = 3,
     sep: str = BPE_SEP,
     pretokenizer: str = "word",
-    candidate_window: "int | None" = None,
-    grow_window: bool = False,
 ) -> DataFrame:
-    """Batched distributed BPE training — the VOCAB-size scale path of
-    :func:`bpe_trainer_rounds` (VERDICT r12 #3): each round runs ONE
-    corpus-wide pair count, collects the top ``candidate_window``
-    (default ``8 * batch_size``) pairs under the trainer's total order
-    (count desc, l asc, r asc), greedily keeps up to ``batch_size``
-    pairwise-compatible merges (:func:`_select_compatible_pairs` — no
-    kept pair shares an element with, or contains the merged symbol
-    of, an earlier kept pair, so earlier merges provably can't disturb
-    later ones and the one-shot batch apply equals sequential
-    application IN SELECTION ORDER — the directional law; see the
-    selector's docstring for the boundary), and retokenizes the state
-    ONCE with all of them chained through :func:`_bpe_apply_merge` in
-    that order. This is the standard fast-BPE
-    batching trick (applied by every production trainer that doesn't
-    want merge-count-many scans): 2 Spark jobs per ROUND instead of
-    per MERGE, so a 50k-merge vocabulary at batch_size 256 costs ~400
-    driver round-trips instead of ~100k, while the corpus-side work
-    per round stays one bounded-key groupBy + one narrow rewrite.
+    """END-TO-END distributed BPE vocabulary training (VERDICT r10 #5,
+    r12 #3): each round counts adjacent symbol pairs across the corpus
+    (:func:`bpe_symbol_pair_counts`), collects the top ``8 * batch_size``
+    pairs under the total order (count desc, l asc, r asc), greedily
+    keeps up to ``batch_size`` pairwise-compatible merges
+    (:func:`_select_compatible_pairs` — no kept pair shares an element
+    with, or contains the merged symbol of, an earlier kept pair, so
+    earlier merges provably can't disturb later ones and the one-shot
+    batch apply equals sequential application IN SELECTION ORDER — the
+    directional law; see the selector's docstring for the boundary), and
+    RETOKENIZES the state ONCE with all of them chained through
+    :func:`_bpe_apply_merge` in that order — exact left-greedy
+    merge-apply over WHOLE symbols (boundary-anchored replaces for
+    l != r, a left fold for same-symbol merges; see its docstring for
+    why a bare substring replace is wrong). Sequentiality across rounds
+    is inherent to BPE (round k's statistics are over round k-1's
+    state); the distributed part — the corpus-wide count and rewrite —
+    is what runs on the cluster, and the driver holds only the
+    driver-sized candidate window and the merge table, exactly like
+    production trainers. The oracle replays the same fixed window.
 
-    The trade against the sequential trainer, stated honestly: batched
-    counts are measured at ROUND START for every merge in the batch
-    (true sequential BPE would recount after each merge), so merge
-    ORDER can differ from the exact trainer's beyond the first merge
-    of each round — with ``batch_size=1`` the two are identical (the
-    compatibility filter is vacuous), which the tests pin. Candidate
-    selection searches only the top-``candidate_window`` ranking — a
-    driver-sized window, same discipline as the sequential trainer's
-    top-1 collect — and the oracle replays the same window.
+    Batching is the standard fast-BPE trick: 2 Spark jobs per ROUND
+    instead of per MERGE, so a 50k-merge vocabulary at batch_size 256
+    costs ~400 driver round-trips instead of ~100k, while the
+    corpus-side work per round stays one bounded-key groupBy + one
+    narrow rewrite. The trade, stated honestly: batched counts are
+    measured at ROUND START for every merge in the batch (true
+    sequential BPE would recount after each merge), so merge ORDER can
+    differ from the exact sequential trainer beyond the first merge of
+    each round. ``batch_size=1`` IS the exact sequential trainer
+    (:func:`bpe_trainer_rounds`).
 
     Returns one row per MERGE: ``round, pos`` (1-based slot within the
     round's batch, selection order), ``merge_left, merge_right,
     merged, n_pairs`` (the pair's adjacency count at round start) and
     ``corpus_tokens_after`` (total symbols after the WHOLE round's
     batch applied — per-round, repeated on each of the round's rows).
-    Stops early when a round finds no pairs. ``pretokenizer`` as in
-    :func:`bpe_trainer_rounds`.
+    Stops early when a round finds no pairs.
 
-    ``grow_window=True`` re-collects with a 4× larger window (up to
-    64× the initial) whenever greedy fills fewer than ``batch_size``
-    slots AND the ranking was truncated at the window — the measured
-    case at batch 64 on sf0.1, where early rounds keep only 8-15 of 64
-    slots because a small symbol alphabet shares elements heavily. A
-    re-collect costs one extra driver round-trip only on the rounds
-    that need it; an UN-saturated ranking (fewer candidates than the
-    window) is already exhaustive and never retries. Off by default:
-    the driver-gated oracle replays the FIXED window, so the
-    registered query keeps the deterministic single-collect
-    semantics."""
+    ``pretokenizer`` selects the round-0 state builder: ``"word"``
+    (:func:`bpe_initial_state` — normalized ASCII word pretokens,
+    char symbols) or ``"byte"`` (:func:`bpe_initial_state_bytes` —
+    GPT-2-style case/whitespace-preserving pretokens, UTF-8 bytes as
+    hex-pair symbols). Every round downstream is symbol-agnostic, so
+    the two share ALL the state machinery — the byte path differs only
+    in its initial state, exactly the contract production tokenizers
+    (GPT-2/tiktoken) follow.
+
+    Scale: each round persists its state (one narrow rewrite of the
+    previous), runs one bounded-key groupBy and one scalar aggregate,
+    and unpersists the predecessor — peak storage is two corpus-sized
+    states, per-round cost is linear, and nothing driver-sized but the
+    candidate window and merge table. CORPUS-size scaling is measured
+    (SCALE_RATIOS: wall ×6.4 at input ×10, shuffle/input ≈ 0)."""
     builders = {"word": bpe_initial_state, "byte": bpe_initial_state_bytes}
     if pretokenizer not in builders:
         raise ValueError(
@@ -596,41 +525,25 @@ def bpe_batched_trainer_rounds(
         )
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    window = candidate_window or 8 * batch_size
     spark = df.sparkSession
     state = builders[pretokenizer](df, text_col, sep).persist()
     rows: list = []
     retained = [state]
     try:
         for rnd in range(1, n_rounds + 1):
-            counts = bpe_symbol_pair_counts(state, sep).orderBy(
-                F.col("n_pairs").desc(),
-                F.col("l").asc(),
-                F.col("r").asc(),
+            top = (
+                bpe_symbol_pair_counts(state, sep)
+                .orderBy(
+                    F.col("n_pairs").desc(),
+                    F.col("l").asc(),
+                    F.col("r").asc(),
+                )
+                .limit(8 * batch_size)
+                .collect()
             )
-            w = window
-            while True:
-                # collect ONE probe row beyond the window (ADVICE r13):
-                # exactly w rows back under limit(w) is ambiguous between
-                # "ranking truncated at w" and "the corpus has exactly w
-                # distinct pairs — already exhaustive"; the old shape
-                # treated both as truncated and burned up to 3 extra
-                # driver round-trips re-collecting identical rankings.
-                # Selection still sees ONLY the top-w rows, so kept
-                # merges are bit-identical to the fixed-window replay.
-                raw = counts.limit(w + 1).collect()
-                cands = [(r["l"], r["r"], r["n_pairs"]) for r in raw[:w]]
-                sel = _select_compatible_pairs(cands, batch_size)
-                saturated = len(raw) > w
-                if (
-                    grow_window
-                    and saturated
-                    and len(sel) < batch_size
-                    and w < 64 * window
-                ):
-                    w *= 4
-                    continue
-                break
+            sel = _select_compatible_pairs(
+                [(r["l"], r["r"], r["n_pairs"]) for r in top], batch_size
+            )
             if not sel:
                 break
             merged_col = F.col("syms")
@@ -645,6 +558,7 @@ def bpe_batched_trainer_rounds(
                 (rnd, pos, l, r, l + r, n, tokens_after)
                 for pos, (l, r, n) in enumerate(sel, start=1)
             )
+            # predecessor no longer feeds anything — release it
             retained.pop(0).unpersist()
     finally:
         for s in retained:
@@ -956,7 +870,7 @@ def word_ngram_strings(nt: Column, n: int) -> Column:
     ``size(toks) >= n`` guard; n=1 degenerates to the token split
     (including the single empty token of an empty text, which the regex
     form would drop). Pinned against the old expressions in
-    tests/test_r15_optimizations.py."""
+    tests/test_text_analysis.py."""
     if n == 1:
         return F.split(nt, " ")
     pat = f"(?=((?:[^ ]+ ){{{n - 1}}}[^ ]+))[^ ]+ ?"
@@ -971,7 +885,7 @@ def ngrams(col: Column, n: int = 2) -> Column:
     token position per shift). Value-identical: the zip_with chain
     produced exactly the space-joined runs of n consecutive tokens, which
     is what the regex captures (pinned in
-    tests/test_r15_optimizations.py)."""
+    tests/test_text_analysis.py)."""
     if n == 1:
         return whitespace_tokens(col)
     return word_ngram_strings(normalize_text(col), n)
@@ -1031,7 +945,7 @@ def kgram_hash_seq(col: Column, k: int = 8) -> Column:
     chars of the end, and texts shorter than k (including empty/null — the
     whole-text substr equals the text itself there) take the explicit
     whole-text branch. Pinned against the old expression on the unicode
-    edge corpus + fuzz in tests/test_r15_optimizations.py."""
+    edge corpus + fuzz in tests/test_text_analysis.py."""
 
     def stream(nt: Column) -> Column:
         grams = F.when(
@@ -1064,7 +978,7 @@ def winnow_from_hashes(hs: Column, w: int = 4) -> Column:
     ``array_min``. Docs shorter than w keep the explicit one-window
     branch (min of the whole array — including the [NULL] result on
     empty/null input the old shape produced). Value equality with the
-    old expression is pinned in tests/test_r15_optimizations.py."""
+    old expression is pinned in tests/test_text_analysis.py."""
     n = F.size(hs)
     t, span = hs, 1
     while span * 2 <= w:

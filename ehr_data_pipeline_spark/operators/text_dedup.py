@@ -65,7 +65,7 @@ def shingle_set(col: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
     end, and texts shorter than k (including empty/null-normalized)
     yield the same empty array. First-occurrence order of
     ``array_distinct`` is unchanged. Pinned against the old expression
-    on the unicode edge corpus + fuzz in tests/test_r14_optimizations.py."""
+    on the unicode edge corpus + fuzz in tests/test_text_dedup.py."""
     return F.array_distinct(
         F.regexp_extract_all(
             normalize_text(col), F.lit(f"(?s)(?=(.{{{k}}}))."), F.lit(1)
@@ -180,7 +180,6 @@ def jaccard_pairs_prefix(
     text_col: str = "text",
     threshold: float = 0.6,
     k: int = DEFAULT_SHINGLE_K,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs without all-pairs: prefix filtering
     (AllPairs/PPJoin, Chaudhuri et al. / Xiao et al.). Output is
@@ -221,19 +220,16 @@ def jaccard_pairs_prefix(
     This is the exact-result scale path; minhash_lsh_pairs trades exact
     recall for even fewer candidates.
 
-    ``persist_shingles`` caches the hashed shingle sets, which the plan
-    reads three times (df-count pass + two verification joins). The cache
-    is referenced by the RETURNED lazy plan, so it stays in the cache
-    registry until the caller drops the result / clears the cache — pass
-    ``False`` for a cache-free plan (3× shingle recompute) in long-lived
-    sessions that call this many times."""
+    The hashed shingle sets are persisted: the plan reads them three
+    times (df-count pass + two verification joins). The cache is
+    referenced by the RETURNED lazy plan, so it lives until
+    ``release_builder_caches()`` / ``spark.catalog.clearCache()``."""
     from pyspark.sql.window import Window
 
     base = ensure_min_partitions(df).select(
         F.col(id_col).alias("id"), hashed_shingle_set(F.col(text_col), k).alias("sh")
     ).filter(F.size("sh") > 0)
-    if persist_shingles:
-        base = _persist_tracked(base)
+    base = _persist_tracked(base)
     e = base.select("id", F.size("sh").alias("nsh"), F.explode("sh").alias("g"))
     dfreq = e.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("id").orderBy("df", "g")
@@ -246,10 +242,9 @@ def jaccard_pairs_prefix(
         )
         .select("id", "nsh", "g", "rn")
     )
-    if persist_shingles:
-        # the self-join reads pref from BOTH sides; without a persist the
-        # whole explode→df-count→window subtree is computed twice
-        pref = _persist_tracked(pref)
+    # the self-join reads pref from BOTH sides; without a persist the
+    # whole explode→df-count→window subtree is computed twice
+    pref = _persist_tracked(pref)
     # PPJoin asymmetric prefixes under the canonical (size, id) processing
     # order: the smaller doc of a pair acts as the INDEX side and only its
     # SHORTER index prefix (|y| − ceil(2t/(1+t)·|y|) + 1) participates in
@@ -302,7 +297,7 @@ def jaccard_pairs_prefix(
         )
         .distinct()
     )
-    candidates = _materialize_candidates(candidates, persist_shingles)
+    candidates = _materialize_candidates(candidates)
     return (
         candidates.join(base.alias("sa"), F.col("doc_a") == F.col("sa.id"))
         .join(base.alias("sb"), F.col("doc_b") == F.col("sb.id"))
@@ -322,8 +317,6 @@ def curate_corpus_funnel(
     min_quality: float = 0.5,
     jaccard_threshold: float = 0.8,
     k: int = DEFAULT_SHINGLE_K,
-    method: str = "prefix",
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """The composed LLM-corpus curation pipeline — the operators above
     chained the way a training-data run chains them, reported as a funnel
@@ -339,13 +332,10 @@ def curate_corpus_funnel(
        order-deterministic and transitively safe (a kept doc's dups all
        reference a lower id).
 
-    ``method`` picks the pair generator: ``"prefix"`` (default) is the
-    lossless PPJoin prefix filter — EXACTLY the all-pairs result while
+    The pairs come from the lossless PPJoin prefix filter
+    (:func:`jaccard_pairs_prefix`) — EXACTLY the all-pairs result while
     joining only rare shingles, so it is both the scale path and
-    oracle-checkable; ``"exact"`` is the brute-force all-pairs Jaccard
-    (verification only, O(n²)); ``"minhash"`` trades exact recall for
-    the fewest candidates (LSH band buckets, exact verification — same
-    (doc_a, doc_b, jaccard) contract, identical up to LSH recall)."""
+    oracle-checkable."""
     from ehr_data_pipeline_spark.operators.text_analysis import text_stats
 
     base = df.select(id_col, text_col)
@@ -354,21 +344,7 @@ def curate_corpus_funnel(
     fp = q.select(F.col(id_col), fingerprint128(F.col(text_col)).alias("__fp"))
     keep = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col)).select(id_col)
     e = q.join(keep, id_col, "left_semi")
-    if method == "exact":
-        pairs = jaccard_pairs(e, id_col, text_col, jaccard_threshold, k)
-    elif method == "prefix":
-        # persist_shingles passes through: long-lived sessions invoking
-        # the funnel repeatedly can opt out of the per-call shingle cache
-        pairs = jaccard_pairs_prefix(
-            e, id_col, text_col, jaccard_threshold, k,
-            persist_shingles=persist_shingles,
-        )
-    elif method == "minhash":
-        pairs = minhash_lsh_pairs(
-            e, id_col, text_col, threshold=jaccard_threshold, k=k
-        )
-    else:
-        raise ValueError(f"unknown pair method: {method!r}")
+    pairs = jaccard_pairs_prefix(e, id_col, text_col, jaccard_threshold, k)
     removed = pairs.select(F.col("doc_b").alias(id_col)).distinct()
     n = e.join(removed, id_col, "left_anti")
 
@@ -418,7 +394,7 @@ def _persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def _materialize_candidates(candidates: DataFrame, enabled: bool) -> DataFrame:
+def _materialize_candidates(candidates: DataFrame) -> DataFrame:
     """Persist AND materialize a candidate-pair frame before its
     verification joins. The candidate set is the narrow waist of every
     pair pipeline — two ids per row — yet leaving it lazy makes AQE plan
@@ -428,14 +404,12 @@ def _materialize_candidates(candidates: DataFrame, enabled: bool) -> DataFrame:
     identical): materializing gives the verification query exact input
     stats and its own clean stage boundary. At 100 TB the persisted set
     is still just the id pairs (MEMORY_AND_DISK spills gracefully), and
-    the extra pass is over data the verification reads anyway. Callers
-    gate it on their persist flag so cache-free lazy plans stay
-    available. NOTE this makes the builder run a Spark job at call time
-    and the cache live past the call — see release_builder_caches() for
-    the lifetime contract."""
-    if enabled:
-        candidates = _persist_tracked(candidates)
-        candidates.count()
+    the extra pass is over data the verification reads anyway. NOTE this
+    makes the builder run a Spark job at call time and the cache live
+    past the call — see release_builder_caches() for the lifetime
+    contract."""
+    candidates = _persist_tracked(candidates)
+    candidates.count()
     return candidates
 
 
@@ -477,7 +451,7 @@ def minhash_signature(hs: Column, num_hashes: int = DEFAULT_NUM_HASHES) -> Colum
     with no per-element allocation — measured 1.6× on the signature pass
     at sf0.1 with bit-identical output (min over a multiset is
     fold-order-free; equality on non-empty inputs is pinned in
-    tests/test_r14_optimizations.py). ``hs`` is let-bound so an
+    tests/test_text_dedup.py). ``hs`` is let-bound so an
     expression argument is evaluated once, not once per hash function.
 
     Empty-input contract (ADVICE r14): an empty ``hs`` yields the
@@ -585,7 +559,6 @@ def near_dedup_against_index(
     k: int = DEFAULT_SHINGLE_K,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    persist_index: bool = True,
     index_bands: DataFrame | None = None,
     sig_agree: int = 0,
 ) -> "tuple[DataFrame, DataFrame]":
@@ -632,13 +605,11 @@ def near_dedup_against_index(
     MinHash positions before its exact intersection runs (see
     :func:`_rep_minhash_pairs`); the index side carries its signature
     already (``build_minhash_index``), so the check is free to ship."""
-    grouped = _shingle_groups(batch, id_col, text_col, k, persist_index)
+    grouped = _shingle_groups(batch, id_col, text_col, k)
     reps = grouped.where(F.col("id") == F.col("__rid")).select("id", "sh")
-    rsig = reps.select(
+    rsig = _persist_tracked(reps.select(
         "id", "sh", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    )
-    if persist_index:
-        rsig = _persist_tracked(rsig)
+    ))
     bb = _band_entries(rsig, num_hashes, bands)
     ib = index_bands if index_bands is not None else _band_entries(
         index, num_hashes, bands
@@ -673,8 +644,8 @@ def near_dedup_against_index(
         )
         .select(F.col("a.id").alias("ga"), F.col("b.id").alias("gb"))
     )
-    hist_cand = _materialize_candidates(hist_cand.distinct(), persist_index)
-    self_cand = _materialize_candidates(self_cand.distinct(), persist_index)
+    hist_cand = _materialize_candidates(hist_cand.distinct())
+    self_cand = _materialize_candidates(self_cand.distinct())
 
     if sig_agree > 0:
         # ADVICE r9: if the index was built with a different num_hashes,
@@ -766,7 +737,6 @@ def _shingle_groups(
     id_col: str,
     text_col: str,
     k: int,
-    persist_index: bool,
 ) -> DataFrame:
     """Identical-shingle-set groups — the distinct-first work-avoidance
     core of the MinHash pair surfaces (the text twin of
@@ -780,7 +750,8 @@ def _shingle_groups(
     Jaccard intersections inside every shared band bucket (wall ×121.7
     at input ×10 on the duplicate-heavy replica, SCALE_RATIOS.md r7).
     One extra shuffle, on the compact 128-bit group fingerprint (a
-    partitioned window — plan-hygiene clean)."""
+    partitioned window — plan-hygiene clean). The groups are persisted
+    (every caller reads them from ≥ 3 plan branches)."""
     base = ensure_min_partitions(df).select(
         F.col(id_col).alias("id"),
         hashed_shingle_set(F.col(text_col), k).alias("sh"),
@@ -800,9 +771,7 @@ def _shingle_groups(
         # a self near-dup pair (the pair contract is doc_a < doc_b)
         F.size(F.collect_set(F.col("id")).over(gw)).alias("__n"),
     )
-    if persist_index:
-        grouped = _persist_tracked(grouped)
-    return grouped
+    return _persist_tracked(grouped)
 
 
 def _rep_minhash_pairs(
@@ -810,7 +779,6 @@ def _rep_minhash_pairs(
     threshold: float,
     num_hashes: int,
     bands: int,
-    persist_index: bool,
     sig_agree: int = 0,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) verified near-dup pairs over the DISTINCT
@@ -840,11 +808,9 @@ def _rep_minhash_pairs(
     vanishing for higher J; measured 0 lost pairs at sf0.1/sf0.01 —
     NOTES_r09)."""
     reps = grouped.where(F.col("id") == F.col("__rid")).select("id", "sh", "__n")
-    sig = reps.select(
+    sig = _persist_tracked(reps.select(
         "id", "sh", "__n", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    )
-    if persist_index:
-        sig = _persist_tracked(sig)
+    ))
 
     banded = _band_entries(sig, num_hashes, bands)
     a, b = banded.alias("a"), banded.alias("b")
@@ -865,7 +831,7 @@ def _rep_minhash_pairs(
         .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
         .distinct()
     )
-    candidates = _materialize_candidates(candidates, persist_index)
+    candidates = _materialize_candidates(candidates)
 
     if sig_agree > 0:
         # carry the 16-bigint signature through the verification join
@@ -924,7 +890,6 @@ def minhash_lsh_pairs(
     k: int = DEFAULT_SHINGLE_K,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    persist_index: bool = True,
     sig_agree: int = 0,
 ) -> DataFrame:
     """Near-dup pairs at scale: shingle → MinHash signature → band-bucket
@@ -958,15 +923,13 @@ def minhash_lsh_pairs(
     join, candidate distinct, two id-equi verification joins, two
     id-equi expansion joins — all key-partitioned, nothing all-pairs.
 
-    ``persist_index`` caches the grouped shingles + rep signatures
-    (each feeds ≥ 3 plan branches; shingling/hashing is the dominant
-    CPU) — see ``release_builder_caches`` for the cache lifetime. In a
+    The grouped shingles + rep signatures are persisted (each feeds ≥ 3
+    plan branches; shingling/hashing is the dominant CPU) — see
+    ``release_builder_caches`` for the cache lifetime. In a
     persistent 100 TB deployment the index is written ONCE bucketed by
     band key (sinks.write_bucketed) and never recomputed per run."""
-    grouped = _shingle_groups(df, id_col, text_col, k, persist_index)
-    pairs = _rep_minhash_pairs(
-        grouped, threshold, num_hashes, bands, persist_index, sig_agree
-    )
+    grouped = _shingle_groups(df, id_col, text_col, k)
+    pairs = _rep_minhash_pairs(grouped, threshold, num_hashes, bands, sig_agree)
     ma = grouped.select(F.col("__rid").alias("doc_a"), F.col("id").alias("__ma"))
     mb = grouped.select(F.col("__rid").alias("doc_b"), F.col("id").alias("__mb"))
     return (
@@ -993,7 +956,6 @@ def minhash_dup_groups(
     k: int = DEFAULT_SHINGLE_K,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    persist_index: bool = True,
     max_iter: int = 20,
     sig_agree: int = 0,
 ) -> DataFrame:
@@ -1010,9 +972,9 @@ def minhash_dup_groups(
     cluster (mutual Jaccard 1.0). Equals the transitive closure of
     :func:`minhash_lsh_pairs` exactly — the oracle replays that with a
     recursive CTE."""
-    grouped = _shingle_groups(df, id_col, text_col, k, persist_index)
+    grouped = _shingle_groups(df, id_col, text_col, k)
     cross = _rep_minhash_pairs(
-        grouped, threshold, num_hashes, bands, persist_index, sig_agree
+        grouped, threshold, num_hashes, bands, sig_agree
     ).where(F.col("doc_a") != F.col("doc_b"))
     comp = near_dup_components(cross, "doc_a", "doc_b", max_iter=max_iter)
     return (
@@ -1103,7 +1065,7 @@ def ngram_contamination(
         # word_ngram_strings over normalized text produces EXACTLY the old
         # concat_ws values in the same order, and its empty array on
         # fewer-than-n tokens replays the old size(toks) >= n guard
-        # (pinned in tests/test_r15_optimizations.py).
+        # (pinned in tests/test_text_analysis.py).
         grams = F.transform(
             word_ngram_strings(normalize_text(F.col(text_col)), n),
             portable_hash60,
@@ -1164,7 +1126,7 @@ def token_window_hashes(
     # EXACTLY the old concat_ws values in the same order — posexplode
     # positions unchanged — and its empty array on fewer-than-window
     # tokens replays the old size(toks) >= window guard (pinned in
-    # tests/test_r15_optimizations.py).
+    # tests/test_text_analysis.py).
     hashes = F.transform(
         word_ngram_strings(normalize_text(F.col(text_col)), window), F.md5
     )
@@ -1511,7 +1473,6 @@ def _simhash_groups(
     text_col: str,
     total_bits: int,
     portable: bool,
-    persist_groups: bool,
 ) -> DataFrame:
     """Identical-sketch groups — the distinct-first work-avoidance core
     of the SimHash surfaces (the sketch twin of :func:`_shingle_groups`):
@@ -1545,7 +1506,9 @@ def _simhash_groups(
     partial aggregation — negligible next to the window shuffle that
     follows; the interpreter tax it removes scales with TOKENS, not
     rows. Equality with the fold form is pinned in
-    tests/test_r14_optimizations.py (unicode + duplicate-row fuzz)."""
+    tests/test_text_dedup.py (unicode + duplicate-row fuzz). The
+    groups are persisted (3 consumers); lifetime per
+    ``release_builder_caches``."""
     from ehr_data_pipeline_spark.operators.text_analysis import (
         normalize_text,
         portable_hash60,
@@ -1604,9 +1567,7 @@ def _simhash_groups(
         # DISTINCT ids: a duplicated id must not fabricate a self pair
         F.size(F.collect_set(F.col("id")).over(gw)).alias("__n"),
     )
-    if persist_groups:
-        grouped = _persist_tracked(grouped)
-    return grouped
+    return _persist_tracked(grouped)
 
 
 def _rep_simhash_pairs(
@@ -1684,7 +1645,6 @@ def simhash_near_dup_pairs(
     n_bands: int = DEFAULT_BANDS,
     total_bits: int = 60,
     portable: bool = True,
-    persist_groups: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs via band-bucket join — the sketch-based
     scale path for Hamming-distance dedup. Each doc's sketch splits into
@@ -1716,11 +1676,8 @@ def simhash_near_dup_pairs(
     boilerplate) are the skew risk, handled by AQE skew-join same as the
     MinHash bands. ``portable=True`` uses the md5-derived hash family
     (DuckDB-replayable); ``False`` uses xxhash64 (cheaper, Spark-only,
-    ``total_bits`` must then be 64). ``persist_groups`` caches the
-    grouping (3 consumers); lifetime per ``release_builder_caches``."""
-    grouped = _simhash_groups(
-        df, id_col, text_col, total_bits, portable, persist_groups
-    )
+    ``total_bits`` must then be 64)."""
+    grouped = _simhash_groups(df, id_col, text_col, total_bits, portable)
     pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
     ma = grouped.select(F.col("__rid").alias("doc_a"), F.col("id").alias("__ma"))
     mb = grouped.select(F.col("__rid").alias("doc_b"), F.col("id").alias("__mb"))
@@ -1748,7 +1705,6 @@ def simhash_dup_groups(
     n_bands: int = DEFAULT_BANDS,
     total_bits: int = 60,
     portable: bool = True,
-    persist_groups: bool = True,
     max_iter: int = 20,
 ) -> DataFrame:
     """SimHash near-dup GROUP membership — the linear-output production
@@ -1763,9 +1719,7 @@ def simhash_dup_groups(
     external neighbor is its own cluster (mutual distance 0). Equals the
     transitive closure of :func:`simhash_near_dup_pairs` exactly — the
     oracle replays that equivalence with a recursive CTE."""
-    grouped = _simhash_groups(
-        df, id_col, text_col, total_bits, portable, persist_groups
-    )
+    grouped = _simhash_groups(df, id_col, text_col, total_bits, portable)
     cross = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits).where(
         F.col("doc_a") != F.col("doc_b")
     )

@@ -2032,8 +2032,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     PPJoin prefix filter (the scale path — identical pairs to all-pairs
     by construction), while the DuckDB twin replays the pipeline with the
     brute-force pair join; the four-stage composition hash-checks
-    end-to-end. minhash_lsh_pairs stays pluggable for the
-    fewest-candidates trade (identical up to LSH recall)."""
+    end-to-end."""
     from ehr_data_pipeline_spark.operators.text_dedup import curate_corpus_funnel
 
     d = _t(spark, sf_dir, "documents")
@@ -6238,11 +6237,9 @@ def _bpe_batched_trainer_oracle(
     n_rounds: int,
     batch_size: int,
     base_sql: str = _BPE_BASE_SQL,
-    window: "int | None" = None,
 ) -> str:
-    w = window or 8 * batch_size
     rounds = "".join(
-        _bpe_batched_round_sql(i, batch_size, w)
+        _bpe_batched_round_sql(i, batch_size, 8 * batch_size)
         for i in range(1, n_rounds + 1)
     )
     selects = " UNION ALL ".join(

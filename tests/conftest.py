@@ -19,6 +19,18 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _release_builder_caches():
+    """Unpersist whatever the dedup builders cached during a test, so the
+    frames they persist do not pile up across a long session."""
+    yield
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        release_builder_caches,
+    )
+
+    release_builder_caches()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL

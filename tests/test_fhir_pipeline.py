@@ -51,20 +51,22 @@ def test_run_pipeline_without_sink_stays_lazy(spark):
 
 def test_pipeline_single_parse_equivalent_and_releases(spark, tmp_path):
     """The default direct path (persisted exploded scan, one JSON parse)
-    must produce identical entity tables to six independent re-parsing
-    plans (single_parse=False); release() must unpersist the shared
-    cache and leave the plans runnable."""
+    must produce identical entity tables to the plain per-entity plans —
+    each cleaner applied to the extracted tables of an uncached
+    read_and_route; release() must unpersist the shared cache and leave
+    the plans runnable."""
+    from ehr_data_pipeline_spark.fhir.clean import CLEANERS
+    from ehr_data_pipeline_spark.fhir.extract import extract_all
+    from ehr_data_pipeline_spark.fhir.ingest import read_and_route
+
     cached = run_pipeline(spark, FIXTURE_DIR, output_dir=None, quality=False)
     assert cached.source is not None
-    reparse = run_pipeline(
-        spark, FIXTURE_DIR, output_dir=None, quality=False,
-        single_parse=False,
-    )
-    assert reparse.source is None
+    reparse = extract_all(read_and_route(spark, FIXTURE_DIR))
+    assert set(cached.tables) == set(CLEANERS)
     key = lambda t: tuple((x is None, str(x)) for x in t)  # noqa: E731
     for rt in cached.tables:
         a = sorted(map(tuple, cached.tables[rt].collect()), key=key)
-        b = sorted(map(tuple, reparse.tables[rt].collect()), key=key)
+        b = sorted(map(tuple, CLEANERS[rt](reparse[rt]).collect()), key=key)
         assert a == b, rt
     # the action materialized the shared cache; release reclaims it
     assert cached.source.storageLevel.useMemory

@@ -93,6 +93,7 @@ def test_prefix_filter_equals_brute_force(spark, texts, threshold):
     from ehr_data_pipeline_spark.operators.text_dedup import (
         jaccard_pairs,
         jaccard_pairs_prefix,
+        release_builder_caches,
     )
 
     df = spark.createDataFrame(
@@ -101,9 +102,13 @@ def test_prefix_filter_equals_brute_force(spark, texts, threshold):
     )
     brute = {(r["doc_a"], r["doc_b"], r["jaccard"])
              for r in jaccard_pairs(df, threshold=threshold).collect()}
-    pref = {(r["doc_a"], r["doc_b"], r["jaccard"])
-            for r in jaccard_pairs_prefix(
-                df, threshold=threshold, persist_shingles=False).collect()}
+    try:
+        pref = {(r["doc_a"], r["doc_b"], r["jaccard"])
+                for r in jaccard_pairs_prefix(df, threshold=threshold).collect()}
+    finally:
+        # per example, not per test: hypothesis runs many examples
+        # inside one test call and each persists its own shingle sets
+        release_builder_caches()
     assert brute == pref
 
 

@@ -281,3 +281,61 @@ def test_substring_dedup_oracle_preserves_empty_docs(spark, tmp_path):
     compare_spark_vs_oracle(df, con, spec.oracle, name="doc_substring_dedup[empty]")
     assert df.count() == 5  # every doc, including the two degenerate ones
     con.close()
+
+
+# --- oracle comparator fast path (suite-duration fix, VERDICT r14 #2) ------
+
+def test_canon_multiset_verdicts_match_slow_path():
+    """The multiset fast path must agree with the sorted zip-wise compare:
+    equal frames pass, reordered frames pass, value/type differences fail
+    (including the int-vs-float and timestamp-vs-bigint divergence classes
+    the driver's typed hashing catches)."""
+    import pandas as pd
+
+    from tests.oracle_utils import compare_spark_vs_oracle, _canon_multiset
+
+    a = pd.DataFrame({
+        "i": [1, 2, 3],
+        "f": [1.5, float("nan"), 0.25],
+        "s": ["x", None, "z"],
+        "t": pd.to_datetime(["2024-01-01", "1969-12-31", "2200-06-15"]),
+    })
+    # reordered rows: equal multiset
+    b = a.iloc[[2, 0, 1]].reset_index(drop=True)
+    assert _canon_multiset(a) == _canon_multiset(b)
+    # us-resolution datetimes equal ns-resolution ones
+    c = b.copy()
+    c["t"] = c["t"].astype("datetime64[us]")
+    assert _canon_multiset(a) == _canon_multiset(c)
+    # value difference
+    d = a.copy(); d.loc[0, "i"] = 99
+    assert _canon_multiset(a) != _canon_multiset(d)
+    # int-valued float column must NOT equal an int column (driver-typed)
+    e = a.copy(); e["i"] = e["i"].astype("float64")
+    assert _canon_multiset(a) != _canon_multiset(e)
+    # epoch-nanos bigint must NOT equal a timestamp column
+    f = a.copy(); f["t"] = f["t"].astype("datetime64[ns]").astype("int64")
+    assert _canon_multiset(a) != _canon_multiset(f)
+    # NaN compares equal to NaN (canonicalized to None), like the old path
+    g = a.iloc[[1, 0, 2]].reset_index(drop=True)
+    assert _canon_multiset(a) == _canon_multiset(g)
+
+
+def test_compare_spark_vs_oracle_accepts_pandas(spark):
+    """The prefetch path hands compare_spark_vs_oracle an already-
+    collected pandas frame; verdicts must match the DataFrame path."""
+    import duckdb
+    import pytest as _pytest
+
+    from tests.oracle_utils import compare_spark_vs_oracle
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    con = duckdb.connect()
+    compare_spark_vs_oracle(df.toPandas(), con,
+                            "SELECT * FROM (VALUES (CAST(2 AS BIGINT), 'b'), (CAST(1 AS BIGINT), 'a')) t(k, v)",
+                            name="pdf-path")
+    with _pytest.raises(AssertionError):
+        compare_spark_vs_oracle(df.toPandas(), con,
+                                "SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'a'), (CAST(2 AS BIGINT), 'X')) t(k, v)",
+                                name="pdf-path-mismatch")
+    con.close()

@@ -3,6 +3,8 @@ and LSH recall/precision against the exact path."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,28 +46,6 @@ def test_brute_force_knn_shape(emb):
         ordered = sorted(rows, key=lambda r: r["rank"])
         cosines = [r["cosine"] for r in ordered]
         assert cosines == sorted(cosines, reverse=True)
-
-
-def test_brute_force_knn_arrow_matches_native(emb):
-    """The numpy/Arrow vectorized path must return the identical result
-    set as the Catalyst-fold path: same neighbors, same ranks, same
-    6-decimal cosines (both rank on ROUND(cosine,6) with id tiebreak)."""
-    from ehr_data_pipeline_spark.operators.similarity import brute_force_knn_arrow
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    native = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in brute_force_knn(emb, queries, k=3).collect()
-    }
-    arrow = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in brute_force_knn_arrow(emb, queries, k=3).collect()
-    }
-    assert set(native) == set(arrow)
-    for key, (nid, cos) in native.items():
-        aid, acos = arrow[key]
-        assert nid == aid, key
-        assert abs(cos - acos) < 1e-9, key
 
 
 def test_round_half_up_matches_spark_round_on_ties(spark):
@@ -240,7 +220,7 @@ def test_ivf_cell_partitioned_index_prunes_reads(spark, emb, tmp_path):
     indexed = emb.select(
         "vec_id",
         "embedding",
-        _centroid_dists(F.col("embedding"), cents)[0]["cid"].alias("cid"),
+        _centroid_dists("embedding", cents)[0]["cid"].alias("cid"),
     )
     path = str(tmp_path / "ivf_index")
     indexed.write.partitionBy("cid").parquet(path)
@@ -499,7 +479,7 @@ def test_semantic_dedup_duplicates_add_zero_comparison_work(emb):
         reps = mem.where(F.col("__id") == F.col("__rid"))
         assigned = reps.select(
             F.col("__id").alias("rid"),
-            _centroid_dists(F.col("__v"), cents)[0]["cid"].alias("cid"),
+            _centroid_dists("__v", cents)[0]["cid"].alias("cid"),
         )
         a = assigned.select(F.col("rid").alias("xa"), "cid")
         b = assigned.select(F.col("rid").alias("xb"), "cid")
@@ -524,7 +504,7 @@ def test_semantic_dedup_cluster_scaling_reduces_comparisons(emb):
         mem = _vector_groups(emb, "vec_id", "embedding", 64)
         assigned = mem.where(F.col("__id") == F.col("__rid")).select(
             F.col("__id").alias("rid"),
-            _centroid_dists(F.col("__v"), cents)[0]["cid"].alias("cid"),
+            _centroid_dists("__v", cents)[0]["cid"].alias("cid"),
         )
         a = assigned.select(F.col("rid").alias("xa"), "cid")
         b = assigned.select(F.col("rid").alias("xb"), "cid")
@@ -909,3 +889,83 @@ def test_gram_matrix_hand_computed_and_invalid_excluded(spark):
         for r in gram_matrix(emb, dim=64).collect()
     }
     assert all(g[(a, b)] == g[(b, a)] for (a, b) in g)
+
+
+# --- centroid distances: SQL-string form vs Column-builder form -----------
+
+def _centroid_dists_column(vec, centroids):
+    """Column-builder reference for ``similarity._centroid_dists``: the
+    same (squared distance, cid) struct array built through the Column
+    API — one zip_with/aggregate fold per literal centroid over the
+    let-bound double-cast vector, then array_sort."""
+    from ehr_data_pipeline_spark.operators.similarity import to_double
+    from ehr_data_pipeline_spark.operators.text_analysis import let_bound
+
+    def sq_dist(v, centroid):
+        c = F.array(*[F.lit(float(x)) for x in centroid])
+        return F.aggregate(
+            F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    def dists(v):
+        return F.array_sort(
+            F.array(
+                *[
+                    F.struct(sq_dist(v, cvec).alias("dist"), F.lit(cid).alias("cid"))
+                    for cid, cvec in centroids
+                ]
+            )
+        )
+
+    return let_bound(to_double(vec), dists)
+
+
+def _random_centroids(rng, k, dim):
+    return [
+        (cid, [rng.uniform(-2, 2) for _ in range(dim)]) for cid in range(k)
+    ]
+
+
+@pytest.mark.parametrize("k,dim", [(3, 5), (8, 64), (32, 16)])
+def test_centroid_dists_sql_matches_column_form(spark, k, dim):
+    """The F.expr-rendered centroid-distance expression must be
+    bit-identical to the Column-builder form (the pre-r15 shape, kept
+    here as the reference): same aggregate/zip_with fold order, same
+    array_sort tiebreak, double literals round-tripped via repr. Ties
+    included: duplicated centroids force the cid tiebreak."""
+    from ehr_data_pipeline_spark.operators.similarity import _centroid_dists
+
+    rng = random.Random(1000 + k * dim)
+    cents = _random_centroids(rng, k, dim)
+    cents[-1] = (k - 1, list(cents[0][1]))  # duplicate centroid: tie on dist
+    rows = [
+        (i, [rng.uniform(-3, 3) for _ in range(dim)]) for i in range(200)
+    ] + [(200, list(cents[1][1]))]  # exact centroid hit
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    old = _centroid_dists_column(F.col("embedding"), cents)
+    new = _centroid_dists("embedding", cents)
+    bad = (
+        df.select("id", old.alias("o"), new.alias("n"))
+        .filter(~(F.col("o") == F.col("n")))
+        .collect()
+    )
+    assert not bad, f"centroid dists k={k} dim={dim}: {bad[:2]}"
+
+
+def test_double_sql_literal_roundtrip(spark):
+    """repr-rendered double literals parse back to the bit-identical
+    double, including subnormals, negatives, and exponent forms."""
+    from ehr_data_pipeline_spark.operators.similarity import _double_sql
+
+    vals = [0.0, -0.0, 1.0, -1.5, 1e-305, 5e-324, 1.7976931348623157e308,
+            0.1, -2.2250738585072014e-308, 3.141592653589793, 1e12, -1e-12]
+    rng = random.Random(7)
+    vals += [rng.uniform(-1e6, 1e6) for _ in range(50)]
+    exprs = ", ".join(_double_sql(v) for v in vals)
+    got = spark.sql(f"SELECT array({exprs}) AS a").collect()[0]["a"]
+    import struct as _s
+
+    for v, g in zip(vals, got):
+        assert _s.pack("<d", v) == _s.pack("<d", g), (v, g)

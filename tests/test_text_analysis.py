@@ -3,17 +3,25 @@ language-ID tie-breaking, fingerprints)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.operators.text_analysis import (
     fingerprint64,
     fingerprint128,
+    kgram_hash_seq,
     language_id,
+    let_bound,
     ngrams,
     normalize_text,
+    portable_hash60,
     top_ngrams,
+    whitespace_tokens,
+    winnow_from_hashes,
+    word_ngram_strings,
     word_tokens,
 )
+from tests.edge_texts import TOKEN_EDGE_TEXTS, token_fuzz_texts
 
 
 def one(spark, text):
@@ -1168,37 +1176,6 @@ def test_bpe_batched_trainer_early_stop_and_byte_route(spark):
         bpe_batched_trainer_rounds(docs, batch_size=0)
 
 
-def test_bpe_batched_trainer_grow_window(spark):
-    """grow_window=True re-collects with a larger window when greedy
-    fills fewer than batch_size slots from a SATURATED ranking: with
-    candidate_window=2 the top-2 pairs share 'a' so only one merge
-    fits, but the grown window reaches the disjoint (b,c); off by
-    default, the same knobs keep the truncated single-collect result."""
-    from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_batched_trainer_rounds,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "ax ax ax ax ax ay ay ay bc bc")], "doc_id int, text string"
-    )
-    # pair counts: (a,x)=5 (a,y)=3 (b,c)=2
-    grown = [
-        (r["pos"], r["merged"])
-        for r in bpe_batched_trainer_rounds(
-            docs, n_rounds=1, batch_size=2, candidate_window=2,
-            grow_window=True,
-        ).orderBy("pos").collect()
-    ]
-    assert grown == [(1, "ax"), (2, "bc")]
-    fixed = [
-        (r["pos"], r["merged"])
-        for r in bpe_batched_trainer_rounds(
-            docs, n_rounds=1, batch_size=2, candidate_window=2,
-        ).orderBy("pos").collect()
-    ]
-    assert fixed == [(1, "ax")]
-
-
 def test_bpe_batched_oracle_generalizes_across_knobs(spark, tmp_path):
     """The batched-trainer ORACLE GENERATOR stays cross-engine-exact at
     knobs other than the registered (rounds=2, batch=3): replay Spark
@@ -1405,3 +1382,214 @@ def test_bpe_merge_apply_fuzz_vs_reference_greedy(spark):
     }
     want = {i: ref_count(t, merges) for i, t in rows}
     assert got == want
+
+
+# --- expression rewrites pinned bit-equal to the shapes they replaced ----
+
+@pytest.fixture(scope="module")
+def texts_df(spark):
+    rows = [(i, t) for i, t in enumerate(TOKEN_EDGE_TEXTS + token_fuzz_texts())]
+    return spark.createDataFrame(rows, "id long, text string")
+
+
+def _assert_cols_equal(df, old, new, label):
+    bad = (
+        df.select("id", old.alias("o"), new.alias("n"))
+        .filter(~((F.col("o") == F.col("n")) | (F.col("o").isNull() & F.col("n").isNull())))
+        .collect()
+    )
+    assert not bad, f"{label}: {len(bad)} rows diverge, first: {bad[:3]}"
+
+
+# --- winnowing: k-gram hash stream (regex scan vs per-position substr) ----
+
+def _old_kgram_hash_seq(col, k):
+    """The pre-r15 expression, verbatim."""
+
+    def stream(nt):
+        n_pos = F.greatest(F.length(nt) - (k - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(1), n_pos),
+            lambda i: portable_hash60(nt.substr(i, F.lit(k))),
+        )
+
+    return let_bound(normalize_text(col), stream)
+
+
+@pytest.mark.parametrize("k", [1, 2, 4, 7, 8])
+def test_kgram_hash_seq_matches_old(texts_df, k):
+    _assert_cols_equal(
+        texts_df,
+        _old_kgram_hash_seq(F.col("text"), k),
+        kgram_hash_seq(F.col("text"), k),
+        f"kgram_hash_seq k={k}",
+    )
+
+
+# --- winnowing: sliding-window minima (doubling vs per-window slice) ------
+
+def _old_winnow_from_hashes(hs, w):
+    """The pre-r15 expression, verbatim."""
+    n_win = F.greatest(F.size(hs) - (w - 1), F.lit(1))
+    mins = F.transform(
+        F.sequence(F.lit(1), n_win), lambda j: F.array_min(F.slice(hs, j, w))
+    )
+    return F.array_sort(F.array_distinct(mins))
+
+
+@pytest.mark.parametrize("w", [1, 2, 3, 4, 5, 7, 8])
+def test_winnow_from_hashes_matches_old(texts_df, w):
+    h = texts_df.select("id", kgram_hash_seq(F.col("text"), 4).alias("hs"))
+    bad = (
+        h.select(
+            "id",
+            _old_winnow_from_hashes(F.col("hs"), w).alias("o"),
+            winnow_from_hashes(F.col("hs"), w).alias("n"),
+        )
+        .filter(~((F.col("o") == F.col("n")) | (F.col("o").isNull() & F.col("n").isNull())))
+        .collect()
+    )
+    assert not bad, f"winnow w={w}: {bad[:3]}"
+
+
+def test_winnow_from_hashes_degenerate_arrays(spark):
+    """NULL elements (least must skip them like array_min), empty array,
+    NULL array, all-NULL array, single element — the old expression's
+    exact degenerate contract."""
+    edge = spark.createDataFrame(
+        [
+            (0, [5, None, 3, 9, 1]),
+            (1, []),
+            (2, None),
+            (3, [None, None]),
+            (4, [7]),
+            (5, [4, 4, 4, 4, 4, 4]),
+        ],
+        "id long, hs array<bigint>",
+    )
+    for w in (1, 2, 4, 8):
+        bad = (
+            edge.select(
+                "id",
+                _old_winnow_from_hashes(F.col("hs"), w).alias("o"),
+                winnow_from_hashes(F.col("hs"), w).alias("n"),
+            )
+            .filter(~((F.col("o") == F.col("n")) | (F.col("o").isNull() & F.col("n").isNull())))
+            .collect()
+        )
+        assert not bad, f"winnow degenerate w={w}: {bad}"
+
+
+# --- word n-gram extraction (regex scan vs per-position slice+join) -------
+
+def _old_word_ngrams(col, n):
+    """The pre-r15 gram shape of ngram_contamination/token_window_hashes,
+    verbatim (modulo the hash applied on top, tested separately)."""
+
+    def grams_of(toks):
+        g = F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        return F.when(F.size(toks) >= n, g).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return let_bound(whitespace_tokens(col), grams_of)
+
+
+@pytest.mark.parametrize("n", [2, 3, 8, 13])
+def test_word_ngram_strings_matches_old(texts_df, n):
+    _assert_cols_equal(
+        texts_df,
+        _old_word_ngrams(F.col("text"), n),
+        word_ngram_strings(normalize_text(F.col("text")), n),
+        f"word_ngram_strings n={n}",
+    )
+
+
+def test_word_ngram_strings_n1_keeps_empty_token(texts_df):
+    """n=1 must degrade to the token split INCLUDING the single empty
+    token of an empty/whitespace-only text (the regex form would drop it,
+    which is why n=1 short-circuits to split)."""
+    _assert_cols_equal(
+        texts_df,
+        whitespace_tokens(F.col("text")),
+        word_ngram_strings(normalize_text(F.col("text")), 1),
+        "word_ngram_strings n=1",
+    )
+
+
+def _old_ngrams(col, n=2):
+    """The pre-r15 zip_with-chain ngrams, verbatim."""
+    toks = whitespace_tokens(col)
+    if n == 1:
+        return toks
+    size = F.size(toks)
+    out = F.slice(toks, 1, F.greatest(size - (n - 1), F.lit(0)))
+    for i in range(1, n):
+        nxt = F.slice(toks, i + 1, F.greatest(size - (n - 1), F.lit(0)))
+        out = F.zip_with(out, nxt, lambda a, b: F.concat_ws(" ", a, b))
+    return out
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_ngrams_matches_old(texts_df, n):
+    _assert_cols_equal(
+        texts_df, _old_ngrams(F.col("text"), n), ngrams(F.col("text"), n),
+        f"ngrams n={n}",
+    )
+
+
+# --- BPE pair counts (regex / arrays_zip vs per-position element_at) ------
+
+def test_bpe_char_pairs_match_old(texts_df):
+    w = texts_df.select(F.explode(word_tokens(F.col("text"))).alias("__w")).filter(
+        F.length("__w") >= 2
+    )
+    bad = (
+        w.select(
+            F.transform(
+                F.sequence(F.lit(1), F.length("__w") - 1),
+                lambda i: F.substring(F.col("__w"), i, 2),
+            ).alias("o"),
+            F.regexp_extract_all(
+                F.col("__w"), F.lit("(?s)(?=(.{2}))."), F.lit(1)
+            ).alias("n"),
+        )
+        .filter(~(F.col("o") == F.col("n")))
+        .collect()
+    )
+    assert not bad, f"bpe char pairs: {bad[:3]}"
+
+
+def test_bpe_symbol_pair_counts_match_old(spark, texts_df):
+    from ehr_data_pipeline_spark.operators.text_analysis import (
+        BPE_SEP,
+        bpe_initial_state,
+        bpe_symbol_pair_counts,
+    )
+
+    state = bpe_initial_state(texts_df)
+    a = F.split(F.col("syms"), BPE_SEP)
+    old = (
+        state.select(a.alias("__a"))
+        .filter(F.size("__a") >= 2)
+        .select(
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("__a") - 1),
+                    lambda i: F.struct(
+                        F.element_at("__a", i).alias("l"),
+                        F.element_at("__a", i + 1).alias("r"),
+                    ),
+                )
+            ).alias("__p")
+        )
+        .select("__p.l", "__p.r")
+        .groupBy("l", "r")
+        .agg(F.count(F.lit(1)).alias("n_pairs"))
+    )
+    new = bpe_symbol_pair_counts(state)
+    diff = old.exceptAll(new).unionAll(new.exceptAll(old)).collect()
+    assert not diff, f"bpe_symbol_pair_counts: {diff[:5]}"

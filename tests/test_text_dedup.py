@@ -6,15 +6,29 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ehr_data_pipeline_spark.operators.text_analysis import whitespace_tokens
+from ehr_data_pipeline_spark.operators.text_analysis import (
+    let_bound,
+    normalize_text,
+    whitespace_tokens,
+)
 from ehr_data_pipeline_spark.operators.text_dedup import (
+    _MINHASH_P,
+    base_shingle_hash,
     exact_dedup,
     exact_dup_stats,
     hamming64,
     jaccard_pairs,
+    minhash_affine_params,
     minhash_lsh_pairs,
+    minhash_signature,
     shingle_set,
     simhash64,
+)
+from tests.edge_texts import (
+    SHINGLE_EDGE_TEXTS,
+    TOKEN_EDGE_TEXTS,
+    shingle_fuzz_texts,
+    token_fuzz_texts,
 )
 
 BASE = (
@@ -260,11 +274,9 @@ def test_duplicates_add_zero_verification_work(spark, corpus, dup_heavy_corpus):
         )
 
     def work_facts(df):
-        grouped = _shingle_groups(df, "doc_id", "text", 4, persist_index=False)
+        grouped = _shingle_groups(df, "doc_id", "text", 4)
         reps = grouped.where(F.col("id") == F.col("__rid"))
-        pairs = _rep_minhash_pairs(
-            grouped, 0.6, 16, 4, persist_index=False
-        ).where(F.col("doc_a") != F.col("doc_b"))
+        pairs = _rep_minhash_pairs(grouped, 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b"))
         return reps.count(), pairs.count()
 
     n_reps_base, n_pairs_base = work_facts(base)
@@ -273,10 +285,8 @@ def test_duplicates_add_zero_verification_work(spark, corpus, dup_heavy_corpus):
     assert n_pairs_tripled == n_pairs_base  # same cross-rep verification work
     # while the ANSWER (pair expansion) did grow — the output is the
     # quadratic part, by definition of a pair surface
-    out_base = minhash_lsh_pairs(base, threshold=0.6, persist_index=False).count()
-    out_tripled = minhash_lsh_pairs(
-        tripled, threshold=0.6, persist_index=False
-    ).count()
+    out_base = minhash_lsh_pairs(base, threshold=0.6).count()
+    out_tripled = minhash_lsh_pairs(tripled, threshold=0.6).count()
     assert out_tripled > 3 * out_base
 
 
@@ -306,20 +316,16 @@ def test_group_surfaces_flat_on_both_replica_corpora(spark, tmp_path):
 
     def facts(path):
         docs = spark.read.parquet(f"{path}/documents.parquet")
-        grouped = _shingle_groups(docs, "doc_id", "text", 4, persist_index=False)
+        grouped = _shingle_groups(docs, "doc_id", "text", 4)
         reps = grouped.where(F.col("id") == F.col("__rid")).count()
-        pairs = _rep_minhash_pairs(
-            grouped, 0.6, 16, 4, persist_index=False
-        ).where(F.col("doc_a") != F.col("doc_b")).count()
-        members = minhash_dup_groups(docs, threshold=0.6, persist_index=False).count()
+        pairs = _rep_minhash_pairs(grouped, 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
+        members = minhash_dup_groups(docs, threshold=0.6).count()
         return reps, pairs, members
 
     base_docs = spark.read.parquet(f"{src}/documents.parquet")
-    base_grouped = _shingle_groups(base_docs, "doc_id", "text", 4, persist_index=False)
+    base_grouped = _shingle_groups(base_docs, "doc_id", "text", 4)
     n_base_reps = base_grouped.where(F.col("id") == F.col("__rid")).count()
-    n_base_pairs = _rep_minhash_pairs(
-        base_grouped, 0.6, 16, 4, persist_index=False
-    ).where(F.col("doc_a") != F.col("doc_b")).count()
+    n_base_pairs = _rep_minhash_pairs(base_grouped, 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
 
     # identical-copy x4: every doc gains 4 exact copies, but the DISTINCT
     # work is EXACTLY the base corpus's — same reps, same verified rep
@@ -486,7 +492,7 @@ def test_simhash_duplicates_add_zero_verification_work(spark, corpus):
         )
 
     def work_facts(df):
-        grouped = _simhash_groups(df, "doc_id", "text", 60, True, False)
+        grouped = _simhash_groups(df, "doc_id", "text", 60, True)
         reps = grouped.where(F.col("id") == F.col("__rid"))
         pairs = _rep_simhash_pairs(grouped, 3, 4, 60).where(
             F.col("doc_a") != F.col("doc_b")
@@ -494,8 +500,8 @@ def test_simhash_duplicates_add_zero_verification_work(spark, corpus):
         return reps.count(), pairs.count()
 
     assert work_facts(tripled) == work_facts(base)
-    out_base = simhash_near_dup_pairs(base, persist_groups=False).count()
-    out_tripled = simhash_near_dup_pairs(tripled, persist_groups=False).count()
+    out_base = simhash_near_dup_pairs(base).count()
+    out_tripled = simhash_near_dup_pairs(tripled).count()
     assert out_tripled > 3 * out_base
 
 
@@ -509,18 +515,14 @@ def test_simhash_dup_groups_matches_closure(spark, dup_heavy_corpus):
         simhash_near_dup_pairs,
     )
 
-    pair_df = simhash_near_dup_pairs(
-        dup_heavy_corpus, persist_groups=False
-    ).where(F.col("doc_a") != F.col("doc_b"))
+    pair_df = simhash_near_dup_pairs(dup_heavy_corpus).where(F.col("doc_a") != F.col("doc_b"))
     closure = {
         (r["id"], r["component"])
         for r in near_dup_components(pair_df).collect()
     }
     membership = {
         (r["doc_id"], r["group_id"])
-        for r in simhash_dup_groups(
-            dup_heavy_corpus, persist_groups=False
-        ).collect()
+        for r in simhash_dup_groups(dup_heavy_corpus).collect()
     }
     assert membership == closure
     # identical-copy group C (20, 21) clusters on its own; singleton 30 out
@@ -577,31 +579,6 @@ def test_near_dup_components_releases_cache(spark):
     assert jsc.getPersistentRDDs().size() <= before + 1  # localCheckpoint blocks
 
 
-def test_jaccard_prefix_persist_flag_same_result(corpus):
-    """persist_shingles=False must be a pure performance trade: identical
-    pairs, and no new entry left in the cache registry."""
-    from ehr_data_pipeline_spark.operators.text_dedup import jaccard_pairs_prefix
-
-    spark = corpus.sparkSession
-    jsc = spark.sparkContext._jsc.sc()
-    cached = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in jaccard_pairs_prefix(corpus, threshold=0.6).collect()
-    }
-    # snapshot AFTER the persisting call: the False call must add nothing
-    # (a before/after+1 bound would depend on what earlier tests left in
-    # the CacheManager — identical analyzed plans dedupe there)
-    mid = jsc.getPersistentRDDs().size()
-    uncached = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in jaccard_pairs_prefix(
-            corpus, threshold=0.6, persist_shingles=False
-        ).collect()
-    }
-    assert uncached == cached and len(uncached) > 0
-    assert jsc.getPersistentRDDs().size() == mid
-
-
 def test_drop_duplicates_any_keeps_one_per_key(spark):
     from ehr_data_pipeline_spark.operators.dedup import drop_duplicates_any
 
@@ -640,20 +617,6 @@ def test_curate_corpus_funnel_stages(spark):
     assert rows["exact_dedup"] == 2      # doc 2 collapses into doc 1
     assert rows["near_dedup"] == 1       # doc 3 drops as near-dup of doc 1
     # survivor is the lowest id at every stage by construction
-
-
-def test_curate_corpus_funnel_minhash_path_matches_exact(spark):
-    """The scale path (LSH-bucketed candidates) must reproduce the exact
-    funnel on the sf0.001 corpus (high-similarity dups are exactly the
-    pairs LSH recalls best)."""
-    from ehr_data_pipeline_spark.operators.text_dedup import curate_corpus_funnel
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = {r["stage"]: r["n_docs"]
-             for r in curate_corpus_funnel(docs, method="exact").collect()}
-    mh = {r["stage"]: r["n_docs"]
-          for r in curate_corpus_funnel(docs, method="minhash").collect()}
-    assert exact == mh
 
 
 def test_ngram_contamination_flags_verbatim_overlap(spark):
@@ -748,9 +711,9 @@ def test_near_dedup_with_persisted_band_table(spark, dup_heavy_corpus, tmp_path)
     minhash_band_entries(index).write.parquet(bands_path)
     band_table = spark.read.parquet(bands_path)
 
-    fresh_d, entries_d = near_dedup_against_index(batch, index, persist_index=False)
+    fresh_d, entries_d = near_dedup_against_index(batch, index)
     fresh_p, entries_p = near_dedup_against_index(
-        batch, index, persist_index=False, index_bands=band_table
+        batch, index, index_bands=band_table
     )
     assert sorted(r["doc_id"] for r in fresh_p.collect()) == sorted(
         r["doc_id"] for r in fresh_d.collect()
@@ -880,3 +843,234 @@ def test_strip_preserves_empty_and_whitespace_docs(spark):
     assert out[1] == ("", 0, 0)
     assert out[2] == ("", 0, 0)
     assert out[3] == ("k1 k2 k3", 3, 3)
+
+
+# --- expression rewrites pinned bit-equal to the shapes they replaced ----
+
+def _old_shingle_set(col, k=4):
+    """The pre-r14 expression, verbatim."""
+
+    def grams(nt):
+        n = F.length(nt)
+        g = F.transform(
+            F.sequence(F.lit(1), n - (k - 1)), lambda i: nt.substr(i, F.lit(k))
+        )
+        return F.when(n >= k, F.array_distinct(g)).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return let_bound(normalize_text(col), grams)
+
+
+def _old_minhash_signature(hs, num_hashes=16):
+    """The pre-r14 aggregate/zip_with fold, verbatim."""
+    params = [minhash_affine_params(j) for j in range(num_hashes)]
+    init = F.array(*[F.lit(_MINHASH_P).cast("bigint") for _ in range(num_hashes)])
+    return F.aggregate(
+        hs,
+        init,
+        lambda acc, h: F.zip_with(
+            acc,
+            F.array(
+                *[(F.lit(a) * h + F.lit(b)) % F.lit(_MINHASH_P) for a, b in params]
+            ),
+            lambda x, y: F.least(x, y),
+        ),
+    )
+
+
+@pytest.fixture(scope="module")
+def text_df(spark):
+    texts = SHINGLE_EDGE_TEXTS + shingle_fuzz_texts()
+    return spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "id int, text string"
+    )
+
+
+@pytest.mark.parametrize("k", [1, 2, 4, 7])
+def test_shingle_set_regex_scan_equals_old_transform(spark, text_df, k):
+    rows = text_df.select(
+        "id",
+        _old_shingle_set(F.col("text"), k).alias("old"),
+        shingle_set(F.col("text"), k).alias("new"),
+    ).collect()
+    bad = [(r["id"], r["old"], r["new"]) for r in rows if r["old"] != r["new"]]
+    assert not bad, f"k={k}: shingle mismatch (incl. order): {bad[:3]}"
+
+
+def test_minhash_signature_array_min_equals_old_fold(spark, text_df):
+    # non-empty shingle sets only — the callers' contract (every call
+    # site filters size(sh) > 0 before signing)
+    sh = F.array_distinct(F.transform(shingle_set(F.col("text")), base_shingle_hash))
+    rows = (
+        text_df.select("id", sh.alias("sh"))
+        .where(F.size("sh") > 0)
+        .select(
+            "id",
+            _old_minhash_signature(F.col("sh")).alias("old"),
+            minhash_signature(F.col("sh")).alias("new"),
+        )
+        .collect()
+    )
+    assert rows, "fixture produced no non-empty shingle sets"
+    bad = [(r["id"], r["old"], r["new"]) for r in rows if r["old"] != r["new"]]
+    assert not bad, f"signature mismatch: {bad[:3]}"
+
+
+@pytest.mark.parametrize(
+    "total_bits,portable", [(60, True), (64, False)]
+)
+def test_simhash_groups_explode_agg_equals_per_row_fold(
+    spark, text_df, total_bits, portable
+):
+    """_simhash_groups' explode+groupBy sketch must reproduce the per-row
+    HOF fold EXACTLY — per input row (multiplicity included): same
+    (id, __sim, __rid, __n) multiset, on unicode edges, duplicated
+    (id, text) rows, and same-id-different-text rows."""
+    from pyspark.sql.window import Window
+
+    from ehr_data_pipeline_spark.operators.text_analysis import whitespace_tokens
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        _simhash_groups,
+        simhash60_portable,
+        simhash64,
+    )
+
+    # duplicate-row + shared-id torture on top of the module fixture
+    extra = [
+        (900, "dup dup dup"), (900, "dup dup dup"),  # identical (id, text) twice
+        (900, "same id different text"),             # same id, new text
+        (901, "dup dup dup"),                        # identical text, new id
+        (902, None), (902, None),                    # duplicated NULL text
+    ]
+    df = text_df.unionByName(
+        spark.createDataFrame(extra, "id int, text string")
+    )
+
+    tokens = whitespace_tokens(F.col("text"))
+    sim = simhash60_portable(tokens) if portable else simhash64(tokens)
+    base = df.select(F.col("id").alias("id"), sim.alias("__sim"))
+    gw = Window.partitionBy("__sim")
+    old = base.select(
+        "id",
+        "__sim",
+        F.min("id").over(gw).alias("__rid"),
+        F.size(F.collect_set(F.col("id")).over(gw)).alias("__n"),
+    )
+    new = _simhash_groups(df, "id", "text", total_bits, portable)
+    key = lambda r: (r["id"], r["__sim"], r["__rid"], r["__n"])  # noqa: E731
+    a = sorted(map(key, old.collect()))
+    b = sorted(map(key, new.collect()))
+    assert a == b, (
+        f"bits={total_bits} portable={portable}: grouped multiset diverged; "
+        f"old-only={set(a)-set(b)}, new-only={set(b)-set(a)}"
+    )
+
+
+def test_minhash_signature_expression_argument_not_duplicated(spark, text_df):
+    """The new form must accept a full EXPRESSION argument (not just a
+    column reference) and stay value-identical — the let-binding seam."""
+    sh_expr = F.array_distinct(
+        F.transform(shingle_set(F.col("text")), base_shingle_hash)
+    )
+    rows = (
+        text_df.where(F.size(sh_expr) > 0)
+        .select(
+            "id",
+            _old_minhash_signature(sh_expr).alias("old"),
+            minhash_signature(sh_expr).alias("new"),
+        )
+        .collect()
+    )
+    bad = [(r["id"], r["old"], r["new"]) for r in rows if r["old"] != r["new"]]
+    assert not bad, f"expression-arg signature mismatch: {bad[:3]}"
+
+
+@pytest.mark.parametrize("portable,total_bits", [(True, 60), (False, 64)])
+def test_simhash_groups_sql_form_matches_fold(spark, portable, total_bits):
+    """_simhash_groups' F.expr-rendered per-bit sums + reconstruction must
+    reproduce the in-row simhash fold exactly (the r14 equivalence chain
+    extends: fold == column-built aggregate == SQL-built aggregate)."""
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        _simhash_groups,
+        simhash60_portable,
+        simhash64,
+    )
+
+    rows = [(i, t) for i, t in enumerate(TOKEN_EDGE_TEXTS + token_fuzz_texts(100, seed=77))]
+    # duplicate (id, text) rows and same-id-different-text rows
+    rows += [(3, TOKEN_EDGE_TEXTS[5]), (3, TOKEN_EDGE_TEXTS[5]), (4, "другой текст")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    grouped = _simhash_groups(df, "doc_id", "text", total_bits, portable)
+    toks = F.split(normalize_text(F.col("text")), " ")
+    fold = simhash60_portable(toks) if portable else simhash64(toks)
+    expect = df.select(F.col("doc_id").alias("id"), fold.alias("__sim"))
+    diff = (
+        grouped.select("id", "__sim").exceptAll(expect)
+        .unionAll(expect.exceptAll(grouped.select("id", "__sim")))
+        .collect()
+    )
+    assert not diff, f"simhash sql form: {diff[:5]}"
+
+
+# --- minhash signature: empty-input sentinel contract (ADVICE r14) --------
+
+def test_minhash_signature_empty_input_sentinel(spark):
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        _MINHASH_P,
+        minhash_signature,
+    )
+
+    df = spark.createDataFrame(
+        [(0, []), (1, [123456789]), (2, None)], "id long, sh array<bigint>"
+    )
+    rows = {r["id"]: r["s"] for r in df.select(
+        "id", minhash_signature(F.col("sh")).alias("s")).collect()}
+    assert rows[0] == [_MINHASH_P] * 16  # empty set -> sentinel signature
+    assert all(v is not None and v != _MINHASH_P for v in rows[1])
+    assert rows[2] == [_MINHASH_P] * 16  # NULL input violates the
+    # precondition either way; the sentinel keeps it non-NULL
+
+
+# --- simhash band pairs: verified-first join is pair-set-identical --------
+
+def test_simhash_band_pairs_verified_first_join(spark):
+    """The Hamming gate moved INTO the band join condition (r15): the
+    pair set and distances must equal the all-pairs reference on a corpus
+    with identical docs, near-dups and unrelated docs."""
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        hamming64,
+        simhash60_portable,
+        simhash_near_dup_pairs,
+    )
+
+    base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16"
+    rows = [
+        (1, base), (2, base), (3, base + " w17"), (4, base.replace("w5", "z5")),
+        (5, "completely different text with other words entirely"),
+        (6, None), (7, ""), (8, base.replace("w5", "z5")),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r["doc_a"], r["doc_b"], r["hamming"])
+        for r in simhash_near_dup_pairs(
+            df, max_distance=3, n_bands=4, total_bits=60
+        ).collect()
+    )
+    s = df.select(
+        F.col("doc_id"),
+        simhash60_portable(F.split(normalize_text(F.col("text")), " ")).alias("h"),
+    )
+    a, b = s.alias("a"), s.alias("b")
+    expect = sorted(
+        (r["doc_a"], r["doc_b"], r["hamming"])
+        for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            hamming64(F.col("a.h"), F.col("b.h")).cast("bigint").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= 3)
+        .collect()
+    )
+    assert got == expect
