@@ -15,8 +15,10 @@ writes it. Consequences at 100 TB:
 - cleaning row counts (the reference's ``len(df)`` logging, A6) ride
   along as ``observe()`` metrics on the write action instead of forcing
   extra ``count()`` scans;
-- the quality report is the only deliberately separate action — the
-  reference also runs its checks as a distinct task (``:516-529``).
+- the quality report is one more action, as the reference also runs
+  its checks as a distinct task (``:516-529``). On the sink path it
+  runs right after the write, over the same shared parse, and comes
+  back forced: the raw input is parsed once per run.
 """
 
 from __future__ import annotations
@@ -36,7 +38,10 @@ from ehr_data_pipeline_spark.sinks import write_entity_tables
 class PipelineResult:
     """What the DAG hands back: the cleaned plans, where the sink wrote
     each table, the observed post-clean row counts, and the quality
-    report (lazy; collect to render).
+    report. On the sink path (``output_dir`` set) the report is already
+    computed: a checkpointed frame whose collect reads ~20 rows and no
+    input. With ``output_dir=None`` it is a lazy plan over ``source``;
+    collect it before :meth:`release` to avoid a re-parse.
 
     ``source`` is the persisted exploded-entry frame (pruned to the
     consumed-field union) when the direct path was taken
@@ -83,15 +88,22 @@ def bronze_coalesce_target(
     return max(parallelism, -(-input_bytes // bytes_per_file))
 
 
+# what Spark's statistics report for a plan of unknown size
+# (spark.sql.defaultSizeInBytes, Long.MaxValue by default)
+_UNKNOWN_SIZE = 2**63 - 1
+
+
 def _input_size_bytes(df: DataFrame) -> int:
     """Total size of a scan-rooted frame's input, from the optimizer's
     statistics (for file sources: the sum of file sizes, already known
     to the reader — no job runs). Falls back to 0 (→ parallelism floor)
-    if the internal accessor drifts."""
+    when the size is unknown (an RDD-backed frame reports
+    ``Long.MaxValue``) or the internal accessor drifts."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - accessor drift only
         return 0
+    return 0 if size >= _UNKNOWN_SIZE else size
 
 
 def run_pipeline(
@@ -108,7 +120,9 @@ def run_pipeline(
     nothing has executed; the returned plans are still runnable).
     ``quality=True`` attaches the pre-clean quality report over the
     extracted tables, mirroring the reference's check-before-clean order
-    (json_pipeline.py:1100-1109).
+    (json_pipeline.py:1100-1109). With ``output_dir`` set, the report is
+    computed right after the write, over the same parse, and returned
+    forced; without it, the report stays a lazy plan.
 
     ``stage_dir`` lands the exploded entries as a bronze parquet layer
     first and routes from that: the multiLine JSON parse (the expensive
@@ -225,12 +239,19 @@ def run_pipeline(
         result.row_counts = {
             rt: observations[rt].get["n_rows"] for rt in cleaned
         }
-        # ADVICE r9: the sink path has materialized every table, so the
-        # shared-parse cache has served its purpose — releasing it here
-        # keeps callers unaware of PipelineResult.source from holding an
-        # input-sized cache until session end. Returned plans (including
-        # the lazy quality report) stay runnable; they recompute from the
-        # raw files. Callers that will re-force plans should use
-        # output_dir=None and call release() themselves.
+        # force the report while the shared-parse cache (or the bronze
+        # parquet) still holds the parse: a lazy report collected after
+        # the release below would re-parse the raw JSON once per table.
+        # localCheckpoint keeps the ~20 rows JVM-side and cuts the
+        # lineage, so the returned frame reads no input.
+        if report is not None:
+            result.quality_report = report.localCheckpoint(eager=True)
+        # ADVICE r9: the sink path has materialized every table and the
+        # report, so the shared-parse cache has served its purpose —
+        # releasing it here keeps callers unaware of
+        # PipelineResult.source from holding an input-sized cache until
+        # session end. The returned table plans stay runnable; they
+        # recompute from the raw files. Callers that will re-force plans
+        # should use output_dir=None and call release() themselves.
         result.release()
     return result
