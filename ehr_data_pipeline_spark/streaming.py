@@ -22,6 +22,13 @@ Design:
   microbatch never has to shuffle the whole history at once;
   checkpointing makes restarts exactly-once (the memory-sink test path
   uses an ephemeral checkpoint).
+- **One way to run a sink.** Every ``*_sink`` factory below returns a
+  ``foreachBatch`` writer; :func:`drain` runs any of them over a stream
+  with an ``availableNow`` trigger and a real checkpoint:
+  ``drain(stream, near_dedup_maintenance_sink(index, fresh), ckpt)``.
+  A drain that is still running after :data:`DRAIN_TIMEOUT_SEC` is
+  stopped and raises ``TimeoutError`` naming its checkpoint; a sink
+  that raises surfaces as ``StreamingQueryException``.
 
 The events schema is read from the parquet footer once on the driver
 (streaming file sources require an explicit schema) and the same
@@ -333,31 +340,46 @@ def parquet_batch_sink(path: str):
     return write
 
 
-def run_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain the stream's current input into an idempotent per-batch
-    parquet layout (:func:`parquet_batch_sink`) with an ``availableNow``
-    trigger and a REAL checkpoint — restartable: a second run over the
-    same checkpoint processes only files that arrived since."""
+DRAIN_TIMEOUT_SEC = 300
+
+
+def _await_drained(query: StreamingQuery, where: str) -> StreamingQuery:
+    """Wait up to :data:`DRAIN_TIMEOUT_SEC` for an ``availableNow`` query
+    to finish and return it. A failed query raises its
+    ``StreamingQueryException``; one still running at the bound is
+    stopped, never handed back live, and raises ``TimeoutError`` naming
+    ``where``."""
+    if not query.awaitTermination(DRAIN_TIMEOUT_SEC):
+        query.stop()
+        raise TimeoutError(
+            f"streaming drain ({where}) still running after "
+            f"{DRAIN_TIMEOUT_SEC} s; stopped it"
+        )
+    return query
+
+
+def drain(df: DataFrame, sink, checkpoint: str) -> StreamingQuery:
+    """Run ``sink`` — a ``foreachBatch`` writer, e.g. one of this
+    module's ``*_sink`` factories — over the stream's available input
+    with an ``availableNow`` trigger and a REAL checkpoint, and return
+    the finished query. Restartable: a later drain over the same
+    checkpoint processes only files that arrived since, against the
+    state the sink has accumulated (exactly-once by the sink's own
+    idempotent-epoch contract). Failure and timeout outcomes are those
+    of :func:`_await_drained`."""
     query = (
-        df.writeStream.foreachBatch(parquet_batch_sink(path))
+        df.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
-    return query
+    return _await_drained(query, f"checkpoint {checkpoint}")
 
 
 def run_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str = "append",
-    timeout_sec: int = 300,
 ) -> StreamingQuery:
     """Drain the stream's current input with an ``availableNow`` trigger
     into an in-memory table ``name`` (test/demo sink): processes all
@@ -370,8 +392,7 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
-    return query
+    return _await_drained(query, f"memory table {name}")
 
 
 def scd2_dimension_sink(
@@ -399,7 +420,7 @@ def scd2_dimension_sink(
 
     Epoch discovery uses a filesystem listing (sufficient for path-based
     deployments and tests); swap for a catalog/transaction log where one
-    exists. Read the current dimension with :func:`read_scd2_dimension`."""
+    exists. Read the current dimension with :func:`read_epoch_state`."""
     from ehr_data_pipeline_spark.operators.scd import (
         scd2_apply_batch,
         scd2_compress,
@@ -461,7 +482,40 @@ def _state_epochs(dim_path: str, complete_only: bool = False) -> "list[int]":
     ]
 
 
-_scd2_epochs = _state_epochs  # historical name, used by tests
+def _union_epochs(
+    spark: SparkSession, path: str, epochs: "Iterable[int]"
+) -> DataFrame:
+    """The union of the ``{path}/epoch={e}`` directories over the given
+    (non-empty) epochs, in ascending epoch order."""
+    from functools import reduce
+
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [spark.read.parquet(f"{path}/epoch={e}") for e in sorted(epochs)],
+    )
+
+
+def _index_below(
+    spark: SparkSession, path: str, batch_id: int, empty: DataFrame
+) -> DataFrame:
+    """What a delta-epoch sink's batch ``batch_id`` dedups against: the
+    union of every epoch of ``path`` strictly below its own id, or
+    ``empty`` when there is none. Any pending compaction is resumed
+    first, so a replayed batch never reads a torn merged epoch (its
+    listing has no ``complete_only`` — see
+    :func:`_resume_pending_compaction`)."""
+    _resume_pending_compaction(spark, path)
+    prev = [e for e in _state_epochs(path) if e < batch_id]
+    return _union_epochs(spark, path, prev) if prev else empty
+
+
+def _auto_compact(spark: SparkSession, path: str, every: "int | None") -> None:
+    """A sink's ``auto_compact_every`` policy: :func:`compact_epochs`
+    once ``path`` holds at least ``every`` complete epochs (``None`` =
+    never). Replay-safe: the compaction leaves the newest epoch a pure
+    delta."""
+    if every is not None and len(_state_epochs(path, complete_only=True)) >= every:
+        compact_epochs(spark, path)
 
 
 def read_epoch_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -474,36 +528,6 @@ def read_epoch_state(spark: SparkSession, state_path: str) -> DataFrame:
     if not epochs:
         raise FileNotFoundError(f"no complete epochs under {state_path}")
     return spark.read.parquet(f"{state_path}/epoch={max(epochs)}")
-
-
-def read_scd2_dimension(spark: SparkSession, dim_path: str) -> DataFrame:
-    """The current SCD2 dimension — see :func:`read_epoch_state`."""
-    return read_epoch_state(spark, dim_path)
-
-
-def run_scd2_maintenance(
-    events: DataFrame,
-    dim_path: str,
-    checkpoint: str,
-    keys: "Sequence[str]",
-    attrs: "Sequence[str]",
-    ts_col: str = "ts",
-    tiebreak: str | None = None,
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain the stream's available input into the SCD2 dimension with an
-    ``availableNow`` trigger and a real checkpoint — restartable: a later
-    run over the same checkpoint merges only newly arrived files."""
-    query = (
-        events.writeStream.foreachBatch(
-            scd2_dimension_sink(dim_path, keys, attrs, ts_col, tiebreak)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def rollup_maintenance_sink(
@@ -621,59 +645,12 @@ def hist_maintenance_sink(
     )
 
 
-def run_hll_maintenance(
-    events: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    col: str,
-    group_cols: "tuple[str, ...]" = (),
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain the stream's available input into the maintained HLL
-    registers with an ``availableNow`` trigger and a real checkpoint —
-    restartable, order-free (cell-wise max commutes)."""
-    query = (
-        events.writeStream.foreachBatch(
-            hll_maintenance_sink(state_path, col, group_cols)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
-
-
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """The finalized continuous aggregate (derived sum/avg from the
     maintained mergeable partials)."""
     from ehr_data_pipeline_spark.operators.temporal import rollup_finalize
 
     return rollup_finalize(read_epoch_state(spark, rollup_path))
-
-
-def run_rollup_maintenance(
-    events: DataFrame,
-    rollup_path: str,
-    checkpoint: str,
-    bucket: str = "hour",
-    keys: "Sequence[str]" = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain the stream's available input into the maintained rollup with
-    an ``availableNow`` trigger and a real checkpoint — restartable."""
-    query = (
-        events.writeStream.foreachBatch(
-            rollup_maintenance_sink(rollup_path, bucket, keys, ts_col, value_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def near_dedup_maintenance_sink(
@@ -731,20 +708,13 @@ def near_dedup_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        _resume_pending_compaction(spark, index_path)
-        prev = sorted(e for e in _state_epochs(index_path) if e < batch_id)
-        if prev:
-            index = reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{index_path}/epoch={e}") for e in prev],
-            )
-        else:
-            index = build_minhash_index(
+        index = _index_below(
+            spark, index_path, batch_id,
+            build_minhash_index(
                 batch_df.limit(0), id_col, text_col, k, num_hashes
-            )
+            ),
+        )
         try:
             # the operator's new-entries frame is discarded (ADVICE r11,
             # low — found on the curation sink, same lineage here): it
@@ -770,12 +740,7 @@ def near_dedup_maintenance_sink(
             ).write.mode("overwrite").parquet(
                 f"{index_path}/epoch={batch_id}"
             )
-            if (
-                auto_compact_every is not None
-                and len(_state_epochs(index_path, complete_only=True))
-                >= auto_compact_every
-            ):
-                compact_epochs(spark, index_path)
+            _auto_compact(spark, index_path, auto_compact_every)
         finally:
             release_builder_caches()
 
@@ -888,7 +853,6 @@ def compact_epochs(
     through the same epoch (:func:`compact_bm25_index`)."""
     import json
     import os
-    from functools import reduce
 
     tmp = os.path.join(state_path, "_compact_tmp")
     manifest_path = os.path.join(tmp, "_compact_manifest.json")
@@ -907,11 +871,7 @@ def compact_epochs(
         return 0
     target = max(complete)
     # phase A: materialize the union outside the epoch=* namespace
-    merged = reduce(
-        lambda a, b: a.unionByName(b),
-        [spark.read.parquet(f"{state_path}/epoch={e}") for e in complete],
-    )
-    merged.write.mode("overwrite").parquet(tmp)
+    _union_epochs(spark, state_path, complete).write.mode("overwrite").parquet(tmp)
     # atomic manifest (write-then-rename): a crash mid-write must never
     # leave a torn manifest under the final name — the resume path
     # would otherwise fail to parse it at every subsequent sink batch
@@ -980,45 +940,10 @@ def read_near_dedup_fresh(spark: SparkSession, fresh_path: str) -> DataFrame:
     of every COMPLETE fresh epoch (each epoch holds one microbatch's
     survivors — disjoint by construction, so the union is the deduped
     corpus in arrival order)."""
-    from functools import reduce
-
     epochs = _state_epochs(fresh_path, complete_only=True)
     if not epochs:
         raise FileNotFoundError(f"no complete epochs under {fresh_path}")
-    parts = [
-        spark.read.parquet(f"{fresh_path}/epoch={e}") for e in sorted(epochs)
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def run_near_dedup_maintenance(
-    docs: DataFrame,
-    index_path: str,
-    fresh_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through continuous near-dup
-    dedup with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint dedups only newly
-    arrived files against the accumulated index."""
-    query = (
-        docs.writeStream.foreachBatch(
-            near_dedup_maintenance_sink(
-                index_path, fresh_path, id_col, text_col, threshold,
-                auto_compact_every=auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
+    return _union_epochs(spark, fresh_path, epochs)
 
 
 def paragraph_dedup_maintenance_sink(
@@ -1062,18 +987,11 @@ def paragraph_dedup_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        _resume_pending_compaction(spark, index_path)
-        prev = sorted(e for e in _state_epochs(index_path) if e < batch_id)
-        if prev:
-            index = reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{index_path}/epoch={e}") for e in prev],
-            )
-        else:
-            index = build_paragraph_index(batch_df.limit(0), text_col, sep)
+        index = _index_below(
+            spark, index_path, batch_id,
+            build_paragraph_index(batch_df.limit(0), text_col, sep),
+        )
         cleaned, _new_entries = paragraph_dedup_against_index(
             batch_df, index, text_col, id_col, sep
         )
@@ -1096,44 +1014,9 @@ def paragraph_dedup_maintenance_sink(
             text_col,
             sep,
         ).write.mode("overwrite").parquet(f"{index_path}/epoch={batch_id}")
-        if (
-            auto_compact_every is not None
-            and len(_state_epochs(index_path, complete_only=True))
-            >= auto_compact_every
-        ):
-            compact_epochs(spark, index_path)
+        _auto_compact(spark, index_path, auto_compact_every)
 
     return write
-
-
-def run_paragraph_dedup_maintenance(
-    docs: DataFrame,
-    index_path: str,
-    clean_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through continuous paragraph
-    dedup with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint cleans only newly
-    arrived files against the accumulated paragraph index."""
-    query = (
-        docs.writeStream.foreachBatch(
-            paragraph_dedup_maintenance_sink(
-                index_path, clean_path, id_col, text_col, sep,
-                auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def curation_maintenance_sink(
@@ -1177,8 +1060,8 @@ def curation_maintenance_sink(
     Exactly-once by the same idempotent-epoch argument as each
     single-stage sink: a batch reads BOTH indexes strictly below its own
     id and overwrites its own three epoch directories, so a replayed
-    batch recomputes from identical predecessors; batch entry resumes
-    any pending compaction on both index paths (ADVICE r10), and
+    batch recomputes from identical predecessors; each index read first
+    resumes any pending compaction on its path (ADVICE r10), and
     ``auto_compact_every`` applies the proven paragraph-sink policy to
     both. At 100 TB the expensive lineage runs ONCE per microbatch: two
     narrow cleaning passes, one content-keyed window + fingerprint
@@ -1186,7 +1069,9 @@ def curation_maintenance_sink(
     BOTH index deltas rebuild from already-materialized data (the
     paragraph delta from the persisted survivors, the minhash delta
     from the landed fresh parquet — ADVICE r11), so no write action
-    re-runs the candidate join and no stage rescans history."""
+    re-runs the candidate join and no stage rescans history. Read the
+    admitted corpus back with :func:`read_near_dedup_fresh` (same epoch
+    layout)."""
     from ehr_data_pipeline_spark.operators.cleaning import (
         build_paragraph_index,
         c4_blocklist_filter,
@@ -1200,21 +1085,7 @@ def curation_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        for p in (para_index_path, minhash_index_path):
-            _resume_pending_compaction(spark, p)
-
-        def read_index(path: str, empty: DataFrame) -> DataFrame:
-            prev = sorted(e for e in _state_epochs(path) if e < batch_id)
-            if not prev:
-                return empty
-            return reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{path}/epoch={e}") for e in prev],
-            )
-
         # stages 1+2: stateless page cleaning (one narrow pass)
         page = batch_df.select(id_col, text_col)
         if blocklist:
@@ -1224,8 +1095,9 @@ def curation_maintenance_sink(
         ).select(id_col, F.col("clean_text").alias(text_col))
 
         # stage 3: paragraph dedup against the maintained index
-        para_index = read_index(
-            para_index_path, build_paragraph_index(lined.limit(0), text_col, sep)
+        para_index = _index_below(
+            spark, para_index_path, batch_id,
+            build_paragraph_index(lined.limit(0), text_col, sep),
         )
         # the operator's new-entries frame is deliberately discarded:
         # the index delta is rebuilt below from the persisted survivors
@@ -1239,8 +1111,8 @@ def curation_maintenance_sink(
         kept = kept.persist()  # feeds stage 4 AND the paragraph delta
         try:
             # stage 4: near-dup dedup against the maintained MinHash index
-            mh_index = read_index(
-                minhash_index_path,
+            mh_index = _index_below(
+                spark, minhash_index_path, batch_id,
                 build_minhash_index(kept.limit(0), id_col, text_col),
             )
             # the operator's new-entries frame is deliberately discarded
@@ -1272,53 +1144,13 @@ def curation_maintenance_sink(
             build_minhash_index(fresh_landed, id_col, text_col).write.mode(
                 "overwrite"
             ).parquet(f"{minhash_index_path}/epoch={batch_id}")
-            if auto_compact_every is not None:
-                for p in (para_index_path, minhash_index_path):
-                    if (len(_state_epochs(p, complete_only=True))
-                            >= auto_compact_every):
-                        compact_epochs(spark, p)
+            for p in (para_index_path, minhash_index_path):
+                _auto_compact(spark, p, auto_compact_every)
         finally:
             kept.unpersist()
             release_builder_caches()
 
     return write
-
-
-def run_curation_maintenance(
-    docs: DataFrame,
-    para_index_path: str,
-    minhash_index_path: str,
-    clean_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    blocklist: "tuple[str, ...]" = (),
-    sep: str = "\n",
-    threshold: float = 0.6,
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through the composed curation
-    funnel (blocklist → C4 line rules → paragraph dedup → near-dup) with
-    an ``availableNow`` trigger and a real checkpoint — restartable: a
-    later run over the same checkpoint curates only newly arrived files
-    against both accumulated indexes. Read the admitted corpus back with
-    :func:`read_near_dedup_fresh` (same epoch layout)."""
-    query = (
-        docs.writeStream.foreachBatch(
-            curation_maintenance_sink(
-                para_index_path, minhash_index_path, clean_path,
-                id_col, text_col, blocklist,
-                sep=sep, threshold=threshold,
-                auto_compact_every=auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def semantic_dedup_maintenance_sink(
@@ -1363,7 +1195,9 @@ def semantic_dedup_maintenance_sink(
     state — compact with :func:`compact_epochs`, never by deleting
     deltas — or set ``auto_compact_every=K`` (replay-safe: the newest
     epoch stays a pure delta, see the near-dedup sink). Batch entry
-    resumes any pending compaction first (ADVICE r10)."""
+    resumes any pending compaction first (ADVICE r10). Read the admitted
+    corpus back with :func:`read_near_dedup_fresh` (the epoch layout is
+    shared)."""
     from ehr_data_pipeline_spark.operators.similarity import (
         semantic_dedup_against_index,
     )
@@ -1372,18 +1206,11 @@ def semantic_dedup_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        _resume_pending_compaction(spark, index_path)
-        prev = sorted(e for e in _state_epochs(index_path) if e < batch_id)
-        if prev:
-            index = reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{index_path}/epoch={e}") for e in prev],
-            )
-        else:
-            index = batch_df.select(id_col, vec_col).limit(0)
+        index = _index_below(
+            spark, index_path, batch_id,
+            batch_df.select(id_col, vec_col).limit(0),
+        )
         try:
             fresh, new_entries = semantic_dedup_against_index(
                 batch_df, index, centroids, threshold, id_col, vec_col, dim
@@ -1394,50 +1221,11 @@ def semantic_dedup_maintenance_sink(
             new_entries.write.mode("overwrite").parquet(
                 f"{index_path}/epoch={batch_id}"
             )
-            if (
-                auto_compact_every is not None
-                and len(_state_epochs(index_path, complete_only=True))
-                >= auto_compact_every
-            ):
-                compact_epochs(spark, index_path)
+            _auto_compact(spark, index_path, auto_compact_every)
         finally:
             release_builder_caches()
 
     return write
-
-
-def run_semantic_dedup_maintenance(
-    vectors: DataFrame,
-    index_path: str,
-    fresh_path: str,
-    checkpoint: str,
-    centroids: "list[tuple[int, list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    dim: "int | None" = None,
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through continuous semantic
-    dedup with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint dedups only newly
-    arrived files against the accumulated index. Read the admitted
-    corpus back with :func:`read_near_dedup_fresh` (the epoch layout is
-    shared)."""
-    query = (
-        vectors.writeStream.foreachBatch(
-            semantic_dedup_maintenance_sink(
-                index_path, fresh_path, centroids, id_col, vec_col,
-                threshold, dim, auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def run_ivf_index_stream(
@@ -1448,7 +1236,6 @@ def run_ivf_index_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    timeout_sec: int = 300,
 ) -> StreamingQuery:
     """Continuous maintenance of the PERSISTED IVF index
     (``similarity.build_ivf_index`` layout) — deliberately the NATIVE
@@ -1485,8 +1272,7 @@ def run_ivf_index_stream(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
-    return query
+    return _await_drained(query, f"checkpoint {checkpoint}")
 
 
 def bm25_index_maintenance_sink(
@@ -1576,8 +1362,6 @@ def read_bm25_index(
     the tell (unequal minimum complete epochs; both tables see every
     batch id, so equal compaction implies equal floors) and raise with
     the remedy rather than serve skewed scores."""
-    from functools import reduce
-
     per_table = {
         path: _state_epochs(path, complete_only=True)
         for path in (postings_path, lengths_path)
@@ -1599,37 +1383,7 @@ def read_bm25_index(
             "lengths_path) (its entry heal finishes the pair) or any "
             "maintenance sink batch before reading."
         )
-    out = []
-    for path in (postings_path, lengths_path):
-        parts = [spark.read.parquet(f"{path}/epoch={e}") for e in epochs]
-        out.append(reduce(lambda a, b: a.unionByName(b), parts))
-    return out[0], out[1]
-
-
-def run_bm25_index_maintenance(
-    docs: DataFrame,
-    postings_path: str,
-    lengths_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input into the maintained BM25
-    index with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint indexes only
-    newly arrived files."""
-    query = (
-        docs.writeStream.foreachBatch(
-            bm25_index_maintenance_sink(
-                postings_path, lengths_path, id_col, text_col,
-                auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return (
+        _union_epochs(spark, postings_path, epochs),
+        _union_epochs(spark, lengths_path, epochs),
     )
-    query.awaitTermination(timeout_sec)
-    return query

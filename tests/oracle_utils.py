@@ -52,6 +52,23 @@ def _canon_value(v):
     return v
 
 
+def _in_ns_range(vals) -> bool:
+    """Whether a naive datetime64 array fits datetime64[ns]. numpy's
+    cast to ns wraps silently (e.g. DuckDB's [us] timestamps past 2262),
+    so the pandas Timestamp bounds are compared in the array's own unit,
+    as integer ticks rounded inward."""
+    import numpy as np
+
+    if not len(vals):
+        return True
+    unit, count = np.datetime_data(vals.dtype)
+    ns_per_tick = count * (np.timedelta64(1, unit) // np.timedelta64(1, "ns"))
+    ticks = vals.view("int64")
+    lo = -(-pd.Timestamp.min.value // ns_per_tick)
+    hi = pd.Timestamp.max.value // ns_per_tick
+    return lo <= ticks.min() and ticks.max() <= hi
+
+
 def _canon_column(s: pd.Series) -> list:
     """Column-vectorized :func:`_canon_value`: dtype dispatch replaces a
     per-cell Python call for the common dtypes (floats, ints, bools,
@@ -73,15 +90,14 @@ def _canon_column(s: pd.Series) -> list:
         # with NaT keep the object path so the NaT != NaT quirk is
         # preserved; tz-aware or out-of-ns-range values fall back too.
         if getattr(dt, "tz", None) is None and not s.isna().any():
-            try:
+            vals = s.to_numpy()
+            if _in_ns_range(vals):
                 return [
                     ("__dt__", v)  # tagged: a BIGINT column of epoch
                     # nanos must not compare equal to a TIMESTAMP column
-                    for v in s.to_numpy().astype("datetime64[ns]")
+                    for v in vals.astype("datetime64[ns]")
                     .astype("int64").tolist()
                 ]
-            except Exception:
-                pass
         return [
             v if v is pd.NaT else v.to_pydatetime().replace(tzinfo=None)
             for v in s
@@ -169,6 +185,8 @@ def compare_spark_vs_oracle(spark_df, con, sql: str, name: str = "?") -> None:
     except TypeError:
         pass
     srows, drows = canon_rows(spdf), canon_rows(ddf)
+    if srows == drows:
+        return
     n_bad = sum(1 for a, b in zip(srows, drows) if a != b)
     examples = [(a, b) for a, b in zip(srows, drows) if a != b][:3]
     raise AssertionError(f"{name}: {n_bad}/{len(srows)} rows differ; first: {examples}")

@@ -339,3 +339,48 @@ def test_compare_spark_vs_oracle_accepts_pandas(spark):
                                 "SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'a'), (CAST(2 AS BIGINT), 'X')) t(k, v)",
                                 name="pdf-path-mismatch")
     con.close()
+
+
+def test_compare_unhashable_cells_uses_sorted_rows():
+    """A MAP column has unhashable (dict) cells, so the multiset fast
+    path raises TypeError and the sorted-row compare decides. Equal
+    results must pass there; a one-cell difference must still fail,
+    counting at least one differing row."""
+    import duckdb
+    import pytest as _pytest
+
+    con = duckdb.connect()
+    sql = ("SELECT * FROM (VALUES (CAST(1 AS BIGINT), MAP {'a': CAST(1 AS BIGINT)}),"
+           " (CAST(2 AS BIGINT), MAP {'b': CAST(2 AS BIGINT)})) t(k, m)")
+    same = con.execute(sql).df().iloc[::-1].reset_index(drop=True)
+    compare_spark_vs_oracle(same, con, sql, name="map-equal")
+    diff = con.execute(sql).df()
+    diff.at[1, "m"] = {"key": ["b"], "value": [3]}
+    with _pytest.raises(AssertionError, match=r"map-diff: [1-9]\d*/2 rows differ"):
+        compare_spark_vs_oracle(diff, con, sql, name="map-diff")
+    con.close()
+
+
+def test_compare_timestamps_past_ns_range(spark):
+    """DuckDB returns TIMESTAMP as datetime64[us]; a value past 2262
+    does not fit datetime64[ns], and numpy's cast wraps it silently.
+    The comparator must fall back to datetime objects there, so the same
+    value from Spark compares equal and the wrapped value does not."""
+    import duckdb
+    import pandas as pd
+
+    from tests.oracle_utils import _canon_multiset
+
+    con = duckdb.connect()
+    sql = "SELECT TIMESTAMP '2300-01-01' AS t"
+    # Arrow's toPandas cannot hold this value in datetime64[ns] either,
+    # so the Spark side is collected as rows
+    rows = spark.sql("SELECT TIMESTAMP '2300-01-01 00:00:00' AS t").collect()
+    compare_spark_vs_oracle(
+        pd.DataFrame([r.asDict() for r in rows]), con, sql, name="ts-2300"
+    )
+    wrapped = pd.DataFrame(
+        {"t": pd.to_datetime(["1715-06-13 00:25:26.290448384"])}
+    )
+    assert _canon_multiset(con.execute(sql).df()) != _canon_multiset(wrapped)
+    con.close()

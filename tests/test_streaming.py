@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.queries import REGISTRY
 from ehr_data_pipeline_spark.streaming import (
+    drain,
     hourly_event_counts,
     read_events_stream,
     run_to_memory,
@@ -320,7 +321,7 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
     simulated REPLAY of a batch id (the failure window of any
     foreachBatch sink) leaves the table unchanged — overwrite, not
     append."""
-    from ehr_data_pipeline_spark.streaming import parquet_batch_sink, run_to_parquet
+    from ehr_data_pipeline_spark.streaming import parquet_batch_sink
 
     spark = checkpointed
     events = load_table(spark, SF, "events").filter(F.col("user_id") < 10)
@@ -334,7 +335,7 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_to_parquet(stream, out, ckpt)
+    drain(stream, parquet_batch_sink(out), ckpt)
 
     import glob
 
@@ -352,7 +353,7 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_to_parquet(stream2, out, ckpt)
+    drain(stream2, parquet_batch_sink(out), ckpt)
     assert spark.read.parquet(out).drop("batch_id").count() == events.count()
 
     # simulate a replayed microbatch: rerun batch 0's write with the same
@@ -371,8 +372,7 @@ def test_scd2_stream_maintenance_matches_full_rebuild(checkpointed, tmp_path):
     file; replaying a batch id is byte-stable (idempotent epochs)."""
     from ehr_data_pipeline_spark.operators.scd import scd2_compress
     from ehr_data_pipeline_spark.streaming import (
-        read_scd2_dimension,
-        run_scd2_maintenance,
+        read_epoch_state,
         scd2_dimension_sink,
     )
 
@@ -399,8 +399,8 @@ def test_scd2_stream_maintenance_matches_full_rebuild(checkpointed, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_scd2_maintenance(stream, dim_path, ckpt, keys, attrs,
-                         tiebreak="event_id")
+    drain(stream, scd2_dimension_sink(dim_path, keys, attrs,
+                                      tiebreak="event_id"), ckpt)
 
     def canon(df):
         return sorted(tuple(r) for r in df.select(
@@ -409,7 +409,7 @@ def test_scd2_stream_maintenance_matches_full_rebuild(checkpointed, tmp_path):
 
     expect2 = scd2_compress(events.filter(F.col("ts") < c2), keys, attrs,
                             tiebreak="event_id")
-    assert canon(read_scd2_dimension(spark, dim_path)) == canon(expect2)
+    assert canon(read_epoch_state(spark, dim_path)) == canon(expect2)
 
     # late drop + restart over the same checkpoint: only f3 merges
     events.filter(F.col("ts") >= c2).coalesce(1).write.parquet(str(src / "f3"))
@@ -418,19 +418,19 @@ def test_scd2_stream_maintenance_matches_full_rebuild(checkpointed, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_scd2_maintenance(stream2, dim_path, ckpt, keys, attrs,
-                         tiebreak="event_id")
+    drain(stream2, scd2_dimension_sink(dim_path, keys, attrs,
+                                       tiebreak="event_id"), ckpt)
     full = scd2_compress(events, keys, attrs, tiebreak="event_id")
-    final = canon(read_scd2_dimension(spark, dim_path))
+    final = canon(read_epoch_state(spark, dim_path))
     assert final == canon(full)
 
     # replay of the highest batch id recomputes from the same predecessor
-    from ehr_data_pipeline_spark.streaming import _scd2_epochs
+    from ehr_data_pipeline_spark.streaming import _state_epochs
 
-    last = max(_scd2_epochs(dim_path))
+    last = max(_state_epochs(dim_path))
     sink = scd2_dimension_sink(dim_path, keys, attrs, tiebreak="event_id")
     sink(events.filter(F.col("ts") >= c2), last)
-    assert canon(read_scd2_dimension(spark, dim_path)) == final
+    assert canon(read_epoch_state(spark, dim_path)) == final
 
 
 def test_rollup_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
@@ -444,7 +444,7 @@ def test_rollup_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
     )
     from ehr_data_pipeline_spark.streaming import (
         read_rollup,
-        run_rollup_maintenance,
+        rollup_maintenance_sink,
     )
 
     spark = checkpointed
@@ -461,7 +461,7 @@ def test_rollup_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_rollup_maintenance(stream, roll_path, ckpt)
+    drain(stream, rollup_maintenance_sink(roll_path), ckpt)
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
@@ -479,9 +479,9 @@ def test_hll_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
     epoch sink."""
     from ehr_data_pipeline_spark.operators.sketches import hll_build
     from ehr_data_pipeline_spark.streaming import (
+        hll_maintenance_sink,
         read_epoch_state,
         read_hll_estimate,
-        run_hll_maintenance,
     )
 
     spark = checkpointed
@@ -498,7 +498,7 @@ def test_hll_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_hll_maintenance(stream, state, ckpt, "user_id", ("event_type",))
+    drain(stream, hll_maintenance_sink(state, "user_id", ("event_type",)), ckpt)
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
@@ -550,13 +550,7 @@ def test_cm_and_hist_stream_maintenance_match_one_shot(checkpointed, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/*/*.parquet")
         )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / f"{label}_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        drain(stream, sink, str(tmp_path / f"{label}_ckpt"))
         state_path = str(tmp_path / f"{label}_state")
         assert canon(read_epoch_state(spark, state_path)) == canon(one_shot), label
 
@@ -579,7 +573,6 @@ def test_near_dedup_stream_maintenance_matches_sequential_batches(
         _state_epochs,
         near_dedup_maintenance_sink,
         read_near_dedup_fresh,
-        run_near_dedup_maintenance,
     )
 
     spark = checkpointed
@@ -606,7 +599,7 @@ def test_near_dedup_stream_maintenance_matches_sequential_batches(
             .parquet(f"{src}/*/*.parquet")
         )
 
-    run_near_dedup_maintenance(stream(), index_path, fresh_path, ckpt)
+    drain(stream(), near_dedup_maintenance_sink(index_path, fresh_path), ckpt)
 
     def batch_sequential(batches):
         index = build_minhash_index(docs.limit(0))
@@ -623,7 +616,7 @@ def test_near_dedup_stream_maintenance_matches_sequential_batches(
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_near_dedup_maintenance(stream(), index_path, fresh_path, ckpt)
+    drain(stream(), near_dedup_maintenance_sink(index_path, fresh_path), ckpt)
     expect_full, _ = batch_sequential(slices + [late])
     got_full = {
         r["doc_id"] for r in read_near_dedup_fresh(spark, fresh_path).collect()
@@ -783,7 +776,6 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
     from ehr_data_pipeline_spark.streaming import (
         _state_epochs,
         read_near_dedup_fresh,
-        run_semantic_dedup_maintenance,
         semantic_dedup_maintenance_sink,
     )
 
@@ -813,8 +805,10 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
             .parquet(f"{src}/*/*.parquet")
         )
 
-    run_semantic_dedup_maintenance(
-        stream(), index_path, fresh_path, ckpt, cents, dim=64
+    drain(
+        stream(),
+        semantic_dedup_maintenance_sink(index_path, fresh_path, cents, dim=64),
+        ckpt,
     )
 
     def batch_sequential(batches):
@@ -833,8 +827,10 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
     assert got == expect
 
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_semantic_dedup_maintenance(
-        stream(), index_path, fresh_path, ckpt, cents, dim=64
+    drain(
+        stream(),
+        semantic_dedup_maintenance_sink(index_path, fresh_path, cents, dim=64),
+        ckpt,
     )
     expect_full = batch_sequential(slices + [late])
     got_full = {
@@ -917,7 +913,6 @@ def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):
         _state_epochs,
         bm25_index_maintenance_sink,
         read_bm25_index,
-        run_bm25_index_maintenance,
     )
 
     spark = checkpointed
@@ -940,7 +935,7 @@ def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):
             .parquet(f"{src}/*/*.parquet")
         )
 
-    run_bm25_index_maintenance(stream(), pp, lp, ckpt)
+    drain(stream(), bm25_index_maintenance_sink(pp, lp), ckpt)
     terms = ["hash", "join", "stream"]
 
     def scores_of(p, l):
@@ -952,7 +947,7 @@ def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_bm25_index_maintenance(stream(), pp, lp, ckpt)
+    drain(stream(), bm25_index_maintenance_sink(pp, lp), ckpt)
     p, l = read_bm25_index(spark, pp, lp)
     fp, fl = bm25_index_build(docs)
     want_full = scores_of(fp, fl)
@@ -995,7 +990,6 @@ def test_paragraph_dedup_stream_matches_sequential_batches(
     from ehr_data_pipeline_spark.streaming import (
         _state_epochs,
         paragraph_dedup_maintenance_sink,
-        run_paragraph_dedup_maintenance,
     )
     from functools import reduce
 
@@ -1040,13 +1034,17 @@ def test_paragraph_dedup_stream_matches_sequential_batches(
             index = index.unionByName(new_entries)
         return rows
 
-    run_paragraph_dedup_maintenance(stream(), index_path, clean_path, ckpt)
+    drain(
+        stream(), paragraph_dedup_maintenance_sink(index_path, clean_path), ckpt
+    )
     got = {r["doc_id"]: r.asDict() for r in read_clean().collect()}
     assert got == batch_sequential(slices)
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_paragraph_dedup_maintenance(stream(), index_path, clean_path, ckpt)
+    drain(
+        stream(), paragraph_dedup_maintenance_sink(index_path, clean_path), ckpt
+    )
     want_full = batch_sequential(slices + [late])
     got_full = {r["doc_id"]: r.asDict() for r in read_clean().collect()}
     assert got_full == want_full
@@ -1065,7 +1063,7 @@ def test_paragraph_dedup_auto_compaction_equivalent(checkpointed, tmp_path):
     from ehr_data_pipeline_spark.queries import _para_lined_docs
     from ehr_data_pipeline_spark.streaming import (
         _state_epochs,
-        run_paragraph_dedup_maintenance,
+        paragraph_dedup_maintenance_sink,
     )
     from functools import reduce
 
@@ -1089,9 +1087,10 @@ def test_paragraph_dedup_auto_compaction_equivalent(checkpointed, tmp_path):
             .parquet(f"{src}/*/*.parquet")
         )
         ip, cp = str(tmp_path / f"idx_{tag}"), str(tmp_path / f"cln_{tag}")
-        run_paragraph_dedup_maintenance(
-            stream, ip, cp, str(tmp_path / f"ck_{tag}"),
-            auto_compact_every=auto,
+        drain(
+            stream,
+            paragraph_dedup_maintenance_sink(ip, cp, auto_compact_every=auto),
+            str(tmp_path / f"ck_{tag}"),
         )
         parts = [
             spark.read.parquet(f"{cp}/epoch={e}")
@@ -1343,7 +1342,6 @@ def test_curation_stream_matches_sequential_stage_composition(
         _state_epochs,
         curation_maintenance_sink,
         read_near_dedup_fresh,
-        run_curation_maintenance,
     )
 
     spark = checkpointed
@@ -1399,8 +1397,10 @@ def test_curation_stream_matches_sequential_stage_composition(
             mh_index = mh_index.unionByName(mh_entries)
         return admitted
 
-    run_curation_maintenance(
-        stream(), pip_, mip, cp, ckpt, blocklist=BLOCK, sep=SEP
+    drain(
+        stream(),
+        curation_maintenance_sink(pip_, mip, cp, blocklist=BLOCK, sep=SEP),
+        ckpt,
     )
     got = {
         r["doc_id"]: r["text"]
@@ -1412,8 +1412,10 @@ def test_curation_stream_matches_sequential_stage_composition(
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_curation_maintenance(
-        stream(), pip_, mip, cp, ckpt, blocklist=BLOCK, sep=SEP
+    drain(
+        stream(),
+        curation_maintenance_sink(pip_, mip, cp, blocklist=BLOCK, sep=SEP),
+        ckpt,
     )
     want_full = batch_sequential(slices + [late])
     got_full = {
@@ -1566,3 +1568,40 @@ def test_resume_tolerates_torn_manifest(checkpointed, tmp_path):
     assert sorted(
         int(d.split("=")[1]) for d in os.listdir(ip) if d.startswith("epoch=")
     ) == [0, 1, 2]
+
+
+def test_drain_timeout_stops_query_and_raises(checkpointed, tmp_path, monkeypatch):
+    """A drain still running at DRAIN_TIMEOUT_SEC must not hand back a
+    live query: it stops the query and raises TimeoutError naming the
+    checkpoint."""
+    import time
+
+    from ehr_data_pipeline_spark import streaming
+
+    spark = checkpointed
+    src = tmp_path / "slow_src"
+    spark.range(4).write.parquet(str(src))
+    stream = spark.readStream.schema("id long").parquet(str(src))
+    ckpt = str(tmp_path / "slow_ckpt")
+    monkeypatch.setattr(streaming, "DRAIN_TIMEOUT_SEC", 1)
+    with pytest.raises(TimeoutError, match="slow_ckpt"):
+        drain(stream, lambda df, batch_id: time.sleep(4), ckpt)
+    assert spark.streams.active == []
+
+
+def test_drain_surfaces_sink_failure(checkpointed, tmp_path):
+    """A sink that raises fails the drain with StreamingQueryException
+    carrying the sink's error, and leaves no active query behind."""
+    from pyspark.errors import StreamingQueryException
+
+    spark = checkpointed
+    src = tmp_path / "bad_src"
+    spark.range(4).write.parquet(str(src))
+    stream = spark.readStream.schema("id long").parquet(str(src))
+
+    def sink(df, batch_id):
+        raise ValueError("sink failed on purpose")
+
+    with pytest.raises(StreamingQueryException, match="sink failed on purpose"):
+        drain(stream, sink, str(tmp_path / "bad_ckpt"))
+    assert spark.streams.active == []
