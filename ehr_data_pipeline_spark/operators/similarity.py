@@ -40,6 +40,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ehr_data_pipeline_spark.functions.measurement import valid_vector
+from ehr_data_pipeline_spark.operators.text_dedup import (
+    _expand_rep_pairs,
+    _persist_tracked,
+    _rep_group_membership,
+)
 from ehr_data_pipeline_spark.partitioning import ensure_min_partitions
 
 DEFAULT_PLANES = 8
@@ -436,34 +441,34 @@ def _vector_groups(
 def _rep_near_dup_pairs(
     mem: DataFrame, threshold: float, dim: int, n_planes: int, n_tables: int
 ) -> DataFrame:
-    """(ra, rb, cosine) verified near-dup pairs over the DISTINCT vectors
-    only: cross-group candidates from the banded LSH join + exact-cosine
-    confirmation, plus one SELF row (ra == rb) per group of ≥ 2 identical
-    vectors — identical vectors always share every bucket and their
-    cosine (≈1.0, computed with the same fold so the value is
-    bit-identical to the pairwise formula) is evaluated once per group
-    instead of once per member pair."""
+    """(doc_a, doc_b, cosine) verified near-dup pairs over the DISTINCT
+    vectors only: cross-group candidates from the banded LSH join +
+    exact-cosine confirmation, plus one SELF row (doc_a == doc_b) per
+    group of ≥ 2 identical vectors — identical vectors always share
+    every bucket and their cosine (≈1.0, computed with the same fold so
+    the value is bit-identical to the pairwise formula) is evaluated
+    once per group instead of once per member pair."""
     reps = mem.where(F.col("__id") == F.col("__rid")).select("__id", "__v", "__n")
     s = _with_table_buckets(
         reps.select("__id", "__v"), "__v", dim, n_planes, n_tables
     )
     a = s.select(
-        F.col("__id").alias("ra"), F.col("__v").alias("__va"),
+        F.col("__id").alias("doc_a"), F.col("__v").alias("__va"),
         "__table", "__bucket",
     )
     b = s.select(
-        F.col("__id").alias("rb"), F.col("__v").alias("__vb"),
+        F.col("__id").alias("doc_b"), F.col("__v").alias("__vb"),
         "__table", "__bucket",
     )
     cross = (
         a.join(b, ["__table", "__bucket"])
-        .filter(F.col("ra") < F.col("rb"))
-        .select("ra", "__va", "rb", "__vb")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "__va", "doc_b", "__vb")
         # id-keyed dedup: vectors are functionally dependent on the ids
-        .dropDuplicates(["ra", "rb"])
+        .dropDuplicates(["doc_a", "doc_b"])
         .select(
-            "ra",
-            "rb",
+            "doc_a",
+            "doc_b",
             F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
@@ -471,8 +476,8 @@ def _rep_near_dup_pairs(
     selfp = (
         reps.where(F.col("__n") >= 2)
         .select(
-            F.col("__id").alias("ra"),
-            F.col("__id").alias("rb"),
+            F.col("__id").alias("doc_a"),
+            F.col("__id").alias("doc_b"),
             F.round(cosine(F.col("__v"), F.col("__v")), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
@@ -496,19 +501,13 @@ def lsh_near_dup_pairs(
     precision is 1.0 and only recall is approximate (tuned by P/L —
     pairs at cos θ share a bucket in one table with prob (1-θ/π)^P).
 
-    Duplicate-proof (round 8): identical vectors are collapsed FIRST
+    Duplicate-proof: identical vectors collapse first
     (:func:`_vector_groups`), candidates and exact verification run over
-    distinct vectors only (:func:`_rep_near_dup_pairs`), and surviving
-    rep pairs expand back to member pairs through two id-equi joins whose
-    fan-out is exactly the answer size — no duplicated verification
-    work. On the 10× duplicate-heavy replica this removes the k²/2
-    identical cosine folds per k-group that made the old shape go
-    wall ×121.7 at input ×10 (SCALE_RATIOS.md r7). Output is
-    bit-identical to verifying every member pair directly: identical
-    vectors share every bucket, and cosine depends only on the vector
-    values. The pair EMISSION itself is still inherently answer-sized —
-    for a production dedup decision prefer :func:`lsh_near_dup_groups`,
-    whose output is linear in corpus size.
+    distinct vectors only (:func:`_rep_near_dup_pairs`), and
+    ``text_dedup._expand_rep_pairs`` maps rep pairs back to member pairs
+    (the argument is written there). For a production dedup decision
+    prefer :func:`lsh_near_dup_groups`, whose output is linear in corpus
+    size.
 
     Threshold economics, measured on the ×10 realistic-dup replica
     (SCALE_RATIOS.md r8): hyperplane LSH separates neighbors from
@@ -530,27 +529,13 @@ def lsh_near_dup_pairs(
     pipeline plus both expansion joins — 3 consumers; without the cache
     the scan + group window recompute per consumer); cache lifetime as
     documented at ``text_dedup.release_builder_caches``."""
-    from ehr_data_pipeline_spark.operators.text_dedup import _persist_tracked
-
     dim = _resolve_dim(df, dim, id_col, vec_col)
     if dim is None:
         return _empty_pairs(df, id_col)
     mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
     pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
-    ma = mem.select(F.col("__rid").alias("ra"), F.col("__id").alias("__ma"))
-    mb = mem.select(F.col("__rid").alias("rb"), F.col("__id").alias("__mb"))
-    return (
-        pairs.join(ma, "ra")
-        .join(mb, "rb")
-        # cross-group: every member combination, oriented; within-group:
-        # each unordered member pair once
-        .filter((F.col("ra") != F.col("rb")) | (F.col("__ma") < F.col("__mb")))
-        .select(
-            F.least("__ma", "__mb").alias("id_a"),
-            F.greatest("__ma", "__mb").alias("id_b"),
-            "cosine",
-        )
-    )
+    members = mem.select("__rid", F.col("__id").alias("__m"))
+    return _expand_rep_pairs(pairs, members, "cosine", ("id_a", "id_b"))
 
 
 def lsh_near_dup_groups(
@@ -574,47 +559,24 @@ def lsh_near_dup_groups(
     corpora.
 
     Scale shape: components run over the DISTINCT-vector rep graph only
-    (groups of identical vectors contribute one node, not k² edges);
-    members inherit their rep's component through one id-equi join, and
-    an identical-vector group of ≥ 2 with no external neighbor is its
-    own cluster (its members are mutual near-dups at cosine 1.0 by
-    definition). Matches the transitive closure of
-    :func:`lsh_near_dup_pairs` exactly — the oracle replays that
-    equivalence with a recursive CTE."""
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        _persist_tracked,
-        near_dup_components,
-    )
-
+    (``text_dedup._rep_group_membership``: groups of identical vectors
+    contribute one node, not k² edges), and an identical-vector group of
+    ≥ 2 with no external neighbor is its own cluster (its members are
+    mutual near-dups at cosine 1.0 by definition). Matches the transitive
+    closure of :func:`lsh_near_dup_pairs` exactly — the oracle replays
+    that equivalence with a recursive CTE."""
     dim = _resolve_dim(df, dim, id_col, vec_col)
     if dim is None:
         return df.select(
             F.col(id_col), F.col(id_col).alias("group_id")
         ).limit(0)
     mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
-    cross = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables).where(
-        F.col("ra") != F.col("rb")
-    )
-    comp = near_dup_components(cross, "ra", "rb")
-    return (
-        mem.select("__id", "__rid", "__n")
-        .join(
-            comp.select(F.col("id").alias("__rid"), "component"),
-            "__rid",
-            "left",
-        )
-        .select(
-            F.col("__id").alias(id_col),
-            F.when(F.col("component").isNotNull(), F.col("component"))
-            # identical-vector groups cluster on their own only when the
-            # self cosine (1.0) clears the threshold — always, for any
-            # real threshold ≤ 1.0
-            .when(
-                (F.col("__n") >= 2) & F.lit(threshold <= 1.0), F.col("__rid")
-            )
-            .alias("group_id"),
-        )
-        .where(F.col("group_id").isNotNull())
+    pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
+    members = mem.select(F.col("__id").alias("__m"), "__rid", "__n")
+    # an identical-vector group's self cosine (1.0) clears any real
+    # threshold ≤ 1.0; no distinct() — _vector_groups already dedups ids
+    return _rep_group_membership(
+        pairs, members, id_col, threshold <= 1.0, max_iter=20
     )
 
 
@@ -743,17 +705,13 @@ def _assign_cells(
     centroids: "list[tuple[int, list[float]]]",
     vec_col: str,
     out_col: str,
-    arrow: "bool | None" = None,
 ) -> DataFrame:
     """Append the nearest-centroid cell id to every row: the native
     literal-fold argmin below the interpreter-tax threshold (UDF-free
     plan — every driver-gate config), the bit-identical Arrow twin
-    above it (auto-scaled quantizers at replica/production scale).
-    ``arrow`` forces a path (tests pin cross-path equality)."""
+    above it (auto-scaled quantizers at replica/production scale)."""
     dim = len(centroids[0][1]) if centroids else 0
-    if arrow is None:
-        arrow = len(centroids) * dim >= _ARROW_ASSIGN_THRESHOLD
-    if arrow:
+    if len(centroids) * dim >= _ARROW_ASSIGN_THRESHOLD:
         return _assign_cells_arrow(df, centroids, vec_col, out_col)
     return df.withColumn(
         out_col, _centroid_dists(vec_col, centroids)[0]["cid"]
@@ -965,8 +923,6 @@ def semantic_dedup(
     runs the identical plan on refined centroids. Invalid vectors are
     excluded at entry per the embeddings contract
     (functions/measurement.py); ``dim=None`` infers it from the data."""
-    from ehr_data_pipeline_spark.operators.text_dedup import _persist_tracked
-
     dim = _resolve_dim(df, dim, id_col, vec_col)
 
     def empty() -> DataFrame:
@@ -1081,8 +1037,6 @@ def semantic_dedup_against_index(
     still applies). At 100 TB the index is written
     partitioned BY cell id, so each batch cell joins a partition-pruned
     read and history never rescans."""
-    from ehr_data_pipeline_spark.operators.text_dedup import _persist_tracked
-
     dim = _resolve_dim(index, dim, id_col, vec_col) or _resolve_dim(
         batch, dim, id_col, vec_col
     )
@@ -1210,8 +1164,6 @@ def semantic_contamination(
     one) and only under id collisions between corpus and benchmark —
     keep the id spaces disjoint (the decontamination shape, and the
     registered usage) for exact top-1 semantics."""
-    from ehr_data_pipeline_spark.operators.text_dedup import _persist_tracked
-
     dim = _resolve_dim(corpus, dim, id_col, vec_col)
 
     def empty() -> DataFrame:

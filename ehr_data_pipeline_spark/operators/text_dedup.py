@@ -481,6 +481,12 @@ def minhash_signature(hs: Column, num_hashes: int = DEFAULT_NUM_HASHES) -> Colum
     )
 
 
+def _sig_agreement(a: Column, b: Column) -> Column:
+    """Number of positions at which two MinHash signatures agree — the
+    count the ``sig_agree`` prefilter compares against its floor."""
+    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
+
+
 def _band_entries(
     sig: DataFrame, num_hashes: int, bands: int
 ) -> DataFrame:
@@ -580,7 +586,7 @@ def near_dedup_against_index(
     candidates); returns ``(fresh_rows, new_index_entries)`` — append
     the latter to the index table, exactly like the exact-dedup variant.
 
-    Duplicate-proof (round 8): the BATCH side is collapsed to distinct
+    Duplicate-proof: the BATCH side is collapsed to distinct
     shingle sets first (:func:`_shingle_groups` — ingest batches are the
     duplicate-heaviest data there is), so signatures are computed once
     per distinct set and both candidate joins + the exact verification
@@ -647,6 +653,9 @@ def near_dedup_against_index(
     hist_cand = _materialize_candidates(hist_cand.distinct())
     self_cand = _materialize_candidates(self_cand.distinct())
 
+    cols = ["id", "sh", *(["sig"] if sig_agree > 0 else [])]
+    rsh, ish = rsig.select(*cols), index.select(*cols)
+    agree_ok = F.lit(True)
     if sig_agree > 0:
         # ADVICE r9: if the index was built with a different num_hashes,
         # zip_with null-pads the shorter signature, the equality lambda
@@ -665,22 +674,8 @@ def near_dedup_against_index(
             ),
         ).isNull()
         agree_ok = sig_len_ok & (
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        F.col("sa.sig"), F.col("sb.sig"), lambda x, y: x == y
-                    ),
-                    lambda eq: eq,
-                )
-            )
-            >= F.lit(sig_agree)
+            _sig_agreement(F.col("sa.sig"), F.col("sb.sig")) >= F.lit(sig_agree)
         )
-        rsh = rsig.select("id", "sh", "sig")
-        ish = index.select("id", "sh", "sig")
-    else:
-        agree_ok = F.lit(True)
-        rsh = rsig.select("id", "sh")
-        ish = index.select("id", "sh")
     hist_matched = (
         hist_cand.join(rsh.alias("sa"), F.col("ga") == F.col("sa.id"))
         .join(ish.alias("sb"), F.col("other_id") == F.col("sb.id"))
@@ -833,43 +828,27 @@ def _rep_minhash_pairs(
     )
     candidates = _materialize_candidates(candidates)
 
-    if sig_agree > 0:
-        # carry the 16-bigint signature through the verification join
-        # (~128 bytes next to the ~1k-element shingle arrays already
-        # there) and drop candidates below the agreement floor BEFORE
-        # the intersection is computed
-        sv = sig.select("id", "sh", "sig")
-        agree = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("sa.sig"), F.col("sb.sig"), lambda x, y: x == y
-                ),
-                lambda eq: eq,
-            )
+    # with the prefilter on, the 16-bigint signature rides through the
+    # verification join (~128 bytes next to the ~1k-element shingle
+    # arrays already there) and candidates below the agreement floor drop
+    # BEFORE the intersection is computed; off, the filter is a literal
+    # true the optimizer removes
+    sv = sig.select("id", "sh", *(["sig"] if sig_agree > 0 else []))
+    agree_ok = (
+        _sig_agreement(F.col("sa.sig"), F.col("sb.sig")) >= F.lit(sig_agree)
+        if sig_agree > 0 else F.lit(True)
+    )
+    cross = (
+        candidates.join(sv.alias("sa"), F.col("doc_a") == F.col("sa.id"))
+        .join(sv.alias("sb"), F.col("doc_b") == F.col("sb.id"))
+        .filter(agree_ok)
+        .select(
+            "doc_a",
+            "doc_b",
+            jaccard_distinct(F.col("sa.sh"), F.col("sb.sh")).alias("jaccard"),
         )
-        cross = (
-            candidates.join(sv.alias("sa"), F.col("doc_a") == F.col("sa.id"))
-            .join(sv.alias("sb"), F.col("doc_b") == F.col("sb.id"))
-            .filter(agree >= F.lit(sig_agree))
-            .select(
-                "doc_a",
-                "doc_b",
-                jaccard_distinct(F.col("sa.sh"), F.col("sb.sh")).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    else:
-        sh = sig.select("id", "sh")
-        cross = (
-            candidates.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.id"))
-            .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.id"))
-            .select(
-                "doc_a",
-                "doc_b",
-                jaccard_distinct(F.col("sa.sh"), F.col("sb.sh")).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        .filter(F.col("jaccard") >= threshold)
+    )
     selfp = (
         sig.where(F.col("__n") >= 2)
         .select(
@@ -905,19 +884,12 @@ def minhash_lsh_pairs(
     SUBSET of jaccard_pairs(threshold); candidate recall is the only
     approximation.
 
-    Duplicate-proof (round 8): docs with identical canonical shingle sets
-    are collapsed FIRST (:func:`_shingle_groups`), the signature/banding/
-    verification pipeline runs over group representatives only
-    (:func:`_rep_minhash_pairs`), and surviving rep pairs expand back to
-    member pairs through two id-equi joins whose fan-out is exactly the
-    answer size. Identical sets share every band and Jaccard is a pure
-    function of the sets, so the output is bit-identical to verifying
-    every member pair — but a group of k exact copies now costs one
-    signature and one verification per distinct counterpart instead of
-    k²/2 (the duplicate-heavy 10× replica measured wall ×121.7 for the
-    old shape). The pair EMISSION stays answer-sized by nature; for the
-    production dedup decision prefer :func:`minhash_dup_groups` (linear
-    output).
+    Duplicate-proof: docs with identical canonical shingle sets collapse
+    first (:func:`_shingle_groups`), signature/banding/verification run
+    over group representatives only (:func:`_rep_minhash_pairs`), and
+    :func:`_expand_rep_pairs` maps rep pairs back to member pairs (the
+    argument is written there). For the production dedup decision prefer
+    :func:`minhash_dup_groups` (linear output).
 
     Shuffles: group fingerprint window, one (band_idx, band_key) bucket
     join, candidate distinct, two id-equi verification joins, two
@@ -930,22 +902,8 @@ def minhash_lsh_pairs(
     band key (sinks.write_bucketed) and never recomputed per run."""
     grouped = _shingle_groups(df, id_col, text_col, k)
     pairs = _rep_minhash_pairs(grouped, threshold, num_hashes, bands, sig_agree)
-    ma = grouped.select(F.col("__rid").alias("doc_a"), F.col("id").alias("__ma"))
-    mb = grouped.select(F.col("__rid").alias("doc_b"), F.col("id").alias("__mb"))
-    return (
-        pairs.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        # cross-group: every member combination, oriented; within-group:
-        # each unordered member pair once
-        .filter(
-            (F.col("doc_a") != F.col("doc_b")) | (F.col("__ma") < F.col("__mb"))
-        )
-        .select(
-            F.least("__ma", "__mb").alias("doc_a"),
-            F.greatest("__ma", "__mb").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    members = grouped.select("__rid", F.col("id").alias("__m"))
+    return _expand_rep_pairs(pairs, members, "jaccard", ("doc_a", "doc_b"))
 
 
 def minhash_dup_groups(
@@ -966,38 +924,19 @@ def minhash_dup_groups(
     canonical representative). Output is LINEAR in corpus size — one row
     per clustered doc — so unlike the pair surface its cost stays flat
     on duplicate-heavy corpora: components run over the DISTINCT-set rep
-    graph only (a group of k exact copies is ONE node), members inherit
-    their rep's component through one id-equi join, and an
-    identical-set group of ≥ 2 with no external neighbor is its own
-    cluster (mutual Jaccard 1.0). Equals the transitive closure of
+    graph only (:func:`_rep_group_membership`), and an identical-set
+    group of ≥ 2 with no external neighbor is its own cluster (mutual
+    Jaccard 1.0). Equals the transitive closure of
     :func:`minhash_lsh_pairs` exactly — the oracle replays that with a
     recursive CTE."""
     grouped = _shingle_groups(df, id_col, text_col, k)
-    cross = _rep_minhash_pairs(
-        grouped, threshold, num_hashes, bands, sig_agree
-    ).where(F.col("doc_a") != F.col("doc_b"))
-    comp = near_dup_components(cross, "doc_a", "doc_b", max_iter=max_iter)
-    return (
-        grouped.select("id", "__rid", "__n")
-        .join(
-            comp.select(F.col("id").alias("__rid"), "component"),
-            "__rid",
-            "left",
-        )
-        .select(
-            F.col("id").alias(id_col),
-            F.when(F.col("component").isNotNull(), F.col("component"))
-            # self-qualifying identical-set groups: Jaccard 1.0 clears any
-            # real threshold ≤ 1.0
-            .when(
-                (F.col("__n") >= 2) & F.lit(threshold <= 1.0), F.col("__rid")
-            )
-            .alias("group_id"),
-        )
-        .where(F.col("group_id").isNotNull())
-        # duplicated input ids collapse to one membership row
-        .distinct()
-    )
+    pairs = _rep_minhash_pairs(grouped, threshold, num_hashes, bands, sig_agree)
+    members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
+    # an identical-set group's Jaccard 1.0 clears any real threshold ≤ 1.0;
+    # duplicated input ids collapse to one membership row
+    return _rep_group_membership(
+        pairs, members, id_col, threshold <= 1.0, max_iter
+    ).distinct()
 
 
 def dedup_against_index(
@@ -1305,7 +1244,6 @@ def near_dup_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    strict: bool = True,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph — the step that
     turns pairwise matches into dedup GROUPS (transitively: if A~B and
@@ -1325,9 +1263,8 @@ def near_dup_components(
     over PLANS (the classic Spark pattern for iterative algorithms).
 
     If labels are still changing after ``max_iter`` rounds, the result
-    would SPLIT true components — ``strict=True`` (default) raises
-    ``RuntimeError`` instead of returning it; ``strict=False`` emits a
-    warning for callers that accept partial merging.
+    would SPLIT true components, so it raises ``RuntimeError`` instead of
+    returning it.
 
     Each round's labels are ``localCheckpoint``-ed, NOT just persisted:
     the label frame feeds twice into the next round, so without lineage
@@ -1337,8 +1274,6 @@ def near_dup_components(
     rounds' checkpoint blocks are released eagerly; the returned frame's
     blocks live until the caller drops it (ContextCleaner reclaims on
     GC)."""
-    import warnings
-
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1389,16 +1324,94 @@ def near_dup_components(
             break
     edges.unpersist()
     if not converged:
-        msg = (
+        _release_local_checkpoint(ckpt)
+        raise RuntimeError(
             f"near_dup_components did not converge in {max_iter} rounds — "
             "labels were still propagating, so components would be split. "
             "Raise max_iter (rounds needed = graph diameter)."
         )
-        if strict:
-            _release_local_checkpoint(ckpt)
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels
+
+
+def _expand_rep_pairs(
+    pairs: DataFrame, members: DataFrame, measure: str, out: "tuple[str, str]"
+) -> DataFrame:
+    """Member pairs from verified REP pairs — the shared tail of the
+    MinHash, SimHash and embedding-LSH pair surfaces. ``pairs`` is
+    (doc_a, doc_b, ``measure``) over group representatives: cross-group
+    pairs with doc_a < doc_b plus one SELF row (doc_a == doc_b) per group
+    of ≥ 2 distinct members; ``members`` is one (__rid, __m) row per
+    input doc (__m its id, __rid its group's representative). Returns
+    (``out[0]``, ``out[1]``, ``measure``) member pairs with the lower id
+    first.
+
+    Duplicate-proof: every family collapses identical payloads (shingle
+    set, sketch, vector) to a group FIRST, candidates and exact
+    verification run over representatives only, and the surviving rep
+    pairs expand back here through two id-equi joins whose fan-out is
+    exactly the answer size. Identical payloads share every band/bucket
+    and each measure is a pure function of the payloads, so the output is
+    bit-identical to verifying every member pair — but a group of k exact
+    copies costs one verification per distinct counterpart instead of
+    k²/2 (the duplicate-heavy 10× replica measured wall ×121.7 for the
+    per-member shape, SCALE_RATIOS.md r7). The pair EMISSION stays
+    answer-sized by nature; for the production dedup decision prefer the
+    group surfaces (:func:`_rep_group_membership`, linear output)."""
+    ma = members.select(F.col("__rid").alias("doc_a"), F.col("__m").alias("__ma"))
+    mb = members.select(F.col("__rid").alias("doc_b"), F.col("__m").alias("__mb"))
+    return (
+        pairs.join(ma, "doc_a")
+        .join(mb, "doc_b")
+        # cross-group: every member combination, oriented; within-group:
+        # each unordered member pair once
+        .filter(
+            (F.col("doc_a") != F.col("doc_b")) | (F.col("__ma") < F.col("__mb"))
+        )
+        .select(
+            F.least("__ma", "__mb").alias(out[0]),
+            F.greatest("__ma", "__mb").alias(out[1]),
+            measure,
+        )
+    )
+
+
+def _rep_group_membership(
+    pairs: DataFrame,
+    members: DataFrame,
+    id_col: str,
+    self_ok: bool,
+    max_iter: int,
+) -> DataFrame:
+    """(``id_col``, group_id) near-dup GROUP membership from verified REP
+    pairs — the shared tail of the MinHash, SimHash and embedding-LSH
+    group surfaces. ``pairs`` is as for :func:`_expand_rep_pairs` (its
+    SELF rows are dropped here); ``members`` is one (__m, __rid, __n) row
+    per input doc, __n the number of distinct ids in its group.
+    group_id is the minimum id reachable through the verified pair graph
+    (:func:`near_dup_components`, run over the distinct-payload rep graph
+    only: a group of k identical payloads is ONE node); members inherit
+    their rep's component through one id-equi join. A group of ≥ 2 with
+    no external neighbor is its own cluster when ``self_ok`` — the
+    payload's measure against itself clears the threshold. Docs in no
+    cluster get no row."""
+    comp = near_dup_components(
+        pairs.where(F.col("doc_a") != F.col("doc_b")), "doc_a", "doc_b",
+        max_iter=max_iter,
+    )
+    return (
+        members.join(
+            comp.select(F.col("id").alias("__rid"), "component"),
+            "__rid",
+            "left",
+        )
+        .select(
+            F.col("__m").alias(id_col),
+            F.when(F.col("component").isNotNull(), F.col("component"))
+            .when((F.col("__n") >= 2) & F.lit(self_ok), F.col("__rid"))
+            .alias("group_id"),
+        )
+        .where(F.col("group_id").isNotNull())
+    )
 
 
 def simhash_from_hashes(hashes: Column, bits: int) -> Column:
@@ -1659,16 +1672,12 @@ def simhash_near_dup_pairs(
     (distance ≤ 3, 4 bands) fully oracle-checkable against an all-pairs
     SQL twin.
 
-    Duplicate-proof (round 8): docs with identical sketches collapse
-    FIRST (:func:`_simhash_groups`), banding + Hamming verification run
-    over group representatives only, and surviving rep pairs expand back
-    to member pairs through two id-equi joins whose fan-out is exactly
-    the answer size — identical sketches share every band and Hamming
-    distance is a pure function of the sketches, so the output is
-    bit-identical to verifying every member pair, but a group of k exact
-    copies no longer emits k² candidates inside every shared bucket. The
-    pair EMISSION stays answer-sized by nature; for the production dedup
-    decision prefer :func:`simhash_dup_groups` (linear output).
+    Duplicate-proof: docs with identical sketches collapse first
+    (:func:`_simhash_groups`), banding + Hamming verification run over
+    group representatives only, and :func:`_expand_rep_pairs` maps rep
+    pairs back to member pairs (the argument is written there). For the
+    production dedup decision prefer :func:`simhash_dup_groups` (linear
+    output).
 
     Scale: sketches are 60/64-bit bigints — the candidate state per row
     is one long, not a shingle set, so this is the cheapest near-dup
@@ -1679,22 +1688,8 @@ def simhash_near_dup_pairs(
     ``total_bits`` must then be 64)."""
     grouped = _simhash_groups(df, id_col, text_col, total_bits, portable)
     pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
-    ma = grouped.select(F.col("__rid").alias("doc_a"), F.col("id").alias("__ma"))
-    mb = grouped.select(F.col("__rid").alias("doc_b"), F.col("id").alias("__mb"))
-    return (
-        pairs.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        # cross-group: every member combination, oriented; within-group:
-        # each unordered member pair once
-        .filter(
-            (F.col("doc_a") != F.col("doc_b")) | (F.col("__ma") < F.col("__mb"))
-        )
-        .select(
-            F.least("__ma", "__mb").alias("doc_a"),
-            F.greatest("__ma", "__mb").alias("doc_b"),
-            "hamming",
-        )
-    )
+    members = grouped.select("__rid", F.col("id").alias("__m"))
+    return _expand_rep_pairs(pairs, members, "hamming", ("doc_a", "doc_b"))
 
 
 def simhash_dup_groups(
@@ -1713,35 +1708,16 @@ def simhash_dup_groups(
     ``similarity.lsh_near_dup_groups``, SimHash → this): (doc_id,
     group_id) for every doc in a Hamming-ball cluster, group_id = the
     minimum doc id reachable through the verified pair graph. Components
-    run over the DISTINCT-sketch rep graph only (a group of k identical
-    sketches is ONE node), members inherit their rep's component through
-    one id-equi join, and an identical-sketch group of ≥ 2 with no
-    external neighbor is its own cluster (mutual distance 0). Equals the
-    transitive closure of :func:`simhash_near_dup_pairs` exactly — the
-    oracle replays that equivalence with a recursive CTE."""
+    run over the DISTINCT-sketch rep graph only
+    (:func:`_rep_group_membership`), and an identical-sketch group of ≥ 2
+    with no external neighbor is its own cluster (mutual distance 0).
+    Equals the transitive closure of :func:`simhash_near_dup_pairs`
+    exactly — the oracle replays that equivalence with a recursive CTE."""
     grouped = _simhash_groups(df, id_col, text_col, total_bits, portable)
-    cross = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits).where(
-        F.col("doc_a") != F.col("doc_b")
-    )
-    comp = near_dup_components(cross, "doc_a", "doc_b", max_iter=max_iter)
-    return (
-        grouped.select("id", "__rid", "__n")
-        .join(
-            comp.select(F.col("id").alias("__rid"), "component"),
-            "__rid",
-            "left",
-        )
-        .select(
-            F.col("id").alias(id_col),
-            F.when(F.col("component").isNotNull(), F.col("component"))
-            # self-qualifying identical-sketch groups: distance 0 clears
-            # any real max_distance ≥ 0
-            .when(
-                (F.col("__n") >= 2) & F.lit(max_distance >= 0), F.col("__rid")
-            )
-            .alias("group_id"),
-        )
-        .where(F.col("group_id").isNotNull())
-        # duplicated input ids collapse to one membership row
-        .distinct()
-    )
+    pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
+    members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
+    # an identical-sketch group's distance 0 clears any real
+    # max_distance ≥ 0; duplicated input ids collapse to one membership row
+    return _rep_group_membership(
+        pairs, members, id_col, max_distance >= 0, max_iter
+    ).distinct()

@@ -5,6 +5,7 @@ queries so Spark and DuckDB produce bit-identical values."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -128,7 +129,7 @@ def canon_rows(pdf: pd.DataFrame) -> list[tuple]:
     return sorted(rows, key=lambda r: tuple((x is None, str(type(x)), str(x)) for x in r))
 
 
-def prefetch_spark_pdfs(thunks: dict, max_workers: int = 8) -> dict:
+def prefetch_spark_pdfs(thunks: dict) -> dict:
     """Run every thunk's DataFrame to pandas CONCURRENTLY and return
     {name: pandas.DataFrame | Exception}.
 
@@ -143,7 +144,9 @@ def prefetch_spark_pdfs(thunks: dict, max_workers: int = 8) -> dict:
     compares its own precomputed frame against DuckDB. Per-test
     granularity is unchanged: a query that raises has its exception
     captured HERE and re-raised by the owning test (see
-    :func:`unwrap_prefetched`), not by the fixture."""
+    :func:`unwrap_prefetched`), not by the fixture. The pool is capped at
+    min(8, cores) to bound how many results are collected into driver
+    memory at once."""
     from concurrent.futures import ThreadPoolExecutor
 
     def run(item):
@@ -153,14 +156,17 @@ def prefetch_spark_pdfs(thunks: dict, max_workers: int = 8) -> dict:
         except Exception as exc:  # noqa: BLE001 - re-raised per-test
             return name, exc
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with ThreadPoolExecutor(max_workers=min(8, os.cpu_count() or 1)) as pool:
         return dict(pool.map(run, thunks.items()))
 
 
 def unwrap_prefetched(results: dict, name: str):
-    """Fetch one prefetched result, re-raising its captured exception so
-    the failure surfaces in the owning parametrized test."""
-    res = results[name]
+    """Take one prefetched result out of ``results``, re-raising its
+    captured exception so the failure surfaces in the owning
+    parametrized test. The entry is popped, so a module's prefetched
+    frames are freed one by one as their tests compare them instead of
+    all living until the module fixture is torn down."""
+    res = results.pop(name)
     if isinstance(res, Exception):
         raise res
     return res

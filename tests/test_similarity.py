@@ -587,10 +587,10 @@ def test_arrow_assignment_matches_native(emb):
     native literal-fold argmin — same cid for every rep, on real data,
     at a k large enough that tie behavior and fold order both matter
     (32 centroids × 64 dims; the auto-k regime where the Arrow path
-    engages). Also pins that the full semantic_dedup decision set is
-    identical under a forced Arrow assignment."""
+    engages)."""
     from ehr_data_pipeline_spark.operators.similarity import (
-        _assign_cells,
+        _assign_cells_arrow,
+        _centroid_dists,
         train_ivf_centroids,
     )
 
@@ -600,11 +600,13 @@ def test_arrow_assignment_matches_native(emb):
     )
     native = {
         r["__rid"]: r["__cid"]
-        for r in _assign_cells(src, cents, "__rv", "__cid", arrow=False).collect()
+        for r in src.withColumn(
+            "__cid", _centroid_dists("__rv", cents)[0]["cid"]
+        ).collect()
     }
     arrow = {
         r["__rid"]: r["__cid"]
-        for r in _assign_cells(src, cents, "__rv", "__cid", arrow=True).collect()
+        for r in _assign_cells_arrow(src, cents, "__rv", "__cid").collect()
     }
     assert native == arrow
     assert len(native) == 500

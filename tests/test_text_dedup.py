@@ -544,10 +544,8 @@ def test_near_dup_components_transitive_chain(spark):
 
 def test_near_dup_components_unconverged_raises(spark):
     """A path graph of diameter 9 cannot finish min-label propagation in
-    2 rounds — strict mode must refuse to return split components;
-    strict=False warns and returns the partial labels."""
-    import warnings
-
+    2 rounds — near_dup_components must refuse to return split
+    components."""
     from ehr_data_pipeline_spark.operators.text_dedup import near_dup_components
 
     path = spark.createDataFrame(
@@ -555,11 +553,6 @@ def test_near_dup_components_unconverged_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         near_dup_components(path, max_iter=2)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        partial = near_dup_components(path, max_iter=2, strict=False)
-        assert partial.count() == 10
-    assert any("did not converge" in str(w.message) for w in caught)
     # and with enough rounds the same graph converges to one component
     full = {r["component"] for r in near_dup_components(path, max_iter=20).collect()}
     assert full == {1}
