@@ -31,6 +31,21 @@ between engines, which makes the brute-force path DuckDB-oracle-exact.
 Hyperplane components are pseudo-random but deterministic: xxhash64 of
 (plane, dim) scaled to [-1, 1] — no stored model, any executor can
 recompute them, and resharding cannot change results.
+
+Each kNN/IVF decision has one private home that every operator calls:
+
+- ``_valid`` — the embeddings-contract row filter (non-NULL id, valid
+  vector).
+- ``_top_k`` — the rank tail: drop self-matches, score ROUND(cosine, 6),
+  keep each query's k best. All four kNN operators end in it.
+- ``_assign_cells`` — the only nearest-centroid argmin (Lloyd passes,
+  ``ivf_knn``, ``build_ivf_index``, SemDeDup, the streaming index): the
+  native literal fold below ``_ARROW_ASSIGN_THRESHOLD``, its
+  bit-identical Arrow twin above.
+- ``_probe_cells`` — the IVF search: probe explode, cell join,
+  ``_top_k``; shared by ``ivf_knn`` and ``ivf_knn_against_index``.
+- ``_cell_dup_ids`` — SemDeDup's within-cell keep-first drop rule,
+  shared by batch and incremental semantic dedup.
 """
 
 from __future__ import annotations
@@ -93,6 +108,12 @@ def _empty_pairs(df: DataFrame, id_col: str) -> DataFrame:
     ).limit(0)
 
 
+def _valid(id_col: str, vec_col: str, dim: int) -> Column:
+    """The embeddings-contract row filter: a non-NULL id and a valid
+    ``dim``-vector (functions/measurement.py)."""
+    return F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+
+
 def to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
@@ -149,7 +170,7 @@ def brute_force_knn(
     dim = _resolve_dim(corpus, dim, id_col, vec_col)
     if dim is None:
         return _empty_knn(corpus, id_col)
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+    keep = _valid(id_col, vec_col, dim)
     q = F.broadcast(
         queries.where(keep).select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
@@ -158,14 +179,18 @@ def brute_force_knn(
     c = ensure_min_partitions(corpus.where(keep)).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine"),
-        )
+    return _top_k(q.crossJoin(c), k)
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The kNN family's rank tail, shared by every kNN operator: over
+    (query_id, __qv, neighbor_id, __cv) candidates, drop self-matches,
+    score ROUND(cosine, 6) and keep each query's k best (cosine DESC,
+    neighbor_id ASC)."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -189,48 +214,17 @@ def _hyperplane(table: int, plane: int, dim: int) -> list[float]:
     return [rng.gauss(0.0, 1.0) for _ in range(dim)]
 
 
-def _bucket_of_double(
-    v: Column, dim: int, n_planes: int, table: int
-) -> Column:
-    """Sign-bit bucket key from an ALREADY-DOUBLE vector (a bound lambda
-    variable): bit p = 1 iff v · hyperplane_{table,p} >= 0. The projection
-    is a zip_with/aggregate fold against a constant-folded plane array."""
-    bits = []
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(h) for h in _hyperplane(table, p, dim)])
-        proj = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def lsh_bucket(
-    vec: Column, dim: int, n_planes: int = DEFAULT_PLANES, table: int = 0
-) -> Column:
-    """Sign-bit bucket key for one hash table: bit p = 1 iff
-    vec · hyperplane_{table,p} >= 0. In-row, narrow; two vectors at angle
-    θ share the bucket with probability (1 - θ/π)^P. The float→double
-    conversion is let-bound so it runs once per row, not once per plane."""
-    from ehr_data_pipeline_spark.operators.text_analysis import let_bound
-
-    return let_bound(
-        to_double(vec), lambda v: _bucket_of_double(v, dim, n_planes, table)
-    )
-
-
 def _all_table_buckets(
     vec: Column, dim: int, n_planes: int, n_tables: int
 ) -> Column:
     """array<struct<t, key>> of every table's bucket key, computed by
     iterating ONE constant-folded (tables × planes × dim) literal matrix
-    with array higher-order functions. Value-identical to
-    :func:`_bucket_of_double` per table — the per-plane dot is the same
-    left-associated IEEE fold (0.0 + x₁ + x₂ + …) and the bit order is
-    unchanged, so every registered oracle replays the identical
-    arithmetic (equality to the per-table form asserted in tests).
+    with array higher-order functions. Value-identical to the per-table
+    sign-bit fold (bit p = 1 iff v · hyperplane_{t,p} >= 0) — the
+    per-plane dot is the same left-associated IEEE fold
+    (0.0 + x₁ + x₂ + …) and the bit order is unchanged, so every
+    registered oracle replays the identical arithmetic (equality to the
+    per-table form asserted in tests/test_similarity.py).
 
     Formulation findings (r9, measured at 12 planes × 16 tables over 20k
     sf0.1 vectors — the knobs the hi-threshold near-dup regime needs):
@@ -330,7 +324,7 @@ def lsh_knn(
     dim = _resolve_dim(corpus, dim, id_col, vec_col)
     if dim is None:
         return _empty_knn(corpus, id_col)
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+    keep = _valid(id_col, vec_col, dim)
     c = _with_table_buckets(
         ensure_min_partitions(corpus.where(keep)).select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
@@ -352,19 +346,7 @@ def lsh_knn(
         # dominate the exchange
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(candidates, k)
 
 
 def cosine_near_dup_pairs(
@@ -389,9 +371,7 @@ def cosine_near_dup_pairs(
     dim = _resolve_dim(df, dim, id_col, vec_col)
     if dim is None:
         return _empty_pairs(df, id_col)
-    df = ensure_min_partitions(
-        df.where(F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim))
-    )
+    df = ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (
@@ -423,9 +403,7 @@ def _vector_groups(
     duplicate full rows collapse at the id-dedup (the pair contract is
     one vector per id)."""
     valid = (
-        ensure_min_partitions(
-            df.where(F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim))
-        )
+        ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
         .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
         .dropDuplicates(["__id"])
     )
@@ -728,8 +706,8 @@ def train_ivf_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Coarse-quantizer training for IVF: deterministic seeding (the
     n_list vectors with the smallest ids) followed by ``n_iters`` Lloyd
-    passes — assign each vector to its nearest centroid with an in-row
-    argmin against the literal centroid set (narrow map), recompute means
+    passes — assign each vector to its nearest centroid
+    (:func:`_assign_cells`, narrow map), recompute means
     with one groupBy. The centroid set is tiny (n_list × dim floats) so it
     rides to executors as literals — no join, no stored model. Each Lloyd
     pass is one shuffle on cid; at 100 TB train on a sampled fraction
@@ -741,7 +719,7 @@ def train_ivf_centroids(
     dim = _resolve_dim(df, dim, id_col, vec_col)
     if dim is None:
         return []
-    df = df.where(F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim))
+    df = df.where(_valid(id_col, vec_col, dim))
     seed = [
         (i, [float(x) for x in r[1]])
         for i, r in enumerate(
@@ -756,9 +734,8 @@ def train_ivf_centroids(
     centroids = seed
     dim = len(seed[0][1])
     for _ in range(n_iters):
-        assigned = df.select(
-            _centroid_dists(vec_col, centroids)[0]["cid"].alias("cid"),
-            F.col(vec_col).alias("__v"),
+        assigned = _assign_cells(
+            df.select(F.col(vec_col).alias("__v")), centroids, "__v", "cid"
         )
         means = assigned.groupBy("cid").agg(
             *[
@@ -799,46 +776,42 @@ def ivf_knn(
     dim = _resolve_dim(corpus, dim, id_col, vec_col)
     if dim is None:
         return _empty_knn(corpus, id_col)
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+    keep = _valid(id_col, vec_col, dim)
     corpus, queries = corpus.where(keep), queries.where(keep)
     centroids = train_ivf_centroids(corpus, n_list, n_iters, id_col, vec_col, dim)
     if not centroids:
         # empty corpus ⇒ empty index ⇒ empty result, correct schema
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(1).alias("rank"),
-            F.lit(0.0).alias("cosine"),
-        ).limit(0)
-    corpus = ensure_min_partitions(corpus)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _centroid_dists(vec_col, centroids)[0]["cid"].alias("__cid"),
+        return _empty_knn(corpus, id_col)
+    index = _assign_cells(
+        ensure_min_partitions(corpus).select(id_col, vec_col),
+        centroids, vec_col, "cid",
     )
+    return _probe_cells(queries, index, centroids, k, n_probe, id_col, vec_col)
+
+
+def _probe_cells(
+    queries: DataFrame,
+    index: DataFrame,
+    centroids: "list[tuple[int, list[float]]]",
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The IVF search step shared by :func:`ivf_knn` and
+    :func:`ivf_knn_against_index`: each query explodes its ``n_probe``
+    nearest cells, joins the (id, cid, vector) ``index`` on cid, and
+    :func:`_top_k` re-ranks the probed cells' rows exactly."""
     probes = F.slice(_centroid_dists(vec_col, centroids), 1, n_probe)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         F.explode(probes).alias("__p"),
-    ).select("query_id", "__qv", F.col("__p.cid").alias("__cid"))
-    scored = (
-        q.join(c, "__cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine"),
-        )
+    ).select("query_id", "__qv", F.col("__p.cid").alias("cid"))
+    c = index.select(
+        F.col(id_col).alias("neighbor_id"), "cid", F.col(vec_col).alias("__cv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(q.join(c, "cid"), k)
 
 
 def auto_n_clusters(
@@ -948,7 +921,7 @@ def semantic_dedup(
         # distinct vectors. The exact count stays the k source: approx
         # would break the oracle's replay of the derivation.
         n_reps = (
-            df.where(F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim))
+            df.where(_valid(id_col, vec_col, dim))
             .agg(F.countDistinct(vec_col).alias("__n"))
             .collect()[0]["__n"]
         )
@@ -960,32 +933,18 @@ def semantic_dedup(
     # member join); persist so the argmin — the dominant term once k
     # scales with the corpus — runs once per rep, not three times
     assigned = _persist_tracked(_assign_cells(
-        mem.where(F.col("__id") == F.col("__rid")).select(
-            F.col("__id").alias("__rid"), F.col("__v").alias("__rv")
-        ),
-        centroids, "__rv", "__cid",
+        mem.where(F.col("__id") == F.col("__rid")).select("__id", "__v"),
+        centroids, "__v", "__cid",
     ))
-    a = assigned.select(
-        F.col("__rid").alias("__xa"), F.col("__rv").alias("__va"), "__cid"
-    )
-    b = assigned.select(
-        F.col("__rid").alias("__xb"), F.col("__rv").alias("__vb"), "__cid"
-    )
     dropped = (
-        a.join(b, "__cid")
-        .filter(F.col("__xb") < F.col("__xa"))
-        .select(
-            "__xa",
-            F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("__c"),
-        )
-        .filter(F.col("__c") >= F.lit(threshold))
-        .select(F.col("__xa").alias("__rid"))
+        _cell_dup_ids(assigned, threshold)
+        .select(F.col("__id").alias("__rid"))
         .distinct()
         .withColumn("__dup", F.lit(True))
     )
     return (
         mem.select("__id", "__rid")
-        .join(assigned.select("__rid", "__cid"), "__rid")
+        .join(assigned.select(F.col("__id").alias("__rid"), "__cid"), "__rid")
         .join(dropped, "__rid", "left")
         .select(
             F.col("__id").alias(id_col),
@@ -999,6 +958,25 @@ def semantic_dedup(
             .otherwise(F.col("__dup").isNull())
             .alias("kept"),
         )
+    )
+
+
+def _cell_dup_ids(cells: DataFrame, threshold: float) -> DataFrame:
+    """SemDeDup's keep-first drop rule over (__id, __v, __cid) rows: the
+    ``__id`` of every row that some LOWER-id row in the same cell matches
+    at ROUND(cosine, 6) >= threshold — once per such pair, so callers
+    take the distinct."""
+    a = cells.select(F.col("__id").alias("__xa"), F.col("__v").alias("__va"), "__cid")
+    b = cells.select(F.col("__id").alias("__xb"), F.col("__v").alias("__vb"), "__cid")
+    return (
+        a.join(b, "__cid")
+        .filter(F.col("__xb") < F.col("__xa"))
+        .select(
+            F.col("__xa").alias("__id"),
+            F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("__c"),
+        )
+        .filter(F.col("__c") >= F.lit(threshold))
+        .select("__id")
     )
 
 
@@ -1043,7 +1021,7 @@ def semantic_dedup_against_index(
     empty_entries = batch.select(F.col(id_col), F.col(vec_col)).limit(0)
     if dim is None:
         return batch.limit(0), empty_entries
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+    keep = _valid(id_col, vec_col, dim)
     mem = _persist_tracked(_vector_groups(batch, id_col, vec_col, dim))
     reps = mem.where(F.col("__id") == F.col("__rid")).select("__id", "__v")
     if not centroids:
@@ -1089,19 +1067,7 @@ def semantic_dedup_against_index(
             .filter(F.col("__c") >= F.lit(threshold))
             .select("__id")
         )
-        a = bt.select(F.col("__id").alias("__xa"), F.col("__v").alias("__va"), "__cid")
-        b = bt.select(F.col("__id").alias("__xb"), F.col("__v").alias("__vb"), "__cid")
-        batch_hits = (
-            a.join(b, "__cid")
-            .filter(F.col("__xb") < F.col("__xa"))
-            .select(
-                F.col("__xa").alias("__id"),
-                F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("__c"),
-            )
-            .filter(F.col("__c") >= F.lit(threshold))
-            .select("__id")
-        )
-        dropped = hist_hits.unionByName(batch_hits).distinct()
+        dropped = hist_hits.unionByName(_cell_dup_ids(bt, threshold)).distinct()
         fresh_ids = (
             reps.join(dropped, reps["__id"] == dropped["__id"], "left_anti")
             .select(F.col("__id").alias(id_col))
@@ -1175,7 +1141,7 @@ def semantic_contamination(
 
     if dim is None:
         return empty()
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+    keep = _valid(id_col, vec_col, dim)
     b = F.broadcast(
         benchmark.where(keep)
         .select(F.col(id_col).alias("benchmark_id"), F.col(vec_col).alias("__bv"))
@@ -1421,8 +1387,8 @@ def build_ivf_index(
     dim: "int | None" = None,
 ) -> DataFrame:
     """The PERSISTED IVF index for a vector corpus: one (id, cid, vector)
-    row per valid vector, cid = nearest coarse centroid (in-row argmin
-    against the literal centroid set — narrow map, no shuffle). The ANN
+    row per valid vector, cid = nearest coarse centroid
+    (:func:`_assign_cells` — narrow map, no shuffle). The ANN
     twin of ``text_dedup.build_minhash_index``: at 100 TB this is built
     ONCE, written ``partitionBy("cid")`` (``sinks``/plain parquet — the
     hive layout makes every probe-side join a partition-pruned read) and
@@ -1439,16 +1405,12 @@ def build_ivf_index(
         return df.select(
             F.col(id_col), F.lit(0).alias("cid"), F.col(vec_col)
         ).limit(0)
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
-    return (
-        ensure_min_partitions(df.where(keep))
+    return _assign_cells(
+        ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
         .dropDuplicates([id_col])
-        .select(
-            F.col(id_col),
-            _centroid_dists(vec_col, centroids)[0]["cid"].alias("cid"),
-            F.col(vec_col),
-        )
-    )
+        .select(id_col, vec_col),
+        centroids, vec_col, "cid",
+    ).select(id_col, "cid", vec_col)
 
 
 def ivf_knn_against_index(
@@ -1472,42 +1434,16 @@ def ivf_knn_against_index(
     cid — with a hive ``cid=`` layout that join is a partition-pruned
     read — and exact cosine re-ranks within the probed cells
     (cosine DESC, id ASC — the kNN family's deterministic rank rule).
-    Result is IDENTICAL to :func:`ivf_knn` over the same corpus,
-    centroids and probe count (asserted in tests): the index just
-    amortizes the assignment across query batches. Self-matches
-    (query id == index id) are excluded, as in the whole kNN family."""
+    On id-unique input the result is IDENTICAL to :func:`ivf_knn` over
+    the same corpus, centroids and probe count (asserted in tests): both
+    search through :func:`_probe_cells`, and the index just amortizes
+    the assignment across query batches (only this path dedups ids).
+    Self-matches (query id == index id) are excluded, as in the whole
+    kNN family."""
     dim = _resolve_dim(queries, dim, id_col, vec_col)
     if dim is None or not centroids:
         return _empty_knn(queries, id_col)
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
-    probes = F.slice(_centroid_dists(vec_col, centroids), 1, n_probe)
-    q = (
-        ensure_min_partitions(queries.where(keep))
-        .dropDuplicates([id_col])
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            F.explode(probes).alias("__p"),
-        )
-        .select("query_id", "__qv", F.col("__p.cid").alias("cid"))
-    )
-    c = index.select(
-        F.col(id_col).alias("neighbor_id"), F.col("cid"), F.col(vec_col).alias("__cv")
-    )
-    scored = (
-        q.join(c, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    q = ensure_min_partitions(
+        queries.where(_valid(id_col, vec_col, dim))
+    ).dropDuplicates([id_col])
+    return _probe_cells(q, index, centroids, k, n_probe, id_col, vec_col)

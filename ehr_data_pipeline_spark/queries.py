@@ -3403,13 +3403,13 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_bucket_sql(table: int, n_planes: int, vec: str = "embedding") -> str:
-    """DuckDB twin of ``similarity.lsh_bucket``: the hyperplanes are
-    deterministic (md5-seeded Gaussians, ``similarity._hyperplane``), so the
-    oracle embeds the SAME plane values as SQL literals and replays the
-    sign-bit bucket exactly. Summation parity: ``list_sum(list_transform(...))``
-    is the same per-element sequential double fold Spark's ``aggregate`` runs
-    (already proven bit-exact by the hash-green cosine oracles), and only the
-    SIGN of the projection matters here, so the bucket keys match."""
+    """DuckDB twin of one table's key in ``similarity._all_table_buckets``:
+    the hyperplanes are md5-seeded Gaussians (``similarity._hyperplane``),
+    so the oracle embeds the SAME plane values as SQL literals and replays
+    the sign-bit bucket exactly. Summation parity: the per-element fold
+    ``list_sum(list_transform(...))`` is the same sequential double fold
+    Spark's ``aggregate`` runs (bit-exact per the hash-green cosine
+    oracles), and only the SIGN of the projection matters: the keys match."""
     from ehr_data_pipeline_spark.operators.similarity import _hyperplane
 
     bits = []

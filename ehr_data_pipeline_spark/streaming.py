@@ -1240,10 +1240,11 @@ def run_ivf_index_stream(
     """Continuous maintenance of the PERSISTED IVF index
     (``similarity.build_ivf_index`` layout) — deliberately the NATIVE
     Structured Streaming parquet sink rather than a foreachBatch
-    maintainer: cell assignment is a narrow in-row map (argmin against
-    the fixed literal quantizer), so it composes with ``readStream``
-    directly, the file sink's transaction log provides exactly-once for
-    appends, and ``partitionBy("cid")`` lands the hive layout that makes
+    maintainer: cell assignment (``similarity._assign_cells`` — the
+    native argmin against the fixed literal quantizer, or its Arrow twin
+    above the measured crossover) is a narrow map, so it composes with
+    ``readStream`` directly, the file sink's transaction log provides
+    exactly-once for appends, and ``partitionBy("cid")`` lands the hive layout that makes
     every :func:`~ehr_data_pipeline_spark.operators.similarity.ivf_knn_against_index`
     probe join a partition-pruned read. No custom epoch state is needed
     because the index is APPEND-ONLY facts (id, cid, vector) with no
@@ -1252,18 +1253,15 @@ def run_ivf_index_stream(
     explicit: inference would require an action, which a streaming plan
     cannot run. Read the accumulated index back with a plain
     ``spark.read.parquet(index_path)``."""
-    from ehr_data_pipeline_spark.functions.measurement import valid_vector
-    from ehr_data_pipeline_spark.operators.similarity import _centroid_dists
+    from ehr_data_pipeline_spark.operators.similarity import _assign_cells, _valid
 
     if not centroids:
         raise ValueError("run_ivf_index_stream needs a trained quantizer "
                          "(centroids == [] would land an unsearchable index)")
-    keep = F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
-    assigned = vectors.where(keep).select(
-        F.col(id_col),
-        _centroid_dists(vec_col, centroids)[0]["cid"].alias("cid"),
-        F.col(vec_col),
-    )
+    assigned = _assign_cells(
+        vectors.where(_valid(id_col, vec_col, dim)).select(id_col, vec_col),
+        centroids, vec_col, "cid",
+    ).select(id_col, "cid", vec_col)
     query = (
         assigned.writeStream.format("parquet")
         .option("path", index_path)

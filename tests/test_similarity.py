@@ -138,7 +138,11 @@ def test_lsh_same_bucket_means_same_key_join(emb):
     assert len(rank1_exact & rank1_full) >= 2
 
 
-def test_ivf_knn_recall_and_full_probe_exactness(emb):
+@pytest.mark.parametrize("n_list", [8, 32])
+def test_ivf_knn_recall_and_full_probe_exactness(emb, n_list):
+    """n_list=32 puts k·dim = 2048 at _ARROW_ASSIGN_THRESHOLD, so Lloyd
+    training and corpus assignment take the Arrow path; full probe must
+    still equal brute force."""
     from ehr_data_pipeline_spark.operators.similarity import ivf_knn
 
     queries = emb.filter(F.col("vec_id") < 20)
@@ -147,14 +151,16 @@ def test_ivf_knn_recall_and_full_probe_exactness(emb):
         for r in brute_force_knn(emb, queries, k=3).collect()
     }
     # probing HALF the cells must retain decent recall
-    half = ivf_knn(emb, queries, k=3, n_list=8, n_probe=4)
+    half = ivf_knn(emb, queries, k=3, n_list=n_list, n_probe=n_list // 2)
     got = {(r["query_id"], r["neighbor_id"]) for r in half.collect()}
     recall = len(exact & got) / len(exact)
     assert recall >= 0.6, f"IVF recall collapsed: {recall}"
     # probing EVERY cell is the exact search: identical rows incl. rank
     full = {
         (r["query_id"], r["neighbor_id"], r["rank"], r["cosine"])
-        for r in ivf_knn(emb, queries, k=3, n_list=8, n_probe=8).collect()
+        for r in ivf_knn(
+            emb, queries, k=3, n_list=n_list, n_probe=n_list
+        ).collect()
     }
     want = {
         (r["query_id"], r["neighbor_id"], r["rank"], r["cosine"])
@@ -587,10 +593,12 @@ def test_arrow_assignment_matches_native(emb):
     native literal-fold argmin — same cid for every rep, on real data,
     at a k large enough that tie behavior and fold order both matter
     (32 centroids × 64 dims; the auto-k regime where the Arrow path
-    engages)."""
+    engages) — and build_ivf_index, which routes through _assign_cells,
+    must land the same cid per id."""
     from ehr_data_pipeline_spark.operators.similarity import (
         _assign_cells_arrow,
         _centroid_dists,
+        build_ivf_index,
         train_ivf_centroids,
     )
 
@@ -610,6 +618,11 @@ def test_arrow_assignment_matches_native(emb):
     }
     assert native == arrow
     assert len(native) == 500
+    index = {
+        r["vec_id"]: r["cid"]
+        for r in build_ivf_index(emb, cents, dim=64).collect()
+    }
+    assert index == native
 
 
 def test_semantic_contamination_flags_planted_leakage(spark, emb):
@@ -832,12 +845,30 @@ def test_ivf_index_search_matches_ivf_knn(spark, emb):
     assert ivf_knn_against_index(queries, empty, [], dim=64).count() == 0
 
 
+def _bucket_of_double(v, dim: int, n_planes: int, table: int):
+    """Reference per-table sign-bit bucket key from an ALREADY-DOUBLE
+    vector (a bound lambda variable): bit p = 1 iff
+    v · hyperplane_{table,p} >= 0, one zip_with/aggregate fold per
+    plane against a constant-folded plane array."""
+    from ehr_data_pipeline_spark.operators.similarity import _hyperplane
+
+    bits = []
+    for p in range(n_planes):
+        plane = F.array(*[F.lit(h) for h in _hyperplane(table, p, dim)])
+        proj = F.aggregate(
+            F.zip_with(v, plane, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+    return F.concat(*bits)
+
+
 def test_all_table_buckets_matches_per_table_form(emb):
     """The constant-folded matrix bucket form must produce EXACTLY the
     per-table _bucket_of_double keys for every (vector, table) — the
     arithmetic identity every LSH oracle depends on."""
     from ehr_data_pipeline_spark.operators.similarity import (
-        _bucket_of_double,
         _with_table_buckets,
         to_double,
     )

@@ -849,10 +849,13 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
     assert got_replay == expect_full
 
 
-def test_ivf_index_stream_matches_batch_build(checkpointed, tmp_path):
+@pytest.mark.parametrize("n_list", [4, 32])
+def test_ivf_index_stream_matches_batch_build(checkpointed, tmp_path, n_list):
     """The native partitioned-file-sink index stream must land exactly
     the rows batch build_ivf_index produces, and searching the
-    read-back (hive cid= layout) must equal searching the batch index."""
+    read-back (hive cid= layout) must equal searching the batch index.
+    n_list=32 (k·dim = 2048) assigns cells through the Arrow twin, a
+    mapInPandas over the streaming frame."""
     from ehr_data_pipeline_spark.operators.similarity import (
         build_ivf_index,
         ivf_knn_against_index,
@@ -862,7 +865,7 @@ def test_ivf_index_stream_matches_batch_build(checkpointed, tmp_path):
 
     spark = checkpointed
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    cents = train_ivf_centroids(emb, n_list=4, n_iters=0, dim=64)
+    cents = train_ivf_centroids(emb, n_list=n_list, n_iters=0, dim=64)
     src = tmp_path / "ivf_src"
     for i, sl in enumerate([
         emb.filter(F.col("vec_id") < 200),
