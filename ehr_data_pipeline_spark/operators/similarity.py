@@ -244,8 +244,8 @@ def _all_table_buckets(
       arrays constant-fold into ONE array literal, the tree is three
       HOF nodes, and per-pass cost equals the unrolled-aggregates HOF
       form. The real 100 TB lever is architectural, not expression-
-      level: land the band entries ONCE (the persisted-index pattern —
-      ``minhash_band_entries`` / ``build_ivf_index``) so the projection
+      level: land the index ONCE (the persisted-index pattern —
+      ``build_minhash_index`` / ``build_ivf_index``) so the projection
       runs once per corpus rather than once per query."""
     matrix = F.array(*[
         F.array(*[

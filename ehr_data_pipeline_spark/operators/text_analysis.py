@@ -1349,67 +1349,14 @@ def bm25_scores(
     ranking). Returns ``(id, bm25_micro, bm25)`` for docs containing at
     least one query term.
 
-    Scale shape: corpus stats are two linear aggregates (doc lengths;
-    per-query-term document frequencies — the query-term set is a tiny
-    broadcast literal); scoring is one semi-join-shaped pass over the
-    exploded tokens filtered to query terms, then a per-doc groupBy.
-
-    Cross-engine determinism: each per-term score is one fixed IEEE
-    chain over exact inputs, then quantized to 1e-6 units as a BIGINT
-    BEFORE the per-doc sum (a double Σ over terms is order-dependent;
-    the integer Σ commutes — the unigram-LM/DSIR trick), and the IDF's
-    libm log2 is itself pre-quantized to 1e-4 bits. ``bm25`` is the one
-    final division of the exact micro total."""
-    toks = whitespace_tokens(F.col(text_col))
-    terms = sorted(set(query_terms))
-    # doc lengths come from F.size in one narrow pass — exploding the
-    # whole corpus just to count tokens per doc would add a full
-    # doc-keyed shuffle; the explode below only materializes the
-    # query-term hits
-    lens = df.select(
-        F.col(id_col).alias("id"), F.size(toks).cast("bigint").alias("dl")
-    )
-    corpus = lens.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("total_tokens"),
-    )
-    hits = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok")).where(
-        F.col("tok").isin(terms)
-    )
-    tf = hits.groupBy("id", "tok").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("df_t"))
-
-    q_idf = F.round(
-        F.log2(
-            (F.col("n_docs").cast("double") - F.col("df_t").cast("double") + 0.5)
-            / (F.col("df_t").cast("double") + 0.5)
-            + 1.0
-        )
-        * 10000
-    ).cast("bigint")
-    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")
-    denom = F.col("tf").cast("double") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)
-    )
-    term_score = (
-        (q_idf.cast("double") / F.lit(10000.0))
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / denom
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "tok")
-        .join(lens, "id")
-        .crossJoin(F.broadcast(corpus))
-        .select("id", F.round(term_score * 1000000).cast("bigint").alias("q_term"))
-    )
-    return (
-        scored.groupBy("id")
-        .agg(F.sum("q_term").cast("bigint").alias("bm25_micro"))
-        .select(
-            F.col("id").alias(id_col),
-            "bm25_micro",
-            (F.col("bm25_micro").cast("double") / F.lit(1000000.0)).alias("bm25"),
-        )
+    Scale shape: :func:`bm25_index_build` over the corpus followed by
+    :func:`bm25_search_against_index` (which owns the scoring math and
+    its cross-engine determinism argument). The optimizer pushes the
+    search's query-term filter below the postings aggregate, so the
+    corpus scan explodes tokens but aggregates only the query-term
+    hits; doc lengths are one narrow ``F.size`` pass."""
+    return bm25_search_against_index(
+        *bm25_index_build(df, id_col, text_col), query_terms, id_col, k1, b
     )
 
 
@@ -1634,15 +1581,20 @@ def bm25_search_against_index(
     b: float = 0.75,
 ) -> DataFrame:
     """Okapi BM25 over a persisted index (``bm25_index_build`` output,
-    possibly the union of many appended batches): identical scoring
-    math — and bit-identical output, asserted in tests — to the
-    corpus-scanning :func:`bm25_scores`, but touching only the query
+    possibly the union of many appended batches) — the one scoring
+    implementation; the corpus-scanning :func:`bm25_scores` is the
+    index build followed by this search. It touches only the query
     terms' posting rows plus the narrow lengths table. Corpus stats
     (n_docs, total token count, per-term document frequencies) derive
     from the index at search time, so scores always reflect the CURRENT
-    accumulated corpus; the per-term fixed-point quantization (1e-6
-    BIGINT micro-units before the per-doc sum, 1e-4-bit IDF) carries
-    over unchanged, keeping the ranking engine-portable."""
+    accumulated corpus.
+
+    Cross-engine determinism: each per-term score is one fixed IEEE
+    chain over exact inputs, then quantized to 1e-6 units as a BIGINT
+    BEFORE the per-doc sum (a double Σ over terms is order-dependent;
+    the integer Σ commutes — the unigram-LM/DSIR trick), and the IDF's
+    libm log2 is itself pre-quantized to 1e-4 bits. ``bm25`` is the one
+    final division of the exact micro total."""
     terms = sorted(set(query_terms))
     corpus = lengths.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -536,26 +536,6 @@ def build_minhash_index(
     )
 
 
-def minhash_band_entries(
-    index: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """The PERSISTED-INDEX companion of ``build_minhash_index``: derive
-    the compact (id, nsh, band_idx, band_key) inverted band-entry table
-    from an (id, sh, sig) index frame, to be landed ONCE next to the
-    index (plain or bucketed parquet via ``sinks.write_bucketed``) and
-    appended to per ingest batch — exactly like the index itself. Passing
-    it back as ``near_dedup_against_index(index_bands=...)`` makes the
-    per-batch candidate join scan FOUR small columns instead of
-    re-reading every historical shingle array and re-exploding bands per
-    batch; the full (id, sh) index is then touched only by the
-    verification lookup, which the candidate semi-structure prunes to
-    actual candidates. At 100 TB the band table is the piece a continuous
-    ingest reads every batch, so its compactness is the recurring cost."""
-    return _band_entries(index, num_hashes, bands)
-
-
 def near_dedup_against_index(
     batch: DataFrame,
     index: DataFrame,
@@ -565,7 +545,6 @@ def near_dedup_against_index(
     k: int = DEFAULT_SHINGLE_K,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    index_bands: DataFrame | None = None,
     sig_agree: int = 0,
 ) -> "tuple[DataFrame, DataFrame]":
     """Incremental NEAR-dup dedup — the continuous-ingest twin of
@@ -580,11 +559,17 @@ def near_dedup_against_index(
     doc — each test evaluated INDEPENDENTLY (a doc dropped via a doc
     that was itself dropped still drops: dedup stays conservative and
     order-deterministic, no sequential dependency between batch rows).
+    With every index id below every batch id, the kept batch ids are
+    exactly those that are never ``doc_b`` of
+    :func:`minhash_lsh_pairs` over history ∪ batch.
 
-    Scale: both candidate joins are band-bucket joins (never all-pairs);
-    the index side ships only (band entries + shingle arrays of actual
-    candidates); returns ``(fresh_rows, new_index_entries)`` — append
-    the latter to the index table, exactly like the exact-dedup variant.
+    One implementation with the batch surfaces: the in-batch pairs ARE
+    :func:`_rep_minhash_pairs` over the batch's rep signatures (minus
+    its self rows), and the index side is the same band-bucket join
+    (:func:`_band_candidates`, unordered — every index doc counts) and
+    the same verification (:func:`_verified`) against the index.
+    Returns ``(fresh_rows, new_index_entries)`` — append the latter to
+    the index table, exactly like the exact-dedup variant.
 
     Duplicate-proof: the BATCH side is collapsed to distinct
     shingle sets first (:func:`_shingle_groups` — ingest batches are the
@@ -600,107 +585,55 @@ def near_dedup_against_index(
     is identical to per-doc evaluation; a group of k copies costs one
     signature + one verification per distinct counterpart instead of k.
 
-    ``index_bands``: optionally pass the persisted
-    :func:`minhash_band_entries` table for the index side — the per-batch
-    candidate join then scans that compact table instead of re-deriving
-    band entries from every historical shingle array on every batch (the
-    recurring cost a continuous 100 TB ingest actually pays).
-
     ``sig_agree`` (0 = off): signature-agreement prefilter on BOTH
-    verification joins — a candidate must agree on at least that many
-    MinHash positions before its exact intersection runs (see
-    :func:`_rep_minhash_pairs`); the index side carries its signature
-    already (``build_minhash_index``), so the check is free to ship."""
+    verification joins (see :func:`_verified`); the index side carries
+    its signature already (``build_minhash_index``), so the check is
+    free to ship."""
     grouped = _shingle_groups(batch, id_col, text_col, k)
-    reps = grouped.where(F.col("id") == F.col("__rid")).select("id", "sh")
-    rsig = _persist_tracked(reps.select(
-        "id", "sh", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    ))
-    bb = _band_entries(rsig, num_hashes, bands)
-    ib = index_bands if index_bands is not None else _band_entries(
-        index, num_hashes, bands
-    )
-
-    def size_ok():
-        return F.least(F.col("a.nsh"), F.col("b.nsh")) >= (
-            F.lit(threshold) * F.greatest(F.col("a.nsh"), F.col("b.nsh"))
-        )
-
-    hist_cand = (
-        bb.alias("a")
-        .join(
-            ib.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & size_ok(),
-        )
-        .select(F.col("a.id").alias("ga"), F.col("b.id").alias("other_id"))
+    rsig = _rep_signatures(grouped, num_hashes)
+    hist_cand = _band_candidates(
+        _band_entries(rsig, num_hashes, bands),
+        _band_entries(index, num_hashes, bands),
+        threshold,
+        ordered=False,
     )
     # unordered group pairs — the drop rule applies them in both
     # directions (the higher group's members always drop; the lower
     # group's members drop above the higher rep)
-    self_cand = (
-        bb.alias("a")
-        .join(
-            bb.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id"))
-            & size_ok(),
-        )
-        .select(F.col("a.id").alias("ga"), F.col("b.id").alias("gb"))
-    )
-    hist_cand = _materialize_candidates(hist_cand.distinct())
-    self_cand = _materialize_candidates(self_cand.distinct())
-
-    cols = ["id", "sh", *(["sig"] if sig_agree > 0 else [])]
-    rsh, ish = rsig.select(*cols), index.select(*cols)
-    agree_ok = F.lit(True)
+    vpairs = _rep_minhash_pairs(
+        rsig, threshold, num_hashes, bands, sig_agree
+    ).where(F.col("doc_a") != F.col("doc_b"))
     if sig_agree > 0:
         # ADVICE r9: if the index was built with a different num_hashes,
         # zip_with null-pads the shorter signature, the equality lambda
         # yields NULL, and the agreement filter would silently drop every
-        # cross candidate — recall collapse with no error. Make the
-        # config mismatch raise at execution instead (assert_true returns
-        # NULL when the lengths match, so the guard costs one size check
-        # per candidate and nothing else).
+        # history candidate — recall collapse with no error. Make the
+        # config mismatch raise at execution instead (assert_true is NULL
+        # when the length matches, so the guard costs one size check per
+        # index row the verification reads). The batch signatures are
+        # built here with num_hashes, so only the index side can differ.
         sig_len_ok = F.assert_true(
-            (F.size(F.col("sa.sig")) == F.lit(num_hashes))
-            & (F.size(F.col("sb.sig")) == F.lit(num_hashes)),
+            F.size("sig") == F.lit(num_hashes),
             F.lit(
-                "near-dedup sig_agree prefilter: both sides' MinHash "
+                "near-dedup sig_agree prefilter: the index's MinHash "
                 f"signatures must have length num_hashes={num_hashes}; "
                 "the passed index was built with a different num_hashes"
             ),
         ).isNull()
-        agree_ok = sig_len_ok & (
-            _sig_agreement(F.col("sa.sig"), F.col("sb.sig")) >= F.lit(sig_agree)
+        index = index.select(
+            "id", "sh", F.when(sig_len_ok, F.col("sig")).alias("sig")
         )
     hist_matched = (
-        hist_cand.join(rsh.alias("sa"), F.col("ga") == F.col("sa.id"))
-        .join(ish.alias("sb"), F.col("other_id") == F.col("sb.id"))
-        .filter(agree_ok)
-        .filter(
-            jaccard_distinct(F.col("sa.sh"), F.col("sb.sh")) >= F.lit(threshold)
-        )
-        .select(F.col("ga").alias("__rid"))
+        _verified(hist_cand, rsig, index, threshold, sig_agree)
+        .select(F.col("doc_a").alias("__rid"))
         .distinct()
         .withColumn("__hist", F.lit(1))
     )
-    vpairs = (
-        self_cand.join(rsh.alias("sa"), F.col("ga") == F.col("sa.id"))
-        .join(rsh.alias("sb"), F.col("gb") == F.col("sb.id"))
-        .filter(agree_ok)
-        .filter(
-            jaccard_distinct(F.col("sa.sh"), F.col("sb.sh")) >= F.lit(threshold)
-        )
-        .select("ga", "gb")
-    )
     # per group: the minimum counterpart rep over its verified pairs
     min_other = (
-        vpairs.select(F.col("ga").alias("__rid"), F.col("gb").alias("__o"))
+        vpairs.select(F.col("doc_a").alias("__rid"), F.col("doc_b").alias("__o"))
         .unionByName(
-            vpairs.select(F.col("gb").alias("__rid"), F.col("ga").alias("__o"))
+            vpairs.select(F.col("doc_b").alias("__rid"), F.col("doc_a").alias("__o"))
         )
         .groupBy("__rid")
         .agg(F.min("__o").alias("__min_other"))
@@ -769,78 +702,86 @@ def _shingle_groups(
     return _persist_tracked(grouped)
 
 
-def _rep_minhash_pairs(
-    grouped: DataFrame,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-    sig_agree: int = 0,
+def _rep_signatures(grouped: DataFrame, num_hashes: int) -> DataFrame:
+    """The persisted (id, sh, __n, sig) MinHash signatures of the group
+    representatives of a :func:`_shingle_groups` frame — one signature
+    per DISTINCT shingle set."""
+    reps = grouped.where(F.col("id") == F.col("__rid")).select("id", "sh", "__n")
+    return _persist_tracked(reps.select(
+        "id", "sh", "__n", minhash_signature(F.col("sh"), num_hashes).alias("sig")
+    ))
+
+
+def _band_candidates(
+    a: DataFrame, b: DataFrame, threshold: float, ordered: bool
 ) -> DataFrame:
-    """(doc_a, doc_b, jaccard) verified near-dup pairs over the DISTINCT
-    shingle sets only: banding + size-ratio prune + exact-Jaccard
-    verification on group representatives, plus one SELF row per group
-    of ≥ 2 distinct docs (identical sets always share every band; their
-    Jaccard is exactly 1.0, computed once with the same expression so
-    the value is bit-identical to the pairwise formula).
+    """Materialized distinct (doc_a, doc_b) LSH candidates: the
+    (band_idx, band_key) bucket join of two :func:`_band_entries`
+    frames, ``doc_a`` from ``a``. ``ordered`` adds ``doc_a < doc_b``
+    (a self-join emits each unordered pair once); the history side of
+    :func:`near_dedup_against_index` joins unordered.
+
+    Size-ratio pruning (PPJoin-style): J(A,B) <= min(|A|,|B|)/max(...),
+    so candidates failing the ratio can NEVER pass the threshold — they
+    drop before the expensive intersection. Output set is unchanged."""
+    cond = (F.col("a.band_idx") == F.col("b.band_idx")) & (
+        F.col("a.band_key") == F.col("b.band_key")
+    )
+    if ordered:
+        cond = cond & (F.col("a.id") < F.col("b.id"))
+    cond = cond & (
+        F.least(F.col("a.nsh"), F.col("b.nsh"))
+        >= F.lit(threshold) * F.greatest(F.col("a.nsh"), F.col("b.nsh"))
+    )
+    return _materialize_candidates(
+        a.alias("a")
+        .join(b.alias("b"), cond)
+        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _verified(
+    candidates: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    threshold: float,
+    sig_agree: int,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) candidates whose exact shingle-set
+    Jaccard reaches ``threshold``: ``doc_a`` is looked up in ``left``,
+    ``doc_b`` in ``right`` (both (id, sh, sig) frames), by two id-equi
+    joins.
 
     ``sig_agree > 0`` enables the signature-agreement prefilter
     (VERDICT r8 #5): a candidate pair must agree on at least that many
-    of the ``num_hashes`` MinHash positions before the full shingle
-    intersection runs. The agreeing fraction is an unbiased estimator
-    of Jaccard (that is the MinHash property), so with H=16 and
-    threshold 0.6 a true pair expects ≥ 9.6 agreements while the
-    banding's boilerplate-bucket false positives (measured precision
-    0.13% at sf0.1 — NOTES_r08 profile) mostly stop at the 4 agreements
-    their one matching band guarantees. The 16-element integer
-    comparison costs ~nothing next to the ~1k-element array
-    intersection it gates, and the filter sits BEFORE the jaccard
+    of the MinHash positions before the full shingle intersection runs.
+    The agreeing fraction is an unbiased estimator of Jaccard (that is
+    the MinHash property), so with H=16 and threshold 0.6 a true pair
+    expects ≥ 9.6 agreements while the banding's boilerplate-bucket
+    false positives (measured precision 0.13% at sf0.1 — NOTES_r08
+    profile) mostly stop at the 4 agreements their one matching band
+    guarantees. The 16-bigint signature then rides through the
+    verification joins (~128 bytes next to the ~1k-element shingle
+    arrays already there), and the filter sits BEFORE the jaccard
     projection so codegen short-circuits the intersection for pruned
-    rows. Deterministic (pure function of the two signatures), so the
-    DuckDB oracles replay it with the same predicate. Semantics: a
-    further RECALL approximation on top of banding — a true pair with
+    rows; off, the filter is a literal true the optimizer removes.
+    Deterministic (pure function of the two signatures), so the DuckDB
+    oracles replay it with the same predicate. Semantics: a further
+    RECALL approximation on top of banding — a true pair with
     < sig_agree agreements is dropped; at sig_agree=6 that needs a
     ~3σ-low signature draw (binomial tail ≈ 2% at exactly J=0.6,
     vanishing for higher J; measured 0 lost pairs at sf0.1/sf0.01 —
     NOTES_r09)."""
-    reps = grouped.where(F.col("id") == F.col("__rid")).select("id", "sh", "__n")
-    sig = _persist_tracked(reps.select(
-        "id", "sh", "__n", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    ))
-
-    banded = _band_entries(sig, num_hashes, bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    # size-ratio pruning (PPJoin-style): J(A,B) <= min(|A|,|B|)/max(...),
-    # so candidates failing the ratio can NEVER pass the threshold — drop
-    # them before the expensive intersection. Output set is unchanged.
-    size_ok = F.least(F.col("a.nsh"), F.col("b.nsh")) >= (
-        F.lit(threshold) * F.greatest(F.col("a.nsh"), F.col("b.nsh"))
-    )
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id"))
-            & size_ok,
-        )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
-    candidates = _materialize_candidates(candidates)
-
-    # with the prefilter on, the 16-bigint signature rides through the
-    # verification join (~128 bytes next to the ~1k-element shingle
-    # arrays already there) and candidates below the agreement floor drop
-    # BEFORE the intersection is computed; off, the filter is a literal
-    # true the optimizer removes
-    sv = sig.select("id", "sh", *(["sig"] if sig_agree > 0 else []))
+    cols = ["id", "sh", *(["sig"] if sig_agree > 0 else [])]
     agree_ok = (
         _sig_agreement(F.col("sa.sig"), F.col("sb.sig")) >= F.lit(sig_agree)
         if sig_agree > 0 else F.lit(True)
     )
-    cross = (
-        candidates.join(sv.alias("sa"), F.col("doc_a") == F.col("sa.id"))
-        .join(sv.alias("sb"), F.col("doc_b") == F.col("sb.id"))
+    sa, sb = left.select(*cols).alias("sa"), right.select(*cols).alias("sb")
+    return (
+        candidates.join(sa, F.col("doc_a") == F.col("sa.id"))
+        .join(sb, F.col("doc_b") == F.col("sb.id"))
         .filter(agree_ok)
         .select(
             "doc_a",
@@ -849,6 +790,26 @@ def _rep_minhash_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def _rep_minhash_pairs(
+    sig: DataFrame,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    sig_agree: int = 0,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) verified near-dup pairs over the DISTINCT
+    shingle sets only (``sig`` is :func:`_rep_signatures` output):
+    banding + size-ratio prune (:func:`_band_candidates`) + exact-Jaccard
+    verification (:func:`_verified`) on group representatives, plus one
+    SELF row per group of ≥ 2 distinct docs (identical sets always share
+    every band; their Jaccard is exactly 1.0, computed once with the
+    same expression so the value is bit-identical to the pairwise
+    formula)."""
+    banded = _band_entries(sig, num_hashes, bands)
+    candidates = _band_candidates(banded, banded, threshold, ordered=True)
+    cross = _verified(candidates, sig, sig, threshold, sig_agree)
     selfp = (
         sig.where(F.col("__n") >= 2)
         .select(
@@ -875,7 +836,7 @@ def minhash_lsh_pairs(
     candidate join → exact-Jaccard verification. ``sig_agree`` (0 = off)
     additionally requires that many of the ``num_hashes`` MinHash
     positions to agree before a candidate's exact intersection runs —
-    see :func:`_rep_minhash_pairs` for the estimator argument, cost, and
+    see :func:`_verified` for the estimator argument, cost, and
     the measured recall trade.
 
     With H=16, b=4 (r=4 rows/band): P(candidate) = 1-(1-J⁴)⁴ — ≈0.99 at
@@ -901,7 +862,8 @@ def minhash_lsh_pairs(
     persistent 100 TB deployment the index is written ONCE bucketed by
     band key (sinks.write_bucketed) and never recomputed per run."""
     grouped = _shingle_groups(df, id_col, text_col, k)
-    pairs = _rep_minhash_pairs(grouped, threshold, num_hashes, bands, sig_agree)
+    sig = _rep_signatures(grouped, num_hashes)
+    pairs = _rep_minhash_pairs(sig, threshold, num_hashes, bands, sig_agree)
     members = grouped.select("__rid", F.col("id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "jaccard", ("doc_a", "doc_b"))
 
@@ -930,7 +892,8 @@ def minhash_dup_groups(
     :func:`minhash_lsh_pairs` exactly — the oracle replays that with a
     recursive CTE."""
     grouped = _shingle_groups(df, id_col, text_col, k)
-    pairs = _rep_minhash_pairs(grouped, threshold, num_hashes, bands, sig_agree)
+    sig = _rep_signatures(grouped, num_hashes)
+    pairs = _rep_minhash_pairs(sig, threshold, num_hashes, bands, sig_agree)
     members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
     # an identical-set group's Jaccard 1.0 clears any real threshold ≤ 1.0;
     # duplicated input ids collapse to one membership row

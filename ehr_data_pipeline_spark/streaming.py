@@ -673,10 +673,10 @@ def near_dedup_maintenance_sink(
     idempotent-epoch exactly-once argument as the SCD2 sink: a replayed
     batch reads the index strictly below its own id and overwrites both
     of its own epoch directories. The maintained state is the (id, sh,
-    sig) index — the thing a 100 TB ingest keeps anyway (land
-    ``minhash_band_entries`` next to it for the compact per-batch
-    candidate scan). Per-batch builder caches are released after the
-    writes so a long-lived stream does not accumulate them.
+    sig) index — the thing a 100 TB ingest keeps anyway. The per-batch
+    work is :func:`_near_dedup_epoch`, shared with the curation sink.
+    Per-batch builder caches are released after the writes so a
+    long-lived stream does not accumulate them.
 
     Epoch layout (ADVICE r8; corrected per ADVICE r9): each index epoch
     holds ONLY that batch's new entries (a delta), and a batch reads
@@ -701,50 +701,69 @@ def near_dedup_maintenance_sink(
     first, same policy). Every batch entry first RESUMES any pending
     compaction (auto or manual) so a crash mid-compaction can never
     leave a replayed batch reading a torn merged epoch (ADVICE r10)."""
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        build_minhash_index,
-        near_dedup_against_index,
-        release_builder_caches,
-    )
+    from ehr_data_pipeline_spark.operators.text_dedup import release_builder_caches
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        index = _index_below(
-            spark, index_path, batch_id,
-            build_minhash_index(
-                batch_df.limit(0), id_col, text_col, k, num_hashes
-            ),
-        )
         try:
-            # the operator's new-entries frame is discarded (ADVICE r11,
-            # low — found on the curation sink, same lineage here): it
-            # shares the band-join lineage with `fresh`; the index delta
-            # is rebuilt from the LANDED fresh parquet instead —
-            # content-identical because (sh, sig) are pure functions of
-            # the text under the same (k, num_hashes), wall-parity today
-            # (the operator persists its join intermediates), and
-            # cache-eviction-proof at scale (see the curation sink's
-            # fuller note + the NOTES_r12 profile)
-            fresh, _ = near_dedup_against_index(
-                batch_df, index, id_col, text_col, threshold,
-                k, num_hashes, bands,
+            _near_dedup_epoch(
+                batch_df, batch_id, index_path, fresh_path, id_col, text_col,
+                threshold, k, num_hashes, bands,
             )
-            fresh.write.mode("overwrite").parquet(
-                f"{fresh_path}/epoch={batch_id}"
-            )
-            fresh_landed = spark.read.parquet(
-                f"{fresh_path}/epoch={batch_id}"
-            )
-            build_minhash_index(
-                fresh_landed, id_col, text_col, k, num_hashes
-            ).write.mode("overwrite").parquet(
-                f"{index_path}/epoch={batch_id}"
-            )
-            _auto_compact(spark, index_path, auto_compact_every)
+            _auto_compact(batch_df.sparkSession, index_path, auto_compact_every)
         finally:
             release_builder_caches()
 
     return write
+
+
+def _near_dedup_epoch(
+    batch_df: DataFrame,
+    batch_id: int,
+    index_path: str,
+    fresh_path: str,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    k: int,
+    num_hashes: int,
+    bands: int,
+) -> None:
+    """One microbatch of continuous MinHash near-dedup, shared by the
+    near-dedup and curation sinks: read the index epochs below
+    ``batch_id``, run ``text_dedup.near_dedup_against_index``, land the
+    fresh rows in ``{fresh_path}/epoch={batch_id}``, and write the index
+    delta to ``{index_path}/epoch={batch_id}``. The index read happens
+    before either write, so a replayed batch recomputes from the same
+    predecessors.
+
+    The delta is rebuilt from the LANDED fresh parquet, and the
+    operator's new-entries frame is discarded (ADVICE r11, low): that
+    frame shares the band-join lineage with ``fresh``, while the rebuild
+    is content-identical because (sh, sig) are pure functions of the
+    text under the same (k, num_hashes). Profiled at sf0.1 (NOTES_r12),
+    the two are wall-parity today because the operator persists its
+    band-join intermediates, so the rebuild is chosen for
+    cache-independence: under executor memory pressure those persists
+    evict and a second action would silently re-run the candidate join,
+    while the landed read is deterministic O(batch) I/O."""
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        build_minhash_index,
+        near_dedup_against_index,
+    )
+
+    spark = batch_df.sparkSession
+    index = _index_below(
+        spark, index_path, batch_id,
+        build_minhash_index(batch_df.limit(0), id_col, text_col, k, num_hashes),
+    )
+    fresh, _ = near_dedup_against_index(
+        batch_df, index, id_col, text_col, threshold, k, num_hashes, bands
+    )
+    fresh.write.mode("overwrite").parquet(f"{fresh_path}/epoch={batch_id}")
+    landed = spark.read.parquet(f"{fresh_path}/epoch={batch_id}")
+    build_minhash_index(landed, id_col, text_col, k, num_hashes).write.mode(
+        "overwrite"
+    ).parquet(f"{index_path}/epoch={batch_id}")
 
 
 def _resume_pending_compaction(spark: SparkSession, state_path: str) -> int:
@@ -1079,8 +1098,9 @@ def curation_maintenance_sink(
         paragraph_dedup_against_index,
     )
     from ehr_data_pipeline_spark.operators.text_dedup import (
-        build_minhash_index,
-        near_dedup_against_index,
+        DEFAULT_BANDS,
+        DEFAULT_NUM_HASHES,
+        DEFAULT_SHINGLE_K,
         release_builder_caches,
     )
 
@@ -1111,29 +1131,10 @@ def curation_maintenance_sink(
         kept = kept.persist()  # feeds stage 4 AND the paragraph delta
         try:
             # stage 4: near-dup dedup against the maintained MinHash index
-            mh_index = _index_below(
-                spark, minhash_index_path, batch_id,
-                build_minhash_index(kept.limit(0), id_col, text_col),
-            )
-            # the operator's new-entries frame is deliberately discarded
-            # too (ADVICE r11, low): it shares the band-join lineage with
-            # `fresh` — the minhash delta is instead rebuilt below from
-            # the LANDED fresh parquet, content-identical because
-            # (sh, sig) are pure functions of the text. Profiled at
-            # sf0.1 (NOTES_r12): the two patterns are wall-parity TODAY
-            # because the operator persists its band-join intermediates,
-            # so the rebuild is chosen for cache-independence — under
-            # executor memory pressure those persists evict and the
-            # second action would silently re-run the candidate join,
-            # while the landed read is deterministic O(batch) I/O
-            fresh, _ = near_dedup_against_index(
-                kept, mh_index, id_col, text_col, threshold
-            )
-            fresh.write.mode("overwrite").parquet(
-                f"{clean_path}/epoch={batch_id}"
-            )
-            fresh_landed = spark.read.parquet(
-                f"{clean_path}/epoch={batch_id}"
+            _near_dedup_epoch(
+                kept, batch_id, minhash_index_path, clean_path, id_col,
+                text_col, threshold, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES,
+                DEFAULT_BANDS,
             )
             # paragraph delta from the persisted stage-3 survivors (the
             # admitted paragraphs ARE their paragraphs — same lossless
@@ -1141,9 +1142,6 @@ def curation_maintenance_sink(
             build_paragraph_index(kept, text_col, sep).write.mode(
                 "overwrite"
             ).parquet(f"{para_index_path}/epoch={batch_id}")
-            build_minhash_index(fresh_landed, id_col, text_col).write.mode(
-                "overwrite"
-            ).parquet(f"{minhash_index_path}/epoch={batch_id}")
             for p in (para_index_path, minhash_index_path):
                 _auto_compact(spark, p, auto_compact_every)
         finally:

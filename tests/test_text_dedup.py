@@ -263,6 +263,7 @@ def test_duplicates_add_zero_verification_work(spark, corpus, dup_heavy_corpus):
     duplicated 3×."""
     from ehr_data_pipeline_spark.operators.text_dedup import (
         _rep_minhash_pairs,
+        _rep_signatures,
         _shingle_groups,
     )
 
@@ -276,7 +277,7 @@ def test_duplicates_add_zero_verification_work(spark, corpus, dup_heavy_corpus):
     def work_facts(df):
         grouped = _shingle_groups(df, "doc_id", "text", 4)
         reps = grouped.where(F.col("id") == F.col("__rid"))
-        pairs = _rep_minhash_pairs(grouped, 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b"))
+        pairs = _rep_minhash_pairs(_rep_signatures(grouped, 16), 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b"))
         return reps.count(), pairs.count()
 
     n_reps_base, n_pairs_base = work_facts(base)
@@ -304,6 +305,7 @@ def test_group_surfaces_flat_on_both_replica_corpora(spark, tmp_path):
 
     from ehr_data_pipeline_spark.operators.text_dedup import (
         _rep_minhash_pairs,
+        _rep_signatures,
         _shingle_groups,
         minhash_dup_groups,
     )
@@ -318,14 +320,14 @@ def test_group_surfaces_flat_on_both_replica_corpora(spark, tmp_path):
         docs = spark.read.parquet(f"{path}/documents.parquet")
         grouped = _shingle_groups(docs, "doc_id", "text", 4)
         reps = grouped.where(F.col("id") == F.col("__rid")).count()
-        pairs = _rep_minhash_pairs(grouped, 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
+        pairs = _rep_minhash_pairs(_rep_signatures(grouped, 16), 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
         members = minhash_dup_groups(docs, threshold=0.6).count()
         return reps, pairs, members
 
     base_docs = spark.read.parquet(f"{src}/documents.parquet")
     base_grouped = _shingle_groups(base_docs, "doc_id", "text", 4)
     n_base_reps = base_grouped.where(F.col("id") == F.col("__rid")).count()
-    n_base_pairs = _rep_minhash_pairs(base_grouped, 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
+    n_base_pairs = _rep_minhash_pairs(_rep_signatures(base_grouped, 16), 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
 
     # identical-copy x4: every doc gains 4 exact copies, but the DISTINCT
     # work is EXACTLY the base corpus's — same reps, same verified rep
@@ -685,48 +687,6 @@ def test_near_dedup_against_index_drop_rules(spark):
     assert sorted(r["id"] for r in new_entries.collect()) == [11]
 
 
-def test_near_dedup_with_persisted_band_table(spark, dup_heavy_corpus, tmp_path):
-    """The persisted-index deployment shape: land minhash_band_entries
-    next to the index once, pass it back per batch — identical results
-    to deriving bands from the index, and the recurring per-batch scan
-    of the band table reads ONLY its four compact columns (no shingle
-    arrays re-read, no per-batch re-explosion)."""
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        build_minhash_index,
-        minhash_band_entries,
-        near_dedup_against_index,
-    )
-
-    hist = dup_heavy_corpus.filter(F.col("doc_id") < 15)
-    batch = dup_heavy_corpus.filter(F.col("doc_id") >= 15)
-    index = build_minhash_index(hist)
-    bands_path = str(tmp_path / "index_bands")
-    minhash_band_entries(index).write.parquet(bands_path)
-    band_table = spark.read.parquet(bands_path)
-
-    fresh_d, entries_d = near_dedup_against_index(batch, index)
-    fresh_p, entries_p = near_dedup_against_index(
-        batch, index, index_bands=band_table
-    )
-    assert sorted(r["doc_id"] for r in fresh_p.collect()) == sorted(
-        r["doc_id"] for r in fresh_d.collect()
-    )
-    assert sorted(r["id"] for r in entries_p.collect()) == sorted(
-        r["id"] for r in entries_d.collect()
-    )
-    # the candidate join's scan of the persisted band table is pruned to
-    # the compact columns — the shingle arrays never travel per batch
-    plan = fresh_p._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    band_scans = [
-        m for m in re.findall(r"ReadSchema: struct<[^>]*>", plan)
-        if "band_key" in m
-    ]
-    # "sh:array" = the shingle column; "nsh:int" (the size) is expected
-    assert band_scans and all("sh:array" not in m for m in band_scans)
-
-
 def test_near_dedup_against_index_independent_evaluation(spark):
     from ehr_data_pipeline_spark.operators.text_dedup import (
         build_minhash_index,
@@ -742,6 +702,31 @@ def test_near_dedup_against_index_independent_evaluation(spark):
     )
     fresh, _ = near_dedup_against_index(batch, build_minhash_index(hist))
     assert fresh.count() == 0
+
+
+@pytest.mark.parametrize("sig_agree", [0, 6])
+@pytest.mark.parametrize("cut", [0, 11])  # 11 splits copy group B
+def test_near_dedup_against_index_matches_batch_mode(dup_heavy_corpus, cut, sig_agree):
+    """Batch <-> incremental law: with every history id below every
+    batch id, the incremental path keeps EXACTLY the batch ids that are
+    never doc_b of minhash_lsh_pairs over history ∪ batch (the lower-id
+    drop rule over one corpus equals index drops + in-batch drops)."""
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        build_minhash_index,
+        near_dedup_against_index,
+    )
+
+    hist = dup_heavy_corpus.filter(F.col("doc_id") < cut)
+    batch = dup_heavy_corpus.filter(F.col("doc_id") >= cut)
+    fresh, _ = near_dedup_against_index(
+        batch, build_minhash_index(hist), sig_agree=sig_agree
+    )
+    dropped = {
+        r["doc_b"]
+        for r in minhash_lsh_pairs(dup_heavy_corpus, sig_agree=sig_agree).collect()
+    }
+    want = {r["doc_id"] for r in batch.collect()} - dropped
+    assert {r["doc_id"] for r in fresh.collect()} == want
 
 
 # ---------------------------------------------------------------------------
