@@ -105,6 +105,30 @@ def _drift_bucket(col: str, lo: float, hi: float, n_buckets: int) -> Column:
     )
 
 
+def _drift_counts(
+    df_a: DataFrame, df_b: DataFrame, col: str, lo: float, hi: float, n_buckets: int
+) -> DataFrame:
+    """``(bucket, n_a, n_b)`` for the populated buckets of the
+    :func:`_drift_bucket` grid: both snapshots tagged and counted in ONE
+    union pass (shuffle on ~n_buckets rows); rows without a valid
+    measurement are excluded."""
+    bucket = _drift_bucket(col, lo, hi, n_buckets)
+    keep = valid_measurement(col).isNotNull()
+    tagged = df_a.select(
+        bucket.alias("bucket"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
+    ).where(keep).unionByName(
+        df_b.select(
+            bucket.alias("bucket"),
+            F.lit(0).alias("__a"),
+            F.lit(1).alias("__b"),
+        ).where(keep)
+    )
+    return tagged.groupBy("bucket").agg(
+        F.sum("__a").cast("bigint").alias("n_a"),
+        F.sum("__b").cast("bigint").alias("n_b"),
+    )
+
+
 def histogram_drift(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -133,21 +157,7 @@ def histogram_drift(
     null for buckets B populates but A does not (infinite-surprise
     bucket — report it, don't hide it)."""
     width = (hi - lo) / n_buckets
-    bucket = _drift_bucket(col, lo, hi, n_buckets)
-    keep = valid_measurement(col).isNotNull()
-    tagged = df_a.select(
-        bucket.alias("bucket"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
-    ).where(keep).unionByName(
-        df_b.select(
-            bucket.alias("bucket"),
-            F.lit(0).alias("__a"),
-            F.lit(1).alias("__b"),
-        ).where(keep)
-    )
-    counts = tagged.groupBy("bucket").agg(
-        F.sum("__a").cast("bigint").alias("n_a"),
-        F.sum("__b").cast("bigint").alias("n_b"),
-    )
+    counts = _drift_counts(df_a, df_b, col, lo, hi, n_buckets)
     tot = counts.agg(
         F.sum("n_a").cast("double").alias("__ta"),
         F.sum("n_b").cast("double").alias("__tb"),
@@ -203,21 +213,7 @@ def psi_drift(
     contract (``functions/measurement.py``)."""
     width = (hi - lo) / n_buckets
     n_spine = n_buckets + 2
-    bucket = _drift_bucket(col, lo, hi, n_buckets)
-    keep = valid_measurement(col).isNotNull()
-    tagged = df_a.select(
-        bucket.alias("bucket"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
-    ).where(keep).unionByName(
-        df_b.select(
-            bucket.alias("bucket"),
-            F.lit(0).alias("__a"),
-            F.lit(1).alias("__b"),
-        ).where(keep)
-    )
-    counts = tagged.groupBy("bucket").agg(
-        F.sum("__a").cast("bigint").alias("n_a"),
-        F.sum("__b").cast("bigint").alias("n_b"),
-    )
+    counts = _drift_counts(df_a, df_b, col, lo, hi, n_buckets)
     spark = df_a.sparkSession
     spine = spark.range(-1, n_buckets + 1).select(F.col("id").cast("int").alias("bucket"))
     full = spine.join(counts, "bucket", "left").select(

@@ -159,25 +159,18 @@ def bpe_pair_counts(
     return counts.limit(top_k) if top_k is not None else counts
 
 
-# Symbol separator for the BPE trainer's word state: ASCII unit
-# separator, which can never appear inside a symbol (word_tokens only
-# emits visible characters), so the SEP-joined string form of a symbol
-# array is unambiguous.
+# Symbol separator for the BPE trainer's state: ASCII unit separator.
+# Neither pretokenizer can put it inside a symbol — the word pattern
+# below excludes it explicitly, and byte symbols are hex pairs — so the
+# SEP-joined string form of a symbol array is unambiguous.
 BPE_SEP = "\x1f"
 
-
-def bpe_initial_state(
-    df: DataFrame, text_col: str = "text", sep: str = BPE_SEP
-) -> DataFrame:
-    """Round-0 trainer state: one row per word OCCURRENCE, ``syms`` =
-    the word's characters joined by ``sep`` (every character its own
-    symbol — the state BPE training starts from). A narrow explode +
-    in-row split/join; at 100 TB this is the corpus re-expressed one
-    word per row, the layout every subsequent round's pair count and
-    merge-apply pass works over."""
-    return df.select(
-        F.explode(word_tokens(F.col(text_col))).alias("__w")
-    ).select(F.array_join(F.split(F.col("__w"), ""), sep).alias("syms"))
+# Word pretokens for BPE: WORD_PATTERN minus BPE_SEP. WORD_PATTERN's
+# single-symbol class [^a-z0-9\s] would emit U+001F itself as a word,
+# whose state then splits into two empty symbols (a phantom ('', '')
+# pair); excluded here, U+001F separates words like whitespace does.
+# The Arrow twin and the SQL oracles use the same pattern.
+BPE_WORD_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s\x1f]"
 
 
 # GPT-2-style byte-level pretokenizer (Radford et al. 2019; the regex
@@ -279,37 +272,61 @@ def byte_pretokens(col: Column) -> Column:
     )
 
 
-def bpe_initial_state_bytes(
-    df: DataFrame, text_col: str = "text", sep: str = BPE_SEP
-) -> DataFrame:
-    """Round-0 BYTE-LEVEL trainer state: one row per pretoken occurrence
-    (:func:`byte_pretokens`), ``syms`` = the pretoken's UTF-8 BYTES,
-    each rendered as its 2-hex-digit code and joined by ``sep``. The
-    hex rendering is this engine's ``bytes_to_unicode``: GPT-2 maps
-    every byte to a printable character so byte sequences survive in
-    string form — here each byte maps to its hex pair ('20' = space,
-    '74' = 't'), merged symbols concatenate to longer even-length hex
-    strings (always decodable back to bytes), and the separator /
-    sentinel characters (\\x1f, \\x1e) can never collide with a symbol
-    since hex is [0-9A-F]. Everything downstream — pair counts, argmax,
-    merge-apply — is symbol-agnostic and reused unchanged; hex(encode())
-    is bit-identical in Spark and DuckDB (both uppercase), so the whole
-    byte-level loop hash-checks cross-engine. One narrow explode +
-    in-row encode/hex/split — same shape and cost as the ASCII initial
-    state."""
-    hexs = F.hex(F.encode(F.col("__w"), "UTF-8"))
+def _char_symbols(w: Column) -> Column:
+    """Word-level symbols: every character of the pretoken."""
+    return F.split(w, "")
+
+
+def _byte_symbols(w: Column) -> Column:
+    """Byte-level symbols: the pretoken's UTF-8 BYTES, each rendered as
+    its 2-hex-digit code. The hex rendering is this engine's
+    ``bytes_to_unicode``: GPT-2 maps every byte to a printable character
+    so byte sequences survive in string form — here each byte maps to
+    its hex pair ('20' = space, '74' = 't'), merged symbols concatenate
+    to longer even-length hex strings (always decodable back to bytes),
+    and the separator / sentinel characters (\\x1f, \\x1e) can never
+    collide with a symbol since hex is [0-9A-F]. hex(encode()) is
+    bit-identical in Spark and DuckDB (both uppercase), so the whole
+    byte-level loop hash-checks cross-engine."""
+    return F.regexp_extract_all(F.hex(F.encode(w, "UTF-8")), F.lit(".."), F.lit(0))
+
+
+# The BPE pretokenizers: name -> (text column -> pretoken array,
+# pretoken -> symbol array). Everything after the round-0 symbols — pair
+# counts, argmax, merge-apply, token counts — is symbol-agnostic and
+# shared, the contract production tokenizers (GPT-2/tiktoken) follow.
+_PRETOKENIZERS = {
+    "word": (
+        lambda col: F.regexp_extract_all(
+            normalize_text(col), F.lit(BPE_WORD_PATTERN), F.lit(0)
+        ),
+        _char_symbols,
+    ),
+    "byte": (byte_pretokens, _byte_symbols),
+}
+
+
+def _pretokenizer(name: str):
+    if name not in _PRETOKENIZERS:
+        raise ValueError(
+            f"pretokenizer must be one of {sorted(_PRETOKENIZERS)}, got {name!r}"
+        )
+    return _PRETOKENIZERS[name]
+
+
+def _initial_state(df: DataFrame, text_col: str, pretokenizer: str) -> DataFrame:
+    """Round-0 trainer state: one row per pretoken OCCURRENCE, ``syms`` =
+    its symbols joined by ``BPE_SEP`` (the state BPE training starts
+    from). A narrow explode + in-row symbol split/join; at 100 TB this is
+    the corpus re-expressed one pretoken per row, the layout every
+    subsequent round's pair count and merge-apply pass works over."""
+    pretokens, symbols = _pretokenizer(pretokenizer)
     return df.select(
-        F.explode(byte_pretokens(F.col(text_col))).alias("__w")
-    ).select(
-        F.array_join(
-            F.regexp_extract_all(hexs, F.lit(".."), F.lit(0)), sep
-        ).alias("syms")
-    )
+        F.explode(pretokens(F.col(text_col))).alias("__w")
+    ).select(F.array_join(symbols(F.col("__w")), BPE_SEP).alias("syms"))
 
 
-def bpe_symbol_pair_counts(
-    state: DataFrame, sep: str = BPE_SEP
-) -> DataFrame:
+def bpe_symbol_pair_counts(state: DataFrame) -> DataFrame:
     """Adjacent-SYMBOL pair counts over the trainer state — the round-k
     generalization of :func:`bpe_pair_counts` (which counts the round-1
     special case where every symbol is one character; the two agree on
@@ -320,7 +337,7 @@ def bpe_symbol_pair_counts(
     ``replace``). One explode + one groupBy whose key cardinality is
     bounded by the live vocabulary squared — map-side combine collapses
     each partition before the shuffle."""
-    a = F.split(F.col("syms"), sep)
+    a = F.split(F.col("syms"), BPE_SEP)
     m = F.size(F.col("__a")) - 1
     return (
         state.select(a.alias("__a"))
@@ -348,8 +365,8 @@ def bpe_symbol_pair_counts(
     )
 
 
-def _bpe_apply_merge(state: Column, l: str, r: str, sep: str) -> Column:
-    """Apply ONE merge (l, r) to a ``sep``-joined symbol state — EXACT
+def _bpe_apply_merge(state: Column, l: str, r: str) -> Column:
+    """Apply ONE merge (l, r) to a ``BPE_SEP``-joined symbol state — EXACT
     left-greedy BPE semantics (fuse every leftmost non-overlapping
     (l, r) adjacency, whole symbols only), branched on the driver-known
     pair:
@@ -379,6 +396,7 @@ def _bpe_apply_merge(state: Column, l: str, r: str, sep: str) -> Column:
     (fuse the even offsets of each maximal consecutive-occurrence
     island) — are fuzz-pinned to the same reference implementation."""
     if l != r:
+        sep = BPE_SEP
         pat = F.lit(sep + l + sep + r + sep)
         rep = F.lit(sep + l + r + sep)
         wrapped = F.concat(F.lit(sep), state, F.lit(sep))
@@ -398,16 +416,15 @@ def _bpe_apply_merge(state: Column, l: str, r: str, sep: str) -> Column:
         ).otherwise(F.concat(acc, F.array(s)))
 
     folded = F.aggregate(
-        F.split(state, sep), F.array().cast("array<string>"), step
+        F.split(state, BPE_SEP), F.array().cast("array<string>"), step
     )
-    return F.array_join(folded, sep)
+    return F.array_join(folded, BPE_SEP)
 
 
 def bpe_trainer_rounds(
     df: DataFrame,
     text_col: str = "text",
     n_rounds: int = 3,
-    sep: str = BPE_SEP,
     pretokenizer: str = "word",
 ) -> DataFrame:
     """Sequential BPE training — ``n_rounds`` merges, ONE per round:
@@ -419,7 +436,7 @@ def bpe_trainer_rounds(
     count by the pair's non-overlapping occurrence count. Stops early if
     no pairs remain."""
     return bpe_batched_trainer_rounds(
-        df, text_col, n_rounds, 1, sep, pretokenizer
+        df, text_col, n_rounds, 1, pretokenizer
     ).drop("pos")
 
 
@@ -460,7 +477,6 @@ def bpe_batched_trainer_rounds(
     text_col: str = "text",
     n_rounds: int = 2,
     batch_size: int = 3,
-    sep: str = BPE_SEP,
     pretokenizer: str = "word",
 ) -> DataFrame:
     """END-TO-END distributed BPE vocabulary training (VERDICT r10 #5,
@@ -502,14 +518,11 @@ def bpe_batched_trainer_rounds(
     batch applied — per-round, repeated on each of the round's rows).
     Stops early when a round finds no pairs.
 
-    ``pretokenizer`` selects the round-0 state builder: ``"word"``
-    (:func:`bpe_initial_state` — normalized ASCII word pretokens,
-    char symbols) or ``"byte"`` (:func:`bpe_initial_state_bytes` —
-    GPT-2-style case/whitespace-preserving pretokens, UTF-8 bytes as
-    hex-pair symbols). Every round downstream is symbol-agnostic, so
-    the two share ALL the state machinery — the byte path differs only
-    in its initial state, exactly the contract production tokenizers
-    (GPT-2/tiktoken) follow.
+    ``pretokenizer`` names the ``_PRETOKENIZERS`` entry that builds the
+    round-0 state: ``"word"`` (normalized ASCII word pretokens, char
+    symbols) or ``"byte"`` (:func:`byte_pretokens` — GPT-2-style
+    case/whitespace-preserving pretokens, UTF-8 bytes as hex-pair
+    symbols). Every round downstream is symbol-agnostic.
 
     Scale: each round persists its state (one narrow rewrite of the
     previous), runs one bounded-key groupBy and one scalar aggregate,
@@ -517,22 +530,16 @@ def bpe_batched_trainer_rounds(
     states, per-round cost is linear, and nothing driver-sized but the
     candidate window and merge table. CORPUS-size scaling is measured
     (SCALE_RATIOS: wall ×6.4 at input ×10, shuffle/input ≈ 0)."""
-    builders = {"word": bpe_initial_state, "byte": bpe_initial_state_bytes}
-    if pretokenizer not in builders:
-        raise ValueError(
-            f"pretokenizer must be one of {sorted(builders)}, "
-            f"got {pretokenizer!r}"
-        )
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     spark = df.sparkSession
-    state = builders[pretokenizer](df, text_col, sep).persist()
+    state = _initial_state(df, text_col, pretokenizer).persist()
     rows: list = []
     retained = [state]
     try:
         for rnd in range(1, n_rounds + 1):
             top = (
-                bpe_symbol_pair_counts(state, sep)
+                bpe_symbol_pair_counts(state)
                 .orderBy(
                     F.col("n_pairs").desc(),
                     F.col("l").asc(),
@@ -548,11 +555,11 @@ def bpe_batched_trainer_rounds(
                 break
             merged_col = F.col("syms")
             for l, r, _ in sel:
-                merged_col = _bpe_apply_merge(merged_col, l, r, sep)
+                merged_col = _bpe_apply_merge(merged_col, l, r)
             state = state.withColumn("syms", merged_col).persist()
             retained.append(state)
             tokens_after = state.agg(
-                F.sum(F.size(F.split(F.col("syms"), sep))).alias("n")
+                F.sum(F.size(F.split(F.col("syms"), BPE_SEP))).alias("n")
             ).collect()[0]["n"]
             rows.extend(
                 (rnd, pos, l, r, l + r, n, tokens_after)
@@ -570,23 +577,22 @@ def bpe_batched_trainer_rounds(
     )
 
 
-def bpe_trained_token_count(
-    col: Column,
-    merges: "tuple[tuple[str, str], ...]",
-    sep: str = BPE_SEP,
+def _trained_token_count(
+    col: Column, merges: "tuple[tuple[str, str], ...]", pretokenizer: str
 ) -> Column:
     """Per-document token count under a TRAINED merge table — the
     apply side of :func:`bpe_trainer_rounds`, generalizing the
     single-round :func:`bpe_token_counts` to k ORDERED merges over
-    symbol states: each word rebuilds as its ``sep``-joined character
-    state, the merges apply IN TRAINING ORDER with exact left-greedy
-    whole-symbol semantics (:func:`_bpe_apply_merge` — the same
-    merge-apply the trainer's retokenizer uses, so counting is
-    bit-faithful to the state the trainer would reach), and the count
-    is the total surviving symbols. Later merges see earlier merges'
-    fused symbols — e.g. the table [(h,e), (t,he)] turns 'the' into
-    ONE token, which no single-round pair table can express. NULL text
-    counts 0 (the engine-wide degenerate-document contract).
+    symbol states: each pretoken rebuilds as its round-0 symbol state
+    (the ``_PRETOKENIZERS`` entry the trainer used), the merges apply IN
+    TRAINING ORDER with exact left-greedy whole-symbol semantics
+    (:func:`_bpe_apply_merge` — the same merge-apply the trainer's
+    retokenizer uses, so counting is bit-faithful to the state the
+    trainer would reach), and the count is the total surviving symbols.
+    Later merges see earlier merges' fused symbols — e.g. the table
+    [(h,e), (t,he)] turns 'the' into ONE token, which no single-round
+    pair table can express. NULL text counts 0 (the engine-wide
+    degenerate-document contract).
 
     All native expressions (split/transform/replace/aggregate) in one
     narrow pass — no shuffle, no UDF; the merge table is a few literals
@@ -594,55 +600,19 @@ def bpe_trained_token_count(
     real tokenizer's merge loop — but the PLAN grows with k too (each
     merge nests two replaces or a fold into every word's chain), so
     this expression form is for SMALL tables only (ADVICE r11): above
-    ``_ARROW_MERGE_THRESHOLD`` merges use
-    :func:`bpe_trained_token_counts_df`, which routes to the
-    bit-equivalent Arrow twin with plan size constant in k."""
-    words = word_tokens(col)
+    ``_ARROW_MERGE_THRESHOLD`` merges
+    :func:`bpe_trained_token_counts_df` routes to the bit-equivalent
+    Arrow twin with plan size constant in k."""
+    pretokens, symbols = _pretokenizer(pretokenizer)
 
     def count_word(w: Column) -> Column:
-        state = F.array_join(F.split(w, ""), sep)
+        state = F.array_join(symbols(w), BPE_SEP)
         for l, r in merges:
-            state = _bpe_apply_merge(state, l, r, sep)
-        return F.size(F.split(state, sep))
+            state = _bpe_apply_merge(state, l, r)
+        return F.size(F.split(state, BPE_SEP))
 
     return F.aggregate(
-        words,
-        F.lit(0).cast("bigint"),
-        lambda acc, w: acc + count_word(w).cast("bigint"),
-    )
-
-
-def bpe_byte_trained_token_count(
-    col: Column,
-    merges: "tuple[tuple[str, str], ...]",
-    sep: str = BPE_SEP,
-) -> Column:
-    """Byte-level twin of :func:`bpe_trained_token_count` — the APPLY
-    side of ``bpe_trainer_rounds(pretokenizer="byte")``: each pretoken
-    (:func:`byte_pretokens`) rebuilds as its hex-pair byte state
-    (:func:`bpe_initial_state_bytes`' rendering), the trained merges
-    apply IN ORDER with the same exact left-greedy whole-symbol
-    semantics (:func:`_bpe_apply_merge` is symbol-agnostic — hex
-    strings are just symbols), and the count is the surviving symbols.
-    NULL text counts 0. Same plan shape and small-k bound as the ASCII
-    variant (one narrow UDF-free pass, table as plan literals; large
-    tables route to the bit-equivalent Arrow twin via
-    ``bpe_trained_token_counts_df(pretokenizer="byte")``)."""
-    words = byte_pretokens(col)
-
-    def count_word(w: Column) -> Column:
-        state = F.array_join(
-            F.regexp_extract_all(
-                F.hex(F.encode(w, "UTF-8")), F.lit(".."), F.lit(0)
-            ),
-            sep,
-        )
-        for l, r in merges:
-            state = _bpe_apply_merge(state, l, r, sep)
-        return F.size(F.split(state, sep))
-
-    return F.aggregate(
-        words,
+        pretokens(col),
         F.lit(0).cast("bigint"),
         lambda acc, w: acc + count_word(w).cast("bigint"),
     )
@@ -664,7 +634,6 @@ def bpe_trained_token_counts_df(
     merges: "tuple[tuple[str, str], ...]",
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = BPE_SEP,
     pretokenizer: str = "word",
 ) -> DataFrame:
     """DataFrame-level apply side of BPE training: per-document token
@@ -674,23 +643,15 @@ def bpe_trained_token_counts_df(
     or above it (a realistically sized trained table embeds k nested
     expression trees per word in the plan, which Catalyst's codegen
     limits reject long before k=10k). ``pretokenizer`` mirrors the
-    trainer's: ``"word"`` (:func:`bpe_trained_token_count`) or
-    ``"byte"`` (:func:`bpe_byte_trained_token_count`) — both have
-    Arrow twins, so either table size routes. The paths are
-    bit-equivalent on ASCII corpora (identical left-greedy merge loop;
-    pinned by test_bpe_trained_counts_arrow_matches_native /
+    trainer's (``"word"`` or ``"byte"``); both have Arrow twins, so
+    either table size routes. The paths are bit-equivalent on ASCII
+    corpora (identical left-greedy merge loop; pinned by
+    test_bpe_trained_counts_arrow_matches_native /
     test_bpe_byte_trained_counts_arrow_matches_native)."""
-    native = {"word": bpe_trained_token_count,
-              "byte": bpe_byte_trained_token_count}
-    if pretokenizer not in native:
-        raise ValueError(
-            f"pretokenizer must be one of {sorted(native)}, "
-            f"got {pretokenizer!r}"
-        )
     if len(merges) < _ARROW_MERGE_THRESHOLD:
         return df.select(
             id_col,
-            native[pretokenizer](F.col(text_col), merges, sep).alias(
+            _trained_token_count(F.col(text_col), merges, pretokenizer).alias(
                 "n_tokens"
             ),
         )
@@ -713,11 +674,10 @@ def _bpe_trained_counts_arrow(
     every leftmost (l, r) adjacency, whole symbols only, merges in
     training order. O(k·chars) per doc like the native path, but k
     lives in a closure instead of the plan, so plan size is constant in
-    the table. ``pretokenizer="word"`` reproduces
-    :func:`bpe_trained_token_count`'s normalized-word char states;
-    ``"byte"`` reproduces :func:`bpe_byte_trained_token_count`'s
-    raw-text pretokens and hex-pair byte states. Pretokenization
-    parity: the word path compiles with ``re.ASCII`` so Python's
+    the table. ``pretokenizer="word"`` reproduces the native
+    normalized-word char states (:data:`BPE_WORD_PATTERN`); ``"byte"``
+    reproduces the raw-text pretokens and hex-pair byte states.
+    Pretokenization parity: the word path compiles with ``re.ASCII`` so Python's
     ``\\s`` means exactly what Java's default ``\\s`` means (without
     it, Python ``\\s`` matches \\x1c-\\x1f and Unicode whitespace that
     Java's does not — ADVICE r12), and trims with the literal space
@@ -728,8 +688,9 @@ def _bpe_trained_counts_arrow(
 
     from pyspark.sql.types import LongType, StructField, StructType
 
+    _pretokenizer(pretokenizer)  # same unknown-name error as the native route
     byte_level = pretokenizer == "byte"
-    tok_re = _re.compile(WORD_PATTERN, _re.ASCII)
+    tok_re = _re.compile(BPE_WORD_PATTERN, _re.ASCII)
     ws_re = _re.compile(r"\s+", _re.ASCII)
     table = [(l, r) for l, r in merges]
     schema = StructType(

@@ -15,15 +15,16 @@ Scale design (the whole point of these operators):
   (boilerplate shingles) are the skew risk — AQE skew-join handles
   moderate cases, and the band key can be salted with a shingle-count
   range for extreme ones.
-- **simhash64**: 64-bit sketch, near-dups = small Hamming distance;
-  candidates share one of four 16-bit chunks (same bucket-join shape).
+- **simhash_sketches**: 60-bit sketch, near-dups = small Hamming
+  distance; candidates share one of four 15-bit chunks (same
+  bucket-join shape).
 
 Determinism: the MinHash family is ONE md5-derived 32-bit base hash per
 shingle permuted by H deterministic affine maps (a_j·h + b_j mod 2^31-1)
 — universal hashing, engine-portable, so the DuckDB oracle replicates the
 whole LSH pipeline bit-for-bit at 1/H-th the hashing cost of an
-md5-per-function family. SimHash ships two variants: xxhash64 (cheapest,
-Spark-side, unit-tested) and md5-portable (oracle-checked).
+md5-per-function family. SimHash hashes tokens with the same md5-derived
+60-bit family (oracle-checked).
 
 The reference has only key-dedup (U2); this family is the BASELINE
 north-star extension (SURVEY §2.7).
@@ -39,6 +40,7 @@ from ehr_data_pipeline_spark.operators.text_analysis import (
     fingerprint128,
     let_bound,
     normalize_text,
+    portable_hash60,
 )
 from ehr_data_pipeline_spark.partitioning import ensure_min_partitions
 
@@ -1377,54 +1379,6 @@ def _rep_group_membership(
     )
 
 
-def simhash_from_hashes(hashes: Column, bits: int) -> Column:
-    """SimHash sketch from a precomputed array of token hashes: bit b of
-    the sketch is 1 when more than half the hashes have bit b set. A
-    native fold over bit positions — O(bits·|tokens|) boolean work per
-    row after ONE hash pass, no UDF. Near-dup docs differ in few bits
-    (small Hamming distance)."""
-    n = F.size(hashes)
-
-    def bit(b: int) -> Column:
-        n_set = F.size(
-            F.filter(hashes, lambda h: (F.shiftright(h, b).bitwiseAND(F.lit(1))) == 1)
-        )
-        return (n_set * 2 > n).cast("bigint")
-
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):  # unrolled: shiftleft takes a literal bit count
-        out = out + F.shiftleft(bit(b), b)
-    return out
-
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash with xxhash64 token hashing — the cheap engine-side
-    scale path (xxhash64 is a few ns/token in codegen). Spark-specific
-    hash seed, so unit-tested rather than oracle-checked; the
-    oracle-checked twin is :func:`simhash60_portable`. The hash array is
-    let-bound so tokens hash once, not once per bit position."""
-    return let_bound(
-        F.transform(tokens, lambda t: F.xxhash64(t)),
-        lambda hs: simhash_from_hashes(hs, 64),
-    )
-
-
-def simhash60_portable(tokens: Column) -> Column:
-    """60-bit SimHash over md5-derived token hashes
-    (text_analysis.portable_hash60) — identical arithmetic in Spark and
-    DuckDB, so the registered ``doc_simhash`` query is hash-checked
-    against a SQL oracle that replays the sketch bit-for-bit. 60 bits
-    (15 md5 hex chars) keeps every shift inside a signed bigint in both
-    engines. The md5 hash array is let-bound: without it each of the 60
-    bit counters re-hashes every token (60× the md5 cost)."""
-    from ehr_data_pipeline_spark.operators.text_analysis import portable_hash60
-
-    return let_bound(
-        F.transform(tokens, portable_hash60),
-        lambda hs: simhash_from_hashes(hs, 60),
-    )
-
-
 def simhash_bands(sim: Column, n_bands: int = 4, total_bits: int = 64) -> list[Column]:
     """Split a SimHash into n equal-width chunk keys — candidate pairs
     for Hamming distance < n_bands share at least one chunk (pigeonhole),
@@ -1443,30 +1397,22 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def _simhash_groups(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    total_bits: int,
-    portable: bool,
+def simhash_sketches(
+    df: DataFrame, id_col: str, text_col: str, total_bits: int
 ) -> DataFrame:
-    """Identical-sketch groups — the distinct-first work-avoidance core
-    of the SimHash surfaces (the sketch twin of :func:`_shingle_groups`):
-    one (id, __sim, __rid, __n) row per doc, where __rid is the minimum
-    id among docs with the IDENTICAL sketch and __n the number of
-    DISTINCT doc ids in the group. Hamming distance is a pure function of
-    the sketches (identical sketches ⇒ distance 0, and they share every
-    band), so banding + verification can run over group representatives
-    only. The grouping key is one bigint — the cheapest fingerprint of
-    any dedup family — and the window shuffle it costs replaces the k²
-    candidate emission identical copies caused inside every shared bucket
-    (doc_simhash_band_pairs measured shuf ×99.2 at input ×10 on the
-    identical-copy replica, SCALE_RATIOS.md r8).
+    """Per-row SimHash sketches: one ``(id, __sim)`` row per input row.
+    Tokens are the whitespace tokens of the normalized text, each hashed
+    to 60 bits by ``text_analysis.portable_hash60`` (md5-derived —
+    identical arithmetic in Spark and DuckDB, so every SimHash surface
+    is hash-checked against a SQL oracle that replays the sketch
+    bit-for-bit; 60 bits keeps every shift inside a signed bigint in
+    both engines). Bit b of the sketch is 1 when more than half the
+    tokens have bit b set; near-dup docs differ in few bits (small
+    Hamming distance).
 
     Sketch computation (r14 optimization): explode tokens → hash in a
     plain projection → ONE hash aggregate with ``total_bits`` per-bit
-    SUM columns, instead of the in-row
-    :func:`simhash_from_hashes` fold whose ``bits`` interpreted
+    SUM columns, instead of an in-row fold whose ``bits`` interpreted
     ``filter()`` passes per row dominated the sketch cost (HOF lambdas
     are CodegenFallback; measured 1.8 s → 1.1 s for the sf0.1 sketch
     pass). Value-identical: the majority rule ``2·n_set > n`` compares
@@ -1479,17 +1425,9 @@ def _simhash_groups(
     The md5-fingerprint grouping key inherits the engine-wide
     fingerprint128 collision assumption. Shuffle added: one row per
     distinct (id, text) × (total_bits + 2) longs after map-side
-    partial aggregation — negligible next to the window shuffle that
-    follows; the interpreter tax it removes scales with TOKENS, not
-    rows. Equality with the fold form is pinned in
-    tests/test_text_dedup.py (unicode + duplicate-row fuzz). The
-    groups are persisted (3 consumers); lifetime per
-    ``release_builder_caches``."""
-    from ehr_data_pipeline_spark.operators.text_analysis import (
-        normalize_text,
-        portable_hash60,
-    )
-
+    partial aggregation; the interpreter tax it removes scales with
+    TOKENS, not rows. Equality with the in-row fold is pinned in
+    tests/test_text_dedup.py (unicode + duplicate-row fuzz)."""
     base = ensure_min_partitions(df).select(
         F.col(id_col).alias("id"),
         normalize_text(F.col(text_col)).alias("__nt"),
@@ -1499,18 +1437,15 @@ def _simhash_groups(
         F.md5("__nt").alias("__fp"),
         F.posexplode(F.split("__nt", " ")).alias("__pos", "__tok"),
     )
-    hcol = (
-        portable_hash60(F.col("__tok")) if portable else F.xxhash64(F.col("__tok"))
-    )
     hashed = tok.select(
         "id",
         "__fp",
         (F.col("__pos") == 0).cast("bigint").alias("__head"),
-        hcol.alias("__h"),
+        portable_hash60(F.col("__tok")).alias("__h"),
     )
     # The per-bit SUM columns and the sketch reconstruction are rendered
     # as SQL strings (one F.expr parse each) instead of ~6 Column-API
-    # calls per bit: building the 60/64-term trees through py4j cost
+    # calls per bit: building the 60-term trees through py4j cost
     # ~1.5 s of driver-side construction per query call (measured r15 —
     # more than half this query's bench time, and it serializes on the
     # driver). The parsed expressions are operator-identical: SQL `&` is
@@ -1530,11 +1465,31 @@ def _simhash_groups(
             for b in range(total_bits)
         )
     )
-    rows = agg.select(
+    return agg.select(
         "id",
         sim.cast("bigint").alias("__sim"),
         F.explode(F.sequence(F.lit(1), F.col("__nrows"))).alias("__dup"),
     ).drop("__dup")
+
+
+def _simhash_groups(
+    df: DataFrame, id_col: str, text_col: str, total_bits: int
+) -> DataFrame:
+    """Identical-sketch groups — the distinct-first work-avoidance core
+    of the SimHash surfaces (the sketch twin of :func:`_shingle_groups`):
+    one (id, __sim, __rid, __n) row per doc, where __rid is the minimum
+    id among docs with the IDENTICAL sketch (:func:`simhash_sketches`)
+    and __n the number of DISTINCT doc ids in the group. Hamming
+    distance is a pure function of the sketches (identical sketches ⇒
+    distance 0, and they share every band), so banding + verification
+    can run over group representatives only. The grouping key is one
+    bigint — the cheapest fingerprint of any dedup family — and the
+    window shuffle it costs replaces the k² candidate emission identical
+    copies caused inside every shared bucket (doc_simhash_band_pairs
+    measured shuf ×99.2 at input ×10 on the identical-copy replica,
+    SCALE_RATIOS.md r8). The groups are persisted (3 consumers);
+    lifetime per ``release_builder_caches``."""
+    rows = simhash_sketches(df, id_col, text_col, total_bits)
     gw = Window.partitionBy("__sim")
     grouped = rows.select(
         "id",
@@ -1620,7 +1575,6 @@ def simhash_near_dup_pairs(
     max_distance: int = 3,
     n_bands: int = DEFAULT_BANDS,
     total_bits: int = 60,
-    portable: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs via band-bucket join — the sketch-based
     scale path for Hamming-distance dedup. Each doc's sketch splits into
@@ -1642,14 +1596,12 @@ def simhash_near_dup_pairs(
     production dedup decision prefer :func:`simhash_dup_groups` (linear
     output).
 
-    Scale: sketches are 60/64-bit bigints — the candidate state per row
+    Scale: sketches are 60-bit bigints — the candidate state per row
     is one long, not a shingle set, so this is the cheapest near-dup
     family member at 100 TB; hot buckets (common band values from
     boilerplate) are the skew risk, handled by AQE skew-join same as the
-    MinHash bands. ``portable=True`` uses the md5-derived hash family
-    (DuckDB-replayable); ``False`` uses xxhash64 (cheaper, Spark-only,
-    ``total_bits`` must then be 64)."""
-    grouped = _simhash_groups(df, id_col, text_col, total_bits, portable)
+    MinHash bands."""
+    grouped = _simhash_groups(df, id_col, text_col, total_bits)
     pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
     members = grouped.select("__rid", F.col("id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "hamming", ("doc_a", "doc_b"))
@@ -1662,7 +1614,6 @@ def simhash_dup_groups(
     max_distance: int = 3,
     n_bands: int = DEFAULT_BANDS,
     total_bits: int = 60,
-    portable: bool = True,
     max_iter: int = 20,
 ) -> DataFrame:
     """SimHash near-dup GROUP membership — the linear-output production
@@ -1676,7 +1627,7 @@ def simhash_dup_groups(
     with no external neighbor is its own cluster (mutual distance 0).
     Equals the transitive closure of :func:`simhash_near_dup_pairs`
     exactly — the oracle replays that equivalence with a recursive CTE."""
-    grouped = _simhash_groups(df, id_col, text_col, total_bits, portable)
+    grouped = _simhash_groups(df, id_col, text_col, total_bits)
     pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
     members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
     # an identical-sketch group's distance 0 clears any real

@@ -1778,8 +1778,9 @@ def doc_minhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB replay of simhash60_portable: one CASE<<b term per bit over the
-# md5-derived token-hash list (machine-generated, like the winnow oracle).
+# DuckDB replay of text_dedup.simhash_sketches: one CASE<<b term per bit
+# over the md5-derived token-hash list (machine-generated, like the winnow
+# oracle).
 _SIMHASH_BIT_TERMS = " + ".join(
     f"((CASE WHEN 2 * len(list_filter(hs, h -> (h >> {b}) & 1 = 1)) > len(hs)"
     f" THEN CAST(1 AS BIGINT) ELSE 0 END) << {b})"
@@ -1809,20 +1810,18 @@ _SIMHASH_BAND_COLS = ", ".join(
 def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 60-bit portable SimHash + its four 15-bit band keys
     (candidate pairs for Hamming-distance near-dup share at least one band
-    by pigeonhole). Narrow one-pass plan; the pair join shuffles on band
-    keys exactly like MinHash-LSH. Uses the md5-derived hash family so the
-    DuckDB oracle replays the sketch bit-for-bit; the xxhash64 variant
-    (``simhash64``) is the cheaper engine-side choice when portability
-    doesn't matter, and is unit-tested instead."""
-    from ehr_data_pipeline_spark.operators.text_analysis import whitespace_tokens
+    by pigeonhole). The sketch is the same per-bit aggregate the pair and
+    group surfaces build (operators/text_dedup.py simhash_sketches), then
+    the band keys are one narrow projection; the pair join shuffles on
+    band keys exactly like MinHash-LSH. Uses the md5-derived hash family
+    so the DuckDB oracle replays the sketch bit-for-bit."""
     from ehr_data_pipeline_spark.operators.text_dedup import (
-        simhash60_portable,
         simhash_bands,
+        simhash_sketches,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    sim = simhash60_portable(whitespace_tokens(F.col("text")))
-    d = d.select("doc_id", sim.alias("simhash"))
+    d = simhash_sketches(_t(spark, sf_dir, "documents"), "doc_id", "text", 60)
+    d = d.select(F.col("id").alias("doc_id"), F.col("__sim").alias("simhash"))
     return d.select(
         "doc_id", "simhash", *simhash_bands(F.col("simhash"), total_bits=60)
     )
@@ -6062,41 +6061,40 @@ def _bpe_round_sql(i: int) -> str:
     )"""
 
 
-_BPE_BASE_SQL = """
+# The round-0 states interpolate the SAME pretoken pattern constants the
+# Spark side uses (text_analysis._PRETOKENIZERS) — quote-escaped — so the
+# two engines can never drift.
+def _pretoken_pattern_sql(name: str) -> str:
+    from ehr_data_pipeline_spark.operators import text_analysis
+
+    return getattr(text_analysis, name).replace("'", "''")
+
+
+_BPE_BASE_SQL = f"""
     WITH w0 AS (
       SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS wid
       FROM (SELECT doc_id, regexp_extract_all(
               trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')),
-              '[a-z]+|[0-9]+|[^a-z0-9\\s]') AS ws FROM documents)
+              '{_pretoken_pattern_sql("BPE_WORD_PATTERN")}') AS ws FROM documents)
     ), s0 AS (
       SELECT doc_id, wid, array_to_string(string_split(w, ''), chr(31)) AS syms
       FROM w0
     )"""
 
 
-# Byte-level round-0 state (text_analysis.bpe_initial_state_bytes):
+# Byte-level round-0 state (text_analysis._PRETOKENIZERS["byte"]):
 # GPT-2-style case/whitespace-PRESERVING pretokens over the RAW text
 # (no normalize — byte-level BPE is defined on the byte stream; the
 # lookahead-free \p{L}/\p{N} pattern and its tri-engine parity are
-# documented at BYTE_PRETOKEN_PATTERN, and the SQL interpolates that
-# SAME constant — quote-escaped — so the two engines can never drift),
-# each pretoken's UTF-8 bytes rendered as 2-hex-digit symbols
-# (hex(encode()) is uppercase in both engines). Every round CTE after
-# s0 is shared verbatim with the word trainer — the symbol machinery
-# is pretokenizer-agnostic on both sides.
-def _byte_pretoken_pattern_sql() -> str:
-    from ehr_data_pipeline_spark.operators.text_analysis import (
-        BYTE_PRETOKEN_PATTERN,
-    )
-
-    return BYTE_PRETOKEN_PATTERN.replace("'", "''")
-
-
+# documented at BYTE_PRETOKEN_PATTERN), each pretoken's UTF-8 bytes
+# rendered as 2-hex-digit symbols (hex(encode()) is uppercase in both
+# engines). Every round CTE after s0 is shared verbatim with the word
+# trainer — the symbol machinery is pretokenizer-agnostic on both sides.
 _BPE_BYTE_BASE_SQL = f"""
     WITH w0 AS (
       SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS wid
       FROM (SELECT doc_id, regexp_extract_all(coalesce(text, ''),
-              '{_byte_pretoken_pattern_sql()}')
+              '{_pretoken_pattern_sql("BYTE_PRETOKEN_PATTERN")}')
               AS ws FROM documents)
     ), s0 AS (
       SELECT doc_id, wid,
@@ -6260,7 +6258,7 @@ def _bpe_batched_trainer_oracle(
 )
 def doc_bpe_trained_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY side of distributed BPE training
-    (operators/text_analysis.py bpe_trained_token_count): train the
+    (operators/text_analysis.py bpe_trained_token_counts_df): train the
     3-round merge table on the corpus, then count every document's
     tokens under it — merges applied IN TRAINING ORDER over symbol
     states, so later merges consume earlier merges' fused symbols
@@ -6318,7 +6316,7 @@ def doc_bpe_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_bpe_byte_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three rounds of distributed BPE training with the BYTE-LEVEL
     pretokenizer (VERDICT r11 #5 / r11 handoff #4:
-    operators/text_analysis.py bpe_initial_state_bytes): GPT-2-style
+    operators/text_analysis.py byte_pretokens): GPT-2-style
     case/whitespace-preserving pretokens over the raw text, UTF-8 bytes
     as hex-pair symbols — so the trainer sees the byte stream production
     tokenizers (GPT-2/tiktoken) train on, leading spaces included (the
@@ -6351,7 +6349,7 @@ def doc_bpe_byte_trained_token_counts(
     ASCII one: train the 3-round byte merge table on the corpus
     (``bpe_trainer_rounds(pretokenizer="byte")``), then count every
     document's tokens under it (operators/text_analysis.py
-    bpe_byte_trained_token_count) — merges applied IN TRAINING ORDER
+    bpe_trained_token_counts_df) — merges applied IN TRAINING ORDER
     over hex-pair byte states, so later merges consume earlier merges'
     fused byte runs (space-prefixed vocabulary entries like ' t' = 2074
     emerge exactly as in GPT-2-style tokenizers). The per-doc counts sum

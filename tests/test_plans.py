@@ -296,6 +296,15 @@ def test_gopher_report_single_shuffle(spark):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
+def test_doc_simhash_has_no_interpreted_fold(spark):
+    """doc_simhash builds its sketch with the per-bit aggregate the pair
+    and group surfaces share, not an in-row fold of one interpreted
+    filter() lambda per bit."""
+    plan = optimized_of(spark, "doc_simhash")
+    assert "lambdafunction" not in plan
+    assert "Aggregate" in plan
+
+
 def test_incremental_near_dedup_joins_within_bands(spark):
     plan = plan_of(spark, "doc_incremental_near_dedup")
     assert "CartesianProduct" not in plan

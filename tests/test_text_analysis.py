@@ -690,7 +690,7 @@ def test_bpe_trainer_rounds_hand_computed(spark):
     characters), and an overlapping-run merge ('aaa' has two 'aa'
     adjacencies but only ONE leftmost non-overlapping application)."""
     from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_initial_state,
+        _initial_state,
         bpe_pair_counts,
         bpe_symbol_pair_counts,
         bpe_trainer_rounds,
@@ -705,7 +705,9 @@ def test_bpe_trainer_rounds_hand_computed(spark):
     # passes agree on the initial state
     sym = {
         (r["l"] + r["r"]): r["n_pairs"]
-        for r in bpe_symbol_pair_counts(bpe_initial_state(docs)).collect()
+        for r in bpe_symbol_pair_counts(
+            _initial_state(docs, "text", "word")
+        ).collect()
     }
     chr_pairs = {
         r["pair"]: r["n_pairs"] for r in bpe_pair_counts(docs).collect()
@@ -738,7 +740,7 @@ def test_byte_pretokens_gpt2_style(spark):
     from pyspark.sql import functions as F
 
     from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_initial_state_bytes,
+        _initial_state,
         byte_pretokens,
     )
 
@@ -760,8 +762,10 @@ def test_byte_pretokens_gpt2_style(spark):
     # initial state: UTF-8 bytes as hex-pair symbols (' t' = 20,74)
     states = sorted(
         r["syms"]
-        for r in bpe_initial_state_bytes(
-            spark.createDataFrame([(1, " t")], "doc_id int, text string")
+        for r in _initial_state(
+            spark.createDataFrame([(1, " t")], "doc_id int, text string"),
+            "text",
+            "byte",
         ).collect()
     )
     assert states == ["20\x1f74"]
@@ -805,7 +809,7 @@ def test_bpe_byte_trained_count_cross_checked_with_trainer(spark):
     from pyspark.sql import functions as F
 
     from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_byte_trained_token_count,
+        _trained_token_count,
         bpe_trainer_rounds,
     )
 
@@ -822,7 +826,7 @@ def test_bpe_byte_trained_count_cross_checked_with_trainer(spark):
         r["doc_id"]: r["n_tokens"]
         for r in docs.select(
             "doc_id",
-            bpe_byte_trained_token_count(F.col("text"), merges).alias(
+            _trained_token_count(F.col("text"), merges, "byte").alias(
                 "n_tokens"
             ),
         ).collect()
@@ -863,7 +867,7 @@ def test_bpe_trained_counts_arrow_matches_native(spark):
         r["doc_id"]: r["n_tokens"]
         for r in docs.select(
             "doc_id",
-            TA.bpe_trained_token_count(F.col("text"), merges).alias(
+            TA._trained_token_count(F.col("text"), merges, "word").alias(
                 "n_tokens"
             ),
         ).collect()
@@ -913,7 +917,7 @@ def test_bpe_byte_trained_counts_arrow_matches_native(spark):
         r["doc_id"]: r["n_tokens"]
         for r in docs.select(
             "doc_id",
-            TA.bpe_byte_trained_token_count(F.col("text"), merges).alias(
+            TA._trained_token_count(F.col("text"), merges, "byte").alias(
                 "n_tokens"
             ),
         ).collect()
@@ -1040,7 +1044,7 @@ def test_bpe_byte_arrow_matches_native_on_unicode(spark):
         r["doc_id"]: r["n_tokens"]
         for r in docs.select(
             "doc_id",
-            TA.bpe_byte_trained_token_count(F.col("text"), merges).alias(
+            TA._trained_token_count(F.col("text"), merges, "byte").alias(
                 "n_tokens"
             ),
         ).collect()
@@ -1223,6 +1227,61 @@ def test_bpe_batched_oracle_generalizes_across_knobs(spark, tmp_path):
         assert len(got) > 0
 
 
+def test_bpe_word_oracles_on_unit_separator_text(spark, tmp_path):
+    """Text containing U+001F (BPE_SEP itself): the word pretokenizer
+    must not emit it as a one-character word, whose state would split
+    into two EMPTY symbols (a phantom ('', '') pair and an extra token
+    per occurrence). The four word-level BPE registry queries match
+    their DuckDB oracles on such a corpus, and the Arrow twin of the
+    trained-table counter equals the native one on it."""
+    import duckdb
+    import pandas as pd
+
+    import ehr_data_pipeline_spark.operators.text_analysis as TA
+    from ehr_data_pipeline_spark.queries import REGISTRY
+    from tests.oracle_utils import compare_spark_vs_oracle
+
+    texts = [
+        "the cat sat on the mat",
+        "ab \x1f cd ab",
+        "ab\x1fab the the",
+        "then there",
+    ]
+    pq = tmp_path / "documents.parquet"
+    pd.DataFrame({"doc_id": range(1, 5), "text": texts}).to_parquet(pq)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}'")
+    for name in (
+        "doc_bpe_pair_counts",
+        "doc_bpe_trainer_rounds",
+        "doc_bpe_trained_token_counts",
+        "doc_bpe_batched_trainer_rounds",
+    ):
+        spec = REGISTRY[name]
+        compare_spark_vs_oracle(
+            spec.fn(spark, str(tmp_path)), con, spec.oracle, name=name
+        )
+
+    docs = spark.read.parquet(str(pq))
+    # doc 2 is [a, b] [c, d] [a, b]: U+001F is no token under any table
+    for merges, want in (((), 6), ((("t", "h"), ("th", "e"), ("a", "b")), 4)):
+        native = {
+            r["doc_id"]: r["n"]
+            for r in docs.select(
+                "doc_id",
+                TA._trained_token_count(F.col("text"), merges, "word").alias("n"),
+            ).collect()
+        }
+        arrow = {
+            r["doc_id"]: r["n_tokens"]
+            for r in TA._bpe_trained_counts_arrow(
+                docs, merges, "doc_id", "text"
+            ).collect()
+        }
+        assert native == arrow, merges
+        assert native[2] == want, merges
+
+
 def test_bpe_trainer_rejects_unknown_pretokenizer(spark):
     import pytest as _pytest
 
@@ -1257,7 +1316,7 @@ def test_bpe_trained_token_count_order_sensitive_and_cross_checked(spark):
     from pyspark.sql import functions as F
 
     from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_trained_token_count,
+        _trained_token_count,
         bpe_trainer_rounds,
     )
 
@@ -1270,7 +1329,7 @@ def test_bpe_trained_token_count_order_sensitive_and_cross_checked(spark):
             r["doc_id"]: r["n"]
             for r in docs.select(
                 "doc_id",
-                bpe_trained_token_count(F.col("text"), merges).alias("n"),
+                _trained_token_count(F.col("text"), merges, "word").alias("n"),
             ).collect()
         }
 
@@ -1298,7 +1357,7 @@ def test_bpe_merge_apply_whole_symbol_and_run_semantics(spark):
     from pyspark.sql import functions as F
 
     from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_trained_token_count,
+        _trained_token_count,
     )
 
     docs = spark.createDataFrame(
@@ -1318,7 +1377,7 @@ def test_bpe_merge_apply_whole_symbol_and_run_semantics(spark):
             r["doc_id"]: r["n"]
             for r in docs.select(
                 "doc_id",
-                bpe_trained_token_count(F.col("text"), merges).alias("n"),
+                _trained_token_count(F.col("text"), merges, "word").alias("n"),
             ).collect()
         }
 
@@ -1341,7 +1400,7 @@ def test_bpe_merge_apply_fuzz_vs_reference_greedy(spark):
     from pyspark.sql import functions as F
 
     from ehr_data_pipeline_spark.operators.text_analysis import (
-        bpe_trained_token_count,
+        _trained_token_count,
     )
 
     WORD = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9\s]")
@@ -1377,7 +1436,7 @@ def test_bpe_merge_apply_fuzz_vs_reference_greedy(spark):
         r["doc_id"]: r["n"]
         for r in docs.select(
             "doc_id",
-            bpe_trained_token_count(F.col("text"), merges).alias("n"),
+            _trained_token_count(F.col("text"), merges, "word").alias("n"),
         ).collect()
     }
     want = {i: ref_count(t, merges) for i, t in rows}
@@ -1566,11 +1625,11 @@ def test_bpe_char_pairs_match_old(texts_df):
 def test_bpe_symbol_pair_counts_match_old(spark, texts_df):
     from ehr_data_pipeline_spark.operators.text_analysis import (
         BPE_SEP,
-        bpe_initial_state,
+        _initial_state,
         bpe_symbol_pair_counts,
     )
 
-    state = bpe_initial_state(texts_df)
+    state = _initial_state(texts_df, "text", "word")
     a = F.split(F.col("syms"), BPE_SEP)
     old = (
         state.select(a.alias("__a"))

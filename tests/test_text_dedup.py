@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from ehr_data_pipeline_spark.operators.text_analysis import (
     let_bound,
     normalize_text,
+    portable_hash60,
     whitespace_tokens,
 )
 from ehr_data_pipeline_spark.operators.text_dedup import (
@@ -22,7 +23,6 @@ from ehr_data_pipeline_spark.operators.text_dedup import (
     minhash_lsh_pairs,
     minhash_signature,
     shingle_set,
-    simhash64,
 )
 from tests.edge_texts import (
     SHINGLE_EDGE_TEXTS,
@@ -30,6 +30,25 @@ from tests.edge_texts import (
     shingle_fuzz_texts,
     token_fuzz_texts,
 )
+
+
+def _simhash_fold(tokens):
+    """Reference twin of ``simhash_sketches``: the in-row 60-bit SimHash
+    fold over md5-derived token hashes — bit b is 1 when more than half
+    the hashes have bit b set, one interpreted ``filter`` per bit. The
+    hash array is let-bound so tokens hash once, not once per bit."""
+
+    def fold(hs):
+        out = F.lit(0).cast("bigint")
+        for b in range(60):
+            n_set = F.size(
+                F.filter(hs, lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1)
+            )
+            out = out + F.shiftleft((n_set * 2 > F.size(hs)).cast("bigint"), b)
+        return out
+
+    return let_bound(F.transform(tokens, portable_hash60), fold)
+
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -366,37 +385,15 @@ def test_release_builder_caches_unpersists(spark, corpus):
         assert not df.is_cached
 
 
-def test_simhash_hamming(spark, corpus):
-    sims = {
-        r["doc_id"]: r["s"]
-        for r in corpus.select(
-            "doc_id", simhash64(whitespace_tokens(F.col("text"))).alias("s")
-        ).collect()
-    }
-    df = spark.createDataFrame(
-        [(sims[1], sims[3], sims[4], sims[5])], "a long, b long, c long, d long"
-    )
-    ham = df.select(
-        hamming64(F.col("a"), F.col("b")).alias("dup"),
-        hamming64(F.col("a"), F.col("c")).alias("near"),
-        hamming64(F.col("a"), F.col("d")).alias("far"),
-    ).collect()[0]
-    assert ham["dup"] == 0  # normalization-identical docs: same sketch
-    assert ham["near"] <= 10  # one-word change flips few bits
-    assert ham["far"] > ham["near"]  # unrelated text is farther
-
-
 def test_simhash_portable_hamming(spark, corpus):
     """The md5-portable 60-bit sketch preserves the Hamming-distance
     ordering (dup < near < far) with the same banding guarantee; its
     oracle-exactness is covered by the doc_simhash registry row."""
-    from ehr_data_pipeline_spark.operators.text_dedup import simhash60_portable
+    from ehr_data_pipeline_spark.operators.text_dedup import simhash_sketches
 
     sims = {
-        r["doc_id"]: r["s"]
-        for r in corpus.select(
-            "doc_id", simhash60_portable(whitespace_tokens(F.col("text"))).alias("s")
-        ).collect()
+        r["id"]: r["__sim"]
+        for r in simhash_sketches(corpus, "doc_id", "text", 60).collect()
     }
     assert all(0 <= s < (1 << 60) for s in sims.values())
     df = spark.createDataFrame(
@@ -447,14 +444,11 @@ def test_simhash_band_pairs_exact_below_band_count(spark, corpus):
     """With max_distance < n_bands the band-bucket join is EXACT
     (pigeonhole): identical pair set and distances to the all-pairs
     Hamming join, while shuffling only on band keys."""
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        simhash60_portable,
-        simhash_near_dup_pairs,
-    )
+    from ehr_data_pipeline_spark.operators.text_dedup import simhash_near_dup_pairs
 
     sketch = corpus.select(
         "doc_id",
-        simhash60_portable(whitespace_tokens(F.col("text"))).alias("s"),
+        _simhash_fold(whitespace_tokens(F.col("text"))).alias("s"),
     )
     a = sketch.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
     b = sketch.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
@@ -494,7 +488,7 @@ def test_simhash_duplicates_add_zero_verification_work(spark, corpus):
         )
 
     def work_facts(df):
-        grouped = _simhash_groups(df, "doc_id", "text", 60, True)
+        grouped = _simhash_groups(df, "doc_id", "text", 60)
         reps = grouped.where(F.col("id") == F.col("__rid"))
         pairs = _rep_simhash_pairs(grouped, 3, 4, 60).where(
             F.col("doc_a") != F.col("doc_b")
@@ -895,24 +889,14 @@ def test_minhash_signature_array_min_equals_old_fold(spark, text_df):
     assert not bad, f"signature mismatch: {bad[:3]}"
 
 
-@pytest.mark.parametrize(
-    "total_bits,portable", [(60, True), (64, False)]
-)
-def test_simhash_groups_explode_agg_equals_per_row_fold(
-    spark, text_df, total_bits, portable
-):
+def test_simhash_groups_explode_agg_equals_per_row_fold(spark, text_df):
     """_simhash_groups' explode+groupBy sketch must reproduce the per-row
     HOF fold EXACTLY — per input row (multiplicity included): same
     (id, __sim, __rid, __n) multiset, on unicode edges, duplicated
     (id, text) rows, and same-id-different-text rows."""
     from pyspark.sql.window import Window
 
-    from ehr_data_pipeline_spark.operators.text_analysis import whitespace_tokens
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        _simhash_groups,
-        simhash60_portable,
-        simhash64,
-    )
+    from ehr_data_pipeline_spark.operators.text_dedup import _simhash_groups
 
     # duplicate-row + shared-id torture on top of the module fixture
     extra = [
@@ -925,8 +909,7 @@ def test_simhash_groups_explode_agg_equals_per_row_fold(
         spark.createDataFrame(extra, "id int, text string")
     )
 
-    tokens = whitespace_tokens(F.col("text"))
-    sim = simhash60_portable(tokens) if portable else simhash64(tokens)
+    sim = _simhash_fold(whitespace_tokens(F.col("text")))
     base = df.select(F.col("id").alias("id"), sim.alias("__sim"))
     gw = Window.partitionBy("__sim")
     old = base.select(
@@ -935,12 +918,12 @@ def test_simhash_groups_explode_agg_equals_per_row_fold(
         F.min("id").over(gw).alias("__rid"),
         F.size(F.collect_set(F.col("id")).over(gw)).alias("__n"),
     )
-    new = _simhash_groups(df, "id", "text", total_bits, portable)
+    new = _simhash_groups(df, "id", "text", 60)
     key = lambda r: (r["id"], r["__sim"], r["__rid"], r["__n"])  # noqa: E731
     a = sorted(map(key, old.collect()))
     b = sorted(map(key, new.collect()))
     assert a == b, (
-        f"bits={total_bits} portable={portable}: grouped multiset diverged; "
+        "grouped multiset diverged; "
         f"old-only={set(a)-set(b)}, new-only={set(b)-set(a)}"
     )
 
@@ -964,24 +947,18 @@ def test_minhash_signature_expression_argument_not_duplicated(spark, text_df):
     assert not bad, f"expression-arg signature mismatch: {bad[:3]}"
 
 
-@pytest.mark.parametrize("portable,total_bits", [(True, 60), (False, 64)])
-def test_simhash_groups_sql_form_matches_fold(spark, portable, total_bits):
+def test_simhash_groups_sql_form_matches_fold(spark):
     """_simhash_groups' F.expr-rendered per-bit sums + reconstruction must
     reproduce the in-row simhash fold exactly (the r14 equivalence chain
     extends: fold == column-built aggregate == SQL-built aggregate)."""
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        _simhash_groups,
-        simhash60_portable,
-        simhash64,
-    )
+    from ehr_data_pipeline_spark.operators.text_dedup import _simhash_groups
 
     rows = [(i, t) for i, t in enumerate(TOKEN_EDGE_TEXTS + token_fuzz_texts(100, seed=77))]
     # duplicate (id, text) rows and same-id-different-text rows
     rows += [(3, TOKEN_EDGE_TEXTS[5]), (3, TOKEN_EDGE_TEXTS[5]), (4, "другой текст")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    grouped = _simhash_groups(df, "doc_id", "text", total_bits, portable)
-    toks = F.split(normalize_text(F.col("text")), " ")
-    fold = simhash60_portable(toks) if portable else simhash64(toks)
+    grouped = _simhash_groups(df, "doc_id", "text", 60)
+    fold = _simhash_fold(F.split(normalize_text(F.col("text")), " "))
     expect = df.select(F.col("doc_id").alias("id"), fold.alias("__sim"))
     diff = (
         grouped.select("id", "__sim").exceptAll(expect)
@@ -1018,7 +995,6 @@ def test_simhash_band_pairs_verified_first_join(spark):
     with identical docs, near-dups and unrelated docs."""
     from ehr_data_pipeline_spark.operators.text_dedup import (
         hamming64,
-        simhash60_portable,
         simhash_near_dup_pairs,
     )
 
@@ -1037,7 +1013,7 @@ def test_simhash_band_pairs_verified_first_join(spark):
     )
     s = df.select(
         F.col("doc_id"),
-        simhash60_portable(F.split(normalize_text(F.col("text")), " ")).alias("h"),
+        _simhash_fold(F.split(normalize_text(F.col("text")), " ")).alias("h"),
     )
     a, b = s.alias("a"), s.alias("b")
     expect = sorted(
