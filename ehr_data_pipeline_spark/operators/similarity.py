@@ -1225,11 +1225,17 @@ def cosine_near_dup_pairs_arrow(
     The corpus collects EAGERLY (at construction) and
     ships to executors as a numpy sparkContext.broadcast — one transfer
     and one driver-side normalization, not a pickled list-of-lists
-    re-converted inside every task."""
+    re-converted inside every task. Invalid vectors are excluded at
+    entry per the embeddings contract, with ``dim`` inferred from the
+    data (the native twin's ``dim=None``)."""
     import numpy as np
     import pandas as pd
 
     out_schema = "id_a long, id_b long, cosine double"
+    dim = infer_dim(df, id_col, vec_col)
+    if dim is None:
+        return df.sparkSession.createDataFrame([], out_schema)
+    df = df.where(_valid(id_col, vec_col, dim))
     rows = df.select(id_col, vec_col).collect()
     if not rows:
         return df.sparkSession.createDataFrame([], out_schema)

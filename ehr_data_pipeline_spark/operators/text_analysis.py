@@ -44,6 +44,16 @@ def normalize_text(col: Column) -> Column:
     )
 
 
+def normalize_text_sql(col: str) -> str:
+    """The DuckDB oracle twin of :func:`normalize_text` — splice into
+    oracle SQL wherever the Spark plan normalizes text. The bracket class
+    spells out Java's ``\\s``; RE2's ``\\s`` lacks ``\\x0B``."""
+    return (
+        f"trim(regexp_replace(lower(coalesce({col}, '')),"
+        r" '[ \t\n\x0B\f\r]+', ' ', 'g'))"
+    )
+
+
 def let_bound(value: Column, body) -> Column:
     """Let-binding for higher-order functions: evaluate ``value`` ONCE per
     row and pass it to ``body`` as a bound lambda variable (via a
@@ -1246,6 +1256,13 @@ def chunk_by_tokens(
     )
 
 
+def _q_log2(c: Column) -> Column:
+    """1e-4-bit fixed-point log2 as BIGINT: libm log2 differs between
+    engines in the last ulp, the quantized integers (and their sums) do
+    not. The DuckDB twin is ``queries._q_log2_sql``."""
+    return F.round(F.log2(c.cast("double")) * 10000).cast("bigint")
+
+
 def unigram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
@@ -1270,7 +1287,7 @@ def unigram_lm_scores(
     ex = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = freq.agg(F.sum("cnt").cast("bigint").alias("total_tokens"))
-    q_tok = F.round(F.log2(F.col("cnt").cast("double")) * 10000).cast("bigint")
+    q_tok = _q_log2(F.col("cnt"))
     per_doc = (
         ex.join(freq, "tok")
         .groupBy(id_col)
@@ -1279,9 +1296,7 @@ def unigram_lm_scores(
             F.sum(q_tok).cast("bigint").alias("__sum_q"),
         )
     )
-    q_total = F.round(
-        F.log2(F.col("total_tokens").cast("double")) * 10000
-    ).cast("bigint")
+    q_total = _q_log2(F.col("total_tokens"))
     return (
         per_doc.crossJoin(total)
         .select(
@@ -1457,9 +1472,6 @@ def dsir_importance_weights(
             (base_shingle_hash(F.col("tok")) % F.lit(n_buckets)).alias("bucket"),
         )
 
-    def q_log(c: Column) -> Column:
-        return F.round(F.log2(c.cast("double")) * 10000).cast("bigint")
-
     t_cnt = bucketed(target, False).groupBy("bucket").agg(
         F.count(F.lit(1)).alias("t_cnt")
     )
@@ -1473,14 +1485,14 @@ def dsir_importance_weights(
         .select(
             "bucket",
             (
-                q_log(F.coalesce(F.col("t_cnt"), F.lit(0)) + 1)
-                - q_log(F.coalesce(F.col("r_cnt"), F.lit(0)) + 1)
+                _q_log2(F.coalesce(F.col("t_cnt"), F.lit(0)) + 1)
+                - _q_log2(F.coalesce(F.col("r_cnt"), F.lit(0)) + 1)
             ).alias("q_ratio"),
         )
     )
     totals = t_cnt.agg(
-        (q_log(F.sum("t_cnt") + n_buckets)).alias("q_nt")
-    ).crossJoin(r_cnt.agg((q_log(F.sum("r_cnt") + n_buckets)).alias("q_nr")))
+        _q_log2(F.sum("t_cnt") + n_buckets).alias("q_nt")
+    ).crossJoin(r_cnt.agg(_q_log2(F.sum("r_cnt") + n_buckets).alias("q_nr")))
     per_doc = (
         bucketed(raw, True)
         .join(F.broadcast(model), "bucket")
@@ -1564,14 +1576,11 @@ def bm25_search_against_index(
     tf = postings.where(F.col("tok").isin(terms))
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("df_t"))
 
-    q_idf = F.round(
-        F.log2(
-            (F.col("n_docs").cast("double") - F.col("df_t").cast("double") + 0.5)
-            / (F.col("df_t").cast("double") + 0.5)
-            + 1.0
-        )
-        * 10000
-    ).cast("bigint")
+    q_idf = _q_log2(
+        (F.col("n_docs").cast("double") - F.col("df_t").cast("double") + 0.5)
+        / (F.col("df_t").cast("double") + 0.5)
+        + 1.0
+    )
     avgdl = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")
     denom = F.col("tf").cast("double") + F.lit(k1) * (
         F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)
@@ -1641,9 +1650,6 @@ def bigram_lm_scores(
     if model_docs is None:
         model_docs = df
 
-    def q_log(c: Column) -> Column:
-        return F.round(F.log2(c.cast("double")) * 10000).cast("bigint")
-
     def transitions(frame: DataFrame) -> DataFrame:
         toks = whitespace_tokens(F.col(text_col))
         size = F.size(toks)
@@ -1661,7 +1667,7 @@ def bigram_lm_scores(
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    total = uc.agg(q_log(F.sum("c")).alias("q_n"))
+    total = uc.agg(_q_log2(F.sum("c")).alias("q_n"))
     bc = (
         transitions(model_docs)
         .groupBy("w1", "w2")
@@ -1680,11 +1686,11 @@ def bigram_lm_scores(
         .select(
             id_col,
             F.when(
-                F.col("bc").isNotNull(), q_log(F.col("bc")) - q_log(F.col("c1"))
+                F.col("bc").isNotNull(), _q_log2(F.col("bc")) - _q_log2(F.col("c1"))
             )
             .otherwise(
                 F.lit(_Q_BACKOFF_ALPHA)
-                + q_log(F.coalesce(F.col("c2"), F.lit(1)))
+                + _q_log2(F.coalesce(F.col("c2"), F.lit(1)))
                 - F.col("q_n")
             )
             .alias("__q"),

@@ -15,6 +15,13 @@ Determinism rules (so the order-insensitive value hash matches):
   division on identical operands;
 - every top-k / keep-first has a total tiebreak order on a unique key;
 - all computed columns are aliased identically in Spark and SQL.
+
+SQL fragment rule: a fragment several oracles share (a CTE chain, a
+predicate, an expression) is defined ONCE here as a module-level
+constant or helper and spliced in through f-strings. A fragment is pure
+SQL — it may interpolate only literal constants the oracles already
+share, never anything derived from the Spark-side plan — so every oracle
+stays an independent statement of its query.
 """
 
 from __future__ import annotations
@@ -26,12 +33,27 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.functions.measurement import measurement_sql
+from ehr_data_pipeline_spark.operators.text_analysis import normalize_text_sql
 from ehr_data_pipeline_spark.tables import load_table
 
 # DuckDB twin of the valid_measurement guard (functions/measurement.py),
 # spliced into every events-family oracle that reads `value` — the oracle
 # half of the engine-wide measurement contract.
 _FIN = measurement_sql("value")
+
+# DuckDB twins of text_analysis.normalize_text and whitespace_tokens
+# (lower, collapse whitespace, trim, split on single space) and of the
+# token count every training-layout oracle packs by.
+_NORM_TEXT_SQL = normalize_text_sql("text")
+_TOKS_SQL = f"string_split({_NORM_TEXT_SQL}, ' ')"
+_WS_TOKENS_SQL = f"len({_TOKS_SQL})"
+
+
+def _q_log2_sql(x: str) -> str:
+    """1e-4-bit fixed-point log2 as BIGINT (libm log2 is not bit-identical
+    across engines; the quantized integers are) — the DuckDB twin of
+    text_analysis._q_log2."""
+    return f"CAST(round(log2(CAST({x} AS DOUBLE)) * 10000) AS BIGINT)"
 
 
 @dataclass(frozen=True)
@@ -1374,9 +1396,9 @@ def fhir_pipeline_cleaned_patients(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "doc_text_stats",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
-      SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS nt
+      SELECT doc_id, {_NORM_TEXT_SQL} AS nt
       FROM documents
     ), c AS (
       SELECT doc_id,
@@ -1440,10 +1462,9 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_language_id",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS t
+      SELECT doc_id, {_TOKS_SQL} AS t
       FROM documents
     ), h AS (
       SELECT doc_id,
@@ -1485,9 +1506,9 @@ def doc_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_top_bigrams",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS t
+      SELECT {_TOKS_SQL} AS t
       FROM documents
     ), bg AS (
       SELECT unnest(list_transform(range(1, len(t)), i -> concat(t[i], ' ', t[i+1]))) AS ngram
@@ -1516,9 +1537,9 @@ def doc_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_exact_dedup_stats",
-    oracle="""
+    oracle=f"""
     WITH f AS (
-      SELECT md5(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS fp
+      SELECT md5({_NORM_TEXT_SQL}) AS fp
       FROM documents
     ), g AS (SELECT fp, COUNT(*) AS cnt FROM f GROUP BY fp)
     SELECT CAST(SUM(cnt) AS BIGINT) AS n_docs,
@@ -1539,15 +1560,24 @@ def doc_exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dup_stats(_t(spark, sf_dir, "documents"))
 
 
-_SHINGLES_SQL = """
+def _shingles_sql(docs: str) -> str:
+    """(doc_id, sh): the distinct md5-derived character-4-gram hashes of
+    each normalized document of `docs` (a table, optionally filtered)."""
+    return f"""
       SELECT doc_id,
              list_distinct(list_transform(
                list_transform(range(1, length(nt) - 2), i -> substr(nt, i, 4)),
                g -> ('0x' || substr(md5(g), 1, 8))::BIGINT)) AS sh
-      FROM (SELECT doc_id,
-                   trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS nt
-            FROM documents)
+      FROM (SELECT doc_id, {_NORM_TEXT_SQL} AS nt
+            FROM {docs})
 """
+
+
+# Exact Jaccard of the shingle-hash sets a.sh and b.sh.
+_JACCARD_SQL = (
+    "CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)"
+    " / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)"
+)
 
 
 # Fixed-size slice for the registered exact-Jaccard verification query:
@@ -1562,19 +1592,10 @@ _JACCARD_SLICE_DOCS = 2000
 @register(
     "doc_jaccard_pairs",
     oracle=f"""
-    WITH s AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               list_transform(range(1, length(nt) - 2), i -> substr(nt, i, 4)),
-               g -> ('0x' || substr(md5(g), 1, 8))::BIGINT)) AS sh
-      FROM (SELECT doc_id,
-                   trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS nt
-            FROM documents WHERE doc_id < {_JACCARD_SLICE_DOCS})
-    ),
+    WITH s AS ({_shingles_sql(f"documents WHERE doc_id < {_JACCARD_SLICE_DOCS}")}),
     p AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) AS jaccard
+             {_JACCARD_SQL} AS jaccard
       FROM s a JOIN s b ON a.doc_id < b.doc_id
       WHERE len(a.sh) > 0 AND len(b.sh) > 0
         -- size-ratio prune (J <= min/max): skips the intersection for
@@ -1629,26 +1650,55 @@ _SIG_AGREE_SQL = (
     f" >= {_MINHASH_SIG_AGREE}"
 )
 
-
-@register(
-    "doc_minhash_lsh_pairs",
-    oracle=f"""
-    WITH s AS ({_SHINGLES_SQL}),
+# The MinHash replay shared by every minhash-family oracle: shingle sets
+# (sh) and 16-position signatures (sg) of the non-empty docs, then the
+# candidate rule (collide in one of 4 bands of 4 AND pass the agreement
+# prefilter) and the verified pair rule (Jaccard >= 0.6) over sig a, b.
+_MINHASH_SIG_CTES = f"""s AS ({_shingles_sql("documents")}),
     hsx AS (
       SELECT doc_id, sh, sh AS hs FROM s WHERE len(sh) > 0
     ),
     sig AS (
       SELECT doc_id, sh, {_MINHASH_SIG_SQL} AS sg FROM hsx
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) AS jaccard
+    )"""
+_MINHASH_CANDIDATE_SQL = (
+    "(a.sg[1:4] = b.sg[1:4] OR a.sg[5:8] = b.sg[5:8]"
+    " OR a.sg[9:12] = b.sg[9:12] OR a.sg[13:16] = b.sg[13:16])"
+    f" AND {_SIG_AGREE_SQL}"
+)
+_MINHASH_PAIR_SQL = f"{_MINHASH_CANDIDATE_SQL} AND {_JACCARD_SQL} >= 0.6"
+
+
+def _closure_sql(pairs: str, a: str, b: str) -> str:
+    """Connected components of the undirected pair graph (`a`, `b`) of
+    CTE `pairs` by recursive reachability: MIN(r) per id in reach(id, r)
+    is the component's minimum member id."""
+    return f"""e AS (
+      SELECT {a} AS src, {b} AS dst FROM {pairs}
+      UNION ALL SELECT {b}, {a} FROM {pairs}
+    ), reach(id, r) AS (
+      SELECT src, src FROM e
+      UNION
+      SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
+    )"""
+
+
+# Reachability over the verified MinHash pair graph p (doc_a, doc_b).
+_MINHASH_REACH_SQL = f"""{_MINHASH_SIG_CTES},
+    p AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+      WHERE {_MINHASH_PAIR_SQL}
+    ), {_closure_sql("p", "doc_a", "doc_b")}"""
+
+
+@register(
+    "doc_minhash_lsh_pairs",
+    oracle=f"""
+    WITH {_MINHASH_SIG_CTES}
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {_JACCARD_SQL} AS jaccard
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE (a.sg[1:4] = b.sg[1:4] OR a.sg[5:8] = b.sg[5:8]
-           OR a.sg[9:12] = b.sg[9:12] OR a.sg[13:16] = b.sg[13:16])
-      AND {_SIG_AGREE_SQL}
-      AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-            / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) >= 0.6
+    WHERE {_MINHASH_PAIR_SQL}
     """,
     bench=True,  # round-5: the LLM/scale dedup paths get round-over-round
     # perf signal alongside the relational headliners (VERDICT r4 #5)
@@ -1673,29 +1723,7 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_dup_clusters",
     oracle=f"""
-    WITH RECURSIVE s AS ({_SHINGLES_SQL}),
-    hsx AS (
-      SELECT doc_id, sh, sh AS hs FROM s WHERE len(sh) > 0
-    ),
-    sig AS (
-      SELECT doc_id, sh, {_MINHASH_SIG_SQL} AS sg FROM hsx
-    ),
-    p AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE (a.sg[1:4] = b.sg[1:4] OR a.sg[5:8] = b.sg[5:8]
-             OR a.sg[9:12] = b.sg[9:12] OR a.sg[13:16] = b.sg[13:16])
-        AND {_SIG_AGREE_SQL}
-        AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) >= 0.6
-    ), e AS (
-      SELECT doc_a AS src, doc_b AS dst FROM p
-      UNION ALL SELECT doc_b, doc_a FROM p
-    ), reach(id, r) AS (
-      SELECT src, src FROM e
-      UNION
-      SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
-    ), comp AS (
+    WITH RECURSIVE {_MINHASH_REACH_SQL}, comp AS (
       SELECT id AS doc_id, MIN(r) AS component FROM reach GROUP BY id
     )
     SELECT component, COUNT(*) AS n_docs, MAX(doc_id) AS max_doc
@@ -1731,29 +1759,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_minhash_dup_groups",
     oracle=f"""
-    WITH RECURSIVE s AS ({_SHINGLES_SQL}),
-    hsx AS (
-      SELECT doc_id, sh, sh AS hs FROM s WHERE len(sh) > 0
-    ),
-    sig AS (
-      SELECT doc_id, sh, {_MINHASH_SIG_SQL} AS sg FROM hsx
-    ),
-    p AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE (a.sg[1:4] = b.sg[1:4] OR a.sg[5:8] = b.sg[5:8]
-             OR a.sg[9:12] = b.sg[9:12] OR a.sg[13:16] = b.sg[13:16])
-        AND {_SIG_AGREE_SQL}
-        AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) >= 0.6
-    ), e AS (
-      SELECT doc_a AS src, doc_b AS dst FROM p
-      UNION ALL SELECT doc_b, doc_a FROM p
-    ), reach(id, r) AS (
-      SELECT src, src FROM e
-      UNION
-      SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
-    )
+    WITH RECURSIVE {_MINHASH_REACH_SQL}
     SELECT id AS doc_id, MIN(r) AS group_id FROM reach GROUP BY id
     """,
     tags=("dedup", "minhash", "lsh", "near-dup", "connected-components"),
@@ -1789,20 +1795,22 @@ _SIMHASH_BIT_TERMS = " + ".join(
 _SIMHASH_BAND_COLS = ", ".join(
     f"(simhash >> {i * 15}) & 32767 AS band{i}" for i in range(4)
 )
+# Per-doc 60-bit sketch (doc_id, simhash) of the normalized tokens.
+_SIMHASH_SKETCH_SQL = f"""t AS (
+      SELECT doc_id,
+             list_transform(
+               {_TOKS_SQL},
+               tok -> ('0x' || substr(md5(tok), 1, 15))::BIGINT) AS hs
+      FROM documents
+    ), s AS (
+      SELECT doc_id, {_SIMHASH_BIT_TERMS} AS simhash FROM t
+    )"""
 
 
 @register(
     "doc_simhash",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id,
-             list_transform(
-               string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '),
-               tok -> ('0x' || substr(md5(tok), 1, 15))::BIGINT) AS hs
-      FROM documents
-    ), s AS (
-      SELECT doc_id, {_SIMHASH_BIT_TERMS} AS simhash FROM t
-    )
+    WITH {_SIMHASH_SKETCH_SQL}
     SELECT doc_id, simhash, {_SIMHASH_BAND_COLS} FROM s
     """,
     tags=("dedup", "simhash"),
@@ -1830,15 +1838,7 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_simhash_band_pairs",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id,
-             list_transform(
-               string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '),
-               tok -> ('0x' || substr(md5(tok), 1, 15))::BIGINT) AS hs
-      FROM documents
-    ), s AS (
-      SELECT doc_id, {_SIMHASH_BIT_TERMS} AS simhash FROM t
-    )
+    WITH {_SIMHASH_SKETCH_SQL}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
     FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -1866,27 +1866,12 @@ def doc_simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_simhash_dup_groups",
     oracle=f"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id,
-             list_transform(
-               string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '),
-               tok -> ('0x' || substr(md5(tok), 1, 15))::BIGINT) AS hs
-      FROM documents
-    ), s AS (
-      SELECT doc_id, {_SIMHASH_BIT_TERMS} AS simhash FROM t
-    ),
+    WITH RECURSIVE {_SIMHASH_SKETCH_SQL},
     p AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM s a JOIN s b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    ), e AS (
-      SELECT doc_a AS src, doc_b AS dst FROM p
-      UNION ALL SELECT doc_b, doc_a FROM p
-    ), reach(id, r) AS (
-      SELECT src, src FROM e
-      UNION
-      SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
-    )
+    ), {_closure_sql("p", "doc_a", "doc_b")}
     SELECT id AS doc_id, MIN(r) AS group_id FROM reach GROUP BY id
     """,
     tags=("dedup", "simhash", "near-dup", "connected-components"),
@@ -1915,9 +1900,9 @@ def doc_simhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_winnow_pairs",
-    oracle="""
+    oracle=f"""
     WITH n AS (
-      SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS nt
+      SELECT doc_id, {_NORM_TEXT_SQL} AS nt
       FROM documents
     ), h AS (
       SELECT doc_id,
@@ -1980,7 +1965,7 @@ _QUALITY_SQL = """
     "corpus_curation_funnel",
     oracle=f"""
     WITH norm AS (
-      SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS nt
+      SELECT doc_id, {_NORM_TEXT_SQL} AS nt
       FROM documents
     ), c AS (
       SELECT doc_id, nt,
@@ -2042,10 +2027,9 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_benchmark_contamination",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+      SELECT doc_id, {_TOKS_SQL} AS toks
       FROM documents
     ), cg AS (
       SELECT doc_id,
@@ -2087,10 +2071,9 @@ def doc_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_repetition_stats",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+      SELECT doc_id, {_TOKS_SQL} AS toks
       FROM documents
     ), b AS (
       SELECT doc_id,
@@ -2138,10 +2121,9 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_top_tfidf_terms",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS term
+      SELECT doc_id, unnest({_TOKS_SQL}) AS term
       FROM documents
     ), cnt AS (
       SELECT doc_id, term, COUNT(*) AS tc FROM t GROUP BY 1, 2
@@ -2217,9 +2199,9 @@ def doc_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_token_histogram",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
-      SELECT trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS nt
+      SELECT {_NORM_TEXT_SQL} AS nt
       FROM documents
     ), t AS (
       SELECT CAST(len(string_split(nt, ' ')) AS BIGINT) AS n_tokens FROM norm
@@ -2421,12 +2403,12 @@ def _c4_lined_text(doc_id: Column, text: Column) -> Column:
     ).otherwise(lined)
 
 
-@register(
-    "doc_c4_line_filter",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+# The lined-corpus fixture (_c4_lined_text) as CTEs t -> l -> lt
+# (doc_id, text2), and the curation chain over it: blocklist page drop ->
+# C4 line rules -> paragraph ranks r (doc_id, idx, para, rn; rn = 1 is
+# the first occurrence of a paragraph corpus-wide).
+_C4_LINED_SQL = f"""t AS (
+      SELECT doc_id, {_TOKS_SQL} AS toks
       FROM documents
     ), l AS (
       SELECT doc_id,
@@ -2443,10 +2425,44 @@ def _c4_lined_text(doc_id: Column, text: Column) -> Column:
                      THEN chr(10) || 'this page contains lorem ipsum filler.'
                      ELSE '' END
              || CASE WHEN doc_id % 89 = 0
-                     THEN chr(10) || 'function f() { return 1; }'
+                     THEN chr(10) || 'function f() {{ return 1; }}'
                      ELSE '' END AS text2
       FROM l
+    )"""
+_C4_CURATION_SQL = f"""{_C4_LINED_SQL}, blocked AS (
+      SELECT doc_id, text2 FROM lt
+      WHERE NOT list_has_any(
+        list_distinct(string_split_regex(lower(text2), '[^a-z0-9]+')),
+        ['dup', 'quasar'])
     ), f AS (
+      SELECT doc_id, text2,
+             list_filter(string_split(text2, chr(10)), x ->
+               regexp_matches(x, '[.!?"]$')
+               AND len(regexp_split_to_array(trim(x), '[ \\t\\n\\x0B\\f\\r]+')) >= 5
+               AND NOT contains(lower(x), 'javascript')) AS kept
+      FROM blocked
+    ), survivors AS (
+      SELECT doc_id, array_to_string(kept, chr(10)) AS ct
+      FROM f
+      WHERE NOT contains(lower(text2), 'lorem ipsum')
+        AND NOT contains(text2, '{{')
+        AND len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]')) >= 3
+    ), e AS (
+      SELECT doc_id, UNNEST(range(0, len(paras))) AS idx, paras
+      FROM (SELECT doc_id, string_split(ct, chr(10)) AS paras FROM survivors)
+    ), p AS (
+      SELECT doc_id, idx, paras[idx + 1] AS para FROM e
+    ), r AS (
+      SELECT doc_id, idx, para,
+             ROW_NUMBER() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
+      FROM p
+    )"""
+
+
+@register(
+    "doc_c4_line_filter",
+    oracle=f"""
+    WITH {_C4_LINED_SQL}, f AS (
       SELECT doc_id, text2,
              string_split(text2, chr(10)) AS all_lines,
              list_filter(string_split(text2, chr(10)), l ->
@@ -2462,7 +2478,7 @@ def _c4_lined_text(doc_id: Column, text: Column) -> Column:
            CAST(len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]')) AS BIGINT) AS n_sentences
     FROM f
     WHERE NOT contains(lower(text2), 'lorem ipsum')
-      AND NOT contains(text2, '{')
+      AND NOT contains(text2, '{{')
       AND len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]')) >= 3
     """,
     tags=("text", "cleaning", "c4", "quality"),
@@ -2491,57 +2507,8 @@ _BLOCKLIST = ("dup", "quasar")
 
 @register(
     "doc_curation_cleaning",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
-      FROM documents
-    ), l AS (
-      SELECT doc_id,
-             list_transform(range(0, (len(toks) + 6) // 7), i ->
-               array_to_string(toks[7 * i + 1 : 7 * i + 7], ' ') ||
-               CASE WHEN (doc_id + i) % 3 = 0 THEN '.'
-                    WHEN (doc_id + i) % 3 = 1 THEN '!'
-                    ELSE '' END) AS lines
-      FROM t
-    ), lt AS (
-      SELECT doc_id,
-             array_to_string(lines, chr(10))
-             || CASE WHEN doc_id % 97 = 0
-                     THEN chr(10) || 'this page contains lorem ipsum filler.'
-                     ELSE '' END
-             || CASE WHEN doc_id % 89 = 0
-                     THEN chr(10) || 'function f() { return 1; }'
-                     ELSE '' END AS text2
-      FROM l
-    ), blocked AS (
-      SELECT doc_id, text2 FROM lt
-      WHERE NOT list_has_any(
-        list_distinct(string_split_regex(lower(text2), '[^a-z0-9]+')),
-        ['dup', 'quasar'])
-    ), f AS (
-      SELECT doc_id, text2,
-             list_filter(string_split(text2, chr(10)), x ->
-               regexp_matches(x, '[.!?"]$')
-               AND len(regexp_split_to_array(trim(x), '[ \\t\\n\\x0B\\f\\r]+')) >= 5
-               AND NOT contains(lower(x), 'javascript')) AS kept
-      FROM blocked
-    ), survivors AS (
-      SELECT doc_id, array_to_string(kept, chr(10)) AS ct
-      FROM f
-      WHERE NOT contains(lower(text2), 'lorem ipsum')
-        AND NOT contains(text2, '{')
-        AND len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]')) >= 3
-    ), e AS (
-      SELECT doc_id, UNNEST(range(0, len(paras))) AS idx, paras
-      FROM (SELECT doc_id, string_split(ct, chr(10)) AS paras FROM survivors)
-    ), p AS (
-      SELECT doc_id, idx, paras[idx + 1] AS para FROM e
-    ), r AS (
-      SELECT doc_id, idx, para,
-             ROW_NUMBER() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-      FROM p
-    )
+    oracle=f"""
+    WITH {_C4_CURATION_SQL}
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_paragraphs,
            CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -2648,12 +2615,10 @@ def doc_c4_blocklist_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c4_blocklist_audit(_t(spark, sf_dir, "documents"), _BLOCKLIST)
 
 
-@register(
-    "doc_paragraph_dedup",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+# The paragraph fixture (_para_lined_docs) as CTEs: p (doc_id, idx, para)
+# holds each document's 3-token paragraphs in position order.
+_PARA_FIXTURE_SQL = f"""t AS (
+      SELECT doc_id, {_TOKS_SQL} AS toks
       FROM documents
     ), pr AS (
       SELECT doc_id,
@@ -2664,7 +2629,13 @@ def doc_c4_blocklist_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, UNNEST(range(0, len(paras))) AS idx, paras FROM pr
     ), p AS (
       SELECT doc_id, idx, paras[idx + 1] AS para FROM e
-    ), r AS (
+    )"""
+
+
+@register(
+    "doc_paragraph_dedup",
+    oracle=f"""
+    WITH {_PARA_FIXTURE_SQL}, r AS (
       SELECT doc_id, idx, para,
              ROW_NUMBER() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
       FROM p
@@ -2710,21 +2681,8 @@ def _para_lined_docs(d: DataFrame) -> DataFrame:
 
 @register(
     "doc_incremental_paragraph_dedup",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
-      FROM documents
-    ), pr AS (
-      SELECT doc_id,
-             list_transform(range(0, (len(toks) + 2) // 3),
-                            i -> array_to_string(toks[3 * i + 1 : 3 * i + 3], ' ')) AS paras
-      FROM t
-    ), e AS (
-      SELECT doc_id, UNNEST(range(0, len(paras))) AS idx, paras FROM pr
-    ), p AS (
-      SELECT doc_id, idx, paras[idx + 1] AS para FROM e
-    ), hist AS (
+    oracle=f"""
+    WITH {_PARA_FIXTURE_SQL}, hist AS (
       SELECT DISTINCT para FROM p WHERE doc_id % 2 = 0
     ), b AS (
       SELECT doc_id, idx AS pos, para,
@@ -2769,10 +2727,9 @@ def doc_incremental_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "doc_unigram_lm_scores",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
-      SELECT doc_id,
-             UNNEST(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS tok
+      SELECT doc_id, UNNEST({_TOKS_SQL}) AS tok
       FROM documents
     ), freq AS (
       SELECT tok, COUNT(*) AS cnt FROM ex GROUP BY tok
@@ -2781,12 +2738,12 @@ def doc_incremental_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     ), per_doc AS (
       SELECT ex.doc_id,
              CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             CAST(SUM(CAST(round(log2(CAST(freq.cnt AS DOUBLE)) * 10000) AS BIGINT)) AS BIGINT) AS sum_q
+             CAST(SUM({_q_log2_sql("freq.cnt")}) AS BIGINT) AS sum_q
       FROM ex JOIN freq ON freq.tok = ex.tok
       GROUP BY ex.doc_id
     )
     SELECT doc_id, n_tokens,
-           CAST(n_tokens * CAST(round(log2(CAST(total_tokens AS DOUBLE)) * 10000) AS BIGINT)
+           CAST(n_tokens * {_q_log2_sql("total_tokens")}
                 - sum_q AS DOUBLE)
              / (CAST(n_tokens AS DOUBLE) * 10000.0) AS avg_neg_logp_bits
     FROM per_doc, total
@@ -2809,11 +2766,10 @@ def doc_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_pps_token_sample",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id,
-             CAST(len(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '))
-                  AS BIGINT) AS n_tokens,
+             CAST({_WS_TOKENS_SQL} AS BIGINT) AS n_tokens,
              ('0x' || substr(md5('pps:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
       FROM documents
     ), c AS (
@@ -2858,10 +2814,10 @@ def doc_pps_token_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pps_systematic_sample(weighted, "doc_id", "n_tokens", n_samples=20)
 
 
-_BM25_SCORED_SQL = """
+_BM25_SCORED_SQL = f"""
     ex AS (
       SELECT doc_id AS id,
-             UNNEST(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS tok
+             UNNEST({_TOKS_SQL}) AS tok
       FROM documents
     ), lens AS (
       SELECT id, CAST(COUNT(*) AS BIGINT) AS dl FROM ex GROUP BY id
@@ -2979,6 +2935,31 @@ _COS_SQL = (
     " * sqrt(list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))))"
     ", 6)"
 )
+
+
+def _knn_top3_sql(pairs: str) -> str:
+    """The kNN rank tail: top-3 neighbors per query from a (query_id,
+    neighbor_id, cosine) CTE, ties broken by neighbor id."""
+    return f"""r AS (
+      SELECT query_id, neighbor_id, cosine,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+                                ORDER BY cosine DESC, neighbor_id ASC) AS rank
+      FROM {pairs}
+    )
+    SELECT query_id, neighbor_id, rank, cosine FROM r WHERE rank <= 3"""
+
+
+# Exact cosine top-3 for the fixed query set vec_id < 5: the oracle of the
+# brute-force search AND of full-probe IVF (every cell probed is exact).
+_EXACT_KNN_TOP3_SQL = f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+               FROM embeddings WHERE vec_id < 5),
+    p AS (
+      SELECT q.query_id, e.vec_id AS neighbor_id, {_COS_SQL} AS cosine
+      FROM q, embeddings e
+      WHERE e.vec_id <> q.query_id
+    ), {_knn_top3_sql("p")}
+    """
 
 
 @register(
@@ -3182,10 +3163,9 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_dsir_selection",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
-      SELECT doc_id,
-             UNNEST(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS tok
+      SELECT doc_id, UNNEST({_TOKS_SQL}) AS tok
       FROM documents
     ), bx AS (
       SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT % 1024 AS bucket
@@ -3198,15 +3178,13 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT bucket, COUNT(*) AS r_cnt FROM bx GROUP BY bucket
     ), model AS (
       SELECT COALESCE(t.bucket, r.bucket) AS bucket,
-             CAST(round(log2(CAST(COALESCE(t.t_cnt, 0) + 1 AS DOUBLE)) * 10000) AS BIGINT)
-             - CAST(round(log2(CAST(COALESCE(r.r_cnt, 0) + 1 AS DOUBLE)) * 10000) AS BIGINT)
+             {_q_log2_sql("COALESCE(t.t_cnt, 0) + 1")}
+             - {_q_log2_sql("COALESCE(r.r_cnt, 0) + 1")}
                AS q_ratio
       FROM t_cnt t FULL OUTER JOIN r_cnt r ON t.bucket = r.bucket
     ), tot AS (
-      SELECT CAST(round(log2(CAST((SELECT SUM(t_cnt) FROM t_cnt) + 1024 AS DOUBLE))
-                   * 10000) AS BIGINT) AS q_nt,
-             CAST(round(log2(CAST((SELECT SUM(r_cnt) FROM r_cnt) + 1024 AS DOUBLE))
-                   * 10000) AS BIGINT) AS q_nr
+      SELECT {_q_log2_sql("(SELECT SUM(t_cnt) FROM t_cnt) + 1024")} AS q_nt,
+             {_q_log2_sql("(SELECT SUM(r_cnt) FROM r_cnt) + 1024")} AS q_nr
     ), per_doc AS (
       SELECT bx.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
              CAST(SUM(m.q_ratio) AS BIGINT) AS sum_q
@@ -3248,15 +3226,14 @@ def doc_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_quality_classifier_scores",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT CAST(b AS BIGINT) AS bucket,
              ('0x' || substr(md5('qclf:' || CAST(b AS VARCHAR)), 1, 8))::BIGINT
                % 2000001 - 1000000 AS w_micro
       FROM range(4096) t(b)
     ), toks AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS t
+      SELECT doc_id, {_TOKS_SQL} AS t
       FROM documents
     ), feats AS (
       SELECT doc_id, u.f
@@ -3306,21 +3283,7 @@ def doc_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "emb_knn_topk",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-               FROM embeddings WHERE vec_id < 5),
-    p AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id, {_COS_SQL} AS cosine
-      FROM q, embeddings e
-      WHERE e.vec_id <> q.query_id
-    ), r AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      FROM p
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM r WHERE rank <= 3
-    """,
+    oracle=_EXACT_KNN_TOP3_SQL,
     tags=("similarity", "knn", "brute-force"),
 )
 def emb_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3452,13 +3415,7 @@ def _lsh_any_table_match(a: str, b: str, n_tables: int) -> str:
         ON q.vec_id = cand.query_id
       JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) e
         ON e.vec_id = cand.neighbor_id
-    ), r AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      FROM p
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM r WHERE rank <= 3
+    ), {_knn_top3_sql("p")}
     """,
     tags=("similarity", "knn", "lsh"),
 )
@@ -3517,13 +3474,7 @@ _SQDIST_SQL = (
       JOIN (SELECT vec_id, embedding AS qv FROM embeddings) q
         ON q.vec_id = cand.query_id
       JOIN embeddings e ON e.vec_id = cand.neighbor_id
-    ), r AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      FROM p2
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM r WHERE rank <= 3
+    ), {_knn_top3_sql("p2")}
     """,
     bench=True,
     tags=("similarity", "knn", "ivf"),
@@ -3590,13 +3541,7 @@ def emb_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ON q.vec_id = cand.query_id
       JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) e
         ON e.vec_id = cand.neighbor_id
-    ), r AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      FROM p2
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM r WHERE rank <= 3
+    ), {_knn_top3_sql("p2")}
     """,
     tags=("similarity", "knn", "ivf", "index", "incremental"),
 )
@@ -3682,6 +3627,31 @@ _PAIR_COS_SQL = (
 )
 
 
+def _lsh_pair_cosine_sql(n_planes: int, n_tables: int) -> str:
+    """The banded near-dup candidates of the LSH pair family: per-vector
+    bucket keys (bk), id pairs colliding in any table (cand), and their
+    rounded cosine p (id_a, id_b, cosine)."""
+    return f'''bk AS (
+      SELECT vec_id, {_lsh_bucket_cols_sql(n_planes, n_tables)}
+      FROM embeddings
+    ), cand AS (
+      SELECT x.vec_id AS id_a, y.vec_id AS id_b
+      FROM bk x JOIN bk y ON {_lsh_any_table_match("x", "y", n_tables)}
+      WHERE x.vec_id < y.vec_id
+      GROUP BY 1, 2
+    ), p AS (
+      SELECT cand.id_a, cand.id_b, {_PAIR_COS_SQL} AS cosine
+      FROM cand
+      -- DISTINCT: the Spark twin dedups candidate PAIRS by id
+      -- (dropDuplicates), so the vector fetch must not fan out over
+      -- identical duplicate base rows (embeddings edge corpus)
+      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) a
+        ON a.vec_id = cand.id_a
+      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) b
+        ON b.vec_id = cand.id_b
+    )'''
+
+
 @register(
     "emb_cosine_neardup_pairs",
     oracle=f"""
@@ -3721,25 +3691,7 @@ def emb_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_lsh_neardup_pairs",
     oracle=f"""
-    WITH bk AS (
-      SELECT vec_id, {_lsh_bucket_cols_sql(n_planes=4, n_tables=8)}
-      FROM embeddings
-    ), cand AS (
-      SELECT x.vec_id AS id_a, y.vec_id AS id_b
-      FROM bk x JOIN bk y ON {_lsh_any_table_match("x", "y", 8)}
-      WHERE x.vec_id < y.vec_id
-      GROUP BY 1, 2
-    ), p AS (
-      SELECT cand.id_a, cand.id_b, {_PAIR_COS_SQL} AS cosine
-      FROM cand
-      -- DISTINCT: the Spark twin dedups candidate PAIRS by id
-      -- (dropDuplicates), so the vector fetch must not fan out over
-      -- identical duplicate base rows (embeddings edge corpus)
-      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) a
-        ON a.vec_id = cand.id_a
-      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) b
-        ON b.vec_id = cand.id_b
-    )
+    WITH {_lsh_pair_cosine_sql(4, 8)}
     SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.4
     ORDER BY cosine DESC, id_a ASC, id_b ASC LIMIT 10000
     """,
@@ -3780,22 +3732,7 @@ def emb_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_lsh_neardup_pairs_hi",
     oracle=f"""
-    WITH bk AS (
-      SELECT vec_id, {_lsh_bucket_cols_sql(n_planes=12, n_tables=16)}
-      FROM embeddings
-    ), cand AS (
-      SELECT x.vec_id AS id_a, y.vec_id AS id_b
-      FROM bk x JOIN bk y ON {_lsh_any_table_match("x", "y", 16)}
-      WHERE x.vec_id < y.vec_id
-      GROUP BY 1, 2
-    ), p AS (
-      SELECT cand.id_a, cand.id_b, {_PAIR_COS_SQL} AS cosine
-      FROM cand
-      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) a
-        ON a.vec_id = cand.id_a
-      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) b
-        ON b.vec_id = cand.id_b
-    )
+    WITH {_lsh_pair_cosine_sql(12, 16)}
     SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.9
     """,
     tags=("dedup", "similarity", "near-dup", "lsh"),
@@ -3829,31 +3766,9 @@ def emb_lsh_neardup_pairs_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_lsh_neardup_groups",
     oracle=f"""
-    WITH RECURSIVE bk AS (
-      SELECT vec_id, {_lsh_bucket_cols_sql(n_planes=4, n_tables=8)}
-      FROM embeddings
-    ), cand AS (
-      SELECT x.vec_id AS id_a, y.vec_id AS id_b
-      FROM bk x JOIN bk y ON {_lsh_any_table_match("x", "y", 8)}
-      WHERE x.vec_id < y.vec_id
-      GROUP BY 1, 2
-    ), p AS (
-      SELECT cand.id_a, cand.id_b, {_PAIR_COS_SQL} AS cosine
-      FROM cand
-      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) a
-        ON a.vec_id = cand.id_a
-      JOIN (SELECT DISTINCT vec_id, embedding FROM embeddings) b
-        ON b.vec_id = cand.id_b
-    ), pr AS (
+    WITH RECURSIVE {_lsh_pair_cosine_sql(4, 8)}, pr AS (
       SELECT id_a, id_b FROM p WHERE cosine >= 0.4
-    ), e AS (
-      SELECT id_a AS src, id_b AS dst FROM pr
-      UNION ALL SELECT id_b, id_a FROM pr
-    ), reach(id, r) AS (
-      SELECT src, src FROM e
-      UNION
-      SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
-    )
+    ), {_closure_sql("pr", "id_a", "id_b")}
     SELECT id AS vec_id, MIN(r) AS group_id FROM reach GROUP BY id
     """,
     tags=("dedup", "similarity", "near-dup", "lsh", "connected-components"),
@@ -3877,10 +3792,10 @@ def emb_lsh_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "emb_semantic_dedup",
-    oracle=f"""
-    WITH k AS (
+# SemDeDup's seeded quantizer: auto-sized k (distinct vectors / 64,
+# clamped to [1, 65536]), the k smallest-id vectors as centroids, and
+# each distinct vector's nearest cell, assign (vec_id, cid).
+_SEMDEDUP_ASSIGN_SQL = f"""k AS (
       SELECT GREATEST(1, LEAST(65536,
                CAST(CEIL(COUNT(DISTINCT embedding) / 64.0) AS BIGINT)))
              AS n_clusters
@@ -3902,7 +3817,13 @@ def emb_lsh_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROW_NUMBER() OVER (PARTITION BY vec_id
                                   ORDER BY d ASC, cid ASC) AS rnk
         FROM dist) WHERE rnk = 1
-    ), dropped AS (
+    )"""
+
+
+@register(
+    "emb_semantic_dedup",
+    oracle=f"""
+    WITH {_SEMDEDUP_ASSIGN_SQL}, dropped AS (
       SELECT DISTINCT xa.vec_id
       FROM assign xa
       JOIN assign xb ON xb.cid = xa.cid AND xb.vec_id < xa.vec_id
@@ -3951,29 +3872,7 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_incremental_semantic_dedup",
     oracle=f"""
-    WITH k AS (
-      SELECT GREATEST(1, LEAST(65536,
-               CAST(CEIL(COUNT(DISTINCT embedding) / 64.0) AS BIGINT)))
-             AS n_clusters
-      FROM embeddings
-    ), cent AS (
-      SELECT rn - 1 AS cid, embedding AS cv
-      FROM (SELECT embedding,
-                   ROW_NUMBER() OVER (ORDER BY vec_id ASC) AS rn
-            FROM embeddings)
-      WHERE rn <= (SELECT n_clusters FROM k)
-    ), m AS (
-      SELECT DISTINCT vec_id, embedding FROM embeddings
-    ), dist AS (
-      SELECT e.vec_id, c.cid, {_SQDIST_SQL} AS d
-      FROM m e, cent c
-    ), assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d ASC, cid ASC) AS rnk
-        FROM dist) WHERE rnk = 1
-    ), dropped AS (
+    WITH {_SEMDEDUP_ASSIGN_SQL}, dropped AS (
       SELECT DISTINCT xa.vec_id
       FROM assign xa
       JOIN assign xb ON xb.cid = xa.cid AND xb.vec_id < xa.vec_id
@@ -5463,9 +5362,9 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_incremental_dedup",
-    oracle="""
+    oracle=f"""
     WITH n AS (
-      SELECT doc_id, md5(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS fp
+      SELECT doc_id, md5({_NORM_TEXT_SQL}) AS fp
       FROM documents
     ), idx AS (
       SELECT DISTINCT fp FROM n WHERE doc_id % 2 = 0
@@ -5502,20 +5401,12 @@ def doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_incremental_near_dedup",
     oracle=f"""
-    WITH s AS ({_SHINGLES_SQL}),
-    hsx AS (
-      SELECT doc_id, sh, sh AS hs FROM s WHERE len(sh) > 0
-    ),
-    sig AS (
-      SELECT doc_id, sh, {_MINHASH_SIG_SQL} AS sg FROM hsx
-    ),
+    WITH {_MINHASH_SIG_CTES},
     dropped AS (
       SELECT DISTINCT a.doc_id
       FROM sig a JOIN sig b ON b.doc_id < a.doc_id
       WHERE a.doc_id >= 250
-        AND (a.sg[1:4] = b.sg[1:4] OR a.sg[5:8] = b.sg[5:8]
-             OR a.sg[9:12] = b.sg[9:12] OR a.sg[13:16] = b.sg[13:16])
-        AND {_SIG_AGREE_SQL}
+        AND {_MINHASH_CANDIDATE_SQL}
         AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
               / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))
                      AS DOUBLE) >= 0.6
@@ -5550,10 +5441,9 @@ def doc_incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fresh.select("doc_id")
 
 
-_SPAN_WINS_SQL = """
+_SPAN_WINS_SQL = f"""
     toks AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS t
+      SELECT doc_id, {_TOKS_SQL} AS t
       FROM documents
     ), wins AS (
       SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
@@ -5729,21 +5619,7 @@ def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_ivf_knn_fullprobe",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-               FROM embeddings WHERE vec_id < 5),
-    p AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id, {_COS_SQL} AS cosine
-      FROM q, embeddings e
-      WHERE e.vec_id <> q.query_id
-    ), r AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      FROM p
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM r WHERE rank <= 3
-    """,
+    oracle=_EXACT_KNN_TOP3_SQL,
     tags=("similarity", "knn", "ivf"),
 )
 def emb_ivf_knn_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5761,24 +5637,36 @@ def emb_ivf_knn_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "doc_pack_sequences",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             CAST(len(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '))
-               AS BIGINT) AS n_tokens
-      FROM documents
-    ), p AS (
-      SELECT doc_id, n_tokens,
+def _stream_offset_sql(cols: str, src: str) -> str:
+    """Packing's stream offset: `cols` of CTE `src` plus the exclusive
+    prefix sum of n_tokens in doc_id order (concat-then-chunk)."""
+    return f'''SELECT {cols},
              CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
                AS stream_offset
-      FROM t
+      FROM {src}'''
+
+
+def _seq_chunk_sql(budget: int) -> str:
+    """The `budget`-token sequence a stream offset falls in, and where."""
+    return (
+        f"CAST(stream_offset // {budget} AS BIGINT) AS seq_id,"
+        f" CAST(stream_offset % {budget} AS BIGINT) AS offset_in_seq"
+    )
+
+
+@register(
+    "doc_pack_sequences",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id,
+             CAST({_WS_TOKENS_SQL} AS BIGINT) AS n_tokens
+      FROM documents
+    ), p AS (
+      {_stream_offset_sql("doc_id, n_tokens", "t")}
     )
     SELECT doc_id, n_tokens, stream_offset,
-           CAST(stream_offset // 2048 AS BIGINT) AS seq_id,
-           CAST(stream_offset % 2048 AS BIGINT) AS offset_in_seq
+           {_seq_chunk_sql(2048)}
     FROM p
     """,
     tags=("packing", "prefix-sum", "training-data"),
@@ -5801,21 +5689,11 @@ def doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One whitespace-token-count SQL fragment shared by the training-layout
-# oracles (identical to whitespace_tokens: lower, collapse whitespace,
-# trim, split on single space).
-_WS_TOKENS_SQL = (
-    "len(string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '))"
-)
-
 # Single-round BPE token count (text_analysis.bpe_token_counts): base
 # units = non-space chars of the normalized text, minus one per
 # non-overlapping merge-pair occurrence. Same-length alternatives make
 # the global regex scan consume identical spans in Java regex and RE2.
 _BPE_PAIRS_RE = "(th|he|in|er|an|re|on|at|en|nd|ti|es|or|te|ed|st)"
-_NORM_TEXT_SQL = (
-    "trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
-)
 _BPE_TOKENS_SQL = (
     f"CAST(length(replace({_NORM_TEXT_SQL}, ' ', ''))"
     f" - len(regexp_extract_all({_NORM_TEXT_SQL}, '{_BPE_PAIRS_RE}'))"
@@ -5831,15 +5709,10 @@ _BPE_TOKENS_SQL = (
              CAST({_WS_TOKENS_SQL} AS BIGINT) AS n_tokens
       FROM documents
     ), p AS (
-      SELECT doc_id, n_tokens,
-             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS stream_offset
-      FROM t
+      {_stream_offset_sql("doc_id, n_tokens", "t")}
     ), a AS (
       SELECT doc_id, n_tokens,
-             CAST(stream_offset // 2048 AS BIGINT) AS seq_id,
-             CAST(stream_offset % 2048 AS BIGINT) AS offset_in_seq
+             {_seq_chunk_sql(2048)}
       FROM p
     )
     SELECT seq_id, COUNT(*) AS n_docs,
@@ -5881,15 +5754,10 @@ def doc_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, {_BPE_TOKENS_SQL} AS n_tokens
       FROM documents
     ), p AS (
-      SELECT doc_id, n_tokens,
-             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS stream_offset
-      FROM t
+      {_stream_offset_sql("doc_id, n_tokens", "t")}
     )
     SELECT doc_id, n_tokens, stream_offset,
-           CAST(stream_offset // 2048 AS BIGINT) AS seq_id,
-           CAST(stream_offset % 2048 AS BIGINT) AS offset_in_seq
+           {_seq_chunk_sql(2048)}
     FROM p
     """,
     tags=("packing", "prefix-sum", "training-data", "tokenizer"),
@@ -5970,10 +5838,10 @@ def doc_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_bpe_pair_counts",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT unnest(regexp_extract_all(
-               trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')),
+               {_NORM_TEXT_SQL},
                '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
       FROM documents
     ), p AS (
@@ -6074,7 +5942,7 @@ _BPE_BASE_SQL = f"""
     WITH w0 AS (
       SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS wid
       FROM (SELECT doc_id, regexp_extract_all(
-              trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')),
+              {_NORM_TEXT_SQL},
               '{_pretoken_pattern_sql("BPE_WORD_PATTERN")}') AS ws FROM documents)
     ), s0 AS (
       SELECT doc_id, wid, array_to_string(string_split(w, ''), chr(31)) AS syms
@@ -6484,56 +6352,7 @@ _PIPELINE_SEQ_BUDGET = 2048
 # silently desync the oracle (ADVICE r12); literal regex/SQL braces are
 # doubled.
 _CORPUS_BUILD_SQL = f"""
-    WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
-      FROM documents
-    ), l AS (
-      SELECT doc_id,
-             list_transform(range(0, (len(toks) + 6) // 7), i ->
-               array_to_string(toks[7 * i + 1 : 7 * i + 7], ' ') ||
-               CASE WHEN (doc_id + i) % 3 = 0 THEN '.'
-                    WHEN (doc_id + i) % 3 = 1 THEN '!'
-                    ELSE '' END) AS lines
-      FROM t
-    ), lt AS (
-      SELECT doc_id,
-             array_to_string(lines, chr(10))
-             || CASE WHEN doc_id % 97 = 0
-                     THEN chr(10) || 'this page contains lorem ipsum filler.'
-                     ELSE '' END
-             || CASE WHEN doc_id % 89 = 0
-                     THEN chr(10) || 'function f() {{ return 1; }}'
-                     ELSE '' END AS text2
-      FROM l
-    ), blocked AS (
-      SELECT doc_id, text2 FROM lt
-      WHERE NOT list_has_any(
-        list_distinct(string_split_regex(lower(text2), '[^a-z0-9]+')),
-        ['dup', 'quasar'])
-    ), f AS (
-      SELECT doc_id, text2,
-             list_filter(string_split(text2, chr(10)), x ->
-               regexp_matches(x, '[.!?"]$')
-               AND len(regexp_split_to_array(trim(x), '[ \\t\\n\\x0B\\f\\r]+')) >= 5
-               AND NOT contains(lower(x), 'javascript')) AS kept
-      FROM blocked
-    ), survivors AS (
-      SELECT doc_id, array_to_string(kept, chr(10)) AS ct
-      FROM f
-      WHERE NOT contains(lower(text2), 'lorem ipsum')
-        AND NOT contains(text2, '{{')
-        AND len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]')) >= 3
-    ), e AS (
-      SELECT doc_id, UNNEST(range(0, len(paras))) AS idx, paras
-      FROM (SELECT doc_id, string_split(ct, chr(10)) AS paras FROM survivors)
-    ), p AS (
-      SELECT doc_id, idx, paras[idx + 1] AS para FROM e
-    ), r AS (
-      SELECT doc_id, idx, para,
-             ROW_NUMBER() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-      FROM p
-    ), cleaned AS (
+    WITH {_C4_CURATION_SQL}, cleaned AS (
       SELECT doc_id,
              CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
              coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
@@ -6541,7 +6360,8 @@ _CORPUS_BUILD_SQL = f"""
       FROM r GROUP BY doc_id
     ), corpus AS (
       SELECT c.doc_id, d.lang,
-             CAST(len(string_split(trim(regexp_replace(lower(coalesce(c.clean_text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens,
+             CAST(len(string_split({normalize_text_sql("c.clean_text")}, ' '))
+                  AS BIGINT) AS n_tokens,
              ('0x' || substr(md5('mixture:' || CAST(c.doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
       FROM cleaned c JOIN documents d ON d.doc_id = c.doc_id
       WHERE c.n_kept > 0 AND d.lang IS NOT NULL
@@ -6568,11 +6388,7 @@ _CORPUS_BUILD_SQL = f"""
     ), sel AS (
       SELECT doc_id, domain, n_tokens FROM mix WHERE tokens_before < budget
     ), packed AS (
-      SELECT doc_id, domain, n_tokens,
-             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS stream_offset
-      FROM sel
+      {_stream_offset_sql("doc_id, domain, n_tokens", "sel")}
     )"""
 
 
@@ -6580,8 +6396,7 @@ _CORPUS_BUILD_SQL = f"""
     "doc_corpus_build_pipeline",
     oracle=_CORPUS_BUILD_SQL + f"""
     SELECT doc_id, domain, n_tokens, stream_offset,
-           CAST(stream_offset // {_PIPELINE_SEQ_BUDGET} AS BIGINT) AS seq_id,
-           CAST(stream_offset % {_PIPELINE_SEQ_BUDGET} AS BIGINT) AS offset_in_seq
+           {_seq_chunk_sql(_PIPELINE_SEQ_BUDGET)}
     FROM packed
     """,
     tags=(
@@ -6884,10 +6699,9 @@ def events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_bigram_lm_scores",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(coalesce(text, '')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS t
+      SELECT doc_id, {_TOKS_SQL} AS t
       FROM documents
     ), m AS (
       SELECT * FROM norm WHERE doc_id % 2 = 0
@@ -6895,7 +6709,7 @@ def events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT w, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT UNNEST(t) AS w FROM m) GROUP BY w
     ), tot AS (
-      SELECT CAST(round(log2(CAST(SUM(c) AS DOUBLE)) * 10000) AS BIGINT) AS q_n
+      SELECT {_q_log2_sql("SUM(c)")} AS q_n
       FROM uc
     ), mtr AS (
       SELECT t[u.i] AS w1, t[u.i+1] AS w2
@@ -6908,10 +6722,10 @@ def events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), q AS (
       SELECT tr.doc_id,
              CASE WHEN bc.bc IS NOT NULL
-               THEN CAST(round(log2(CAST(bc.bc AS DOUBLE)) * 10000) AS BIGINT)
-                    - CAST(round(log2(CAST(u1.c AS DOUBLE)) * 10000) AS BIGINT)
+               THEN {_q_log2_sql("bc.bc")}
+                    - {_q_log2_sql("u1.c")}
                ELSE -13219
-                    + CAST(round(log2(CAST(COALESCE(u2.c, 1) AS DOUBLE)) * 10000) AS BIGINT)
+                    + {_q_log2_sql("COALESCE(u2.c, 1)")}
                     - tot.q_n END AS qv
       FROM tr
       LEFT JOIN bc ON bc.w1 = tr.w1 AND bc.w2 = tr.w2
@@ -7022,9 +6836,10 @@ def events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return histogram_drift(early, late, "value", lo=0.0, hi=500.0, n_buckets=20)
 
 
-@register(
-    "user_event_type_scd2",
-    oracle="""
+# Full-rebuild SCD2 version history of each user's event_type: the oracle
+# of the one-shot compress AND of the incremental merge (the hash match
+# is the apply(compress(b1), b2) == compress(b1 ∪ b2) invariant).
+_SCD2_REBUILD_SQL = """
     WITH e AS (
       SELECT user_id, event_type, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -7047,7 +6862,12 @@ def events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
            n_events
     FROM g
     WINDOW wv AS (PARTITION BY user_id ORDER BY run_id)
-    """,
+    """
+
+
+@register(
+    "user_event_type_scd2",
+    oracle=_SCD2_REBUILD_SQL,
     tags=("scd2", "gaps-and-islands", "window"),
 )
 def user_event_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7071,30 +6891,7 @@ def user_event_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_event_type_scd2_merge",
-    oracle="""
-    WITH e AS (
-      SELECT user_id, event_type, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR lag(event_type) OVER w IS DISTINCT FROM event_type
-                  THEN 1 ELSE 0 END AS chg
-      FROM events WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), r AS (
-      SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS run_id
-      FROM e
-    ), g AS (
-      SELECT user_id, event_type, run_id,
-             MIN(ts) AS valid_from, COUNT(*) AS n_events
-      FROM r GROUP BY 1, 2, 3
-    )
-    SELECT user_id, event_type, CAST(run_id AS BIGINT) AS version, valid_from,
-           lead(valid_from) OVER wv AS valid_to,
-           (lead(valid_from) OVER wv IS NULL) AS is_current,
-           n_events
-    FROM g
-    WINDOW wv AS (PARTITION BY user_id ORDER BY run_id)
-    """,
+    oracle=_SCD2_REBUILD_SQL,
     tags=("scd2", "incremental-merge", "window"),
 )
 def user_event_type_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,26 +32,28 @@ from tests.oracle_utils import (
     unwrap_prefetched,
 )
 
-_OTHER_TABLES = (
+_TABLES = (
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "embeddings",
+    "orders", "lineitem", "events", "embeddings", "documents",
 )
 
 
-def _documents_only_names() -> list[str]:
-    names = []
-    for n, s in REGISTRY.items():
-        if s.oracle is None:
-            continue
-        o = s.oracle.lower()
-        if "documents" in o and not any(
-            re.search(rf"\b{t}\b", o) for t in _OTHER_TABLES
-        ):
-            names.append(n)
-    return names
+def _oracle_tables(sql: str) -> set[str]:
+    """The tables an oracle references (whole-word, case-insensitive)."""
+    o = sql.lower()
+    return {t for t in _TABLES if re.search(rf"\b{t}\b", o)}
 
 
-DOC_ONLY = _documents_only_names()
+def _oracles_reading(pred) -> list[str]:
+    """Registry names (in registry order) whose oracle's table set
+    satisfies ``pred`` — each sweep below auto-discovers its queries."""
+    return [
+        n for n, s in REGISTRY.items()
+        if s.oracle is not None and pred(_oracle_tables(s.oracle))
+    ]
+
+
+DOC_ONLY = _oracles_reading(lambda ts: ts == {"documents"})
 
 _RUN = "r1 r2 r3 r4 r5 r6 r7 r8"
 
@@ -186,19 +188,7 @@ def test_edge_corpus_matches_oracle(edge_con, edge_doc_results, name):
 # ---------------------------------------------------------------------------
 
 
-def _events_only_names() -> list[str]:
-    names = []
-    others = tuple(t for t in _OTHER_TABLES if t != "events") + ("documents",)
-    for n, s in REGISTRY.items():
-        if s.oracle is None:
-            continue
-        o = s.oracle.lower()
-        if "events" in o and not any(re.search(rf"\b{t}\b", o) for t in others):
-            names.append(n)
-    return names
-
-
-EVENTS_ONLY = _events_only_names()
+EVENTS_ONLY = _oracles_reading(lambda ts: ts == {"events"})
 
 
 def _edge_events() -> tuple[list, list]:
@@ -335,22 +325,9 @@ def test_edge_events_matches_oracle(edge_events_con, edge_events_results, name):
 # ---------------------------------------------------------------------------
 
 
-def _relational_only_names() -> list[str]:
-    names = []
-    others = tuple(
-        t for t in _OTHER_TABLES if t not in ("lineitem", "orders")
-    ) + ("documents",)
-    for n, s in REGISTRY.items():
-        if s.oracle is None:
-            continue
-        o = s.oracle.lower()
-        refs_li_or = re.search(r"\blineitem\b", o) or re.search(r"\borders\b", o)
-        if refs_li_or and not any(re.search(rf"\b{t}\b", o) for t in others):
-            names.append(n)
-    return names
-
-
-RELATIONAL_ONLY = _relational_only_names()
+RELATIONAL_ONLY = _oracles_reading(
+    lambda ts: ts and ts <= {"lineitem", "orders"}
+)
 
 
 def _ts(s):
@@ -541,21 +518,7 @@ def test_edge_relational_matches_oracle(rel_corpus, rel_results, name):
 # ---------------------------------------------------------------------------
 
 
-def _embeddings_only_names() -> list[str]:
-    names = []
-    others = tuple(t for t in _OTHER_TABLES if t != "embeddings") + ("documents",)
-    for n, s in REGISTRY.items():
-        if s.oracle is None:
-            continue
-        o = s.oracle.lower()
-        if "embeddings" in o and not any(
-            re.search(rf"\b{t}\b", o) for t in others
-        ):
-            names.append(n)
-    return names
-
-
-EMBEDDINGS_ONLY = _embeddings_only_names()
+EMBEDDINGS_ONLY = _oracles_reading(lambda ts: ts == {"embeddings"})
 
 
 def _vec(i: int, dim: int = 64) -> list[float]:
@@ -658,23 +621,10 @@ _STAR_TABLES = ("region", "nation", "customer", "supplier", "part",
                 "orders", "lineitem")
 
 
-def _star_only_names() -> list[str]:
-    names = []
-    others = ("events", "documents", "embeddings")
-    for n, s in REGISTRY.items():
-        if s.oracle is None:
-            continue
-        o = s.oracle.lower()
-        refs = {t for t in _STAR_TABLES if re.search(rf"\b{t}\b", o)}
-        if not refs or any(re.search(rf"\b{t}\b", o) for t in others):
-            continue
-        if refs <= {"lineitem", "orders"}:
-            continue  # already swept by the relational corpus above
-        names.append(n)
-    return names
-
-
-STAR_ONLY = _star_only_names()
+STAR_ONLY = _oracles_reading(
+    lambda ts: ts and ts <= set(_STAR_TABLES)
+    and not ts <= {"lineitem", "orders"}
+)
 
 
 def _edge_dims() -> dict[str, list[tuple]]:

@@ -251,6 +251,21 @@ def test_cosine_near_dup_pairs_arrow_matches_native(spark):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    # embeddings-contract violators (functions/measurement.py), each a
+    # near-copy of vector 0 so an unfiltered twin would pair it: NULL
+    # vector, wrong length, zero norm, NaN component, NULL id
+    v0 = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
+    bad = spark.createDataFrame(
+        [
+            (90001, None),
+            (90002, v0[:4]),
+            (90003, [0.0] * 64),
+            (90004, [float("nan")] + v0[1:]),
+            (None, v0),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    emb = emb.select("vec_id", "embedding").unionByName(bad)
     nat = {
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in cosine_near_dup_pairs(emb, threshold=0.4).collect()
@@ -259,6 +274,7 @@ def test_cosine_near_dup_pairs_arrow_matches_native(spark):
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in cosine_near_dup_pairs_arrow(emb, threshold=0.4).collect()
     }
+    assert nat  # the valid corpus still pairs
     assert nat == arw  # same pair set AND bit-identical rounded cosines
 
 
