@@ -50,15 +50,17 @@ DATE_COLUMNS = (
 def null_out_invalid_formats(df: DataFrame) -> DataFrame:
     """F9: every present date column keeps its value only when null or
     matching the date/datetime regexes; contact_number likewise with the
-    phone patterns (data_quality_checker.py:173-187)."""
-    for col in DATE_COLUMNS:
-        if col in df.columns:
-            c = F.col(col)
-            df = df.withColumn(col, null_out_invalid(c, is_valid_date_or_datetime(c)))
-    if "contact_number" in df.columns:
-        c = F.col("contact_number")
-        df = df.withColumn("contact_number", null_out_invalid(c, is_valid_phone(c)))
-    return df
+    phone patterns (data_quality_checker.py:173-187). One schema fetch
+    and one projection, however many columns are present."""
+    checks = {col: is_valid_date_or_datetime for col in DATE_COLUMNS}
+    checks["contact_number"] = is_valid_phone
+    present = set(df.columns)
+    cols = {
+        col: null_out_invalid(F.col(col), valid(F.col(col)))
+        for col, valid in checks.items()
+        if col in present
+    }
+    return df.withColumns(cols) if cols else df
 
 
 def swap_out_of_order(df: DataFrame, start: str, end: str) -> DataFrame:

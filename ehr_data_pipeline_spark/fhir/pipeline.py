@@ -17,15 +17,35 @@ writes it. Consequences at 100 TB:
   extra ``count()`` scans;
 - the quality report is one more action, as the reference also runs
   its checks as a distinct task (``:516-529``). On the sink path it
-  runs right after the write, over the same shared parse, and comes
-  back forced: the raw input is parsed once per run.
+  runs beside the writes, over the same shared parse, and comes back
+  forced: the raw input is parsed once per run.
+
+The sink path overlaps its work instead of running the reference's
+serial ×6 load loop. On the direct path one background action (a
+``noop`` write of the persisted parse) fills the cache while the
+caller's thread spends seconds of py4j round trips building the
+extract, quality and clean plans; the writes wait for that fill. Then
+the six table writes and the report checkpoint run as seven concurrent
+jobs, each submitted from its own pool thread under the caller's job
+group, description, scheduler pool and tags
+(``inheritable_thread_target``). Spark's "Scheduling Within an
+Application" makes this safe at 100 TB: the default FIFO scheduler
+keeps the first job's stages ahead, later jobs only take task slots it
+leaves free, so the concurrency is bounded by the task slots and the
+memory per task is the same as in a serial loop. A failure does not
+cancel the other actions: the pipeline waits for every action in
+flight, releases the cache, then re-raises the first failure in table
+order (the report's last). On the direct path, ``output_dir=None``
+runs no job at all.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ehr_data_pipeline_spark.fhir.clean import CLEANERS
 from ehr_data_pipeline_spark.fhir.extract import extract_all
@@ -49,9 +69,11 @@ class PipelineResult:
     :meth:`release`, an explicit ``spark.catalog.clearCache()``, or
     session end. Call ``release()`` once you are done re-running the
     returned plans. On the sink path (``output_dir`` set) the pipeline
-    releases it automatically after the write action — the tables are
-    materialized and the cache only served the build (ADVICE r9), so
-    ``source`` is None in the returned result there."""
+    fills the cache with a background action while it builds the plans,
+    and releases it once the writes and the report have all returned,
+    or failed — the tables are materialized and the cache only served
+    the build (ADVICE r9), so ``source`` is None in the returned result
+    there."""
 
     tables: dict[str, DataFrame]
     paths: dict[str, str] = field(default_factory=dict)
@@ -116,13 +138,25 @@ def run_pipeline(
 ) -> PipelineResult:
     """Run the full ETL over a directory of FHIR bundle JSON files.
 
-    ``output_dir=None`` skips the load step (row counts then stay empty —
-    nothing has executed; the returned plans are still runnable).
+    ``output_dir=None`` skips the load step (row counts then stay empty;
+    without ``stage_dir`` no job runs; the returned plans are still
+    runnable).
     ``quality=True`` attaches the pre-clean quality report over the
     extracted tables, mirroring the reference's check-before-clean order
     (json_pipeline.py:1100-1109). With ``output_dir`` set, the report is
-    computed right after the write, over the same parse, and returned
+    checkpointed beside the writes, over the same parse, and returned
     forced; without it, the report stays a lazy plan.
+
+    With ``output_dir`` set, the direct path starts filling the parse
+    cache in the background as soon as the plans have a ``source``, and
+    the writes start once it is full; the six writes
+    (:func:`~ehr_data_pipeline_spark.sinks.write_entity_tables`) and the
+    report checkpoint then run concurrently, in the caller's job group;
+    FIFO scheduling keeps the first job ahead and the task slots bound
+    the concurrency, so each task needs the memory it needs in a serial
+    loop, at any scale. If any of them fails, the others run to their
+    end, the cache is released, and the first failure in table order is
+    raised (the report's last).
 
     ``stage_dir`` lands the exploded entries as a bronze parquet layer
     first and routes from that: the multiLine JSON parse (the expensive
@@ -144,114 +178,138 @@ def run_pipeline(
     storage ≈ the consumed fraction of the input; at the 100 TB design
     point prefer ``stage_dir``, which buys the same single parse with
     durable, per-entity-pruned storage instead of cache."""
-    source: DataFrame | None = None
-    if stage_dir is not None:
-        from ehr_data_pipeline_spark.fhir.ingest import (
-            explode_entries,
-            read_bundles,
-            route_resources,
-        )
-
-        # coalesce the parse output before landing bronze: a directory-
-        # of-small-bundles scan yields one split per ~32 files
-        # (openCostInBytes padding), so the uncoalesced write emitted
-        # one TINY parquet file per split — and every downstream entity
-        # scan then paid listing + footer + open once per file, SIX
-        # times over (guide §6: small files hurt twice; r14: write
-        # 1.75 s → 0.85 s at 10k bundles, 66 → 32 files). The target is
-        # BYTES-derived (r15, VERDICT r14 #8): max(cores, raw bytes /
-        # 256 MB), so the 10k-bundle case still lands core-count files
-        # while a 100 TB land fans out to ~bytes/256 MB write tasks
-        # instead of 32 multi-terabyte ones.
-        bundles = read_bundles(spark, input_dir)
-        explode_entries(bundles).coalesce(
-            bronze_coalesce_target(
-                _input_size_bytes(bundles),
-                spark.sparkContext.defaultParallelism,
+    sink = output_dir is not None
+    result = PipelineResult(tables={})
+    # one worker: it runs the cache fill, then the report checkpoint
+    pool = ThreadPoolExecutor(max_workers=1)
+    try:
+        fill = None
+        if stage_dir is not None:
+            from ehr_data_pipeline_spark.fhir.ingest import (
+                explode_entries,
+                read_bundles,
+                route_resources,
             )
-        ).write.mode("overwrite").parquet(stage_dir)
-        routed = route_resources(spark.read.parquet(stage_dir))
-    else:
-        from pyspark import StorageLevel
 
-        from ehr_data_pipeline_spark.fhir.ingest import (
-            entries_view,
-            explode_entries,
-            flatten_entries,
-            prune_unconsumed,
-            read_bundles,
-            route_resources,
-        )
-
-        # prune + FLATTEN before persist: the cache can't prune nested
-        # struct fields per consumer the way the staged path's parquet
-        # scans do, but it DOES prune top-level columns — so drop the
-        # never-consumed subtrees (photo/narrative/identifier), hoist
-        # the rest to top-level columns, persist that, and give routing
-        # the rebuilt struct view (collapsed per branch by
-        # SimplifyExtractValueOps back to pruned column reads).
-        # coalesce the parse output to ~core count first: a
-        # directory-of-small-bundles scan yields one split per file
-        # batch, and SIX branches re-reading thousands of tiny cached
-        # partitions pay pure task-launch overhead (measured ~20% of
-        # direct-path wall at 10k bundles); coalesce keeps the parse
-        # fully parallel while the cache lands in fat partitions
-        # (r14 note: sortWithinPartitions(resourceType) before the
-        # persist was measured ~15% faster on the 10k-bundle direct path
-        # — clustering by the routing key lets cached-batch min/max
-        # stats prune the six branch scans — but REJECTED: the sort is
-        # baked into the plan, so after release() every fallback
-        # re-parse branch re-runs its own SortExec, and the quality
-        # report's ~30 concurrent branches each allocating sort pages
-        # OOMed an 8g driver on a 5-doc fixture. Cached-path-only wins
-        # must not degrade the documented uncached fallback.)
-        bundles = read_bundles(spark, input_dir)
-        source = flatten_entries(
-            prune_unconsumed(explode_entries(bundles)).coalesce(
-                # same bytes-derived target as the bronze land (r15):
-                # fat cached partitions locally, ~256 MB-bounded ones at
-                # scale instead of input/32
+            # coalesce the parse output before landing bronze: a directory-
+            # of-small-bundles scan yields one split per ~32 files
+            # (openCostInBytes padding), so the uncoalesced write emitted
+            # one TINY parquet file per split — and every downstream entity
+            # scan then paid listing + footer + open once per file, SIX
+            # times over (guide §6: small files hurt twice; r14: write
+            # 1.75 s → 0.85 s at 10k bundles, 66 → 32 files). The target is
+            # BYTES-derived (r15, VERDICT r14 #8): max(cores, raw bytes /
+            # 256 MB), so the 10k-bundle case still lands core-count files
+            # while a 100 TB land fans out to ~bytes/256 MB write tasks
+            # instead of 32 multi-terabyte ones.
+            bundles = read_bundles(spark, input_dir)
+            explode_entries(bundles).coalesce(
                 bronze_coalesce_target(
                     _input_size_bytes(bundles),
                     spark.sparkContext.defaultParallelism,
                 )
+            ).write.mode("overwrite").parquet(stage_dir)
+            routed = route_resources(spark.read.parquet(stage_dir))
+        else:
+            from pyspark import StorageLevel
+
+            from ehr_data_pipeline_spark.fhir.ingest import (
+                entries_view,
+                explode_entries,
+                flatten_entries,
+                prune_unconsumed,
+                read_bundles,
+                route_resources,
             )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        routed = route_resources(entries_view(source))
-    extracted = extract_all(routed)
-    report = fhir_quality_report(extracted) if quality else None
 
-    cleaned: dict[str, DataFrame] = {}
-    observations: dict[str, object] = {}
-    for rt, df in extracted.items():
-        if rt not in CLEANERS:
-            continue
-        observed, obs = row_count_observer(CLEANERS[rt](df), f"clean_{rt}")
-        cleaned[rt] = observed
-        observations[rt] = obs
+            # prune + FLATTEN before persist: the cache can't prune nested
+            # struct fields per consumer the way the staged path's parquet
+            # scans do, but it DOES prune top-level columns — so drop the
+            # never-consumed subtrees (photo/narrative/identifier), hoist
+            # the rest to top-level columns, persist that, and give routing
+            # the rebuilt struct view (collapsed per branch by
+            # SimplifyExtractValueOps back to pruned column reads).
+            # coalesce the parse output to ~core count first: a
+            # directory-of-small-bundles scan yields one split per file
+            # batch, and SIX branches re-reading thousands of tiny cached
+            # partitions pay pure task-launch overhead (measured ~20% of
+            # direct-path wall at 10k bundles); coalesce keeps the parse
+            # fully parallel while the cache lands in fat partitions
+            # (r14 note: sortWithinPartitions(resourceType) before the
+            # persist was measured ~15% faster on the 10k-bundle direct path
+            # — clustering by the routing key lets cached-batch min/max
+            # stats prune the six branch scans — but REJECTED: the sort is
+            # baked into the plan, so after release() every fallback
+            # re-parse branch re-runs its own SortExec, and the quality
+            # report's ~30 concurrent branches each allocating sort pages
+            # OOMed an 8g driver on a 5-doc fixture. Cached-path-only wins
+            # must not degrade the documented uncached fallback.)
+            bundles = read_bundles(spark, input_dir)
+            source = flatten_entries(
+                prune_unconsumed(explode_entries(bundles)).coalesce(
+                    # same bytes-derived target as the bronze land (r15):
+                    # fat cached partitions locally, ~256 MB-bounded ones at
+                    # scale instead of input/32
+                    bronze_coalesce_target(
+                        _input_size_bytes(bundles),
+                        spark.sparkContext.defaultParallelism,
+                    )
+                )
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            result.source = source
+            if sink:
+                # parse once into the cache now, while this thread spends
+                # seconds of py4j round trips building the plans below
+                fill = pool.submit(
+                    inheritable_thread_target(spark)(
+                        source.write.format("noop").mode("overwrite").save
+                    )
+                )
+            routed = route_resources(entries_view(source))
+        extracted = extract_all(routed)
+        report = fhir_quality_report(extracted) if quality else None
+        result.quality_report = report
 
-    result = PipelineResult(
-        tables=cleaned, quality_report=report, source=source
-    )
-    if output_dir is not None:
-        result.paths = write_entity_tables(cleaned, output_dir, fmt=fmt)
-        # the write was the action; Observation metrics are now populated
-        result.row_counts = {
-            rt: observations[rt].get["n_rows"] for rt in cleaned
-        }
-        # force the report while the shared-parse cache (or the bronze
-        # parquet) still holds the parse: a lazy report collected after
-        # the release below would re-parse the raw JSON once per table.
-        # localCheckpoint keeps the ~20 rows JVM-side and cuts the
-        # lineage, so the returned frame reads no input.
+        observations: dict[str, object] = {}
+        for rt, df in extracted.items():
+            if rt not in CLEANERS:
+                continue
+            observed, obs = row_count_observer(CLEANERS[rt](df), f"clean_{rt}")
+            result.tables[rt] = observed
+            observations[rt] = obs
+        if not sink:
+            return result
+
+        if fill is not None:
+            fill.result()
+        # force the report beside the writes, while the shared-parse cache
+        # (or the bronze parquet) still holds the parse: a lazy report
+        # collected after the release below would re-parse the raw JSON
+        # once per table. localCheckpoint keeps the ~20 rows JVM-side and
+        # cuts the lineage, so the returned frame reads no input.
+        forced = None
         if report is not None:
-            result.quality_report = report.localCheckpoint(eager=True)
+            forced = pool.submit(
+                inheritable_thread_target(spark)(report.localCheckpoint),
+                eager=True,
+            )
+        result.paths = write_entity_tables(result.tables, output_dir, fmt=fmt)
+        # the writes were the actions; Observation metrics are now populated
+        result.row_counts = {
+            rt: observations[rt].get["n_rows"] for rt in result.tables
+        }
+        if forced is not None:
+            result.quality_report = forced.result()
+    finally:
+        # wait for the fill or report in flight, on failure too
+        pool.shutdown(wait=True)
         # ADVICE r9: the sink path has materialized every table and the
-        # report, so the shared-parse cache has served its purpose —
-        # releasing it here keeps callers unaware of
+        # report (or failed), so the shared-parse cache has served its
+        # purpose — releasing it here keeps callers unaware of
         # PipelineResult.source from holding an input-sized cache until
         # session end. The returned table plans stay runnable; they
         # recompute from the raw files. Callers that will re-force plans
         # should use output_dir=None and call release() themselves.
-        result.release()
+        if sink:
+            result.release()
     return result

@@ -50,7 +50,7 @@ Each kNN/IVF decision has one private home that every operator calls:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -66,22 +66,27 @@ DEFAULT_PLANES = 8
 
 
 def infer_dim(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> "int | None":
-    """Vector dimensionality when the caller doesn't supply it: the size
-    of the non-NULL vector on the SMALLEST-id row — deterministic (no
-    arbitrary ``first()``), one bounded TakeOrderedAndProject job at call
-    time. Returns ``None`` for an empty / all-NULL input, in which case
-    the operators short-circuit to an empty result instead of silently
-    excluding every row (ADVICE r7: a caller with non-64-dim embeddings
-    who omitted ``dim`` used to get empty output from the default-64
-    validity guard)."""
-    rows = (
+    """Vector dimensionality when the caller doesn't supply it: the most
+    common length among rows with a non-NULL id and vector, ties going
+    to the smaller length — deterministic, and a few malformed vectors
+    cannot set the dimension that excludes the valid ones. One job at
+    call time: the mode rides a ``noop`` scan as an observed metric, so
+    no shuffle runs. Returns ``None`` for an empty / all-NULL input, in
+    which case the operators short-circuit to an empty result instead
+    of silently excluding every row (ADVICE r7: a caller with
+    non-64-dim embeddings who omitted ``dim`` used to get empty output
+    from the default-64 validity guard)."""
+    obs = Observation()
+    (
         df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("__i"), F.size(vec_col).alias("__d"))
-        .orderBy("__i")
-        .limit(1)
-        .collect()
+        .select(F.size(vec_col).alias("__d"))
+        .observe(obs, F.mode("__d", deterministic=True).alias("dim"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
-    return int(rows[0]["__d"]) if rows else None
+    dim = obs.get["dim"]
+    return None if dim is None else int(dim)
 
 
 def _resolve_dim(df: DataFrame, dim: "int | None", id_col: str, vec_col: str) -> "int | None":

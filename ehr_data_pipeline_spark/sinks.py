@@ -19,6 +19,18 @@ both collapse to ``DataFrameWriter``:
   canonical format (typed, splittable, column-pruned on re-read); CSV is
   kept for reference parity.
 
+The six entity tables are written concurrently
+(:func:`write_entity_tables`), not in the reference's serial ×6 loop:
+one pool thread per table submits its write under the caller's job
+group, description, scheduler pool and tags
+(``inheritable_thread_target``), and the call returns once every write
+has finished. At 100 TB this costs no memory: under the default FIFO
+scheduler the first job's stages keep priority and later jobs only take
+the task slots it leaves free, so the task slots bound the concurrency
+and each task holds what it would hold in a serial loop. What the
+overlap buys is the per-job driver work (planning, codegen, file
+commit) that a serial loop leaves the executors idle for.
+
 Column names: nested extraction yields dotted names (``resource.id``).
 The reference renames ``.`` → ``_`` at load time (``:869``); here
 :func:`normalize_columns` does the same rename for every sink, since
@@ -28,8 +40,10 @@ dots are illegal or quote-demanding identifiers in most targets.
 from __future__ import annotations
 
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
+from pyspark.util import inheritable_thread_target
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:
@@ -296,15 +310,34 @@ def write_entity_tables(
 ) -> dict[str, str]:
     """Write the six FHIR entity tables (the ``×6`` sink loops,
     json_pipeline.py:914-928 JDBC / :1058-1076 CSV) under
-    ``{out_dir}/{name}``. Returns name → path."""
-    paths: dict[str, str] = {}
-    for name, df in tables.items():
-        path = f"{out_dir}/{name}"
-        if fmt == "csv":
-            write_csv(df, path, mode=mode)
-        elif fmt == "parquet":
-            write_parquet(df, path, mode=mode)
-        else:
-            raise ValueError(f"unsupported sink format: {fmt!r}")
-        paths[name] = path
+    ``{out_dir}/{name}``, all at once: each write is submitted from its
+    own pool thread, and the call returns when every write has finished.
+    Returns name → path.
+
+    Each thread target is wrapped in ``inheritable_thread_target``, so
+    the writes run under the caller's job group, description, scheduler
+    pool and tags, and FIFO scheduling with the task slots bounds what
+    runs at once (module docstring). A failed write does not cancel the
+    others: every write runs to its end, then the first failure in
+    table order is re-raised."""
+    write = {"csv": write_csv, "parquet": write_parquet}.get(fmt)
+    if write is None:
+        raise ValueError(f"unsupported sink format: {fmt!r}")
+    paths = {name: f"{out_dir}/{name}" for name in tables}
+    # one wrapper per write: a wrapper installs the properties object it
+    # captured as its thread's local properties, and Spark writes each
+    # running query's execution id into that object. Leaving the block
+    # waits for every submitted write, failed or not.
+    with ThreadPoolExecutor(max_workers=max(len(tables), 1)) as pool:
+        futures = [
+            pool.submit(
+                inheritable_thread_target(df.sparkSession)(write),
+                df,
+                paths[name],
+                mode=mode,
+            )
+            for name, df in tables.items()
+        ]
+    for f in futures:
+        f.result()
     return paths

@@ -4,6 +4,11 @@ observe → sink, one action per table, counts from Observation metrics."""
 from __future__ import annotations
 
 import os
+import time
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.fhir.pipeline import run_pipeline
 from ehr_data_pipeline_spark.operators.quality import row_count_observer
@@ -47,6 +52,77 @@ def test_run_pipeline_without_sink_stays_lazy(spark):
     assert result.quality_report is None
     # plans are still runnable
     assert result.tables["Patient"].count() > 0
+
+
+def _probe_jobs(spark, group):
+    """Run one probe action under a fresh job group named ``group``; return
+    its job ids once the status tracker has seen them. The tracker sees
+    jobs in submission order, so every earlier job is known by then."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    spark.range(1).collect()
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, "probe job never reached the tracker"
+        time.sleep(0.05)
+    return ids
+
+
+def _jobs_between(spark, run, group):
+    """Run ``run()`` under job group ``group``; return the ids of the jobs
+    submitted meanwhile, the ids the tracker files under ``group``, and
+    what ``run()`` returned."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    try:
+        before = max(_probe_jobs(spark, f"before-{tag}"))
+        sc.setJobGroup(group, group)
+        out = run()
+        after = min(_probe_jobs(spark, f"after-{tag}"))
+        grouped = set(sc.statusTracker().getJobIdsForGroup(group))
+        return set(range(before + 1, after)), grouped, out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_sink_path_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """The cache fill, the six writes and the report checkpoint run on pool
+    threads; every job they submit still lands in the caller's job group."""
+    group = f"etl-{uuid.uuid4().hex}"
+    ran, grouped, _ = _jobs_between(
+        spark, lambda: run_pipeline(spark, FIXTURE_DIR, str(tmp_path / "etl")), group
+    )
+    assert ran and ran == grouped
+
+
+def test_lazy_path_with_quality_submits_no_job(spark):
+    ran, _, result = _jobs_between(
+        spark,
+        lambda: run_pipeline(spark, FIXTURE_DIR, output_dir=None, quality=True),
+        f"lazy-{uuid.uuid4().hex}",
+    )
+    assert ran == set()
+    result.release()
+
+
+def test_sink_failure_finishes_the_other_writes_and_releases(spark, tmp_path, monkeypatch):
+    """A write that fails at run time: run_pipeline raises its error once
+    the other five tables are written, and the parse cache is released."""
+    from ehr_data_pipeline_spark.fhir import pipeline
+
+    monkeypatch.setitem(
+        pipeline.CLEANERS,
+        "Patient",
+        lambda df: df.withColumn("resource_id", F.raise_error(F.lit("patient write failed"))),
+    )
+    spark.catalog.clearCache()
+    out = tmp_path / "etl"
+    with pytest.raises(Exception, match="patient write failed"):
+        run_pipeline(spark, FIXTURE_DIR, str(out))
+    for rt in ("CarePlan", "Condition", "Encounter", "Immunization", "Observation"):
+        assert any(f.startswith("part-") for f in os.listdir(out / rt)), rt
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_pipeline_single_parse_equivalent_and_releases(spark, tmp_path):

@@ -378,6 +378,18 @@ def test_infer_dim_non_64_and_empty(spark):
     assert len(pairs) > 0
     assert len(ivf_knn(df8, df8.filter(F.col("vec_id") < 2), k=2, n_list=2).collect()) == 4
 
+    # one short vector at the lowest id breaks the contract: it must not
+    # set the dimension that excludes every valid vector
+    bad = df8.unionByName(
+        spark.createDataFrame([(-1, [1.0, 2.0, 3.0, 4.0])], df8.schema)
+    )
+    assert infer_dim(bad) == 8
+    assert sorted(map(tuple, cosine_near_dup_pairs(bad, threshold=0.9).collect())) \
+        == sorted(map(tuple, pairs))
+    # a tie between lengths goes to the smaller one
+    tie = spark.createDataFrame([(1, [1.0] * 3), (2, [1.0] * 2)], df8.schema)
+    assert infer_dim(tie) == 2
+
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert infer_dim(empty) is None
     out = brute_force_knn(empty, empty, k=3)

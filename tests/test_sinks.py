@@ -5,6 +5,7 @@ fixture bundles."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -113,6 +114,43 @@ def test_write_entity_tables_round_trip(spark, tmp_path):
         back = spark.read.parquet(paths[name])
         assert back.count() == df.count()
         assert back.columns == [c.replace(".", "_") for c in df.columns]
+
+
+def test_write_entity_tables_runs_every_write_at_once(spark, tmp_path, monkeypatch):
+    """Each write waits on a barrier sized to the table count before it
+    writes, so the call finishes only if every write is in flight at
+    the same time (a serial loop breaks the barrier after its timeout)."""
+    from ehr_data_pipeline_spark import sinks
+
+    extracted = extract_all(read_and_route(spark, FIXTURE_DIR))
+    barrier = threading.Barrier(len(extracted), timeout=20)
+    real = sinks.write_parquet
+
+    def gated(df, path, mode="overwrite"):
+        barrier.wait()
+        real(df, path, mode=mode)
+
+    monkeypatch.setattr(sinks, "write_parquet", gated)
+    paths = write_entity_tables(extracted, str(tmp_path / "entities"))
+    assert set(paths) == set(extracted)
+    for name, df in extracted.items():
+        assert spark.read.parquet(paths[name]).count() == df.count()
+
+
+def test_write_entity_tables_finishes_every_write_then_raises_first(spark, tmp_path):
+    """A failed write cancels nothing: every other table is written, then
+    the first failure in table order is raised."""
+    ok = spark.range(3)
+
+    def failing(msg):
+        return ok.withColumn("id", F.raise_error(F.lit(msg)).cast("long"))
+
+    tables = {"a": ok, "b": failing("first failure"), "c": ok, "d": failing("second failure")}
+    out = tmp_path / "entities"
+    with pytest.raises(Exception, match="first failure"):
+        write_entity_tables(tables, str(out))
+    for name in ("a", "c"):
+        assert spark.read.parquet(str(out / name)).count() == 3
 
 
 def test_write_entity_tables_rejects_unknown_format(spark, dotted_df, tmp_path):
