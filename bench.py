@@ -26,8 +26,8 @@ def _fhir_pipeline_10k(spark, sf_dir):
     the warm-up pass; the timed pass hits the marker file). Returns one
     per-entity row-count frame whose collect forces EVERY cleaned entity
     plan, so the timing covers the full multi-entity pipeline, not one
-    table. Since r9 the direct path single-parses by default (persisted
-    exploded scan, SURVEY §2.2 P1), so this times ONE JSON parse + cache
+    table. Since r9 the pipeline single-parses (persisted exploded scan,
+    SURVEY §2.2 P1), so this times ONE JSON parse + cache
     materialization + six cached filters — not six re-parses.
     ``sf_dir`` is ignored: the corpus is fixed-size by design so
     the number is comparable across rounds regardless of the driver's SF
@@ -41,37 +41,6 @@ def _fhir_pipeline_10k(spark, sf_dir):
 
     corpus = ensure_fhir_corpus(FHIR_BENCH_BUNDLES)
     tables = run_pipeline(spark, corpus, output_dir=None, quality=False).tables
-    counts = [
-        df.agg(F.count(F.lit(1)).alias("n_rows")).select(
-            F.lit(rt).alias("entity"), "n_rows"
-        )
-        for rt, df in sorted(tables.items())
-    ]
-    return reduce(lambda a, b: a.unionByName(b), counts)
-
-
-def _fhir_pipeline_10k_staged(spark, sf_dir):
-    """The same 10k-bundle pipeline through the bronze-layer path
-    (``run_pipeline(stage_dir=...)``): ONE multiLine JSON parse landed as
-    exploded-entry parquet, then six column-pruned parquet scans — the
-    standard lake pattern at 100 TB, timed INCLUDING the bronze write so
-    the number is the honest end-to-end cost of the staged architecture,
-    directly comparable to ``fhir_pipeline_10k``'s single-parse cached
-    path. The remaining gap between the two lines is cache-vs-parquet
-    residency plus the durable bronze write (pre-r9, when the direct
-    path re-parsed once per entity, the gap was 2.1×)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    from ehr_data_pipeline_spark.fhir.pipeline import run_pipeline
-    from tools.make_fhir_corpus import ensure_fhir_corpus
-
-    corpus = ensure_fhir_corpus(FHIR_BENCH_BUNDLES)
-    tables = run_pipeline(
-        spark, corpus, output_dir=None, quality=False,
-        stage_dir="/tmp/fhir_bench_stage",
-    ).tables
     counts = [
         df.agg(F.count(F.lit(1)).alias("n_rows")).select(
             F.lit(rt).alias("entity"), "n_rows"
@@ -132,7 +101,6 @@ def main() -> None:
 
     fns = {name: spec.fn for name, spec in bench_queries().items()}
     fns["fhir_pipeline_10k"] = _fhir_pipeline_10k
-    fns["fhir_pipeline_10k_staged"] = _fhir_pipeline_10k_staged
     # warm the JVM/JIT, parquet footers, and page cache — but NOT Spark's
     # block cache (cleared below), so the timed pass measures each query's
     # full cold-index cost rather than one-time JVM costs

@@ -30,6 +30,7 @@ from ehr_data_pipeline_spark.functions.validation import (
     is_valid_longitude,
     is_valid_phone,
     null_out_invalid,
+    out_of_order,
 )
 from ehr_data_pipeline_spark.operators.dedup import keep_first
 
@@ -68,11 +69,11 @@ def swap_out_of_order(df: DataFrame, start: str, end: str) -> DataFrame:
     (lexicographic on the ISO strings, exactly like the pandas mask at
     data_quality_checker.py:199-209)."""
     s, e = F.col(start), F.col(end)
-    out_of_order = s.isNotNull() & e.isNotNull() & (s > e)
+    swap = out_of_order(start, end)
     return df.withColumns(
         {
-            start: F.when(out_of_order, e).otherwise(s),
-            end: F.when(out_of_order, s).otherwise(e),
+            start: F.when(swap, e).otherwise(s),
+            end: F.when(swap, s).otherwise(e),
         }
     )
 

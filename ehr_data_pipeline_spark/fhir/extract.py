@@ -54,9 +54,9 @@ def _empty_to_null_pair(c: Column) -> Column:
 def extract_patient(patient: DataFrame) -> DataFrame:
     """Patient refinement (json_pipeline.py:162-293 → DDL :743-767).
 
-    - P2: photo columns are dropped by never selecting them (the explicit
-      schema declares photo only so permissive mode keeps parsing files
-      that contain it).
+    - P2: photo columns are dropped by never selecting them (the
+      pipeline prunes photo before its parse cache:
+      ``ingest.UNCONSUMED_RESOURCE_FIELDS``).
     - P4: add-missing-column is subsumed by the explicit read schema —
       absent fields read as null.
     - N1 geo (json_pipeline.py:186-207): lat/lon/full_address are computed

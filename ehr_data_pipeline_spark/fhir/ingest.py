@@ -92,12 +92,17 @@ def explode_entries(bundles: DataFrame) -> DataFrame:
     )
 
 
-# Declared in RESOURCE only so permissive parsing keeps accepting files
-# that contain them (the reference loads then drops them — P2/P3,
-# json_pipeline.py:164,481-506); no extractor, cleaner, or quality check
-# reads them. Everything else in RESOURCE is consumed by some extractor
-# (fhir/extract.py:54-272 — the fixed field set FIXTURES.md §1 catalogs).
-UNCONSUMED_RESOURCE_FIELDS = ("photo", "text", "identifier")
+# Declared in RESOURCE to mirror the reference's input shape, which loads
+# them and then drops them (P2/P3, json_pipeline.py:164,481-506; FIXTURES.md
+# §1 marks component and valueCodeableConcept dropped at :494, addresses at
+# :488). No extractor, cleaner, or quality check reads them, so they never
+# reach the parse cache. Permissive parsing does not need them declared: a
+# bundle carrying an undeclared or mistyped field parses to the same rows.
+# Everything else in RESOURCE is consumed by some extractor
+# (fhir/extract.py:54-272).
+UNCONSUMED_RESOURCE_FIELDS = (
+    "photo", "text", "identifier", "component", "valueCodeableConcept", "addresses",
+)
 
 
 def prune_unconsumed(entries: DataFrame) -> DataFrame:
@@ -131,8 +136,8 @@ def flatten_entries(entries: DataFrame) -> DataFrame:
     TOP-LEVEL columns at InMemoryTableScan but never nested struct
     fields, so the single-parse pipeline persists this flattened shape:
     each entity branch then reads only the columns its extractor
-    touches from the cache — the per-entity pruning the staged path
-    gets from parquet, without the extra write (VERDICT r9 #2)."""
+    touches from the cache — the per-entity pruning a parquet scan
+    gets, without landing the parse as parquet (VERDICT r9 #2)."""
     return entries.select("fullUrl", F.col("resource.*"))
 
 

@@ -8,10 +8,10 @@ here each entity table is a single unexecuted plan — scan → explode →
 route → extract → clean — that executes exactly once, when the sink
 writes it. Consequences at 100 TB:
 
-- ONE distributed parse of the bundle files total: the direct path
-  persists the shared exploded scan (SURVEY §2.2 P1 — "6× filter over
-  one cached exploded scan"), the staged path lands it as bronze
-  parquet;
+- ONE distributed parse of the bundle files total: the shared exploded
+  scan is pruned, flattened and persisted (SURVEY §2.2 P1 — "6× filter
+  over one cached exploded scan"), and each entity branch reads only
+  the cached columns its extractor touches;
 - cleaning row counts (the reference's ``len(df)`` logging, A6) ride
   along as ``observe()`` metrics on the write action instead of forcing
   extra ``count()`` scans;
@@ -21,10 +21,10 @@ writes it. Consequences at 100 TB:
   forced: the raw input is parsed once per run.
 
 The sink path overlaps its work instead of running the reference's
-serial ×6 load loop. On the direct path one background action (a
-``noop`` write of the persisted parse) fills the cache while the
-caller's thread spends seconds of py4j round trips building the
-extract, quality and clean plans; the writes wait for that fill. Then
+serial ×6 load loop. One background action (a ``noop`` write of the
+persisted parse) fills the cache while the caller's thread spends
+seconds of py4j round trips building the extract, quality and clean
+plans; the writes wait for that fill. Then
 the six table writes and the report checkpoint run as seven concurrent
 jobs, each submitted from its own pool thread under the caller's job
 group, description, scheduler pool and tags
@@ -35,8 +35,7 @@ leaves free, so the concurrency is bounded by the task slots and the
 memory per task is the same as in a serial loop. A failure does not
 cancel the other actions: the pipeline waits for every action in
 flight, releases the cache, then re-raises the first failure in table
-order (the report's last). On the direct path, ``output_dir=None``
-runs no job at all.
+order (the report's last). ``output_dir=None`` runs no job at all.
 """
 
 from __future__ import annotations
@@ -64,8 +63,7 @@ class PipelineResult:
     collect it before :meth:`release` to avoid a re-parse.
 
     ``source`` is the persisted exploded-entry frame (pruned to the
-    consumed-field union) when the direct path was taken
-    (``stage_dir=None``); its cache lives until
+    consumed-field union and flattened); its cache lives until
     :meth:`release`, an explicit ``spark.catalog.clearCache()``, or
     session end. Call ``release()`` once you are done re-running the
     returned plans. On the sink path (``output_dir`` set) the pipeline
@@ -82,29 +80,29 @@ class PipelineResult:
     source: DataFrame | None = None
 
     def release(self) -> None:
-        """Unpersist the shared exploded-entry cache (no-op for the
-        staged path). The returned plans stay
-        runnable afterwards — they fall back to re-parsing the input."""
+        """Unpersist the shared exploded-entry cache (a no-op once
+        released). The returned plans stay runnable afterwards — they
+        fall back to re-parsing the input."""
         if self.source is not None:
             self.source.unpersist()
             self.source = None
 
 
-def bronze_coalesce_target(
+def parse_coalesce_target(
     input_bytes: int,
     parallelism: int,
     bytes_per_file: int = 256 * 1024 * 1024,
 ) -> int:
-    """Partition count for landing the exploded bronze layer: enough
-    files that none exceeds ~``bytes_per_file`` of RAW input (guide §6's
-    128 MB–1 GB output-file band — the exploded parquet is smaller than
-    the raw JSON it derives from, so raw bytes are a safe upper bound),
-    but never fewer than the session parallelism (the write is the parse
-    stage's sink; fewer tasks than cores would serialize the parse).
-    VERDICT r14 #8: this was a ``coalesce(defaultParallelism)`` with the
-    scale caveat in a comment — at a 100 TB bronze land a core-count
-    coalesce means 32 multi-terabyte write tasks; the byte term now
-    does what the comment promised."""
+    """Partition count the exploded parse is coalesced to before it is
+    persisted: enough partitions that none holds more than
+    ~``bytes_per_file`` of RAW input (guide §6's 128 MB–1 GB band — the
+    pruned, flattened entries are smaller than the raw JSON they derive
+    from, so raw bytes are a safe upper bound), but never fewer than the
+    session parallelism (the cache fill is the parse stage's sink; fewer
+    tasks than cores would serialize the parse). VERDICT r14 #8: this
+    was a ``coalesce(defaultParallelism)`` with the scale caveat in a
+    comment — at 100 TB a core-count coalesce means 32 multi-terabyte
+    tasks; the byte term does what the comment promised."""
     if input_bytes < 0:
         raise ValueError(f"input_bytes must be >= 0, got {input_bytes}")
     return max(parallelism, -(-input_bytes // bytes_per_file))
@@ -134,20 +132,18 @@ def run_pipeline(
     output_dir: str | None = None,
     fmt: str = "parquet",
     quality: bool = True,
-    stage_dir: str | None = None,
 ) -> PipelineResult:
     """Run the full ETL over a directory of FHIR bundle JSON files.
 
-    ``output_dir=None`` skips the load step (row counts then stay empty;
-    without ``stage_dir`` no job runs; the returned plans are still
-    runnable).
+    ``output_dir=None`` skips the load step (row counts then stay empty,
+    no job runs, and the returned plans are still runnable).
     ``quality=True`` attaches the pre-clean quality report over the
     extracted tables, mirroring the reference's check-before-clean order
     (json_pipeline.py:1100-1109). With ``output_dir`` set, the report is
     checkpointed beside the writes, over the same parse, and returned
     forced; without it, the report stays a lazy plan.
 
-    With ``output_dir`` set, the direct path starts filling the parse
+    With ``output_dir`` set, the pipeline starts filling the parse
     cache in the background as soon as the plans have a ``source``, and
     the writes start once it is full; the six writes
     (:func:`~ehr_data_pipeline_spark.sinks.write_entity_tables`) and the
@@ -158,114 +154,80 @@ def run_pipeline(
     end, the cache is released, and the first failure in table order is
     raised (the report's last).
 
-    ``stage_dir`` lands the exploded entries as a bronze parquet layer
-    first and routes from that: the multiLine JSON parse (the expensive
-    per-file step) runs ONCE instead of once per entity plan + quality
-    report, and every downstream read is a column-pruned parquet scan.
-    At 100 TB this is the recommended pattern (raw JSON → durable bronze
-    columnar once; re-runs never touch the raw files again).
-
-    Without ``stage_dir`` (the direct path) the shared exploded-entry
-    scan is persisted so the six entity plans materialize it ONCE
-    instead of each re-running the multiLine JSON parse — SURVEY §2.2's
-    P1 mapping ("6× filter over one cached exploded scan"). The persist
-    is lazy, so plan laziness is fully preserved (nothing executes until
-    an action); the only semantic addition is an explicit cache lifetime,
-    surfaced as ``PipelineResult.source`` / ``.release()``. Sizing note: the cache is MEMORY_AND_DISK over the exploded
-    entries PRUNED to the consumed-field union
+    The shared exploded-entry scan is persisted so the six entity plans
+    materialize it ONCE instead of each re-running the multiLine JSON
+    parse — SURVEY §2.2's P1 mapping ("6× filter over one cached
+    exploded scan"). The persist is lazy, so plan laziness is fully
+    preserved (nothing executes until an action); the only semantic
+    addition is an explicit cache lifetime, surfaced as
+    ``PipelineResult.source`` / ``.release()``. Sizing note: the cache
+    is MEMORY_AND_DISK over the exploded entries PRUNED to the
+    consumed-field union
     (:func:`~ehr_data_pipeline_spark.fhir.ingest.prune_unconsumed` —
-    photo/narrative/identifier never reach the cache), so cluster
-    storage ≈ the consumed fraction of the input; at the 100 TB design
-    point prefer ``stage_dir``, which buys the same single parse with
-    durable, per-entity-pruned storage instead of cache."""
+    :data:`~ehr_data_pipeline_spark.fhir.ingest.UNCONSUMED_RESOURCE_FIELDS`
+    never reach the cache) and flattened to one column per field, so
+    cluster storage ≈ the consumed fraction of the input and each entity
+    branch reads only its own columns of it."""
     sink = output_dir is not None
     result = PipelineResult(tables={})
     # one worker: it runs the cache fill, then the report checkpoint
     pool = ThreadPoolExecutor(max_workers=1)
     try:
-        fill = None
-        if stage_dir is not None:
-            from ehr_data_pipeline_spark.fhir.ingest import (
-                explode_entries,
-                read_bundles,
-                route_resources,
-            )
+        from pyspark import StorageLevel
 
-            # coalesce the parse output before landing bronze: a directory-
-            # of-small-bundles scan yields one split per ~32 files
-            # (openCostInBytes padding), so the uncoalesced write emitted
-            # one TINY parquet file per split — and every downstream entity
-            # scan then paid listing + footer + open once per file, SIX
-            # times over (guide §6: small files hurt twice; r14: write
-            # 1.75 s → 0.85 s at 10k bundles, 66 → 32 files). The target is
-            # BYTES-derived (r15, VERDICT r14 #8): max(cores, raw bytes /
-            # 256 MB), so the 10k-bundle case still lands core-count files
-            # while a 100 TB land fans out to ~bytes/256 MB write tasks
-            # instead of 32 multi-terabyte ones.
-            bundles = read_bundles(spark, input_dir)
-            explode_entries(bundles).coalesce(
-                bronze_coalesce_target(
+        from ehr_data_pipeline_spark.fhir.ingest import (
+            entries_view,
+            explode_entries,
+            flatten_entries,
+            prune_unconsumed,
+            read_bundles,
+            route_resources,
+        )
+
+        # prune + FLATTEN before persist: the cache can't prune nested
+        # struct fields per consumer the way a parquet scan does, but it
+        # DOES prune top-level columns — so drop the never-consumed
+        # subtrees (UNCONSUMED_RESOURCE_FIELDS), hoist the rest to
+        # top-level columns, persist that, and give routing the rebuilt
+        # struct view (collapsed per branch by SimplifyExtractValueOps
+        # back to pruned column reads).
+        # coalesce the parse output to ~core count first: a
+        # directory-of-small-bundles scan yields one split per file
+        # batch, and SIX branches re-reading thousands of tiny cached
+        # partitions pay pure task-launch overhead (measured ~20% of
+        # pipeline wall at 10k bundles); coalesce keeps the parse
+        # fully parallel while the cache lands in fat partitions
+        # (r14 note: sortWithinPartitions(resourceType) before the
+        # persist was measured ~15% faster on the 10k-bundle pipeline
+        # — clustering by the routing key lets cached-batch min/max
+        # stats prune the six branch scans — but REJECTED: the sort is
+        # baked into the plan, so after release() every fallback
+        # re-parse branch re-runs its own SortExec, and the quality
+        # report's ~30 concurrent branches each allocating sort pages
+        # OOMed an 8g driver on a 5-doc fixture. Cached-path-only wins
+        # must not degrade the documented uncached fallback.)
+        bundles = read_bundles(spark, input_dir)
+        source = flatten_entries(
+            prune_unconsumed(explode_entries(bundles)).coalesce(
+                # bytes-derived target (r15): fat cached partitions
+                # locally, ~256 MB-bounded ones at scale instead of
+                # input/32
+                parse_coalesce_target(
                     _input_size_bytes(bundles),
                     spark.sparkContext.defaultParallelism,
                 )
-            ).write.mode("overwrite").parquet(stage_dir)
-            routed = route_resources(spark.read.parquet(stage_dir))
-        else:
-            from pyspark import StorageLevel
-
-            from ehr_data_pipeline_spark.fhir.ingest import (
-                entries_view,
-                explode_entries,
-                flatten_entries,
-                prune_unconsumed,
-                read_bundles,
-                route_resources,
             )
-
-            # prune + FLATTEN before persist: the cache can't prune nested
-            # struct fields per consumer the way the staged path's parquet
-            # scans do, but it DOES prune top-level columns — so drop the
-            # never-consumed subtrees (photo/narrative/identifier), hoist
-            # the rest to top-level columns, persist that, and give routing
-            # the rebuilt struct view (collapsed per branch by
-            # SimplifyExtractValueOps back to pruned column reads).
-            # coalesce the parse output to ~core count first: a
-            # directory-of-small-bundles scan yields one split per file
-            # batch, and SIX branches re-reading thousands of tiny cached
-            # partitions pay pure task-launch overhead (measured ~20% of
-            # direct-path wall at 10k bundles); coalesce keeps the parse
-            # fully parallel while the cache lands in fat partitions
-            # (r14 note: sortWithinPartitions(resourceType) before the
-            # persist was measured ~15% faster on the 10k-bundle direct path
-            # — clustering by the routing key lets cached-batch min/max
-            # stats prune the six branch scans — but REJECTED: the sort is
-            # baked into the plan, so after release() every fallback
-            # re-parse branch re-runs its own SortExec, and the quality
-            # report's ~30 concurrent branches each allocating sort pages
-            # OOMed an 8g driver on a 5-doc fixture. Cached-path-only wins
-            # must not degrade the documented uncached fallback.)
-            bundles = read_bundles(spark, input_dir)
-            source = flatten_entries(
-                prune_unconsumed(explode_entries(bundles)).coalesce(
-                    # same bytes-derived target as the bronze land (r15):
-                    # fat cached partitions locally, ~256 MB-bounded ones at
-                    # scale instead of input/32
-                    bronze_coalesce_target(
-                        _input_size_bytes(bundles),
-                        spark.sparkContext.defaultParallelism,
-                    )
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        result.source = source
+        if sink:
+            # parse once into the cache now, while this thread spends
+            # seconds of py4j round trips building the plans below
+            fill = pool.submit(
+                inheritable_thread_target(spark)(
+                    source.write.format("noop").mode("overwrite").save
                 )
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            result.source = source
-            if sink:
-                # parse once into the cache now, while this thread spends
-                # seconds of py4j round trips building the plans below
-                fill = pool.submit(
-                    inheritable_thread_target(spark)(
-                        source.write.format("noop").mode("overwrite").save
-                    )
-                )
-            routed = route_resources(entries_view(source))
+            )
+        routed = route_resources(entries_view(source))
         extracted = extract_all(routed)
         report = fhir_quality_report(extracted) if quality else None
         result.quality_report = report
@@ -280,12 +242,10 @@ def run_pipeline(
         if not sink:
             return result
 
-        if fill is not None:
-            fill.result()
+        fill.result()
         # force the report beside the writes, while the shared-parse cache
-        # (or the bronze parquet) still holds the parse: a lazy report
-        # collected after the release below would re-parse the raw JSON
-        # once per table. localCheckpoint keeps the ~20 rows JVM-side and
+        # still holds the parse: a lazy report collected after the release
+        # below would re-parse the raw JSON once per table. localCheckpoint keeps the ~20 rows JVM-side and
         # cuts the lineage, so the returned frame reads no input.
         forced = None
         if report is not None:

@@ -55,3 +55,11 @@ def null_out_invalid(col: Column, valid: Column) -> Column:
     """Conditional null-out (F9/F10, data_quality_checker.py:173-187,
     219-230): keep the value only when null or valid."""
     return F.when(col.isNull() | valid, col)
+
+
+def out_of_order(start: str, end: str) -> Column:
+    """A3/F11: both non-null AND start > end (lexicographic on the ISO
+    strings, data_quality_checker.py:83-94,199-209) — the quality check
+    counts these rows, the cleaner swaps them."""
+    s, e = F.col(start), F.col(end)
+    return s.isNotNull() & e.isNotNull() & (s > e)

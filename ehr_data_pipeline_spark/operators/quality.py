@@ -1,15 +1,19 @@
 """Data-quality profiling operators.
 
 Engine form of the reference's DataQualityChecker
-(data_quality_checker.py:5-163): every per-table report is ONE aggregate
-pass (the reference loops per column / per check in Python), returning a
+(data_quality_checker.py:5-163): every report is ONE plan over its input
+(the reference loops per column / per check in Python), returning a
 small report DataFrame. At 100 TB this is the difference between one scan
-and dozens.
+and dozens. :func:`quality_report` is the one check-suite engine: the
+FHIR six-table report (``fhir.quality``) and the events suite
+(``queries.events_quality_suite``) both run through it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,30 +51,122 @@ def missing_value_profile(df: DataFrame, columns: Sequence[str] | None = None) -
     )
 
 
-def quality_report(
-    df: DataFrame, checks: dict[str, Column], table_name: str = "table"
-) -> DataFrame:
-    """Run a suite of named violation predicates in one pass (A2/A5,
-    data_quality_checker.py:34-45,105-163). ``checks`` maps error-type name →
-    boolean Column that is true for violating rows. Returns the reference's
-    report shape: (table_name, error_type, n_violations, pct)."""
-    names = list(checks)
-    wide = df.agg(
-        F.count(F.lit(1)).alias("__total"),
-        *[_violations(cond).alias(f"__c{i}") for i, cond in enumerate(checks.values())],
+class Suite(NamedTuple):
+    """One table's checks: its report name, the row-wise violation
+    predicates by error type, and the keep=False duplicate checks as
+    (key columns, error type)."""
+
+    table_name: str
+    checks: Callable[[], dict[str, Column]]
+    duplicates: tuple[tuple[tuple[str, ...], str], ...] = ()
+
+
+def _check_row(error_type: str, violated: Column, keys: Sequence[str] = ()) -> Column:
+    """One generated row: a check's label, whether this input row violates
+    it (row-wise checks), and the key it groups on (duplicate checks, the
+    ones with ``keys``)."""
+    k = [F.col(c).cast("string") for c in keys]
+    k += [F.lit(None).cast("string")] * (2 - len(k))
+    return F.struct(
+        F.lit(error_type).alias("error_type"),
+        F.lit(bool(keys)).alias("dup"),
+        violated.alias("violated"),  # NULL counts as no violation: SUM skips it
+        k[0].alias("k0"),
+        k[1].alias("k1"),
     )
-    stack_args = ", ".join(f"'{name}', `__c{i}`" for i, name in enumerate(names))
-    return wide.select(
-        F.col("__total"),
-        F.expr(f"stack({len(names)}, {stack_args}) AS (error_type, n_violations)"),
-    ).select(
-        F.lit(table_name).alias("table_name"),
-        "error_type",
-        "n_violations",
-        F.when(
-            F.col("__total") > 0,
-            F.lit(100.0) * F.col("n_violations") / F.col("__total"),
-        ).otherwise(F.lit(0.0)).alias("pct"),
+
+
+def quality_report(suites: Sequence[tuple[DataFrame, Suite]]) -> DataFrame:
+    """Run each table's check suite (A2/A3/A4/A5, the reference's
+    ``run_quality_checks``, data_quality_checker.py:34-45,97-163) and
+    return the reference's report shape ``(table_name, error_type,
+    n_violations, pct)``: rows in suite order, each table's row-wise
+    checks before its duplicate checks.
+
+    Execution shape: the whole report is ONE plan with two shuffles,
+    however many tables it covers.
+
+    - Every input row becomes one row per check of its table, through
+      ``inline(array(struct(...)))``. A row-wise (format or
+      logical-order) check carries its violation flag; a keep=False
+      duplicate check carries the row's key (up to two columns,
+      ``k0``/``k1``).
+    - The tables union into one ``groupBy(table_name, error_type, dup,
+      k0, k1)``. Row-wise checks have NULL keys, so the map-side combine
+      folds them to one row per check per partition; duplicate checks
+      get one group per key, NULL keys grouping together as in pandas.
+    - A second ``groupBy(table_name, error_type)`` folds those groups
+      into the report: a row-wise check sums its flags, a duplicate
+      check sums the groups with more than one member (every member of
+      a duplicate group counts, data_quality_checker.py:97-102), and
+      both sum the group sizes for the table's row count.
+    - A literal spine of every (table_name, error_type) is unioned into
+      the second aggregate, so an empty table still reports each of its
+      checks, with 0 violations and pct 0.0, as pandas does.
+
+    The reference instead loops Python per check per row. At 100 TB
+    this report is one scan per table and 2 shuffles: the first carries
+    the duplicate keys, the second at most one row per check per
+    partition."""
+    branches: list[DataFrame] = []
+    labels: list[tuple[str, str]] = []
+    for df, suite in suites:
+        checks = suite.checks()
+        rows = [_check_row(et, c) for et, c in checks.items()]
+        rows += [_check_row(et, F.lit(False), keys) for keys, et in suite.duplicates]
+        branches.append(
+            df.select(F.lit(suite.table_name).alias("table_name"), F.inline(F.array(*rows)))
+        )
+        labels += [(suite.table_name, et) for et in checks]
+        labels += [(suite.table_name, et) for _, et in suite.duplicates]
+
+    groups = (
+        reduce(DataFrame.unionByName, branches)
+        .groupBy("table_name", "error_type", "dup", "k0", "k1")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.col("violated").cast("bigint")).alias("viol"),
+        )
+        .select(
+            "table_name",
+            "error_type",
+            F.when(F.col("dup"), F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0))
+            .otherwise(F.col("viol"))
+            .alias("n"),
+            "cnt",
+            F.lit(None).cast("int").alias("ord"),
+        )
+    )
+    # built from one range row, not createDataFrame: a local Python list
+    # would run a Python-worker job
+    spine = branches[0].sparkSession.range(0, 1, 1, 1).select(
+        F.inline(F.array(*[
+            F.struct(
+                F.lit(t).alias("table_name"),
+                F.lit(e).alias("error_type"),
+                F.lit(0).cast("bigint").alias("n"),
+                F.lit(0).cast("bigint").alias("cnt"),
+                F.lit(i).alias("ord"),
+            )
+            for i, (t, e) in enumerate(labels)
+        ]))
+    )
+    totals = groups.unionByName(spine).groupBy("table_name", "error_type").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("cnt").cast("bigint").alias("t"),
+        F.max("ord").alias("ord"),  # only the spine row carries one
+    )
+    return (
+        totals.coalesce(1)
+        .sortWithinPartitions("ord")
+        .select(
+            "table_name",
+            "error_type",
+            F.col("n").alias("n_violations"),
+            F.when(F.col("t") > 0, F.lit(100.0) * F.col("n") / F.col("t"))
+            .otherwise(F.lit(0.0))
+            .alias("pct"),
+        )
     )
 
 

@@ -137,10 +137,6 @@ def dot(a: Column, b: Column) -> Column:
     return _dot_d(to_double(a), to_double(b))
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
 def cosine(a: Column, b: Column) -> Column:
     """a·b / (‖a‖·‖b‖), with both double-cast vectors let-bound so the
     cast runs once per row instead of once per fold (a·b, a·a, b·b).

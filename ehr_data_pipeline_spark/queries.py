@@ -1015,28 +1015,28 @@ def union_by_name_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM events),
     checks AS (
       SELECT 'events' AS table_name, 'Invalid Props Format' AS error_type,
-             CAST(SUM(CASE WHEN props IS NOT NULL
+             CAST(COALESCE(SUM(CASE WHEN props IS NOT NULL
                             AND NOT regexp_matches(props, '^\\{{"k": -?\\d+\\}}$')
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
+                           THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_violations
       FROM ev
       UNION ALL
       SELECT 'events', 'Invalid Measurement',
-             CAST(SUM(CASE WHEN value IS NOT NULL AND vm IS NULL
-                           THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(COALESCE(SUM(CASE WHEN value IS NOT NULL AND vm IS NULL
+                           THEN 1 ELSE 0 END), 0) AS BIGINT)
       FROM ev
       UNION ALL
       SELECT 'events', 'Missing Timestamp',
-             CAST(SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(COALESCE(SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT)
       FROM ev
       UNION ALL
       SELECT 'events', 'Value Out Of Range',
-             CAST(SUM(CASE WHEN vm IS NOT NULL AND (vm < 0 OR vm > 400)
-                           THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(COALESCE(SUM(CASE WHEN vm IS NOT NULL AND (vm < 0 OR vm > 400)
+                           THEN 1 ELSE 0 END), 0) AS BIGINT)
       FROM ev
       UNION ALL
       SELECT 'events', 'Logical Value Order',
-             CAST(SUM(CASE WHEN vm IS NOT NULL AND k IS NOT NULL AND vm > k
-                           THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(COALESCE(SUM(CASE WHEN vm IS NOT NULL AND k IS NOT NULL AND vm > k
+                           THEN 1 ELSE 0 END), 0) AS BIGINT)
       FROM ev
       UNION ALL
       SELECT 'events', 'Duplicate User/Type',
@@ -1054,23 +1054,23 @@ def union_by_name_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Config-driven quality-check suite parity (A5,
-    data_quality_checker.py:105-163) on the events table: all format (A2)
-    and logical-order (A3) checks fold into ONE aggregate pass via
-    quality_report; the keep=False duplicate check (A4) unions in as an
-    extra report row — same report shape as the reference
-    (table, error_type, count, pct). The Invalid Measurement and
-    Missing Timestamp classes surface exactly the rows the events-domain
-    contract (functions/measurement.py) excludes from the temporal
-    operators — counted here, not silently dropped, per the reference's
-    violations-are-reported philosophy (data_quality_checker.py:34-45);
-    the range/order checks are scoped to VALID measurements so NaN's
-    engine-specific comparison semantics never reach a predicate."""
-    from ehr_data_pipeline_spark.fhir.quality import duplicate_check_row
+    data_quality_checker.py:105-163) on the events table: the format (A2)
+    and logical-order (A3) checks and the keep=False duplicate check (A4)
+    run as one suite through quality_report, the engine behind the FHIR
+    report — same report shape as the reference (table, error_type,
+    count, pct), and 0 violations on an empty table. The Invalid
+    Measurement and Missing Timestamp classes surface exactly the rows
+    the events-domain contract (functions/measurement.py) excludes from
+    the temporal operators — counted here, not silently dropped, per the
+    reference's violations-are-reported philosophy
+    (data_quality_checker.py:34-45); the range/order checks are scoped to
+    VALID measurements so NaN's engine-specific comparison semantics
+    never reach a predicate."""
     from ehr_data_pipeline_spark.functions.measurement import (
         is_invalid_measurement,
         valid_measurement,
     )
-    from ehr_data_pipeline_spark.operators.quality import quality_report
+    from ehr_data_pipeline_spark.operators.quality import Suite, quality_report
 
     e = _t(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("bigint")
@@ -1083,10 +1083,8 @@ def events_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Value Out Of Range": vm.isNotNull() & ((vm < 0) | (vm > 400)),
         "Logical Value Order": vm.isNotNull() & k.isNotNull() & (vm > k),
     }
-    report = quality_report(e, checks, table_name="events")
-    return report.unionByName(
-        duplicate_check_row(e, ["user_id", "event_type"], "Duplicate User/Type", "events")
-    )
+    dup = ((("user_id", "event_type"), "Duplicate User/Type"),)
+    return quality_report([(e, Suite("events", lambda: checks, dup))])
 
 
 @register(

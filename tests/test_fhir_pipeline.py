@@ -126,7 +126,7 @@ def test_sink_failure_finishes_the_other_writes_and_releases(spark, tmp_path, mo
 
 
 def test_pipeline_single_parse_equivalent_and_releases(spark, tmp_path):
-    """The default direct path (persisted exploded scan, one JSON parse)
+    """The pipeline's single parse (persisted exploded scan, one JSON parse)
     must produce identical entity tables to the plain per-entity plans —
     each cleaner applied to the extracted tables of an uncached
     read_and_route; release() must unpersist the shared cache and leave
@@ -157,8 +157,9 @@ def test_pipeline_single_parse_equivalent_and_releases(spark, tmp_path):
 
 def test_pipeline_cache_is_pruned_and_sink_path_autoreleases(spark, tmp_path):
     """VERDICT r9 #2 + ADVICE r9: the persisted single-parse frame is
-    FLATTENED to the consumed-field union (no photo/narrative/identifier,
-    one top-level column per resource field — the cache prunes top-level
+    FLATTENED to the consumed-field union (none of the six subtrees the
+    reference drops and nothing reads, one top-level column per resource
+    field — the cache prunes top-level
     columns, never nested struct fields), each entity branch's
     InMemoryTableScan reads only its extractor's columns with the
     resourceType filter pushed into the cache scan, and the sink path
@@ -168,6 +169,9 @@ def test_pipeline_cache_is_pruned_and_sink_path_autoreleases(spark, tmp_path):
     cached = run_pipeline(spark, FIXTURE_DIR, output_dir=None, quality=False)
     fields = set(cached.source.columns)
     assert not fields & set(UNCONSUMED_RESOURCE_FIELDS)
+    assert not fields & {
+        "photo", "text", "identifier", "component", "valueCodeableConcept", "addresses",
+    }
     assert {"fullUrl", "resourceType", "id", "name", "address", "activity"} <= fields
     # per-branch pruning: the Observation plan's cache scan must NOT read
     # patient-only payloads (name/address/telecom) and must push the
@@ -191,29 +195,6 @@ def test_pipeline_cache_is_pruned_and_sink_path_autoreleases(spark, tmp_path):
     assert sunk.row_counts["Patient"] > 0
     # returned plans recompute from raw files after the auto-release
     assert sunk.tables["Patient"].count() == sunk.row_counts["Patient"]
-
-
-def test_pipeline_staged_bronze_layer_equivalent(spark, tmp_path):
-    """stage_dir (JSON → bronze parquet once) must produce identical
-    entity tables to the direct path."""
-    import os
-
-    from ehr_data_pipeline_spark.fhir.pipeline import run_pipeline
-
-    fixture_dir = os.path.join(os.path.dirname(__file__), "fixtures", "fhir")
-    direct = run_pipeline(
-        spark, fixture_dir, output_dir=str(tmp_path / "direct"), quality=False
-    )
-    staged = run_pipeline(
-        spark, fixture_dir, output_dir=str(tmp_path / "staged"),
-        quality=False, stage_dir=str(tmp_path / "bronze"),
-    )
-    assert direct.row_counts == staged.row_counts
-    key = lambda t: tuple((x is None, str(x)) for x in t)  # noqa: E731
-    for rt in direct.tables:
-        a = sorted(map(tuple, direct.tables[rt].collect()), key=key)
-        b = sorted(map(tuple, staged.tables[rt].collect()), key=key)
-        assert a == b, rt
 
 
 def test_single_parse_coalesce_sits_below_the_alias_fan(spark):
@@ -250,22 +231,22 @@ def test_single_parse_coalesce_sits_below_the_alias_fan(spark):
         cached.release()
 
 
-def test_bronze_coalesce_target():
-    """VERDICT r14 #8: the bronze-land partition count derives from raw
-    input bytes with a parallelism floor — core-count files locally,
-    ~256 MB-bounded write tasks at scale."""
-    from ehr_data_pipeline_spark.fhir.pipeline import bronze_coalesce_target
+def test_parse_coalesce_target():
+    """VERDICT r14 #8: the partition count of the persisted parse derives
+    from raw input bytes with a parallelism floor — core-count partitions
+    locally, ~256 MB-bounded tasks at scale."""
+    from ehr_data_pipeline_spark.fhir.pipeline import parse_coalesce_target
 
     mb = 1024 * 1024
     # small inputs: the parallelism floor wins (the 10k-bundle case)
-    assert bronze_coalesce_target(50 * mb, 32) == 32
-    assert bronze_coalesce_target(0, 8) == 8
+    assert parse_coalesce_target(50 * mb, 32) == 32
+    assert parse_coalesce_target(0, 8) == 8
     # big inputs: the byte term wins, ceil-divided
-    assert bronze_coalesce_target(1024 * 1024 * mb, 32) == 4096  # 1 TB
-    assert bronze_coalesce_target(256 * mb + 1, 1) == 2
-    assert bronze_coalesce_target(256 * mb, 1) == 1
+    assert parse_coalesce_target(1024 * 1024 * mb, 32) == 4096  # 1 TB
+    assert parse_coalesce_target(256 * mb + 1, 1) == 2
+    assert parse_coalesce_target(256 * mb, 1) == 1
     # custom file-size band
-    assert bronze_coalesce_target(10 * mb, 2, bytes_per_file=mb) == 10
+    assert parse_coalesce_target(10 * mb, 2, bytes_per_file=mb) == 10
     import pytest as _pytest
     with _pytest.raises(ValueError):
-        bronze_coalesce_target(-1, 8)
+        parse_coalesce_target(-1, 8)

@@ -168,7 +168,7 @@ def test_sink_path_report_is_forced_over_the_single_parse(spark, tmp_path):
 def test_input_size_bytes_maps_unknown_stats_to_zero(spark):
     """An RDD-backed frame has no size statistics; Spark reports
     Long.MaxValue, which must read as 0 so the parallelism floor of
-    bronze_coalesce_target applies."""
+    parse_coalesce_target applies."""
     rdd_frame = spark.createDataFrame(spark.sparkContext.parallelize([(1,), (2,)]), "x int")
     assert _input_size_bytes(rdd_frame) == 0
     files = spark.read.json(os.path.join(FIXTURE_DIR, "bundle_alice.json"), multiLine=True)

@@ -2,11 +2,11 @@
 
 Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt for each bench query (or the named
-subset), e.g. ``capture_plans.py r15 before``. The FHIR pipeline entries
-run through the same bench functions (direct + staged paths) so their full
-multi-entity plans are captured. (ADVICE r14: the output directory derives
-from the tag argument instead of a hardcoded round, and missing args print
-usage instead of an IndexError.)
+subset), e.g. ``capture_plans.py r15 before``. The FHIR pipeline entry
+runs through the same bench function so its full multi-entity plan is
+captured. (ADVICE r14: the output directory derives from the tag
+argument instead of a hardcoded round, and missing args print usage
+instead of an IndexError.)
 """
 import os
 import sys
@@ -37,7 +37,6 @@ def main() -> None:
     import bench as bench_mod  # noqa: E402
 
     fns["fhir_pipeline_10k"] = bench_mod._fhir_pipeline_10k
-    fns["fhir_pipeline_10k_staged"] = bench_mod._fhir_pipeline_10k_staged
 
     for name, fn in fns.items():
         if only and name not in only:
