@@ -1179,105 +1179,6 @@ def semantic_contamination(
     )
 
 
-def _round_half_up_6(arr):
-    """Match Spark's ``ROUND(double, 6)`` exactly: Catalyst rounds via
-    ``BigDecimal.valueOf(x)`` — the SHORTEST decimal representation of the
-    double — with HALF_UP (half away from zero). ``np.round`` is half-even
-    and disagrees on .xxxxxx5 boundaries. Bulk path is vectorized
-    half-away-from-zero; only values within epsilon of a .5 boundary take
-    the exact per-element decimal path (``repr(float)`` is the same
-    shortest representation), so parity holds bit-for-bit at BLAS speed."""
-    import numpy as np
-
-    scaled = np.abs(arr) * 1e6
-    fast = np.sign(arr) * np.floor(scaled + 0.5) / 1e6
-    frac = scaled - np.floor(scaled)
-    boundary = np.abs(frac - 0.5) < 1e-6
-    if boundary.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        quantum = Decimal("0.000001")
-        idx = np.nonzero(boundary)
-        fast[idx] = [
-            float(Decimal(repr(float(x))).quantize(quantum, rounding=ROUND_HALF_UP))
-            for x in arr[idx]
-        ]
-    return fast
-
-
-def cosine_near_dup_pairs_arrow(
-    df: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup detection via Arrow-batched numpy —
-    the vectorized twin of :func:`cosine_near_dup_pairs` for
-    verification/recall-measurement workloads where the interpreted
-    per-pair fold dominates: each mapInPandas batch scores its corpus
-    slice against the FULL corpus matrix with one BLAS matmul and emits
-    the (id_a < id_b, round(cosine,6) >= threshold) pairs. The corpus
-    matrix collects to the driver and broadcasts inside the closure —
-    the same all-pairs-verification smallness assumption the native twin
-    makes (the 100 TB path is :func:`lsh_near_dup_pairs`). Rounding uses
-    the HALF_UP parity helper, so values agree with the native path
-    (pinned in tests/test_similarity.py).
-
-    The corpus collects EAGERLY (at construction) and
-    ships to executors as a numpy sparkContext.broadcast — one transfer
-    and one driver-side normalization, not a pickled list-of-lists
-    re-converted inside every task. Invalid vectors are excluded at
-    entry per the embeddings contract, with ``dim`` inferred from the
-    data (the native twin's ``dim=None``)."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = "id_a long, id_b long, cosine double"
-    dim = infer_dim(df, id_col, vec_col)
-    if dim is None:
-        return df.sparkSession.createDataFrame([], out_schema)
-    df = df.where(_valid(id_col, vec_col, dim))
-    rows = df.select(id_col, vec_col).collect()
-    if not rows:
-        return df.sparkSession.createDataFrame([], out_schema)
-    fm = np.asarray([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast(
-        (
-            np.asarray([r[0] for r in rows]),
-            fm / np.linalg.norm(fm, axis=1, keepdims=True),
-        )
-    )
-
-    def score(batches):
-        import numpy as np
-
-        fid, fn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = _round_half_up_6(cn @ fn.T)  # |batch| × |corpus|
-            bid = pdf[id_col].to_numpy()
-            lo = bid[:, None] < fid[None, :]
-            hit = (sims >= threshold) & lo
-            bi, fj = np.nonzero(hit)
-            if len(bi):
-                yield pd.DataFrame(
-                    {
-                        "id_a": bid[bi],
-                        "id_b": fid[fj],
-                        "cosine": sims[bi, fj],
-                    }
-                )
-
-    return ensure_min_partitions(df).select(id_col, vec_col).mapInPandas(
-        score, out_schema
-    )
-
-
 def quantize_int8(vec: Column) -> Column:
     """Symmetric per-vector int8 quantization: struct(q: array<tinyint>,
     scale: double) with q = round(v · 127/max|v|). Halves (float32) or

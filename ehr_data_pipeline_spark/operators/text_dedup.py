@@ -5,8 +5,10 @@ Scale design (the whole point of these operators):
 
 - **exact**: one md5-of-normalized-text fingerprint per doc, one shuffle on
   the fingerprint. 100 TB-safe as-is.
-- **jaccard_pairs** is the all-pairs *verification oracle* — O(n²), for
-  tests/small candidate sets only. The scale path is NEVER all-pairs.
+- **jaccard_pairs** is the exact n-gram Jaccard path: lossless PPJoin
+  prefix filtering, so the candidate join runs only within rare-shingle
+  buckets. The O(n²) all-pairs join it equals is a reference twin in
+  tests/test_text_dedup.py, not a library path.
 - **minhash_lsh_pairs** is the scale path: signature = H min-hashes over
   character shingles (in-row, narrow), candidates = pairs sharing at least
   one LSH band bucket (shuffle on band key — join happens only WITHIN
@@ -151,42 +153,14 @@ def jaccard_pairs(
     threshold: float = 0.6,
     k: int = DEFAULT_SHINGLE_K,
 ) -> DataFrame:
-    """ALL-PAIRS n-gram Jaccard — the exact ground truth the LSH path is
-    verified against. O(n²) nested-loop join: correctness oracle for tests
-    and small corpora, never the 100 TB path (use minhash_lsh_pairs, or
-    jaccard_pairs_prefix for exact results). Similarity is over hashed
-    shingle sets (see hashed_shingle_set). Size-ratio pruning (J <=
-    min/max of the set sizes) runs inside the join condition, so pairs
-    that cannot reach the threshold skip the intersection entirely —
-    output unchanged."""
-    base = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"), hashed_shingle_set(F.col(text_col), k).alias("sh")
-    ).filter(F.size("sh") > 0)
-    a, b = base.alias("a"), base.alias("b")
-    sa, sb = F.size(F.col("a.sh")), F.size(F.col("b.sh"))
-    size_ok = F.least(sa, sb) >= F.lit(threshold) * F.greatest(sa, sb)
-    return (
-        a.join(b, (F.col("a.id") < F.col("b.id")) & size_ok)
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            jaccard_distinct(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    k: int = DEFAULT_SHINGLE_K,
-) -> DataFrame:
-    """EXACT n-gram Jaccard pairs without all-pairs: prefix filtering
-    (AllPairs/PPJoin, Chaudhuri et al. / Xiao et al.). Output is
-    IDENTICAL to :func:`jaccard_pairs` — prefix filtering is lossless —
-    but the candidate join touches only rare shingles:
+    """EXACT n-gram Jaccard pairs (doc_a < doc_b, jaccard >= threshold)
+    without all-pairs: prefix filtering (AllPairs/PPJoin, Chaudhuri et
+    al. / Xiao et al.). Similarity is over hashed shingle sets (see
+    hashed_shingle_set); docs shorter than k have none and pair with
+    nobody. Output is IDENTICAL to the all-pairs nested-loop join —
+    prefix filtering is lossless; that join is the brute-force twin in
+    tests/test_text_dedup.py — but the candidate join touches only rare
+    shingles:
 
     1. global document frequency per shingle (one groupBy);
     2. per doc, order shingles rarest-first (df, then shingle — one
@@ -226,8 +200,6 @@ def jaccard_pairs_prefix(
     times (df-count pass + two verification joins). The cache is
     referenced by the RETURNED lazy plan, so it lives until
     ``release_builder_caches()`` / ``spark.catalog.clearCache()``."""
-    from pyspark.sql.window import Window
-
     base = ensure_min_partitions(df).select(
         F.col(id_col).alias("id"), hashed_shingle_set(F.col(text_col), k).alias("sh")
     ).filter(F.size("sh") > 0)
@@ -335,7 +307,7 @@ def curate_corpus_funnel(
        reference a lower id).
 
     The pairs come from the lossless PPJoin prefix filter
-    (:func:`jaccard_pairs_prefix`) — EXACTLY the all-pairs result while
+    (:func:`jaccard_pairs`) — EXACTLY the all-pairs result while
     joining only rare shingles, so it is both the scale path and
     oracle-checkable."""
     from ehr_data_pipeline_spark.operators.text_analysis import text_stats
@@ -346,7 +318,7 @@ def curate_corpus_funnel(
     fp = q.select(F.col(id_col), fingerprint128(F.col(text_col)).alias("__fp"))
     keep = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col)).select(id_col)
     e = q.join(keep, id_col, "left_semi")
-    pairs = jaccard_pairs_prefix(e, id_col, text_col, jaccard_threshold, k)
+    pairs = jaccard_pairs(e, id_col, text_col, jaccard_threshold, k)
     removed = pairs.select(F.col("doc_b").alias(id_col)).distinct()
     n = e.join(removed, id_col, "left_anti")
 
@@ -368,7 +340,7 @@ _MINHASH_P = 2147483647  # 2^31 - 1, Mersenne prime
 
 # Frames persisted by the pair builders in this session, so long-lived
 # sessions can reclaim them (ADVICE r7: repeated minhash_lsh_pairs /
-# jaccard_pairs_prefix / near_dedup_against_index calls accumulate cached
+# jaccard_pairs / near_dedup_against_index calls accumulate cached
 # candidate sets for the life of the session otherwise). Lifetime
 # contract: a persisted index/candidate frame lives until the caller
 # invokes release_builder_caches(), spark.catalog.clearCache() (what

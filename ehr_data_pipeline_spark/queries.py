@@ -1580,10 +1580,9 @@ _JACCARD_SQL = (
 
 # Fixed-size slice for the registered exact-Jaccard verification query:
 # at most this many docs enter the pair join, so the registered surface
-# contains no query whose pair space grows with the corpus. The full
-# all-pairs operator remains the tests-only ground truth
-# (tests/test_text_dedup.py equivalence suite); the production-scale
-# exact path is jaccard_pairs_prefix / doc_minhash_lsh_pairs.
+# contains no query whose pair space grows with the corpus. The all-pairs
+# join is the tests-only ground truth (tests/test_text_dedup.py
+# equivalence suite); the approximate scale path is doc_minhash_lsh_pairs.
 _JACCARD_SLICE_DOCS = 2000
 
 
@@ -1607,14 +1606,13 @@ _JACCARD_SLICE_DOCS = 2000
 def doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact character-4-gram Jaccard near-dup pairs (threshold 0.6) on a
     FIXED-SIZE slice (doc_id < 2000): the registered exact-verification
-    query, pair space constant-bounded at any corpus scale — the
-    unbounded all-pairs join lives only in tests (equivalence suite in
-    tests/test_text_dedup.py) per the round-4 verdict, because a
-    registered query is graded as a production surface and O(n²) over
-    the whole corpus dies at 100×. Scale paths for the same semantics:
-    jaccard_pairs_prefix (exact, PPJoin prefix filter, bucketed) and
-    doc_minhash_lsh_pairs (approximate, banded). The doc_id-prefix
-    slice pushes down to the parquet scan on both engines."""
+    query, pair space constant-bounded at any corpus scale. It runs
+    jaccard_pairs, the PPJoin prefix filter (exact, joins only within
+    rare-shingle buckets); the all-pairs join it equals lives only in
+    tests (equivalence suite in tests/test_text_dedup.py). The
+    approximate scale path for the same semantics is
+    doc_minhash_lsh_pairs (banded). The doc_id-prefix slice pushes down
+    to the parquet scan on both engines."""
     from ehr_data_pipeline_spark.operators.text_dedup import jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents").filter(
@@ -3676,8 +3674,9 @@ def emb_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     work with an N-scaling broadcast — a scale-killer the plan-hygiene
     sweep (tests/test_plans.py) now flags. The 100 TB path for the same
     semantics is lsh_near_dup_pairs (joins within LSH buckets only),
-    recall-tested against this exact plan in tests/test_similarity.py;
-    the unbounded exact join lives only in tests."""
+    recall-tested against this exact plan in tests/test_similarity.py.
+    cosine_near_dup_pairs is the only exact cosine pair operator; no
+    registered query runs it over an unbounded input."""
     from ehr_data_pipeline_spark.operators.similarity import cosine_near_dup_pairs
 
     emb = _t(spark, sf_dir, "embeddings").filter(
@@ -4037,15 +4036,14 @@ def emb_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     families confirm candidates with exact cosine, so it is 1.0 by
     construction.
 
-    Scale note: the exact near-dup twin is inherently all-pairs (it
-    collects its input for one BLAS matmul), so the registered query
-    measures pair recall on a FIXED ``vec_id < 1000`` slice — the whole
-    table at the driver's sf0.01 gate, and a constant-size diagnostic
-    sample at any larger corpus (the ``doc_jaccard_pairs`` precedent).
-    The unbounded exact check stays tests-only."""
+    Scale note: the exact near-dup side is all-pairs (a broadcast nested
+    loop join), so the registered query measures pair recall on a FIXED
+    ``vec_id < 1000`` slice — the whole table at the sf0.01 oracle
+    gate, and a constant-size diagnostic sample at any larger corpus
+    (the ``doc_jaccard_pairs`` precedent)."""
     from ehr_data_pipeline_spark.operators.similarity import (
         brute_force_knn,
-        cosine_near_dup_pairs_arrow,
+        cosine_near_dup_pairs,
         lsh_knn,
         lsh_near_dup_pairs,
     )
@@ -4059,14 +4057,12 @@ def emb_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lsh_knn", 20, 3, 0.8,
     )
     # same plane/table config as the registered emb_lsh_neardup_pairs;
-    # the exact side uses the Arrow matmul twin (pair-set-identical to
-    # cosine_near_dup_pairs, equivalence-tested) — the report only needs
-    # the exact pair SET, and one BLAS matmul beats 12.5M interpreted
-    # cosine folds ~3x. Both sides run on the fixed vec_id<1000 slice so
-    # the exact twin's collect is bounded at any corpus scale.
+    # the exact side is cosine_near_dup_pairs, the emb_cosine_neardup_pairs
+    # plan. Both sides run on the fixed vec_id<1000 slice so the exact
+    # side's broadcast nested loop join is bounded at any corpus scale.
     emb_slice = emb.filter(F.col("vec_id") < 1000)
     pair_row = _recall_row(
-        cosine_near_dup_pairs_arrow(emb_slice, threshold=0.4),
+        cosine_near_dup_pairs(emb_slice, threshold=0.4, dim=64),
         lsh_near_dup_pairs(emb_slice, threshold=0.4, dim=64, n_planes=4, n_tables=8),
         ["id_a", "id_b"],
         "lsh_neardup_pairs", None, None, 0.7,

@@ -92,19 +92,19 @@ def test_distributed_prefix_sum_matches_naive(spark, vals, n_buckets):
 def test_prefix_filter_equals_brute_force(spark, texts, threshold):
     from ehr_data_pipeline_spark.operators.text_dedup import (
         jaccard_pairs,
-        jaccard_pairs_prefix,
         release_builder_caches,
     )
+    from tests.test_text_dedup import _jaccard_pairs_allpairs
 
     df = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(texts)],
         "doc_id long, text string",
     )
     brute = {(r["doc_a"], r["doc_b"], r["jaccard"])
-             for r in jaccard_pairs(df, threshold=threshold).collect()}
+             for r in _jaccard_pairs_allpairs(df, threshold=threshold).collect()}
     try:
         pref = {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in jaccard_pairs_prefix(df, threshold=threshold).collect()}
+                for r in jaccard_pairs(df, threshold=threshold).collect()}
     finally:
         # per example, not per test: hypothesis runs many examples
         # inside one test call and each persists its own shingle sets
@@ -208,14 +208,11 @@ def test_semantic_dedup_matches_python_reference(spark, vecs, n_clusters, thr):
     cluster-mate clears ROUND(cosine, 6) >= threshold. Integer
     components keep every dot product exact in double, so both
     engines compute bit-identical cosines; rounding reuses the
-    Spark-ROUND-parity helper."""
+    Spark-ROUND-parity reference."""
     import math
 
-    from ehr_data_pipeline_spark.operators.similarity import (
-        _round_half_up_6,
-        semantic_dedup,
-    )
-    import numpy as np
+    from ehr_data_pipeline_spark.operators.similarity import semantic_dedup
+    from tests.test_similarity import _round_half_up_6
 
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
@@ -244,7 +241,7 @@ def test_semantic_dedup_matches_python_reference(spark, vecs, n_clusters, thr):
         raw = sum(x * y for x, y in zip(a, b)) / (
             math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
         )
-        return float(_round_half_up_6(np.asarray([raw], dtype=np.float64))[0])
+        return _round_half_up_6(raw)
 
     assign = {i: cell(v) for i, v in valid}
     want = {}

@@ -4,6 +4,7 @@ and LSH recall/precision against the exact path."""
 from __future__ import annotations
 
 import random
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,15 @@ from ehr_data_pipeline_spark.operators.similarity import (
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def _round_half_up_6(x: float) -> float:
+    """Reference for Spark's ``ROUND(double, 6)``: Catalyst rounds the
+    shortest decimal representation of the double (``BigDecimal.valueOf``;
+    ``repr(float)`` is the same string) HALF_UP, i.e. half away from
+    zero. ``round()`` and ``np.round`` are half-even and disagree on
+    .xxxxxx5 boundaries."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
 
 @pytest.fixture(scope="module")
@@ -49,14 +59,10 @@ def test_brute_force_knn_shape(emb):
 
 
 def test_round_half_up_matches_spark_round_on_ties(spark):
-    """The Arrow path's rounding must agree with Catalyst's
+    """The tests-side rounding reference must agree with Catalyst's
     ROUND(double, 6) — HALF_UP on the shortest decimal representation —
     including constructed .xxxxxx5 boundaries (where np.round's half-even
     disagrees) and negatives (HALF_UP = away from zero)."""
-    import numpy as np
-
-    from ehr_data_pipeline_spark.operators.similarity import _round_half_up_6
-
     vals = [
         0.1234565, -0.1234565,       # .5 boundary, both signs
         0.9999995, -0.9999995,       # boundary rounding up to 1.0
@@ -65,7 +71,7 @@ def test_round_half_up_matches_spark_round_on_ties(spark):
         0.1234564999, 0.1234565001,  # just below/above the boundary
         0.123456, 1.0, -1.0, 0.0, 0.7071067811865476,
     ]
-    ours = _round_half_up_6(np.asarray(vals, dtype=np.float64))
+    ours = [_round_half_up_6(v) for v in vals]
     df = spark.createDataFrame(list(enumerate(vals)), "i long, x double")
     spark_rounded = {
         r["i"]: r["r"]
@@ -244,49 +250,15 @@ def test_ivf_cell_partitioned_index_prunes_reads(spark, emb, tmp_path):
     assert probed.count() == indexed.filter(F.col("cid").isin([0, 1])).count() > 0
 
 
-def test_cosine_near_dup_pairs_arrow_matches_native(spark):
-    from ehr_data_pipeline_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_arrow,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # embeddings-contract violators (functions/measurement.py), each a
-    # near-copy of vector 0 so an unfiltered twin would pair it: NULL
-    # vector, wrong length, zero norm, NaN component, NULL id
-    v0 = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
-    bad = spark.createDataFrame(
-        [
-            (90001, None),
-            (90002, v0[:4]),
-            (90003, [0.0] * 64),
-            (90004, [float("nan")] + v0[1:]),
-            (None, v0),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    emb = emb.select("vec_id", "embedding").unionByName(bad)
-    nat = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in cosine_near_dup_pairs(emb, threshold=0.4).collect()
-    }
-    arw = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in cosine_near_dup_pairs_arrow(emb, threshold=0.4).collect()
-    }
-    assert nat  # the valid corpus still pairs
-    assert nat == arw  # same pair set AND bit-identical rounded cosines
-
-
-def test_cosine_near_dup_pairs_arrow_empty_input(spark):
-    from ehr_data_pipeline_spark.operators.similarity import (
-        cosine_near_dup_pairs_arrow,
-    )
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = cosine_near_dup_pairs_arrow(empty)
+def test_cosine_near_dup_pairs_empty_input(spark):
+    """An empty input returns the pair columns, and the id columns keep
+    the input id type (an int id stays int, not widened to long)."""
+    empty = spark.createDataFrame([], "vec_id int, embedding array<float>")
+    out = cosine_near_dup_pairs(empty)
     assert out.count() == 0
     assert out.columns == ["id_a", "id_b", "cosine"]
+    types = dict(out.dtypes)
+    assert types["id_a"] == types["id_b"] == "int"
 
 
 @pytest.fixture(scope="module")

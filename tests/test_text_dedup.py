@@ -18,6 +18,8 @@ from ehr_data_pipeline_spark.operators.text_dedup import (
     exact_dedup,
     exact_dup_stats,
     hamming64,
+    hashed_shingle_set,
+    jaccard_distinct,
     jaccard_pairs,
     minhash_affine_params,
     minhash_lsh_pairs,
@@ -48,6 +50,29 @@ def _simhash_fold(tokens):
         return out
 
     return let_bound(F.transform(tokens, portable_hash60), fold)
+
+
+def _jaccard_pairs_allpairs(df, threshold):
+    """Reference twin of ``jaccard_pairs`` over (doc_id, text): the
+    brute-force all-pairs nested-loop join over the same hashed shingle
+    sets, with the size-ratio prune (J <= min/max of the set sizes) in
+    the join condition. O(n²), so it lives here as the ground truth the
+    PPJoin prefix filter and the MinHash-LSH path are checked against."""
+    base = df.select(
+        F.col("doc_id").alias("id"), hashed_shingle_set(F.col("text")).alias("sh")
+    ).filter(F.size("sh") > 0)
+    a, b = base.alias("a"), base.alias("b")
+    sa, sb = F.size(F.col("a.sh")), F.size(F.col("b.sh"))
+    size_ok = F.least(sa, sb) >= F.lit(threshold) * F.greatest(sa, sb)
+    return (
+        a.join(b, (F.col("a.id") < F.col("b.id")) & size_ok)
+        .select(
+            F.col("a.id").alias("doc_a"),
+            F.col("b.id").alias("doc_b"),
+            jaccard_distinct(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 BASE = (
@@ -109,21 +134,22 @@ def test_jaccard_prefix_filter_matches_allpairs(corpus):
     and identical Jaccard values to the brute-force all-pairs join, while
     joining only within rare-shingle buckets — the exact-result scale
     path."""
-    from ehr_data_pipeline_spark.operators.text_dedup import jaccard_pairs_prefix
-
     brute = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in jaccard_pairs(corpus, threshold=0.6).collect()
+        for r in _jaccard_pairs_allpairs(corpus, threshold=0.6).collect()
     }
     pref = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in jaccard_pairs_prefix(corpus, threshold=0.6).collect()
+        for r in jaccard_pairs(corpus, threshold=0.6).collect()
     }
     assert pref == brute and len(pref) > 0
 
 
 def test_minhash_lsh_matches_ground_truth(corpus):
-    exact = {(r["doc_a"], r["doc_b"]) for r in jaccard_pairs(corpus, threshold=0.6).collect()}
+    exact = {
+        (r["doc_a"], r["doc_b"])
+        for r in _jaccard_pairs_allpairs(corpus, threshold=0.6).collect()
+    }
     lsh = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(corpus, threshold=0.6).collect()}
     # verification guarantees precision 1.0 (subset of exact); recall on
     # true near-dups (J≥0.9 here) is ~1 with 16 hashes / 4 bands
@@ -231,7 +257,7 @@ def test_minhash_duplicate_heavy_matches_pairwise_semantics(dup_heavy_corpus):
     }
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in jaccard_pairs(dup_heavy_corpus, threshold=0.6).collect()
+        for r in _jaccard_pairs_allpairs(dup_heavy_corpus, threshold=0.6).collect()
     }
     # precision 1.0: verified subset of the exact ground truth, identical values
     assert set(pairs) <= set(exact)
@@ -412,10 +438,10 @@ def test_simhash_portable_hamming(spark, corpus):
 def test_jaccard_prefix_filter_matches_allpairs_random_corpus(spark):
     """Randomized (seeded) corpus: 120 docs built by mutating a handful
     of base texts — prefix filtering must still return the EXACT brute
-    force pair set across a spread of sizes, overlaps and thresholds."""
+    force pair set across a spread of sizes, overlaps and thresholds. A
+    NULL text and a text shorter than the shingle width have no shingles
+    and pair with nobody."""
     import random
-
-    from ehr_data_pipeline_spark.operators.text_dedup import jaccard_pairs_prefix
 
     rng = random.Random(42)
     words = [f"w{i:03d}" for i in range(80)]
@@ -426,18 +452,20 @@ def test_jaccard_prefix_filter_matches_allpairs_random_corpus(spark):
         for _ in range(rng.randrange(3)):  # up to 2 point mutations
             t[rng.randrange(len(t))] = rng.choice(words)
         rows.append((i, " ".join(t)))
+    rows += [(120, None), (121, "w0")]  # NULL text; shorter than k
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     for thr in (0.5, 0.8):
         brute = {
             (r["doc_a"], r["doc_b"], r["jaccard"])
-            for r in jaccard_pairs(corpus, threshold=thr).collect()
+            for r in _jaccard_pairs_allpairs(corpus, threshold=thr).collect()
         }
         pref = {
             (r["doc_a"], r["doc_b"], r["jaccard"])
-            for r in jaccard_pairs_prefix(corpus, threshold=thr).collect()
+            for r in jaccard_pairs(corpus, threshold=thr).collect()
         }
         assert pref == brute, f"threshold {thr}"
         assert len(brute) > 0
+        assert not any({120, 121} & {a, b} for a, b, _ in pref)
 
 
 def test_simhash_band_pairs_exact_below_band_count(spark, corpus):
