@@ -40,8 +40,6 @@ from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.fhir.schema import BUNDLE_SCHEMA, RESOURCE_TYPES
 
-URN_UUID = "urn:uuid:"
-
 
 def strip_urn_uuid(col: Column) -> Column:
     """F1 prefix strip (json_pipeline.py:75,128-151). The reference uses

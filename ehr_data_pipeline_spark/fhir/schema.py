@@ -33,7 +33,6 @@ def _f(name: str, dtype) -> StructField:
 
 # struct<coding: array<struct<code, display>>> — the universal FHIR pattern
 CODING = ArrayType(_s(_f("code", StringType()), _f("display", StringType())))
-CODEABLE_CONCEPT = _s(_f("coding", CODING), _f("text", StringType()))
 REFERENCE = _s(_f("reference", StringType()))
 
 # address[0].extension[0].extension[*]{url, valueDecimal} geo wrapper

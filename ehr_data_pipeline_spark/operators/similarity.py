@@ -137,6 +137,14 @@ def dot(a: Column, b: Column) -> Column:
     return _dot_d(to_double(a), to_double(b))
 
 
+def _norm(vec: Column) -> Column:
+    """‖v‖ as ``sqrt(v·v)`` over the double-cast vector, cast once per
+    row — the same fold :func:`cosine` runs for each side."""
+    from ehr_data_pipeline_spark.operators.text_analysis import let_bound
+
+    return let_bound(to_double(vec), lambda x: F.sqrt(_dot_d(x, x)))
+
+
 def cosine(a: Column, b: Column) -> Column:
     """a·b / (‖a‖·‖b‖), with both double-cast vectors let-bound so the
     cast runs once per row instead of once per fold (a·b, a·a, b·b).
@@ -368,21 +376,25 @@ def cosine_near_dup_pairs(
     100 TB use the LSH-bucketed variant and keep this one for
     verification samples. Invalid vectors are excluded at entry per the
     embeddings contract (functions/measurement.py); ``dim=None`` infers
-    it from the data."""
+    it from the data.
+
+    Each row's norm ``sqrt(v·v)`` is computed once before the join, so a
+    pair costs one fold (``a·b``) instead of :func:`cosine`'s three; the
+    folds and their order are the same, so the doubles are identical."""
     dim = _resolve_dim(df, dim, id_col, vec_col)
     if dim is None:
         return _empty_pairs(df, id_col)
     df = ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    norm = _norm(F.col(vec_col))
+    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
+                  norm.alias("__na"))
+    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
+                  norm.alias("__nb"))
+    score = dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
     return (
         F.broadcast(a)
         .join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
-        )
+        .select("id_a", "id_b", F.round(score, 6).alias("cosine"))
         .filter(F.col("cosine") >= F.lit(threshold))
     )
 

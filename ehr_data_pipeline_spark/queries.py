@@ -27,7 +27,7 @@ stays an independent statement of its query.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,16 +62,14 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => non-SQL-expressible, rows-only check
     bench: bool = False  # part of the bench.py headline set
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, bench: bool = False,
-             tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None, bench: bool = False):
     def deco(fn):
-        REGISTRY[name] = QuerySpec(name, fn, oracle, bench, tags)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, bench)
         return fn
     return deco
 
@@ -124,7 +122,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
     bench=True,
-    tags=("filter", "groupBy", "agg"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate. Exercises the engine's grouped
@@ -168,7 +165,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     bench=True,
-    tags=("join", "groupBy", "topk"),
 )
 def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join, grouped agg, total-ordered top-k.
@@ -207,7 +203,6 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
     bench=True,
-    tags=("join", "broadcast", "groupBy"),
 )
 def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 5-way star join with broadcast dimensions.
@@ -243,7 +238,6 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
-    tags=("join", "anti"),
 )
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (SURVEY §2.7 gap list). Scale notes: anti join
@@ -263,7 +257,6 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
     """,
-    tags=("join", "semi"),
 )
 def customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join with a pushed-down predicate on the probe side."""
@@ -290,7 +283,6 @@ def customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 3
     """,
     bench=True,
-    tags=("window", "topk"),
 )
 def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via row_number window (SURVEY §2.7 gap list; also the
@@ -326,7 +318,6 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e
     WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
     """,
-    tags=("window", "lag", "swap"),
 )
 def events_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag() deltas per user plus the least/greatest pair — the same
@@ -378,7 +369,6 @@ def events_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_quantity < 0.2 * pa.avg_qty
     GROUP BY p.p_brand
     """,
-    tags=("join", "correlated-subquery", "agg"),
 )
 def small_quantity_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated scalar subquery (per-part average
@@ -422,7 +412,6 @@ def small_quantity_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY o.o_orderstatus
     """,
-    tags=("anti-join", "quantified-predicate", "agg"),
 )
 def orders_no_returned_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Universally-quantified predicate (no lineitem of the order was
@@ -456,7 +445,6 @@ def orders_no_returned_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("agg", "percentile"),
 )
 def lineitem_quantity_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolation percentiles per group (Spark
@@ -481,7 +469,6 @@ def lineitem_quantity_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame
            CAST(NULL AS VARCHAR) AS region
     FROM events
     """,
-    tags=("projection", "schema-align"),
 )
 def events_projected_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2+P4 parity (json_pipeline.py:164, :165-184): pattern-drop the
@@ -512,7 +499,6 @@ def events_projected_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("agg", "distinct"),
 )
 def event_type_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct aggregation (per-type user reach). Exact COUNT(DISTINCT)
@@ -545,7 +531,6 @@ _PRIORITY_ALIASES = ("urgent", "high", "medium", "not_specified", "low")
     JOIN nation n ON n.n_nationkey = c.c_nationkey
     GROUP BY n.n_name
     """,
-    tags=("pivot", "join", "agg"),
 )
 def nation_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long → wide): order counts per nation × order priority via
@@ -584,7 +569,6 @@ def nation_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
     ) r ON r.o_custkey = c.c_custkey
     """,
-    tags=("set-op", "intersect", "semi-join"),
 )
 def repeat_customers_both_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT set semantics (customers ordering in both 1996 and
@@ -625,7 +609,6 @@ def repeat_customers_both_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     HAVING COUNT(*) > 0
     """,
-    tags=("rollup",),
 )
 def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (SURVEY §2.7 gap list). Empty-input contract
@@ -651,7 +634,6 @@ def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (l_returnflag, l_linestatus)
     HAVING COUNT(*) > 0
     """,
-    tags=("cube",),
 )
 def cube_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (SURVEY §2.7 gap list). Same empty-input
@@ -673,7 +655,6 @@ def cube_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p_retailprice DESC, p_partkey ASC
     LIMIT 20
     """,
-    tags=("sort", "limit"),
 )
 def parts_top20_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global sort + limit (SURVEY §2.7 gap list). Spark plans
@@ -701,7 +682,6 @@ def parts_top20_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     bench=True,
-    tags=("window-agg", "time"),
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-hour aggregation. Scale notes: single shuffle on
@@ -739,7 +719,6 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ev
     GROUP BY event_type
     """,
-    tags=("json", "semi-structured"),
 )
 def events_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction from a JSON string column — the engine's
@@ -765,7 +744,6 @@ def events_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("router", "P1"),
 )
 def event_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-by-value routing parity (P1, json_pipeline.py:61-94): the
@@ -783,7 +761,6 @@ def event_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE event_type = 'purchase' AND value > 250
     """,
-    tags=("filter", "P1"),
 )
 def purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One routed partition (P1) + predicate filter; both predicates push
@@ -807,7 +784,6 @@ def purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS value_filled
     FROM events
     """,
-    tags=("clean", "F9", "F10", "F13"),
 )
 def clean_events_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional null-out + constant fill parity (F9/F10 null-out at
@@ -828,7 +804,6 @@ def clean_events_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, regexp_replace(source, '^src', 'origin-') AS origin
     FROM documents
     """,
-    tags=("string", "F1"),
 )
 def source_prefix_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-rewrite parity (F1 urn:uuid strip, json_pipeline.py:75,128-151)
@@ -856,7 +831,6 @@ def source_prefix_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_ts
     FROM ev
     """,
-    tags=("quality", "A2", "F5-F8"),
 )
 def events_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass validation-violation counting (A2 at
@@ -908,7 +882,6 @@ def events_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM orders
     ), t
     """,
-    tags=("quality", "A1"),
 )
 def missing_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missing-value profile parity (A1, data_quality_checker.py:10-31):
@@ -932,7 +905,6 @@ def missing_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem
     ) WHERE rn = 1
     """,
-    tags=("dedup", "U2"),
 )
 def lineitem_first_line_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic keep-first dedup (U2, data_quality_checker.py:340-352).
@@ -964,7 +936,6 @@ def lineitem_first_line_per_order(spark: SparkSession, sf_dir: str) -> DataFrame
       HAVING COUNT(*) > 1
     )
     """,
-    tags=("quality", "A4"),
 )
 def duplicate_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate counting with pandas keep=False semantics (A4,
@@ -987,7 +958,6 @@ def duplicate_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY o_orderstatus
     """,
-    tags=("union", "U1"),
 )
 def union_by_name_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-append parity (U1, json_pipeline.py:68,82-94): split + by-name
@@ -1050,7 +1020,6 @@ def union_by_name_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE CAST(0.0 AS DOUBLE) END AS pct
     FROM checks c, t
     """,
-    tags=("quality", "A3", "A4", "A5"),
 )
 def events_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Config-driven quality-check suite parity (A5,
@@ -1111,7 +1080,6 @@ def events_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_valid_lat
     FROM d
     """,
-    tags=("validation", "F5-F8"),
 )
 def validator_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5-F8 validators (functions/validation.py, regex-identical to
@@ -1157,7 +1125,6 @@ def validator_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
     FROM documents
     """,
-    tags=("nested", "N3"),
 )
 def doc_token_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First/last array-element extraction — the N3 name idiom
@@ -1187,7 +1154,6 @@ def doc_token_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS long_tokens
     FROM documents
     """,
-    tags=("nested", "N2", "N4", "N11"),
 )
 def doc_array_match_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate-match extraction + in-row flatten-join: N2 telecom
@@ -1228,7 +1194,6 @@ def doc_array_match_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN concat(lang, ' ', source) END AS full_name_style
     FROM documents
     """,
-    tags=("string", "F2", "F3", "F4"),
 )
 def doc_name_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe concatenation parity: F2/F4 keep missing parts as ''
@@ -1370,7 +1335,6 @@ def _null_out_sql(col: str, valid: str) -> str:
       CASE WHEN longitude IS NULL OR longitude BETWEEN -180 AND 180 THEN longitude END AS longitude
     ) FROM deduped
     """,
-    tags=("fhir", "S1", "S3", "P1", "N1-N5", "F9-F13", "U2"),
 )
 def fhir_pipeline_cleaned_patients(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole spine end-to-end — scan → explode → route →
@@ -1432,7 +1396,6 @@ def fhir_pipeline_cleaned_patients(spark: SparkSession, sf_dir: str) -> DataFram
              AS quality_score
     FROM c
     """,
-    tags=("text", "quality-score"),
 )
 def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document stats + quality score (length/punct/digit/stopword
@@ -1480,7 +1443,6 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ELSE 'und' END AS lang_id
     FROM h
     """,
-    tags=("text", "lang-id"),
 )
 def doc_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-hit language identification with a deterministic priority
@@ -1517,7 +1479,6 @@ def doc_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_occurrences DESC, ngram ASC
     LIMIT 20
     """,
-    tags=("text", "ngram", "topk"),
 )
 def doc_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 word bigrams: in-row n-gram construction (no
@@ -1547,7 +1508,6 @@ def doc_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_rows_in_dup_groups
     FROM g
     """,
-    tags=("dedup", "exact-text"),
 )
 def doc_exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact text dedup on the normalized-content fingerprint: corpus-level
@@ -1601,7 +1561,6 @@ _JACCARD_SLICE_DOCS = 2000
     )
     SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.6
     """,
-    tags=("dedup", "jaccard", "near-dup"),
 )
 def doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact character-4-gram Jaccard near-dup pairs (threshold 0.6) on a
@@ -1698,7 +1657,6 @@ _MINHASH_REACH_SQL = f"""{_MINHASH_SIG_CTES},
     """,
     bench=True,  # round-5: the LLM/scale dedup paths get round-over-round
     # perf signal alongside the relational headliners (VERDICT r4 #5)
-    tags=("dedup", "minhash", "lsh", "near-dup"),
 )
 def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs — the 100 TB path: 16 affine
@@ -1725,7 +1683,6 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT component, COUNT(*) AS n_docs, MAX(doc_id) AS max_doc
     FROM comp GROUP BY component
     """,
-    tags=("dedup", "connected-components", "iterative"),
 )
 def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the MinHash-LSH pair
@@ -1758,7 +1715,6 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_MINHASH_REACH_SQL}
     SELECT id AS doc_id, MIN(r) AS group_id FROM reach GROUP BY id
     """,
-    tags=("dedup", "minhash", "lsh", "near-dup", "connected-components"),
 )
 def doc_minhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION surface of MinHash near-dup dedup (VERDICT r7 #1):
@@ -1809,7 +1765,6 @@ _SIMHASH_SKETCH_SQL = f"""t AS (
     WITH {_SIMHASH_SKETCH_SQL}
     SELECT doc_id, simhash, {_SIMHASH_BAND_COLS} FROM s
     """,
-    tags=("dedup", "simhash"),
 )
 def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 60-bit portable SimHash + its four 15-bit band keys
@@ -1841,7 +1796,6 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     """,
     bench=True,
-    tags=("dedup", "simhash", "near-dup"),
 )
 def doc_simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs via band-bucket join — the sketch scale
@@ -1870,7 +1824,6 @@ def doc_simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), {_closure_sql("p", "doc_a", "doc_b")}
     SELECT id AS doc_id, MIN(r) AS group_id FROM reach GROUP BY id
     """,
-    tags=("dedup", "simhash", "near-dup", "connected-components"),
 )
 def doc_simhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION surface of SimHash near-dup dedup — per-doc cluster
@@ -1931,7 +1884,6 @@ def doc_simhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN c ca ON ca.doc_id = p.doc_a
     JOIN c cb ON cb.doc_id = p.doc_b
     """,
-    tags=("dedup", "fingerprint", "winnowing"),
 )
 def doc_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprinting (winnowing / MOSS): per-doc
@@ -2003,7 +1955,6 @@ _QUALITY_SQL = """
     UNION ALL SELECT 3, 'exact_dedup', (SELECT COUNT(*) FROM e)
     UNION ALL SELECT 4, 'near_dedup', (SELECT COUNT(*) FROM n)
     """,
-    tags=("dedup", "pipeline", "quality-score"),
 )
 def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed LLM-corpus curation pipeline as one lazy plan:
@@ -2047,7 +1998,6 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS contamination_ratio
     FROM hits h JOIN totals t USING (doc_id)
     """,
-    tags=("decontamination", "ngram-overlap", "training-data"),
 )
 def doc_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (GPT-3/PaLM 13-gram rule): flag corpus
@@ -2088,7 +2038,6 @@ def doc_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS top_bigram_share
     FROM c GROUP BY doc_id
     """,
-    tags=("text", "quality", "repetition"),
 )
 def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition signals (the Gopher/MassiveText quality
@@ -2141,7 +2090,6 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, term, rank, tfidf FROM r WHERE rank <= 3
     """,
-    tags=("text", "tfidf", "relevance"),
 )
 def doc_top_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 TF-IDF terms (operators/text_analysis.py
@@ -2171,7 +2119,6 @@ def doc_top_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY split
     """,
-    tags=("sampling", "split", "training-data"),
 )
 def doc_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test assignment over the corpus
@@ -2209,7 +2156,6 @@ def doc_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(n_tokens) AS BIGINT) AS max_tokens
     FROM t GROUP BY bucket
     """,
-    tags=("text", "histogram"),
 )
 def doc_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token-length histogram (bucket width 10) — the
@@ -2301,7 +2247,6 @@ def _gopher_flags_sql() -> str:
                 AS BIGINT) AS n_pass_all
     FROM g GROUP BY source
     """,
-    tags=("text", "quality-gate", "gopher"),
 )
 def doc_gopher_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source audit of the seven Gopher corpus-filtering rules (Rae et
@@ -2349,7 +2294,6 @@ def doc_gopher_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(LEAST(len(ws) - start, 32) AS BIGINT) AS n_chunk_tokens
     FROM s
     """,
-    tags=("text", "chunking", "rag"),
 )
 def doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunks (size 32, overlap 8) over every
@@ -2477,7 +2421,6 @@ _C4_CURATION_SQL = f"""{_C4_LINED_SQL}, blocked AS (
       AND NOT contains(text2, '{{')
       AND len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]')) >= 3
     """,
-    tags=("text", "cleaning", "c4", "quality"),
 )
 def doc_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style line-level cleaning (operators/cleaning.py
@@ -2512,7 +2455,6 @@ _BLOCKLIST = ("dup", "quasar")
                                chr(10) ORDER BY idx), '') AS clean_text
     FROM r GROUP BY doc_id
     """,
-    tags=("text", "cleaning", "c4", "dedup", "composition"),
 )
 def doc_curation_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BATCH twin of the continuous curation funnel's cleaning
@@ -2557,7 +2499,6 @@ def doc_curation_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     WHERE NOT list_has_any(words, ['dup', 'quasar'])
     """,
-    tags=("text", "cleaning", "c4", "quality"),
 )
 def doc_c4_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4's page-level blocklist rule (operators/cleaning.py
@@ -2597,7 +2538,6 @@ def doc_c4_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(dropped.n_pages_dropped AS BIGINT) AS n_pages_dropped
     FROM b LEFT JOIN hits ON b.word = hits.word CROSS JOIN dropped
     """,
-    tags=("text", "cleaning", "c4", "quality", "report"),
 )
 def doc_c4_blocklist_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule audit of the blocklist filter (operators/cleaning.py
@@ -2643,7 +2583,6 @@ _PARA_FIXTURE_SQL = f"""t AS (
                                chr(10) || chr(10) ORDER BY idx), '') AS clean_text
     FROM r GROUP BY doc_id
     """,
-    tags=("text", "cleaning", "dedup", "paragraph"),
 )
 def doc_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide exact paragraph dedup (operators/cleaning.py
@@ -2696,7 +2635,6 @@ def _para_lined_docs(d: DataFrame) -> DataFrame:
                                chr(10) || chr(10) ORDER BY pos), '') AS clean_text
     FROM m GROUP BY doc_id
     """,
-    tags=("text", "cleaning", "dedup", "paragraph", "incremental", "index"),
 )
 def doc_incremental_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental paragraph dedup against a fingerprint index
@@ -2744,7 +2682,6 @@ def doc_incremental_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFra
              / (CAST(n_tokens AS DOUBLE) * 10000.0) AS avg_neg_logp_bits
     FROM per_doc, total
     """,
-    tags=("text", "quality-score", "language-model"),
 )
 def doc_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document unigram LM quality score (bits/token under the
@@ -2786,7 +2723,6 @@ def doc_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, n_tokens, n_hits FROM hits WHERE n_hits >= 1
     """,
-    tags=("sampling", "pps", "weighted", "prefix-sum"),
 )
 def doc_pps_token_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling as a driver row: a 20-point systematic
@@ -2856,7 +2792,6 @@ _BM25_SCORED_SQL = f"""
     SELECT doc_id, bm25_micro, bm25 FROM bm25
     ORDER BY bm25_micro DESC, doc_id ASC LIMIT 20
     """,
-    tags=("text", "retrieval", "bm25", "fixed-point"),
 )
 def doc_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 lexical retrieval (``text_analysis.bm25_scores``):
@@ -2891,7 +2826,6 @@ def doc_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, bm25_micro, bm25 FROM bm25
     ORDER BY bm25_micro DESC, doc_id ASC LIMIT 20
     """,
-    tags=("text", "retrieval", "bm25", "index", "incremental", "mergeable"),
 )
 def doc_bm25_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval against a PERSISTED, MERGEABLE inverted index
@@ -2994,7 +2928,6 @@ _EXACT_KNN_TOP3_SQL = f"""
     ORDER BY rrf_score DESC, doc_id ASC
     LIMIT 20
     """,
-    tags=("retrieval", "hybrid", "rrf", "bm25", "similarity"),
 )
 def doc_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via Reciprocal Rank Fusion (Cormack et al.):
@@ -3118,7 +3051,6 @@ def doc_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT node, rank FROM r3
     """,
-    tags=("graph", "pagerank", "iterative", "fixed-point"),
 )
 def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the nation-level trade network (edges: customer
@@ -3194,7 +3126,6 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY avg_logw_bits DESC, p.doc_id ASC
     LIMIT 50
     """,
-    tags=("text", "data-selection", "dsir", "importance-weighting"),
 )
 def doc_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style domain-targeted data selection
@@ -3252,7 +3183,6 @@ def doc_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 1000000.0)))) AS BIGINT) / 1000000.0 AS prob
     FROM per_doc
     """,
-    tags=("text", "quality", "classifier", "fasttext"),
 )
 def doc_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style hashed linear quality-classifier scoring over the
@@ -3280,7 +3210,6 @@ def doc_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "emb_knn_topk",
     oracle=_EXACT_KNN_TOP3_SQL,
-    tags=("similarity", "knn", "brute-force"),
 )
 def emb_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-3 neighbors for a fixed query set (vec_id < 5):
@@ -3311,7 +3240,6 @@ _CENTROID_SQL = ", ".join(
     FROM embeddings
     GROUP BY label
     """,
-    tags=("similarity", "centroid", "ivf"),
 )
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label mean vectors (IVF-style coarse-quantizer assignment /
@@ -3343,7 +3271,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 10000000.0 AS gram
     FROM p GROUP BY 1, 2
     """,
-    tags=("similarity", "statistics", "covariance"),
 )
 def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Gram matrix XᵀX over the embedding corpus
@@ -3413,7 +3340,6 @@ def _lsh_any_table_match(a: str, b: str, n_tables: int) -> str:
         ON e.vec_id = cand.neighbor_id
     ), {_knn_top3_sql("p")}
     """,
-    tags=("similarity", "knn", "lsh"),
 )
 def emb_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-3 neighbors via random-hyperplane LSH (the 100 TB
@@ -3473,7 +3399,6 @@ _SQDIST_SQL = (
     ), {_knn_top3_sql("p2")}
     """,
     bench=True,
-    tags=("similarity", "knn", "ivf"),
 )
 def emb_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-3 neighbors via IVF cell probing: 8 seeded coarse
@@ -3539,7 +3464,6 @@ def emb_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ON e.vec_id = cand.neighbor_id
     ), {_knn_top3_sql("p2")}
     """,
-    tags=("similarity", "knn", "ivf", "index", "incremental"),
 )
 def emb_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN search against a PERSISTED IVF index — the serving-path
@@ -3590,7 +3514,6 @@ def emb_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_events
     FROM s GROUP BY user_id, session_id
     """,
-    tags=("session-window", "stateful", "streaming-twin"),
 )
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap) via the native
@@ -3660,7 +3583,6 @@ def _lsh_pair_cosine_sql(n_planes: int, n_tables: int) -> str:
     )
     SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.4
     """,
-    tags=("dedup", "similarity", "near-dup"),
 )
 def emb_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate detection — the fifth dedup family
@@ -3692,7 +3614,6 @@ def emb_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.4
     ORDER BY cosine DESC, id_a ASC, id_b ASC LIMIT 10000
     """,
-    tags=("dedup", "similarity", "near-dup", "lsh", "diagnostic"),
 )
 def emb_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIAGNOSTIC variant (VERDICT r8 #3): the low-threshold (0.4) pair
@@ -3732,7 +3653,6 @@ def emb_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_lsh_pair_cosine_sql(12, 16)}
     SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.9
     """,
-    tags=("dedup", "similarity", "near-dup", "lsh"),
 )
 def emb_lsh_neardup_pairs_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SHOWCASED embedding near-dup pair surface (VERDICT r8 #3):
@@ -3768,7 +3688,6 @@ def emb_lsh_neardup_pairs_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), {_closure_sql("pr", "id_a", "id_b")}
     SELECT id AS vec_id, MIN(r) AS group_id FROM reach GROUP BY id
     """,
-    tags=("dedup", "similarity", "near-dup", "lsh", "connected-components"),
 )
 def emb_lsh_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION surface of embedding near-dup dedup (VERDICT r7 #1):
@@ -3833,7 +3752,6 @@ _SEMDEDUP_ASSIGN_SQL = f"""k AS (
     FROM assign s LEFT JOIN dropped d ON d.vec_id = s.vec_id
     """,
     bench=True,
-    tags=("dedup", "similarity", "semantic", "clustering"),
 )
 def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster with the seeded IVF coarse
@@ -3881,7 +3799,6 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s.vec_id >= 25
       AND s.vec_id NOT IN (SELECT vec_id FROM dropped)
     """,
-    tags=("dedup", "incremental", "semantic", "clustering", "index"),
 )
 def emb_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SemDeDup against a persisted vector index — the
@@ -3952,7 +3869,6 @@ def emb_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     SELECT vec_id, benchmark_id, cosine FROM r
     WHERE rnk = 1 AND cosine >= 0.4
     """,
-    tags=("decontamination", "similarity", "quality-gate"),
 )
 def emb_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic benchmark decontamination — the embedding-space twin of
@@ -4021,7 +3937,6 @@ def _recall_row(
     SELECT 'lsh_neardup_pairs', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
            CAST(0.7 AS DOUBLE), true
     """,
-    tags=("similarity", "lsh", "recall", "quality-gate"),
 )
 def emb_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible recall floors for the hyperplane-LSH family — the
@@ -4077,7 +3992,6 @@ def emb_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(3 AS BIGINT) AS k, CAST(0.6 AS DOUBLE) AS recall_floor,
            true AS floor_met
     """,
-    tags=("similarity", "ivf", "recall", "quality-gate"),
 )
 def emb_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible recall floor for `emb_ivf_knn` (no SQL twin —
@@ -4112,7 +4026,6 @@ def emb_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM purchases p ASOF LEFT JOIN clicks c
       ON p.user_id = c.user_id AND c.ts <= p.ts
     """,
-    tags=("asof-join", "temporal", "window"),
 )
 def purchase_last_click_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (an operator Spark lacks natively, built as union +
@@ -4166,7 +4079,6 @@ def purchase_last_click_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.click_ts < e.ts
     GROUP BY e.event_id, e.user_id, e.ts
     """,
-    tags=("range-join", "temporal"),
 )
 def error_recent_click_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join (operators/temporal.py): clicks by the same user in the
@@ -4225,7 +4137,6 @@ def error_recent_click_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sum_value_locf
     FROM grid LEFT JOIN a USING (bucket_start, event_type)
     """,
-    tags=("time-series", "gapfill", "locf"),
 )
 def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense hourly spine with zero-filled counts and LOCF value sums
@@ -4256,7 +4167,6 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM weeks w JOIN cohorts c USING (user_id)
     GROUP BY 1, 2
     """,
-    tags=("retention", "cohort", "time"),
 )
 def user_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention — the canonical product-analytics shape:
@@ -4307,7 +4217,6 @@ def user_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e
     GROUP BY 1, 2
     """,
-    tags=("rollup", "hypertable", "incremental", "mergeable"),
 )
 def events_hourly_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-aggregate maintenance (the hypertable rollup pattern):
@@ -4367,7 +4276,6 @@ def events_hourly_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM addr a JOIN cells c ON c.row = a.row AND c.bucket = a.bucket
     GROUP BY a.user_id, a.exact_cnt
     """,
-    tags=("sketch", "count-min", "approx-with-exact-oracle"),
 )
 def user_cms_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch accuracy report: build a 4×64 CM sketch over
@@ -4428,7 +4336,6 @@ def user_cms_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
            e.zero_registers
     FROM est e JOIN exact_ x USING (event_type)
     """,
-    tags=("sketch", "hyperloglog", "mergeable", "approx-with-exact-oracle"),
 )
 def event_user_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-user estimates per event type
@@ -4474,7 +4381,6 @@ def event_user_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.n_rows DESC, c.user_id ASC NULLS LAST
     LIMIT 10
     """,
-    tags=("skew", "diagnosis", "top-k"),
 )
 def events_user_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew diagnosis as a driver row — the top-10 heaviest join keys
@@ -4525,7 +4431,6 @@ def events_user_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * ((600.0 - 0.0) / 64.0) AS quantile_est
     FROM hit
     """,
-    tags=("sketch", "quantile", "histogram", "mergeable", "approx-with-exact-oracle"),
 )
 def events_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable histogram quantile sketch
@@ -4588,7 +4493,6 @@ def events_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS false_negatives
     FROM tagged
     """,
-    tags=("sketch", "bloom-filter", "join-pruning", "approx-with-exact-oracle"),
 )
 def orders_bloom_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter semi-join pruning report: a 4096-bit / 5-hash filter
@@ -4664,7 +4568,6 @@ def orders_bloom_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(b) AS DOUBLE) / COUNT(*) AS mean_b
     FROM by GROUP BY asset_id, width, height
     """,
-    tags=("multimodal", "image", "features"),
 )
 def media_image_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-channel means from the REAL mapInPandas decode+feature path
@@ -4706,7 +4609,6 @@ def media_image_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(coalesce(text, '') || 'seg' || CAST(s.seg AS VARCHAR)) AS segment_payload_md5
     FROM a, UNNEST(range(0, (duration_ms + 999) // 1000)) AS s(seg)
     """,
-    tags=("multimodal", "audio", "segmentation"),
 )
 def media_audio_segment_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fixed-window segmentation PLAN for audio assets, hash-checked
@@ -4749,7 +4651,6 @@ def media_audio_segment_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(coalesce(text, '') || CAST(f.frame_idx AS VARCHAR)) AS frame_payload_md5
     FROM v, UNNEST(range(0, n_frames, 2)) AS f(frame_idx)
     """,
-    tags=("multimodal", "video", "frame-sample"),
 )
 def media_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The frame-sampling PLAN for video assets, hash-checked end to end
@@ -4797,7 +4698,6 @@ def media_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(width) AS max_width
     FROM assets GROUP BY media_type
     """,
-    tags=("multimodal", "metadata"),
 )
 def media_meta_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only profile of the multimodal asset table (binary payload
@@ -4871,7 +4771,6 @@ def media_meta_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bits b JOIN tot t USING (asset_id)
     GROUP BY b.asset_id, b.width, b.height, t.rtot, t.gtot, t.btot, t.ntot
     """,
-    tags=("multimodal", "mapInPandas", "pandas-udf"),
 )
 def media_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode + feature-extract over the image subset of the asset table:
@@ -4914,7 +4813,6 @@ def media_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                        FROM customer WHERE c_acctbal > 0)
       AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
-    tags=("scalar-subquery", "anti-join"),
 )
 def top_balance_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 core — scalar-subquery filter + NOT EXISTS: customers
@@ -4952,7 +4850,6 @@ def top_balance_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY c_count
     """,
-    tags=("outer-join", "groupBy", "two-level-agg"),
 )
 def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: order-count distribution over ALL customers —
@@ -4993,7 +4890,6 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
-    tags=("window", "frame", "running-total"),
 )
 def customer_running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window FRAMES (rows-between), beyond the rank/lag coverage: per
@@ -5034,7 +4930,6 @@ def customer_running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
                             (o_orderpriority), (o_orderstatus))
     """,
-    tags=("grouping-sets", "agg"),
 )
 def order_priority_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS — the general form of rollup/cube: three explicit
@@ -5080,7 +4975,6 @@ def order_priority_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier s ON s.s_suppkey = r.l_suppkey
     WHERE r.rn = 1 AND p.p_size <= 10
     """,
-    tags=("window", "argmin", "decorrelation", "broadcast-join"),
 )
 def part_cheapest_line_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape — attributes of the argmin row per group: for every
@@ -5136,7 +5030,6 @@ def part_cheapest_line_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
     GROUP BY o_orderpriority
     """,
-    tags=("exists", "semi-join", "decorrelation"),
 )
 def order_priority_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape — correlated EXISTS decorrelated to a LEFT SEMI
@@ -5174,7 +5067,6 @@ def order_priority_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN rev ON s_suppkey = l_suppkey
     WHERE r = (SELECT MAX(r) FROM rev)
     """,
-    tags=("scalar-subquery", "argmax", "decorrelation"),
 )
 def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape — scalar subquery over an aggregated view: the
@@ -5220,7 +5112,6 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pr, tot
     WHERE CAST(r AS DOUBLE) > t * 0.002
     """,
-    tags=("scalar-subquery", "having", "share-of-total"),
 )
 def part_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape — HAVING against a fraction of the grand total:
@@ -5254,7 +5145,6 @@ def part_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY p_brand, p_size
     """,
-    tags=("not-in", "anti-join", "distinct-agg"),
 )
 def brand_size_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape — NOT IN decorrelated to a LEFT ANTI join plus a
@@ -5286,7 +5176,6 @@ def brand_size_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY c_nationkey
                  ORDER BY c_acctbal NULLS FIRST, c_custkey NULLS FIRST)
     """,
-    tags=("window", "ntile", "rank-family"),
 )
 def customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-family window breadth: per-nation balance quartile
@@ -5325,7 +5214,6 @@ def customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 o_orderdate) AS INTEGER) AS days_since_prev
     FROM orders
     """,
-    tags=("window", "lag", "temporal"),
 )
 def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-arrival analysis via LAG: days since each customer's
@@ -5367,7 +5255,6 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT b.doc_id, b.fp FROM b ANTI JOIN idx USING (fp)
     """,
-    tags=("dedup", "incremental", "index"),
 )
 def doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental exact dedup against a fingerprint index — the
@@ -5408,7 +5295,6 @@ def doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id FROM documents
     WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dropped)
     """,
-    tags=("dedup", "incremental", "minhash", "near-dup", "index"),
 )
 def doc_incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup dedup against a persisted MinHash index —
@@ -5509,7 +5395,6 @@ _SPAN_WINS_SQL = f"""
            CAST(psi_term_nano AS DOUBLE) / 1000000000.0 AS psi_term
     FROM terms
     """,
-    tags=("drift", "psi", "monitoring", "fixed-point"),
 )
 def events_value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index drift report between the even- and
@@ -5543,7 +5428,6 @@ def events_value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
            span_end - span_start AS span_tokens
     FROM spans
     """,
-    tags=("dedup", "substring", "exact-substring", "spans"),
 )
 def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplicate detection (Lee et al. 2022): every
@@ -5590,7 +5474,6 @@ def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            t.n_tokens, COALESCE(r.n_tokens_kept, 0) AS n_tokens_kept
     FROM totals t LEFT JOIN rebuilt r USING (doc_id)
     """,
-    tags=("dedup", "substring", "exact-substring", "rewrite"),
 )
 def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup REWRITE of exact-substring dedup: drop every token
@@ -5614,7 +5497,6 @@ def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_ivf_knn_fullprobe",
     oracle=_EXACT_KNN_TOP3_SQL,
-    tags=("similarity", "knn", "ivf"),
 )
 def emb_ivf_knn_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with every cell probed IS the exact search — so the whole IVF
@@ -5663,7 +5545,6 @@ def _seq_chunk_sql(budget: int) -> str:
            {_seq_chunk_sql(2048)}
     FROM p
     """,
-    tags=("packing", "prefix-sum", "training-data"),
 )
 def doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for training batches: documents concatenate in
@@ -5716,7 +5597,6 @@ _BPE_TOKENS_SQL = (
                       ORDER BY offset_in_seq, doc_id) AS doc_ids
     FROM a GROUP BY seq_id
     """,
-    tags=("packing", "prefix-sum", "training-data"),
 )
 def doc_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The packing family's BUILD step: one row per 2048-token training
@@ -5754,7 +5634,6 @@ def doc_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_seq_chunk_sql(2048)}
     FROM p
     """,
-    tags=("packing", "prefix-sum", "training-data", "tokenizer"),
 )
 def doc_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``doc_pack_sequences`` with TOKENIZER-faithful counts (VERDICT r9
@@ -5806,7 +5685,6 @@ _MIXTURE_BUDGET = 8000
     )
     SELECT doc_id, domain, n_tokens FROM p WHERE tokens_before < budget
     """,
-    tags=("mixing", "sampling", "training-data"),
 )
 def doc_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-weighted domain mixture (the pretraining data-mixing step):
@@ -5848,7 +5726,6 @@ def doc_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_pairs DESC, pair ASC
     LIMIT 32
     """,
-    tags=("text", "tokenizer", "bpe", "training"),
 )
 def doc_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed statistics pass of BPE vocabulary training
@@ -6116,7 +5993,6 @@ def _bpe_batched_trainer_oracle(
 @register(
     "doc_bpe_trained_token_counts",
     oracle=_bpe_trained_counts_oracle(3),
-    tags=("text", "tokenizer", "bpe", "training"),
 )
 def doc_bpe_trained_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY side of distributed BPE training
@@ -6150,7 +6026,6 @@ def doc_bpe_trained_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_bpe_trainer_rounds",
     oracle=_bpe_trainer_oracle(3),
-    tags=("text", "tokenizer", "bpe", "training"),
 )
 def doc_bpe_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three rounds of END-TO-END distributed BPE vocabulary training
@@ -6173,7 +6048,6 @@ def doc_bpe_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_bpe_byte_trainer_rounds",
     oracle=_bpe_trainer_oracle(3, base_sql=_BPE_BYTE_BASE_SQL),
-    tags=("text", "tokenizer", "bpe", "training", "byte-level"),
 )
 def doc_bpe_byte_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three rounds of distributed BPE training with the BYTE-LEVEL
@@ -6201,7 +6075,6 @@ def doc_bpe_byte_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_bpe_byte_trained_token_counts",
     oracle=_bpe_trained_counts_oracle(3, base_sql=_BPE_BYTE_BASE_SQL),
-    tags=("text", "tokenizer", "bpe", "training", "byte-level"),
 )
 def doc_bpe_byte_trained_token_counts(
     spark: SparkSession, sf_dir: str
@@ -6237,7 +6110,6 @@ def doc_bpe_byte_trained_token_counts(
 @register(
     "doc_bpe_batched_trainer_rounds",
     oracle=_bpe_batched_trainer_oracle(2, 3),
-    tags=("text", "tokenizer", "bpe", "training", "batched"),
 )
 def doc_bpe_batched_trainer_rounds(
     spark: SparkSession, sf_dir: str
@@ -6298,7 +6170,6 @@ def doc_bpe_batched_trainer_rounds(
     )
     SELECT doc_id, domain, n_tokens FROM p WHERE tokens_before < budget
     """,
-    tags=("mixing", "sampling", "training-data", "temperature"),
 )
 def doc_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture (operators/mixing.py
@@ -6393,10 +6264,6 @@ _CORPUS_BUILD_SQL = f"""
            {_seq_chunk_sql(_PIPELINE_SEQ_BUDGET)}
     FROM packed
     """,
-    tags=(
-        "text", "cleaning", "mixing", "packing", "training-data",
-        "composition", "capstone",
-    ),
 )
 def doc_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END pretraining-corpus build (VERDICT r11 #3 — the
@@ -6498,10 +6365,6 @@ def _corpus_build_packed(
                       ORDER BY stream_offset % {_PIPELINE_SEQ_BUDGET}, doc_id) AS doc_ids
     FROM packed GROUP BY 1
     """,
-    tags=(
-        "text", "cleaning", "mixing", "packing", "training-data",
-        "composition", "capstone",
-    ),
 )
 def doc_corpus_build_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-build capstone's BUILD artifact — one row per
@@ -6510,12 +6373,9 @@ def doc_corpus_build_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_corpus_build_pipeline``'s assignment): what the data loader
     actually consumes after the full curation → mixture → packing run.
     The oracle shares the whole chained stage SQL with the pipeline
-    query and regroups the packed CTE by sequence. Registered in r12
-    after that round's 50-slot window was exactly full (spilling an
-    r9-stale entry would have broken the census floor — VERDICT r11
-    #2); it HEADS r13's SWEEP_PRIORITY for its first driver row, as
-    promised. Output rows = selected_tokens / budget — bounded by the
-    mixture budget at ANY corpus size."""
+    query and regroups the packed CTE by sequence. Output rows =
+    selected_tokens / budget — bounded by the mixture budget at ANY
+    corpus size."""
     from ehr_data_pipeline_spark.operators.packing import (
         materialize_packed_sequences,
     )
@@ -6550,7 +6410,6 @@ def doc_corpus_build_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rn % 32 AS INTEGER) AS pos_in_batch
     FROM r
     """,
-    tags=("batching", "training-data", "window"),
 )
 def doc_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batch assignment (the padding-minimizing loader
@@ -6585,7 +6444,6 @@ def doc_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS train_order
     FROM t
     """,
-    tags=("shuffle", "training-data", "prefix-sum"),
 )
 def doc_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global deterministic training-shuffle rank: every document's
@@ -6641,7 +6499,6 @@ def doc_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL SELECT 3, 'click', CAST(n3 AS BIGINT), CAST(n3 AS DOUBLE) / n1 FROM c
     UNION ALL SELECT 4, 'purchase', CAST(n4 AS BIGINT), CAST(n4 AS DOUBLE) / n1 FROM c
     """,
-    tags=("funnel", "sequence", "analytics"),
 )
 def events_signup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered event-sequence funnel signup → view → click → purchase
@@ -6675,7 +6532,6 @@ def events_signup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, event_type FROM r
     WHERE rk <= CEIL(CAST(0.1 AS DECIMAL(9,6)) * n)
     """,
-    tags=("sampling", "stratified", "window"),
 )
 def events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT stratified 10% sample per event_type: rows ranked within
@@ -6736,7 +6592,6 @@ def events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS avg_neg_logp_bits
     FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN pd USING (doc_id)
     """,
-    tags=("text", "language-model", "stupid-backoff", "fixed-point"),
 )
 def doc_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram LM perplexity scoring with Stupid Backoff
@@ -6769,7 +6624,6 @@ def doc_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, source FROM r WHERE rk <= 10
     """,
-    tags=("sampling", "curation", "frequency-cap", "window"),
 )
 def doc_source_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source frequency cap (``sampling.cap_per_stratum``): at most
@@ -6812,7 +6666,6 @@ def doc_source_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS drift_chi2
     FROM c, tot
     """,
-    tags=("quality", "drift", "histogram"),
 )
 def events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor: chi-square histogram comparison of the
@@ -6862,7 +6715,6 @@ _SCD2_REBUILD_SQL = """
 @register(
     "user_event_type_scd2",
     oracle=_SCD2_REBUILD_SQL,
-    tags=("scd2", "gaps-and-islands", "window"),
 )
 def user_event_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 version history — gaps-and-islands run compression of
@@ -6886,7 +6738,6 @@ def user_event_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "user_event_type_scd2_merge",
     oracle=_SCD2_REBUILD_SQL,
-    tags=("scd2", "incremental-merge", "window"),
 )
 def user_event_type_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL path of the SCD2 pair: compress the first half of
@@ -6924,7 +6775,6 @@ def user_event_type_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
                  RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
     """,
-    tags=("window", "range-frame", "rolling"),
 )
 def user_rolling_week_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frame (not ROWS): per event, the user's value
@@ -6965,7 +6815,6 @@ def user_rolling_week_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
     GROUP BY l_linestatus
     """,
-    tags=("conditional-agg", "join", "case"),
 )
 def linestatus_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape — CASE-conditional aggregation after a fact-to-fact
@@ -7007,7 +6856,6 @@ def linestatus_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         OR (cn.n_name = 'NATION_2' AND sn.n_name = 'NATION_1'))
     GROUP BY 1, 2, 3
     """,
-    tags=("multi-join", "disjunction", "broadcast"),
 )
 def nation_pair_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape — bidirectional nation-pair volume by ship year:
@@ -7070,7 +6918,6 @@ def nation_pair_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(nation_volume / total_volume, 6) AS market_share
     FROM t
     """,
-    tags=("conditional-agg", "ratio", "market-share"),
 )
 def nation1_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape — market share as a ratio of two conditional
@@ -7115,7 +6962,6 @@ def nation1_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#23' AND p_size BETWEEN 20 AND 50
            AND l_quantity BETWEEN 20 AND 50)
     """,
-    tags=("disjunctive-predicates", "pushdown", "join"),
 )
 def branded_quantity_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape — a disjunction of conjunctive bands spanning BOTH
@@ -7167,7 +7013,6 @@ def branded_quantity_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("filter", "agg", "tpch-q6"),
 )
 def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape — pure scan-filter-aggregate with a conjunctive,
@@ -7211,7 +7056,6 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_name LIKE '%red%'
     GROUP BY n.n_name, YEAR(o.o_orderdate)
     """,
-    tags=("join", "groupBy", "tpch-q9"),
 )
 def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape — product-type profit by supplier nation and order
@@ -7263,7 +7107,6 @@ def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey ASC
     LIMIT 20
     """,
-    tags=("join", "groupBy", "topk", "tpch-q10"),
 )
 def returned_item_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape — returned-item reporting: the 20 customers who
@@ -7306,7 +7149,6 @@ def returned_item_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       AND l.l_shipdate < TIMESTAMP '1996-10-01 00:00:00'
     """,
-    tags=("join", "agg", "conditional", "tpch-q14"),
 )
 def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape — promotion effect: promo revenue share of one
@@ -7355,7 +7197,6 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
     LIMIT 100
     """,
-    tags=("join", "semi", "groupBy", "topk", "tpch-q18"),
 )
 def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape — large-volume customers: orders whose total
@@ -7411,7 +7252,6 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE tot.n_supp >= 3 AND yr.q > 0.5 * tot.tq
     GROUP BY s.s_suppkey, s.s_name
     """,
-    tags=("join", "correlated-agg", "tpch-q20"),
 )
 def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape — a correlated aggregate threshold (Q20's
@@ -7470,7 +7310,6 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name ASC
     LIMIT 10
     """,
-    tags=("join", "exists", "anti", "tpch-q21"),
 )
 def late_sole_supplier_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape — suppliers who kept orders waiting: for finished
@@ -7570,119 +7409,18 @@ def _guard_embeddings_oracle(sql: str) -> str:
 for _n in _EMB_FAMILY:
     _s = REGISTRY[_n]
     REGISTRY[_n] = QuerySpec(
-        _s.name, _s.fn, _guard_embeddings_oracle(_s.oracle), _s.bench, _s.tags
+        _s.name, _s.fn, _guard_embeddings_oracle(_s.oracle), _s.bench
     )
 del _n, _s
 
 
-# The driver's correctness sweep covers the first 50 exported queries only.
-# SWEEP_PRIORITY holds the entries whose most recent driver row is oldest
-# (or that never had one), so every registry entry gets a driver row at
-# least every third round. Round 15's list (VERDICT r14 #9): the census
-# over CORRECTNESS_r01..r14 (recomputed from the raw files on this tree)
-# is exactly 50 last-green r14 / 50 r13 / 50 r12, zero never-checked —
-# so this round's window = the full 50-entry r12 tier, making the census
-# floor r13 once CORRECTNESS_r15 lands. Trade-off, made explicitly: the
-# queries this demotes past slot 50 lose DRIVER regression coverage for
-# the round, but every registry entry still runs against the identical
-# DuckDB oracle in tests/test_queries_oracle.py (the full-registry
-# replica of the driver's gate), so a regression in a demoted query
-# still fails CI — the driver sweep is the independent confirmation,
-# pytest is the compensating gate.
-SWEEP_PRIORITY: tuple[str, ...] = (
-    # --- stalest census tier (last driver row r12; census over
-    #     CORRECTNESS_r01..r14: 50 r14 / 50 r13 / 50 r12) ---
-    "customer_order_distribution",
-    "customer_running_order_totals",
-    "customers_with_big_orders",
-    "customers_without_orders",
-    "doc_bigram_lm_scores",
-    "doc_bm25_index_search",
-    "doc_bpe_byte_trained_token_counts",
-    "doc_bpe_byte_trainer_rounds",
-    "doc_corpus_build_pipeline",
-    "doc_quality_classifier_scores",
-    "doc_source_capped",
-    "dominant_part_suppliers",
-    "emb_cosine_neardup_pairs",
-    "emb_ivf_index_search",
-    "emb_ivf_knn",
-    "emb_ivf_recall_report",
-    "emb_label_centroids",
-    "emb_lsh_knn",
-    "emb_lsh_neardup_pairs_hi",
-    "emb_lsh_recall_report",
-    "error_recent_click_counts",
-    "event_user_hll",
-    "events_hourly_gapfill",
-    "events_hourly_rollup_merge",
-    "events_user_skew_stats",
-    "events_value_delta",
-    "events_value_quantile_sketch",
-    "late_sole_supplier_ranking",
-    "media_audio_segment_plan",
-    "media_frame_sample_plan",
-    "media_image_channel_stats",
-    "media_image_features",
-    "media_meta_profile",
-    "order_priority_grouping_sets",
-    "order_priority_with_returns",
-    "orders_bloom_prune_stats",
-    "part_cheapest_line_supplier",
-    "purchase_last_click_asof",
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "small_quantity_part_revenue",
-    "top_balance_idle_customers",
-    "top_orders_per_customer",
-    "top_revenue_supplier",
-    "union_by_name_roundtrip",
-    "user_cms_accuracy",
-    "user_sessions",
-    "user_weekly_retention",
-    "validator_parity_report",
-)
-
-
-_SWEEP_WINDOW = 50
-
-# Committed round counter for the sweep rotation. Bump by 1 each round a
-# CORRECTNESS_r{N}.json gets recorded (i.e. once per driver round). An
-# explicit tracked constant, NOT a filesystem glob of driver artifacts:
-# the same commit must export the same order on every checkout (the glob
-# counted untracked CORRECTNESS files, so a clean clone and the working
-# tree disagreed on what the driver sweeps — ADVICE r4).
-SWEEP_ROTATION_ROUND = 15
-
-
-def _sweep_order() -> list[str]:
-    """Priority entries (stalest driver coverage) first; the rest ROTATE
-    by one window's worth of slots per round, so the queries past the
-    driver's 50-entry sweep window cycle back into coverage across
-    rounds instead of being permanently demoted (the full oracle replica
-    in tests/test_queries_oracle.py covers every entry every CI run
-    regardless). Each round: refresh SWEEP_PRIORITY to the entries whose
-    driver row is oldest and bump SWEEP_ROTATION_ROUND."""
-    prioritized = [n for n in SWEEP_PRIORITY if n in REGISTRY]
-    rest = [n for n in REGISTRY if n not in SWEEP_PRIORITY]
-    open_slots = max(0, _SWEEP_WINDOW - len(prioritized))
-    if rest and open_slots:
-        shift = (SWEEP_ROTATION_ROUND * open_slots) % len(rest)
-        rest = rest[shift:] + rest[:shift]
-    return prioritized + rest
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _sweep_order()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracles() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _sweep_order()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: spec.oracle for name, spec in REGISTRY.items()
+            if spec.oracle is not None}
 
 
 def bench_queries() -> dict[str, QuerySpec]:

@@ -25,10 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins. At 100 TB
-# the facts (orders/lineitem/events/documents) grow; these stay dimension-sized.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 # event-time columns whose physical parquet type has drifted across driver
 # data generations: TIMESTAMP(NANOS) (read as long nanos via

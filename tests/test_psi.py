@@ -3,13 +3,7 @@ on shifted ones, non-negative per-bucket terms."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ehr_data_pipeline_spark.operators.quality import psi_drift
-
-
-def _psi(df):
-    return df.agg(F.sum("psi_term").alias("s")).collect()[0]["s"]
 
 
 def test_psi_zero_on_identical_snapshots(spark):

@@ -95,18 +95,14 @@ def test_entry_smoke(spark):
     assert set(o) <= set(q)
 
 
-def test_sweep_priority_order_and_completeness():
-    """The driver sweeps the first 50 exported queries: every
-    SWEEP_PRIORITY name must exist (no typos silently dropping a query),
-    lead the export order, and the export must still cover the whole
-    registry — nothing is lost by the reorder, only re-sequenced."""
-    from ehr_data_pipeline_spark.queries import SWEEP_PRIORITY, queries
+def test_driver_export_follows_registry_order():
+    """The driver contract exports the registry as registered: every
+    query once, in registration order, and every oracle in that same
+    order (entries without an oracle skipped). No Spark session needed."""
+    import __spark_entry__ as mod
 
-    assert set(SWEEP_PRIORITY) <= set(REGISTRY)
-    exported = list(queries())
-    assert exported[: len(SWEEP_PRIORITY)] == list(SWEEP_PRIORITY)
-    assert set(exported) == set(REGISTRY)
-    assert len(exported) == len(REGISTRY)
+    assert list(mod.queries()) == list(REGISTRY)
+    assert list(mod.oracle_sql()) == ORACLE_NAMES
 
 
 def test_corpus_build_manifest_cache_released(spark):

@@ -261,6 +261,45 @@ def test_cosine_near_dup_pairs_empty_input(spark):
     assert types["id_a"] == types["id_b"] == "int"
 
 
+@pytest.mark.parametrize("extreme", [False, True])
+def test_cosine_near_dup_pairs_matches_cosine_exactly(spark, extreme):
+    """The pair operator divides a·b by per-row norms computed before the
+    join; those are cosine()'s own folds in the same order, so every
+    double must be identical — unrounded on the kernel, and after
+    ROUND(·, 6) on every pair the operator emits at threshold -1. The
+    extreme case mixes valid components from ~1e-150 to ~1e11."""
+    from ehr_data_pipeline_spark.operators.similarity import _norm, dot
+
+    rng = random.Random(15)
+
+    def comp():
+        if not extreme:
+            return rng.uniform(-1.0, 1.0)
+        return rng.choice([-1.0, 1.0]) * rng.uniform(1.0, 9.99) * 10.0 ** rng.choice(
+            [-150, -75, -3, 0, 5, 11])
+
+    rows = [(i, [comp() for _ in range(16)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+    va, vb = F.col("va"), F.col("vb")
+    ref = a.join(b, F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b", cosine(va, vb).alias("c"),
+        (dot(va, vb) / (_norm(va) * _norm(vb))).alias("c_norms"),
+    ).collect()
+    assert len(ref) == 40 * 39 // 2
+    assert all(r["c"] == r["c_norms"] for r in ref)
+
+    got = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in cosine_near_dup_pairs(df, threshold=-1.0, dim=16).collect()
+    }
+    want = spark.createDataFrame(
+        [(r["id_a"], r["id_b"], r["c"]) for r in ref], "id_a long, id_b long, c double"
+    ).select("id_a", "id_b", F.round("c", 6).alias("c")).collect()
+    assert got == {(r["id_a"], r["id_b"]): r["c"] for r in want}
+
+
 @pytest.fixture(scope="module")
 def dup_heavy_emb(spark, emb):
     """Duplicate-heavy embeddings: every vec_id < 30 vector replicated
