@@ -46,9 +46,9 @@ def ext_by_url(ext_arr: Column, url: str) -> Column:
     return last_match(ext_arr, lambda e: e.getField("url") == F.lit(url))
 
 
-def join_nonempty(arr: Column, sep: str = ", ") -> Column:
+def join_nonempty(arr: Column) -> Column:
     """', '.join(non-null, truthy elements), null when nothing survives —
     the CarePlan activity join (N11, json_pipeline.py:461-466 keeps only
     truthy displays and yields None for an empty list)."""
     kept = F.filter(arr, lambda x: x.isNotNull() & (x != F.lit("")))
-    return F.when(F.size(kept) > 0, F.array_join(kept, sep))
+    return F.when(F.size(kept) > 0, F.array_join(kept, ", "))

@@ -62,8 +62,6 @@ def c4_line_filter(
     id_col: str = "doc_id",
     min_line_words: int = 5,
     min_sentences: int = 3,
-    doc_drop_markers: tuple[str, ...] = DEFAULT_DOC_DROP_MARKERS,
-    doc_drop_literals: tuple[str, ...] = DEFAULT_DOC_DROP_LITERALS,
 ) -> DataFrame:
     """C4-style cleaning (Raffel et al. 2020 §2.2): keep only lines that
     end in a terminal punctuation mark, contain >= ``min_line_words``
@@ -85,9 +83,9 @@ def c4_line_filter(
     kept = F.filter(lines, lambda l: c4_line_flags(l, min_line_words))
     clean = F.array_join(kept, "\n")
     marker_hit = F.lit(False)
-    for m in doc_drop_markers:
+    for m in DEFAULT_DOC_DROP_MARKERS:
         marker_hit = marker_hit | F.lower(text).contains(m.lower())
-    for m in doc_drop_literals:
+    for m in DEFAULT_DOC_DROP_LITERALS:
         marker_hit = marker_hit | text.contains(m)
     return (
         df.select(
@@ -140,8 +138,8 @@ def c4_blocklist_filter(
     :func:`_page_words`); all other rows pass through with their
     columns untouched, plus ``n_words`` (the page's distinct word
     count) for downstream audits. Multi-word PHRASES are substring
-    semantics, not word semantics — pass those through
-    ``c4_line_filter``'s ``doc_drop_markers`` instead.
+    semantics, not word semantics — :func:`c4_line_filter` drops pages on
+    those (``DEFAULT_DOC_DROP_MARKERS``).
 
     One narrow pass, no shuffle, no UDF; per-word audit counts come
     from :func:`c4_blocklist_audit` over the same shared expression."""
@@ -153,11 +151,7 @@ def c4_blocklist_filter(
     )
 
 
-def c4_blocklist_audit(
-    df: DataFrame,
-    blocklist: "tuple[str, ...]",
-    text_col: str = "text",
-) -> DataFrame:
+def c4_blocklist_audit(df: DataFrame, blocklist: "tuple[str, ...]") -> DataFrame:
     """Per-rule audit of the blocklist filter: for EVERY blocklisted
     word, the number of pages it would flag (0 for words the corpus
     never mentions — each configured rule reports, hit or not) and the
@@ -170,7 +164,7 @@ def c4_blocklist_audit(
     by the blocklist size."""
     spark = df.sparkSession
     hits = df.select(
-        blocklist_hits(text_col, tuple(blocklist)).alias("__hits")
+        blocklist_hits("text", tuple(blocklist)).alias("__hits")
     )
     dropped = hits.filter(F.size("__hits") > 0).agg(
         F.count(F.lit(1)).alias("n_pages_dropped")
@@ -194,12 +188,7 @@ def c4_blocklist_audit(
     )
 
 
-def paragraph_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n\n",
-) -> DataFrame:
+def paragraph_dedup(df: DataFrame, sep: str = "\n\n") -> DataFrame:
     """Corpus-wide exact paragraph deduplication: every occurrence of a
     paragraph after its FIRST (ordered by (id, position-in-document)) is
     removed, and each document's text is reassembled from its surviving
@@ -222,8 +211,8 @@ def paragraph_dedup(
     partitioning, never collect_list arrival order. Winner selection by
     (id, idx) is a total order, so the output is unique and
     hash-checkable cross-engine."""
-    ranked = _ranked_paragraphs(df, text_col, id_col, sep)
-    return _reassemble(ranked, id_col, sep, keep=F.col("rn") == 1)
+    ranked = _ranked_paragraphs(df, "text", "doc_id", sep)
+    return _reassemble(ranked, "doc_id", sep, keep=F.col("rn") == 1)
 
 
 def _split_paragraphs(text_col: str, sep: str) -> Column:
@@ -271,7 +260,6 @@ def build_paragraph_index(
     df: DataFrame,
     text_col: str = "text",
     sep: str = "\n\n",
-    fp_col: str = "pfp",
 ) -> DataFrame:
     """Distinct md5 fingerprints of every paragraph in the corpus — the
     historical state :func:`paragraph_dedup_against_index` dedups new
@@ -282,7 +270,7 @@ def build_paragraph_index(
     ``text_dedup.dedup_against_index``."""
     return (
         df.select(F.explode(_split_paragraphs(text_col, sep)).alias("para"))
-        .select(F.md5("para").alias(fp_col))
+        .select(F.md5("para").alias("pfp"))
         .distinct()
     )
 
@@ -293,7 +281,6 @@ def paragraph_dedup_against_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     sep: str = "\n\n",
-    fp_col: str = "pfp",
 ) -> "tuple[DataFrame, DataFrame]":
     """Incremental paragraph dedup — the continuous-ingest cadence of
     :func:`paragraph_dedup` (the same batch/incremental symmetry as the
@@ -310,11 +297,11 @@ def paragraph_dedup_against_index(
     bucketed by fingerprint), one id-keyed reassembly — the history is
     never rewritten or windowed."""
     ranked = _ranked_paragraphs(batch, text_col, id_col, sep).withColumn(
-        fp_col, F.md5("para")
+        "pfp", F.md5("para")
     )
-    seen = index.select(fp_col).distinct().withColumn("__seen", F.lit(True))
-    j = ranked.join(seen, fp_col, "left")
+    seen = index.select("pfp").distinct().withColumn("__seen", F.lit(True))
+    j = ranked.join(seen, "pfp", "left")
     keep = (F.col("rn") == 1) & F.col("__seen").isNull()
     cleaned = _reassemble(j, id_col, sep, keep=keep)
-    new_entries = j.filter(keep).select(fp_col)
+    new_entries = j.filter(keep).select("pfp")
     return cleaned, new_entries

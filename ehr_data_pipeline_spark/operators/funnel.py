@@ -71,9 +71,6 @@ def funnel_user_steps(
 def funnel_counts(
     df: DataFrame,
     steps: Sequence[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     within: str | None = None,
 ) -> DataFrame:
     """The funnel report: one row per step with the step name, the
@@ -81,7 +78,7 @@ def funnel_counts(
     conversion rate from step 1 (1.0 for step 1 itself). ONE aggregate
     over the per-user frame, then an in-row explode into the k report
     rows — the per-user chain is computed once, not once per step."""
-    per_user = funnel_user_steps(df, steps, user_col, ts_col, type_col, within)
+    per_user = funnel_user_steps(df, steps, "user_id", "ts", "event_type", within)
     counts = per_user.agg(
         *[
             F.count(F.col(f"step{i}_ts")).alias(f"__n{i}")

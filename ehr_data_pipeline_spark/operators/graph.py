@@ -7,7 +7,7 @@ NUMERIC-iterative class. The usual blocker for oracle-checking an
 iterative numeric algorithm is floating-point: the per-node sum of
 neighbor contributions is order-dependent in IEEE doubles, so two
 engines (or two runs) drift by ulps per iteration. Here ranks are
-BIGINT micro-units (``scale`` = 1e12), contributions are truncating
+BIGINT micro-units (``PAGERANK_SCALE`` = 1e12), contributions are truncating
 integer division, and the damping 0.85 is applied as the exact rational
 17/20 — every iteration is pure integer arithmetic, order-independent,
 and replays bit-for-bit in DuckDB as an unrolled CTE chain.
@@ -19,7 +19,7 @@ Semantics (documented choices, mirrored in the oracle):
   truncation per node per iteration, a ≤1e-12-relative artifact;
 - dangling nodes (no out-edges) contribute nothing (their mass decays
   into the teleport term rather than being redistributed);
-- teleport term: ``(scale - damped(scale)) div n`` per node where
+- teleport term: ``(PAGERANK_SCALE - damped(PAGERANK_SCALE)) div n`` per node where
   ``damped(x) = x·17 div 20`` — so a graphless node's rank settles at
   the base term.
 
@@ -42,19 +42,13 @@ from pyspark.sql import functions as F
 PAGERANK_SCALE = 10**12
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iters: int = 3,
-    scale: int = PAGERANK_SCALE,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, n_iters: int = 3) -> DataFrame:
     """PageRank over a directed edge list (duplicate edges are collapsed)
     with damping 0.85 as exact integer arithmetic — returns
-    ``(node, rank)`` with rank in ``scale`` micro-units. Deterministic:
+    ``(node, rank)`` with rank in ``PAGERANK_SCALE`` micro-units. Deterministic:
     the same input yields the bit-identical ranks on any engine or
     partitioning (integer sums commute)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -64,11 +58,11 @@ def pagerank_fixed_point(
     e_deg = e.join(outdeg, "src")
 
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-    # teleport base per node: (scale - scale*17 div 20) div n
-    base = F.expr(f"({scale} - {scale} * 17 div 20) div __n")
+    # teleport base per node: (PAGERANK_SCALE - PAGERANK_SCALE*17 div 20) div n
+    base = F.expr(f"({PAGERANK_SCALE} - {PAGERANK_SCALE} * 17 div 20) div __n")
 
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
-        "node", "__n", F.expr(f"{scale} div __n").cast("bigint").alias("rank")
+        "node", "__n", F.expr(f"{PAGERANK_SCALE} div __n").cast("bigint").alias("rank")
     )
     for _ in range(n_iters):
         inbound = (

@@ -38,16 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ehr_data_pipeline_spark.operators.text_analysis import portable_hash60
-
-
-def _order_hash(id_col: str, salt: str) -> Column:
-    """Deterministic per-row draw order: portable 60-bit md5 hash of
-    '<salt>:<id>' — key-stable and engine-portable (DuckDB replays it),
-    like every hash in the sampling/split family."""
-    return portable_hash60(
-        F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))
-    )
+from ehr_data_pipeline_spark.operators.sampling import keyed_hash60
 
 
 def domain_mixture_sample(
@@ -57,7 +48,6 @@ def domain_mixture_sample(
     token_count: Column,
     shares: Mapping[str, float],
     total_token_budget: int,
-    salt: str = "mixture",
 ) -> DataFrame:
     """Sample a training mixture: from every domain named in ``shares``,
     take documents in keyed-hash order until the domain's token budget
@@ -79,7 +69,7 @@ def domain_mixture_sample(
         budget_expr = F.when(F.col(domain_col) == d, F.lit(b)).otherwise(
             budget_expr
         )
-    h = _order_hash(id_col, salt)
+    h = keyed_hash60(F.col(id_col), "mixture")
     w = (
         Window.partitionBy("domain")
         .orderBy(h.asc(), F.col(id_col).asc())
@@ -109,8 +99,6 @@ def temperature_mixture_sample(
     token_count: Column,
     total_token_budget: int,
     alpha: float = 0.5,
-    salt: str = "mixture",
-    quantize: float = 1e9,
 ) -> DataFrame:
     """Temperature-based domain mixture (the mT5/XLM-R reweighting):
     instead of hand-written shares, each domain's budget is proportional
@@ -119,7 +107,7 @@ def temperature_mixture_sample(
     (alpha=1 is proportional sampling, alpha=0 is uniform-across-domains).
     The weights are derived from the data, so the whole mixture is one
     self-contained plan: domain token totals (one groupBy), weights
-    ``round(T_d^alpha · quantize)`` as exact integers, budgets
+    ``round(T_d^alpha · 1e9)`` as exact integers, budgets
     ``round(w_d / Σw · total_token_budget)``, then the same
     keyed-hash-order exclusive-prefix-sum cut as
     :func:`domain_mixture_sample`.
@@ -132,8 +120,8 @@ def temperature_mixture_sample(
     is only guaranteed at 0.5.
 
     The quantized weight is RELATIVE: ``round(T_d^α / max_d T_d^α ·
-    quantize)`` — only weight ratios matter, and normalizing by the max
-    before quantizing bounds every integer by ``quantize`` regardless of
+    1e9)`` — only weight ratios matter, and normalizing by the max
+    before quantizing bounds every integer by 1e9 regardless of
     corpus size (an ABSOLUTE ``round(T^α·1e6)`` overflows int64 around
     T^α ≈ 9e12, i.e. a 1e13-token domain at α=1 — Spark's non-ANSI cast
     would silently saturate while the SQL twin errors; the relative form
@@ -150,18 +138,17 @@ def temperature_mixture_sample(
     domain first if unattributed docs should participate — the
     entry-filter invariance is pinned by a with/without-NULL-rows
     equality test). A domain whose
-    relative weight rounds below ``0.5/quantize`` quantizes to weight 0
-    and contributes nothing: at the default ``quantize=1e9`` and
-    α=0.5 that needs a token-count ratio below ~2.5e-19 vs the largest
-    domain — unreachable in practice (a 1-token domain next to a 4e18-
-    token one), and deliberately NOT floored to 1: a floor would give
-    such a vanishing domain a budget of ``total/Σw`` tokens, a far
-    larger distortion than excluding it.
+    relative weight rounds below ``0.5/1e9`` quantizes to weight 0
+    and contributes nothing: at α=0.5 that needs a token-count ratio
+    below ~2.5e-19 vs the largest domain — unreachable in practice (a
+    1-token domain next to a 4e18-token one), and deliberately NOT
+    floored to 1: a floor would give such a vanishing domain a budget
+    of ``total/Σw`` tokens, a far larger distortion than excluding it.
 
     Scale: the domain-weight frame is ≤ #domains rows (broadcast both
     ways); the data path is one groupBy(domain) + one window on the
     domain — identical cost shape to ``domain_mixture_sample``."""
-    h = _order_hash(id_col, salt)
+    h = keyed_hash60(F.col(id_col), "mixture")
     base = df.where(F.col(domain_col).isNotNull()).select(
         F.col(id_col),
         F.col(domain_col).alias("domain"),
@@ -181,7 +168,7 @@ def temperature_mixture_sample(
         .select(
             "domain",
             F.round(
-                F.col("__p") / F.max("__p").over(wall0) * F.lit(quantize)
+                F.col("__p") / F.max("__p").over(wall0) * F.lit(1e9)
             )
             .cast("bigint")
             .alias("__q"),
@@ -222,7 +209,6 @@ def length_bucketed_batches(
     token_count: Column,
     bucket_edges: list[int],
     batch_size: int,
-    salt: str = "batch",
 ) -> DataFrame:
     """Assign documents to fixed-size batches of similar length — the
     loader layout that minimizes padding waste: ``len_bucket`` is how
@@ -237,7 +223,7 @@ def length_bucketed_batches(
     bucket: Column = F.lit(0)
     for e in edges:
         bucket = bucket + F.when(n_tokens >= e, 1).otherwise(0)
-    h = _order_hash(id_col, salt)
+    h = keyed_hash60(F.col(id_col), "batch")
     w = Window.partitionBy("len_bucket").orderBy(h.asc(), F.col(id_col).asc())
     rn = F.row_number().over(w) - 1
     return (

@@ -93,14 +93,12 @@ def deterministic_shuffle_order(
     n_buckets rows gives each bucket's starting rank, broadcast back,
     and a partitioned within-bucket row_number finishes. ``n_buckets``
     must be a power of two (bucket = hash >> (60 - log2(n)))."""
-    from ehr_data_pipeline_spark.operators.text_analysis import portable_hash60
+    from ehr_data_pipeline_spark.operators.sampling import keyed_hash60
 
     if n_buckets & (n_buckets - 1) or n_buckets <= 0:
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
     shift = 60 - n_buckets.bit_length() + 1
-    h = portable_hash60(
-        F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))
-    )
+    h = keyed_hash60(F.col(id_col), salt)
     b = df.withColumn("__h", h).withColumn(
         "__bucket", F.shiftright(F.col("__h"), shift)
     )
@@ -130,7 +128,6 @@ def pack_sequences(
     id_col: str,
     token_count: Column,
     budget: int,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Assign each document to its training sequence: documents
     concatenate in ``id_col`` order into one token stream, and a doc
@@ -146,7 +143,7 @@ def pack_sequences(
         F.col(id_col), token_count.cast("bigint").alias("n_tokens")
     )
     p = distributed_prefix_sum(
-        with_counts, id_col, "n_tokens", n_buckets, out_col="stream_offset"
+        with_counts, id_col, "n_tokens", 256, out_col="stream_offset"
     )
     return p.select(
         id_col,

@@ -25,7 +25,7 @@ def _violations(cond: Column) -> Column:
     return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")
 
 
-def missing_value_profile(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
+def missing_value_profile(df: DataFrame) -> DataFrame:
     """Per-column null count + percentage (A1, data_quality_checker.py:10-31)
     in one aggregate pass, unpivoted to rows (col_name, n_null, pct_null).
 
@@ -33,7 +33,7 @@ def missing_value_profile(df: DataFrame, columns: Sequence[str] | None = None) -
     percentage; sorting a <#columns>-row report is driver-side trivial, so
     ordering is left to the caller (the value hash is order-insensitive).
     """
-    cols = list(columns) if columns is not None else df.columns
+    cols = df.columns
     wide = df.agg(
         F.count(F.lit(1)).alias("__total"),
         *[_violations(F.col(c).isNull()).alias(c) for c in cols],

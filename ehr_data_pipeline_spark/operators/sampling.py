@@ -37,21 +37,23 @@ from ehr_data_pipeline_spark.operators.text_analysis import portable_hash60
 N_BUCKETS = 10000
 
 
+def keyed_hash60(key: Column, salt: str) -> Column:
+    """The keyed draw order of every sampling, mixing and shuffle
+    operator: portable 60-bit md5 hash of '<salt>:<key>' — key-stable
+    and engine-portable (DuckDB replays it). The salt decorrelates
+    independent draws over the same keys."""
+    return portable_hash60(F.concat(F.lit(f"{salt}:"), key.cast("string")))
+
+
 def hash_split_bucket(key: Column, salt: str = "split") -> Column:
-    """Deterministic bucket in [0, 10000): portable 60-bit md5 hash of
-    '<salt>:<key>' mod 10000. The salt decorrelates independent splits
-    over the same keys (e.g. a second holdout draw)."""
-    return (
-        portable_hash60(F.concat(F.lit(f"{salt}:"), key.cast("string"))) % N_BUCKETS
-    )
+    """Deterministic bucket in [0, 10000): :func:`keyed_hash60` of the
+    key mod 10000. The salt decorrelates independent splits over the
+    same keys (e.g. a second holdout draw)."""
+    return keyed_hash60(key, salt) % N_BUCKETS
 
 
 def with_split(
-    df: DataFrame,
-    key_col: str,
-    fractions: dict[str, float],
-    salt: str = "split",
-    split_col: str = "split",
+    df: DataFrame, key_col: str, fractions: dict[str, float]
 ) -> DataFrame:
     """Assign every row a split label from cumulative bucket ranges —
     e.g. ``{"train": 0.8, "val": 0.1, "test": 0.1}`` maps buckets
@@ -61,7 +63,7 @@ def with_split(
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    bucket = hash_split_bucket(F.col(key_col), salt)
+    bucket = hash_split_bucket(F.col(key_col), "split")
     expr: Column | None = None
     hi = 0
     for name, frac in fractions.items():
@@ -70,7 +72,7 @@ def with_split(
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     # guard against rounding leaving the last bucket unlabeled
     last = list(fractions)[-1]
-    return df.withColumn(split_col, expr.otherwise(F.lit(last)))
+    return df.withColumn("split", expr.otherwise(F.lit(last)))
 
 
 def deterministic_sample(
@@ -89,7 +91,6 @@ def stratified_sample_exact(
     strata_col: str,
     key_col: str,
     fraction: float,
-    salt: str = "strata",
 ) -> DataFrame:
     """EXACT stratified sample: ``ceil(fraction · n_s)`` rows from every
     stratum ``s`` — the class-balanced draw a training pipeline needs
@@ -114,9 +115,7 @@ def stratified_sample_exact(
     negligible and it avoids the single-partition sort."""
     from pyspark.sql.window import Window
 
-    h = portable_hash60(
-        F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))
-    )
+    h = keyed_hash60(F.col(key_col), "strata")
     w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(key_col).asc())
     n = Window.partitionBy(strata_col)
     quota = F.ceil(F.lit(fraction).cast("decimal(9,6)") * F.col("__n"))
@@ -133,7 +132,6 @@ def pps_systematic_sample(
     id_col: str,
     weight_col: str,
     n_samples: int,
-    salt: str = "pps",
     max_id: int | None = None,
     validate_weights: bool = True,
 ) -> DataFrame:
@@ -205,7 +203,7 @@ def pps_systematic_sample(
                 "(weights must be positive integers)"
             )
 
-    ordered = deterministic_shuffle_order(df, id_col, salt=salt, out_col="__ord")
+    ordered = deterministic_shuffle_order(df, id_col, salt="pps", out_col="__ord")
     # when max_id is known, __ord (a dense 0..n-1 rank) is bounded by it
     pre = distributed_prefix_sum(
         ordered, "__ord", weight_col, out_col="__c", max_id=max_id
@@ -244,7 +242,6 @@ def cap_per_stratum(
     strata_col: str,
     key_col: str,
     max_rows: int,
-    salt: str = "cap",
 ) -> DataFrame:
     """Frequency capping: at most ``max_rows`` rows per stratum — the
     standard per-domain quota in web-corpus curation (one boilerplate
@@ -266,9 +263,7 @@ def cap_per_stratum(
     remainder."""
     from pyspark.sql.window import Window
 
-    h = portable_hash60(
-        F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))
-    )
+    h = keyed_hash60(F.col(key_col), "cap")
     w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(key_col).asc())
     return (
         df.withColumn("__rk", F.row_number().over(w))

@@ -164,8 +164,6 @@ def brute_force_knn(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries × full corpus scan → one
@@ -176,17 +174,17 @@ def brute_force_knn(
     contract, functions/measurement.py) are excluded on BOTH sides at
     entry; when ``dim`` is omitted it is inferred from the corpus
     (:func:`infer_dim`)."""
-    dim = _resolve_dim(corpus, dim, id_col, vec_col)
+    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
     if dim is None:
-        return _empty_knn(corpus, id_col)
-    keep = _valid(id_col, vec_col, dim)
+        return _empty_knn(corpus, "vec_id")
+    keep = _valid("vec_id", "embedding", dim)
     q = F.broadcast(
         queries.where(keep).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
         )
     )
     c = ensure_min_partitions(corpus.where(keep)).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
     )
     return _top_k(q.crossJoin(c), k)
 
@@ -315,8 +313,6 @@ def lsh_knn(
     dim: "int | None" = None,
     n_planes: int = DEFAULT_PLANES,
     n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k: L independent hyperplane hash tables
     (OR-construction), candidates = pairs sharing a bucket in ANY table,
@@ -330,19 +326,19 @@ def lsh_knn(
     cross join — and AQE splits skewed hot buckets. Invalid vectors are
     excluded on both sides per the embeddings contract
     (functions/measurement.py); ``dim=None`` infers it from the corpus."""
-    dim = _resolve_dim(corpus, dim, id_col, vec_col)
+    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
     if dim is None:
-        return _empty_knn(corpus, id_col)
-    keep = _valid(id_col, vec_col, dim)
+        return _empty_knn(corpus, "vec_id")
+    keep = _valid("vec_id", "embedding", dim)
     c = _with_table_buckets(
         ensure_min_partitions(corpus.where(keep)).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
         ),
         "__cv", dim, n_planes, n_tables,
     )
     q = _with_table_buckets(
         queries.where(keep).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
         ),
         "__qv", dim, n_planes, n_tables,
     )
@@ -361,8 +357,6 @@ def lsh_knn(
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs: every (id_a < id_b)
@@ -381,14 +375,14 @@ def cosine_near_dup_pairs(
     Each row's norm ``sqrt(v·v)`` is computed once before the join, so a
     pair costs one fold (``a·b``) instead of :func:`cosine`'s three; the
     folds and their order are the same, so the doubles are identical."""
-    dim = _resolve_dim(df, dim, id_col, vec_col)
+    dim = _resolve_dim(df, dim, "vec_id", "embedding")
     if dim is None:
-        return _empty_pairs(df, id_col)
-    df = ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
-    norm = _norm(F.col(vec_col))
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
+        return _empty_pairs(df, "vec_id")
+    df = ensure_min_partitions(df.where(_valid("vec_id", "embedding", dim)))
+    norm = _norm(F.col("embedding"))
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"),
                   norm.alias("__na"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"),
                   norm.alias("__nb"))
     score = dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
     return (
@@ -482,8 +476,6 @@ def lsh_near_dup_pairs(
     dim: "int | None" = None,
     n_planes: int = 4,
     n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate embedding-cosine near-dup pairs — the 100 TB path.
     Candidate pairs are rows sharing a hyperplane-LSH bucket in ANY of
@@ -520,10 +512,10 @@ def lsh_near_dup_pairs(
     pipeline plus both expansion joins — 3 consumers; without the cache
     the scan + group window recompute per consumer); cache lifetime as
     documented at ``text_dedup.release_builder_caches``."""
-    dim = _resolve_dim(df, dim, id_col, vec_col)
+    dim = _resolve_dim(df, dim, "vec_id", "embedding")
     if dim is None:
-        return _empty_pairs(df, id_col)
-    mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
+        return _empty_pairs(df, "vec_id")
+    mem = _persist_tracked(_vector_groups(df, "vec_id", "embedding", dim))
     pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
     members = mem.select("__rid", F.col("__id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "cosine", ("id_a", "id_b"))
@@ -535,8 +527,6 @@ def lsh_near_dup_groups(
     dim: "int | None" = None,
     n_planes: int = 4,
     n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-dup GROUP membership — the production dedup surface
     (VERDICT r7 #1): (id, group_id) for every vector that belongs to a
@@ -556,18 +546,18 @@ def lsh_near_dup_groups(
     mutual near-dups at cosine 1.0 by definition). Matches the transitive
     closure of :func:`lsh_near_dup_pairs` exactly — the oracle replays
     that equivalence with a recursive CTE."""
-    dim = _resolve_dim(df, dim, id_col, vec_col)
+    dim = _resolve_dim(df, dim, "vec_id", "embedding")
     if dim is None:
         return df.select(
-            F.col(id_col), F.col(id_col).alias("group_id")
+            F.col("vec_id"), F.col("vec_id").alias("group_id")
         ).limit(0)
-    mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
+    mem = _persist_tracked(_vector_groups(df, "vec_id", "embedding", dim))
     pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
     members = mem.select(F.col("__id").alias("__m"), "__rid", "__n")
     # an identical-vector group's self cosine (1.0) clears any real
     # threshold ≤ 1.0; no distinct() — _vector_groups already dedups ids
     return _rep_group_membership(
-        pairs, members, id_col, threshold <= 1.0, max_iter=20
+        pairs, members, "vec_id", threshold <= 1.0, max_iter=20
     )
 
 
@@ -770,8 +760,6 @@ def ivf_knn(
     n_list: int = 8,
     n_probe: int = 2,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the cell-probe alternative
@@ -786,20 +774,20 @@ def ivf_knn(
     Invalid vectors are excluded from index, training and queries per
     the embeddings contract (functions/measurement.py); ``dim=None``
     infers it from the corpus."""
-    dim = _resolve_dim(corpus, dim, id_col, vec_col)
+    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
     if dim is None:
-        return _empty_knn(corpus, id_col)
-    keep = _valid(id_col, vec_col, dim)
+        return _empty_knn(corpus, "vec_id")
+    keep = _valid("vec_id", "embedding", dim)
     corpus, queries = corpus.where(keep), queries.where(keep)
-    centroids = train_ivf_centroids(corpus, n_list, n_iters, id_col, vec_col, dim)
+    centroids = train_ivf_centroids(corpus, n_list, n_iters, "vec_id", "embedding", dim)
     if not centroids:
         # empty corpus ⇒ empty index ⇒ empty result, correct schema
-        return _empty_knn(corpus, id_col)
+        return _empty_knn(corpus, "vec_id")
     index = _assign_cells(
-        ensure_min_partitions(corpus).select(id_col, vec_col),
-        centroids, vec_col, "cid",
+        ensure_min_partitions(corpus).select("vec_id", "embedding"),
+        centroids, "embedding", "cid",
     )
-    return _probe_cells(queries, index, centroids, k, n_probe, id_col, vec_col)
+    return _probe_cells(queries, index, centroids, k, n_probe, "vec_id", "embedding")
 
 
 def _probe_cells(
@@ -856,8 +844,6 @@ def semantic_dedup(
     n_clusters: "int | None" = None,
     threshold: float = 0.4,
     n_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
     target_cluster_size: int = 1024,
 ) -> DataFrame:
@@ -909,18 +895,18 @@ def semantic_dedup(
     runs the identical plan on refined centroids. Invalid vectors are
     excluded at entry per the embeddings contract
     (functions/measurement.py); ``dim=None`` infers it from the data."""
-    dim = _resolve_dim(df, dim, id_col, vec_col)
+    dim = _resolve_dim(df, dim, "vec_id", "embedding")
 
     def empty() -> DataFrame:
         return df.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.lit(0).cast("int").alias("cluster_id"),
             F.lit(True).alias("kept"),
         ).limit(0)
 
     if dim is None:
         return empty()
-    mem = _persist_tracked(_vector_groups(df, id_col, vec_col, dim))
+    mem = _persist_tracked(_vector_groups(df, "vec_id", "embedding", dim))
     if n_clusters is None:
         # exact distinct-vector count as ONE map-side-partial aggregate
         # over the source scan — NOT a count over the group frame, which
@@ -934,12 +920,12 @@ def semantic_dedup(
         # distinct vectors. The exact count stays the k source: approx
         # would break the oracle's replay of the derivation.
         n_reps = (
-            df.where(_valid(id_col, vec_col, dim))
-            .agg(F.countDistinct(vec_col).alias("__n"))
+            df.where(_valid("vec_id", "embedding", dim))
+            .agg(F.countDistinct("embedding").alias("__n"))
             .collect()[0]["__n"]
         )
         n_clusters = auto_n_clusters(n_reps, target_cluster_size)
-    centroids = train_ivf_centroids(df, n_clusters, n_iters, id_col, vec_col, dim)
+    centroids = train_ivf_centroids(df, n_clusters, n_iters, "vec_id", "embedding", dim)
     if not centroids:
         return empty()
     # assignment is consumed three times (both pairwise sides + the
@@ -960,7 +946,7 @@ def semantic_dedup(
         .join(assigned.select(F.col("__id").alias("__rid"), "__cid"), "__rid")
         .join(dropped, "__rid", "left")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("vec_id"),
             F.col("__cid").cast("int").alias("cluster_id"),
             F.when(
                 F.col("__id") != F.col("__rid"),
@@ -1094,8 +1080,6 @@ def semantic_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> DataFrame:
     """Semantic benchmark decontamination — the embedding-space twin of
@@ -1143,25 +1127,25 @@ def semantic_contamination(
     one) and only under id collisions between corpus and benchmark —
     keep the id spaces disjoint (the decontamination shape, and the
     registered usage) for exact top-1 semantics."""
-    dim = _resolve_dim(corpus, dim, id_col, vec_col)
+    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
 
     def empty() -> DataFrame:
         return corpus.select(
-            F.col(id_col),
-            F.col(id_col).alias("benchmark_id"),
+            F.col("vec_id"),
+            F.col("vec_id").alias("benchmark_id"),
             F.lit(0.0).alias("cosine"),
         ).limit(0)
 
     if dim is None:
         return empty()
-    keep = _valid(id_col, vec_col, dim)
+    keep = _valid("vec_id", "embedding", dim)
     b = F.broadcast(
         benchmark.where(keep)
-        .select(F.col(id_col).alias("benchmark_id"), F.col(vec_col).alias("__bv"))
+        .select(F.col("vec_id").alias("benchmark_id"), F.col("embedding").alias("__bv"))
         .groupBy("__bv")
         .agg(F.min("benchmark_id").alias("benchmark_id"))
     )
-    mem = _persist_tracked(_vector_groups(corpus, id_col, vec_col, dim))
+    mem = _persist_tracked(_vector_groups(corpus, "vec_id", "embedding", dim))
     reps = mem.where(F.col("__id") == F.col("__rid")).select(
         F.col("__id").alias("__rid2"), F.col("__v").alias("__cv")
     )
@@ -1187,7 +1171,7 @@ def semantic_contamination(
         mem.select("__id", F.col("__rid").alias("__rid2"))
         .join(top, "__rid2")
         .filter(F.col("__id") != F.col("benchmark_id"))
-        .select(F.col("__id").alias(id_col), "benchmark_id", "cosine")
+        .select(F.col("__id").alias("vec_id"), "benchmark_id", "cosine")
     )
 
 
@@ -1302,8 +1286,6 @@ def gram_matrix(
 def build_ivf_index(
     df: DataFrame,
     centroids: "list[tuple[int, list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> DataFrame:
     """The PERSISTED IVF index for a vector corpus: one (id, cid, vector)
@@ -1320,17 +1302,17 @@ def build_ivf_index(
     index. Duplicate ids collapse to one row (the index contract is one
     vector per id); ``centroids == []`` (empty history) yields an empty
     index with the contract schema."""
-    dim = _resolve_dim(df, dim, id_col, vec_col)
+    dim = _resolve_dim(df, dim, "vec_id", "embedding")
     if dim is None or not centroids:
         return df.select(
-            F.col(id_col), F.lit(0).alias("cid"), F.col(vec_col)
+            F.col("vec_id"), F.lit(0).alias("cid"), F.col("embedding")
         ).limit(0)
     return _assign_cells(
-        ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
-        .dropDuplicates([id_col])
-        .select(id_col, vec_col),
-        centroids, vec_col, "cid",
-    ).select(id_col, "cid", vec_col)
+        ensure_min_partitions(df.where(_valid("vec_id", "embedding", dim)))
+        .dropDuplicates(["vec_id"])
+        .select("vec_id", "embedding"),
+        centroids, "embedding", "cid",
+    ).select("vec_id", "cid", "embedding")
 
 
 def ivf_knn_against_index(
@@ -1339,8 +1321,6 @@ def ivf_knn_against_index(
     centroids: "list[tuple[int, list[float]]]",
     k: int = 3,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> DataFrame:
     """ANN search against a PERSISTED IVF index (``build_ivf_index``
@@ -1360,10 +1340,10 @@ def ivf_knn_against_index(
     the assignment across query batches (only this path dedups ids).
     Self-matches (query id == index id) are excluded, as in the whole
     kNN family."""
-    dim = _resolve_dim(queries, dim, id_col, vec_col)
+    dim = _resolve_dim(queries, dim, "vec_id", "embedding")
     if dim is None or not centroids:
-        return _empty_knn(queries, id_col)
+        return _empty_knn(queries, "vec_id")
     q = ensure_min_partitions(
-        queries.where(_valid(id_col, vec_col, dim))
-    ).dropDuplicates([id_col])
-    return _probe_cells(q, index, centroids, k, n_probe, id_col, vec_col)
+        queries.where(_valid("vec_id", "embedding", dim))
+    ).dropDuplicates(["vec_id"])
+    return _probe_cells(q, index, centroids, k, n_probe, "vec_id", "embedding")

@@ -28,19 +28,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, unique_col: str, n_salts: int, out: str = "__salt") -> DataFrame:
+def with_salt(df: DataFrame, unique_col: str, n_salts: int) -> DataFrame:
     """Deterministic per-row salt in [0, n_salts): xxhash64 of a unique
     column, folded with pmod. Deterministic (rerun/reshard-stable), unlike
     `rand()`-based salting which breaks retried-task idempotence."""
-    return df.withColumn(out, F.pmod(F.xxhash64(F.col(unique_col)), F.lit(n_salts)))
+    return df.withColumn(
+        "__salt", F.pmod(F.xxhash64(F.col(unique_col)), F.lit(n_salts))
+    )
 
 
-def replicate_over_salts(df: DataFrame, n_salts: int, out: str = "__salt") -> DataFrame:
+def replicate_over_salts(df: DataFrame, n_salts: int) -> DataFrame:
     """Cross the DataFrame with the salt range [0, n_salts) — the
     replicated build side of a salted join. explode of a literal
     sequence: narrow, no shuffle."""
     return df.withColumn(
-        out, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
 
 

@@ -186,21 +186,15 @@ def bucketed_range_join(
     )
 
 
-def gapfill_time_series(
-    df: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-    value_col: str = "value",
-    unit: str = "hour",
-) -> DataFrame:
+def gapfill_time_series(df: DataFrame) -> DataFrame:
     """Dense time-spine gap filling — the hypertable/resample operator:
-    every (bucket, group) cell of the [min, max] time range exists in the
+    every (hour, event_type) cell of the [min, max] time range exists in the
     output, with zero-filled counts, the bucket's decimal-exact value sum
     (NULL where the bucket is empty), and a last-observation-carried-
     forward column for downstream interpolation.
 
     Construction is all native: the spine is ONE row (global min/max
-    truncated to ``unit``) exploded through ``sequence`` — the range
+    truncated to the hour) exploded through ``sequence`` — the range
     never materializes on the driver; the group dimension broadcasts
     (distinct group keys are tiny by definition); the observed buckets
     left-join onto the dense grid; LOCF is ``last(ignorenulls)`` over an
@@ -210,38 +204,38 @@ def gapfill_time_series(
     aggregation applies; the spine stays proportional to range/step, not
     to row count.
 
-    Timeline contract (``functions/measurement.py``): NULL-``ts_col``
+    Timeline contract (``functions/measurement.py``): NULL-``ts``
     rows are off the timeline — they can land in no bucket — and are
     excluded up front; the quality suite counts them."""
-    df = df.where(F.col(ts_col).isNotNull())
-    bucket = F.date_trunc(unit, F.col(ts_col))
+    df = df.where(F.col("ts").isNotNull())
+    bucket = F.date_trunc("hour", F.col("ts"))
     bounds = df.agg(
-        F.date_trunc(unit, F.min(ts_col)).alias("__lo"),
-        F.date_trunc(unit, F.max(ts_col)).alias("__hi"),
+        F.date_trunc("hour", F.min("ts")).alias("__lo"),
+        F.date_trunc("hour", F.max("ts")).alias("__hi"),
     )
     spine = bounds.select(
         F.explode(
-            F.sequence(F.col("__lo"), F.col("__hi"), F.expr(f"INTERVAL 1 {unit}"))
+            F.sequence(F.col("__lo"), F.col("__hi"), F.expr("INTERVAL 1 hour"))
         ).alias("bucket_start")
     )
-    groups = df.select(group_col).distinct()
+    groups = df.select("event_type").distinct()
     grid = spine.crossJoin(F.broadcast(groups))
-    observed = df.groupBy(bucket.alias("bucket_start"), F.col(group_col)).agg(
+    observed = df.groupBy(bucket.alias("bucket_start"), F.col("event_type")).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(finite(value_col).cast("decimal(18,6)"))
+        F.sum(finite("value").cast("decimal(18,6)"))
         .cast("double")
         .alias("sum_value"),
     )
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("event_type")
         .orderBy("bucket_start")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        grid.join(observed, ["bucket_start", group_col], "left")
+        grid.join(observed, ["bucket_start", "event_type"], "left")
         .select(
             "bucket_start",
-            group_col,
+            "event_type",
             F.coalesce("n_events", F.lit(0)).alias("n_events"),
             "sum_value",
             F.last("sum_value", ignorenulls=True).over(w).alias("sum_value_locf"),

@@ -119,11 +119,7 @@ def bpe_token_counts(
     return (base - F.regexp_count(norm, F.lit(pattern))).cast("bigint")
 
 
-def bpe_pair_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    top_k: "int | None" = None,
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, top_k: "int | None" = None) -> DataFrame:
     """The distributed statistics pass of BPE vocabulary TRAINING: count
     every adjacent character pair inside every word of the corpus — the
     argmax of this table is the pair a BPE trainer merges next, and the
@@ -144,7 +140,7 @@ def bpe_pair_counts(
     cardinality is ≤ alphabet² (map-side combine collapses each
     partition to that many rows before the shuffle)."""
     pairs = (
-        df.select(F.explode(word_tokens(F.col(text_col))).alias("__w"))
+        df.select(F.explode(word_tokens(F.col("text"))).alias("__w"))
         # single-char words have no pairs (the regex below would also
         # yield an empty array for them; the filter prunes the rows)
         .filter(F.length("__w") >= 2)
@@ -433,7 +429,6 @@ def _bpe_apply_merge(state: Column, l: str, r: str) -> Column:
 
 def bpe_trainer_rounds(
     df: DataFrame,
-    text_col: str = "text",
     n_rounds: int = 3,
     pretokenizer: str = "word",
 ) -> DataFrame:
@@ -446,7 +441,7 @@ def bpe_trainer_rounds(
     count by the pair's non-overlapping occurrence count. Stops early if
     no pairs remain."""
     return bpe_batched_trainer_rounds(
-        df, text_col, n_rounds, 1, pretokenizer
+        df, "text", n_rounds, 1, pretokenizer
     ).drop("pos")
 
 
@@ -642,8 +637,6 @@ _ARROW_MERGE_THRESHOLD = 64
 def bpe_trained_token_counts_df(
     df: DataFrame,
     merges: "tuple[tuple[str, str], ...]",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     pretokenizer: str = "word",
 ) -> DataFrame:
     """DataFrame-level apply side of BPE training: per-document token
@@ -660,13 +653,13 @@ def bpe_trained_token_counts_df(
     test_bpe_byte_trained_counts_arrow_matches_native)."""
     if len(merges) < _ARROW_MERGE_THRESHOLD:
         return df.select(
-            id_col,
-            _trained_token_count(F.col(text_col), merges, pretokenizer).alias(
+            "doc_id",
+            _trained_token_count(F.col("text"), merges, pretokenizer).alias(
                 "n_tokens"
             ),
         )
     return _bpe_trained_counts_arrow(
-        df, merges, id_col, text_col, pretokenizer
+        df, merges, "doc_id", "text", pretokenizer
     )
 
 
@@ -790,8 +783,8 @@ def text_stats(col: Column) -> dict[str, Column]:
     }
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    stats = text_stats(F.col(text_col))
+def with_text_stats(df: DataFrame) -> DataFrame:
+    stats = text_stats(F.col("text"))
     return df.withColumns(stats)
 
 
@@ -1055,12 +1048,7 @@ def winnow_pairs(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k TF-IDF terms — the classic relevance weighting,
     fully native: one token explode feeds three aggregates (term count
     per doc, doc length, document frequency per term), scores join back,
@@ -1072,8 +1060,8 @@ def tfidf_top_terms(
     from pyspark.sql.window import Window
 
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(whitespace_tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id").alias("id"),
+        F.explode(whitespace_tokens(F.col("text"))).alias("term"),
     )
     cnt = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tc"))
     dl = toks.groupBy("id").agg(F.count(F.lit(1)).alias("len"))
@@ -1097,7 +1085,7 @@ def tfidf_top_terms(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(F.col("id").alias(id_col), "term", "rank", "tfidf")
+        .select(F.col("id").alias("doc_id"), "term", "rank", "tfidf")
     )
 
 
@@ -1112,23 +1100,23 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def scrub_pii(col: Column, patterns: dict[str, str] | None = None) -> Column:
+def scrub_pii(col: Column) -> Column:
     """Mask PII spans with typed placeholders (<EMAIL>, <PHONE>, <SSN>) —
     the standard pre-training redaction pass, as one chained
     regexp_replace projection (narrow, JVM-side, order: most-specific
     first so an SSN is not half-eaten by the phone pattern)."""
     out = col
-    for name, pat in (patterns or PII_PATTERNS).items():
+    for name, pat in PII_PATTERNS.items():
         out = F.regexp_replace(out, pat, f"<{name.upper()}>")
     return out
 
 
-def pii_match_flags(col: Column, patterns: dict[str, str] | None = None) -> list[Column]:
+def pii_match_flags(col: Column) -> list[Column]:
     """One boolean flag column per PII category — the audit twin of
     scrub_pii (count before masking, verify zero after)."""
     return [
         col.rlike(pat).alias(f"has_{name}")
-        for name, pat in (patterns or PII_PATTERNS).items()
+        for name, pat in PII_PATTERNS.items()
     ]
 
 
@@ -1204,24 +1192,18 @@ def gopher_quality_flags(col: Column) -> dict[str, Column]:
     }
 
 
-def gopher_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_filter(df: DataFrame) -> DataFrame:
     """Keep only documents passing ALL Gopher rules — the production
     filter; ``gopher_quality_flags`` exposes the per-rule booleans for
     auditing which rule rejected a document."""
-    flags = gopher_quality_flags(F.col(text_col))
+    flags = gopher_quality_flags(F.col("text"))
     keep = None
     for c in flags.values():
         keep = c if keep is None else (keep & c)
     return df.filter(keep)
 
 
-def chunk_by_tokens(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_size: int = 32,
-    overlap: int = 8,
-) -> DataFrame:
+def chunk_by_tokens(df: DataFrame, chunk_size: int = 32, overlap: int = 8) -> DataFrame:
     """Overlapping fixed-size token-window chunks — the standard
     RAG-indexing / context-window packing chunker. Chunk c covers tokens
     [c*stride, c*stride + chunk_size) with stride = chunk_size - overlap;
@@ -1235,16 +1217,16 @@ def chunk_by_tokens(
     if overlap >= chunk_size:
         raise ValueError("overlap must be < chunk_size")
     stride = chunk_size - overlap
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+    ws = F.split(F.trim(F.col("text")), r"\s+")
     starts = F.sequence(F.lit(0), F.size(ws) - 1, F.lit(stride))
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             ws.alias("__ws"),
             F.posexplode(starts).alias("chunk_id", "__start"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("chunk_id").cast("bigint").alias("chunk_id"),
             F.array_join(
                 F.slice(F.col("__ws"), F.col("__start") + 1, chunk_size), " "
@@ -1263,11 +1245,7 @@ def _q_log2(c: Column) -> Column:
     return F.round(F.log2(c.cast("double")) * 10000).cast("bigint")
 
 
-def unigram_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def unigram_lm_scores(df: DataFrame) -> DataFrame:
     """CCNet-style language-model quality scoring with a self-trained
     unigram model: a document's score is its average per-token negative
     log2-probability (bits/token) under the corpus's own unigram
@@ -1283,14 +1261,14 @@ def unigram_lm_scores(
     drift cross-engine, while a 1e-4 quantum makes a boundary flip a
     ~1e-12/token event and integer sums are order-independent — the
     score column hash-checks against DuckDB exactly."""
-    toks = whitespace_tokens(F.col(text_col))
-    ex = df.select(F.col(id_col), F.explode(toks).alias("tok"))
+    toks = whitespace_tokens(F.col("text"))
+    ex = df.select(F.col("doc_id"), F.explode(toks).alias("tok"))
     freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = freq.agg(F.sum("cnt").cast("bigint").alias("total_tokens"))
     q_tok = _q_log2(F.col("cnt"))
     per_doc = (
         ex.join(freq, "tok")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.sum(q_tok).cast("bigint").alias("__sum_q"),
@@ -1300,7 +1278,7 @@ def unigram_lm_scores(
     return (
         per_doc.crossJoin(total)
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             (
                 (F.col("n_tokens") * q_total - F.col("__sum_q")).cast("double")
@@ -1310,14 +1288,7 @@ def unigram_lm_scores(
     )
 
 
-def bm25_scores(
-    df: DataFrame,
-    query_terms: "list[str]",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_scores(df: DataFrame, query_terms: "list[str]") -> DataFrame:
     """Okapi BM25 relevance of every doc against a bag of query terms —
     the standard lexical retrieval scorer (term-frequency saturation +
     length normalization + rare-term IDF), Lucene's smoothed IDF
@@ -1331,14 +1302,10 @@ def bm25_scores(
     search's query-term filter below the postings aggregate, so the
     corpus scan explodes tokens but aggregates only the query-term
     hits; doc lengths are one narrow ``F.size`` pass."""
-    return bm25_search_against_index(
-        *bm25_index_build(df, id_col, text_col), query_terms, id_col, k1, b
-    )
+    return bm25_search_against_index(*bm25_index_build(df), query_terms)
 
 
-def default_classifier_weights(
-    spark, n_buckets: int = 4096, seed: str = "qclf"
-) -> DataFrame:
+def default_classifier_weights(spark, n_buckets: int = 4096) -> DataFrame:
     """Deterministic (bucket, w_micro) weight table for
     :func:`quality_classifier_scores` — a md5-derived stand-in for a
     TRAINED fastText-style model's weight vector (w_micro ∈ [-1e6, 1e6],
@@ -1352,7 +1319,7 @@ def default_classifier_weights(
     return spark.range(n_buckets).select(
         F.col("id").alias("bucket"),
         (
-            base_shingle_hash(F.concat(F.lit(seed + ":"), F.col("id").cast("string")))
+            base_shingle_hash(F.concat(F.lit("qclf:"), F.col("id").cast("string")))
             % F.lit(2000001)
             - F.lit(1000000)
         ).cast("bigint").alias("w_micro"),
@@ -1362,9 +1329,6 @@ def default_classifier_weights(
 def quality_classifier_scores(
     df: DataFrame,
     weights: "DataFrame | None" = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 4096,
     bias_micro: int = 0,
 ) -> DataFrame:
     """fastText-style hashed linear quality-classifier scoring (VERDICT
@@ -1382,7 +1346,7 @@ def quality_classifier_scores(
     (id, n_features, logit, prob).
 
     Scale shape (the DSIR machinery, text_analysis.py
-    dsir_importance_weights): the model is ≤ n_buckets rows and
+    dsir_importance_weights): the model is ≤ 4096 rows and
     BROADCAST; the corpus pass is explode features → in-row hash →
     broadcast join → one groupBy on the doc id — a single linear
     doc-keyed shuffle, nothing driver-sized, no UDFs.
@@ -1399,18 +1363,18 @@ def quality_classifier_scores(
     from ehr_data_pipeline_spark.operators.text_dedup import base_shingle_hash
 
     if weights is None:
-        weights = default_classifier_weights(df.sparkSession, n_buckets)
+        weights = default_classifier_weights(df.sparkSession, 4096)
     feats = F.concat(
-        whitespace_tokens(F.col(text_col)), ngrams(F.col(text_col), 2)
+        whitespace_tokens(F.col("text")), ngrams(F.col("text"), 2)
     )
     bucketed = df.select(
-        F.col(id_col), F.explode(feats).alias("__f")
+        F.col("doc_id"), F.explode(feats).alias("__f")
     ).select(
-        id_col, (base_shingle_hash(F.col("__f")) % F.lit(n_buckets)).alias("bucket")
+        "doc_id", (base_shingle_hash(F.col("__f")) % F.lit(4096)).alias("bucket")
     )
     per_doc = (
         bucketed.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_features"),
             F.sum(F.coalesce(F.col("w_micro"), F.lit(0)))
@@ -1426,20 +1390,14 @@ def quality_classifier_scores(
         F.lit(1000000.0) / (F.lit(1.0) + F.exp(-logit))
     ).cast("bigint")
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_features",
         logit.alias("logit"),
         (prob_q.cast("double") / F.lit(1000000.0)).alias("prob"),
     )
 
 
-def dsir_importance_weights(
-    raw: DataFrame,
-    target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 1024,
-) -> DataFrame:
+def dsir_importance_weights(raw: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score each raw doc
     by how much more likely its hashed-token bag is under the TARGET
@@ -1448,11 +1406,11 @@ def dsir_importance_weights(
 
         avg_logw_bits = (1/n) Σ_tok [log2 p_target(b) − log2 p_raw(b)]
 
-    with bucket b = portable-hash(token) mod ``n_buckets`` and add-one
+    with bucket b = portable-hash(token) mod 1024 and add-one
     smoothed models p(b) = (cnt_b + 1)/(N + B). Positive = looks like
     the target domain; select by descending weight.
 
-    Scale shape: both models are ≤ n_buckets rows (one groupBy each over
+    Scale shape: both models are ≤ 1024 rows (one groupBy each over
     exploded tokens, map-side combined), the per-bucket log-ratio table
     broadcasts, and the doc pass is one groupBy on the id — three linear
     shuffles, nothing driver-sized. Cross-engine determinism is the
@@ -1463,13 +1421,13 @@ def dsir_importance_weights(
     from ehr_data_pipeline_spark.operators.text_dedup import base_shingle_hash
 
     def bucketed(df: DataFrame, with_id: bool) -> DataFrame:
-        cols = [F.col(id_col)] if with_id else []
+        cols = [F.col("doc_id")] if with_id else []
         ex = df.select(
-            *cols, F.explode(whitespace_tokens(F.col(text_col))).alias("tok")
+            *cols, F.explode(whitespace_tokens(F.col("text"))).alias("tok")
         )
         return ex.select(
-            *([id_col] if with_id else []),
-            (base_shingle_hash(F.col("tok")) % F.lit(n_buckets)).alias("bucket"),
+            *(["doc_id"] if with_id else []),
+            (base_shingle_hash(F.col("tok")) % F.lit(1024)).alias("bucket"),
         )
 
     t_cnt = bucketed(target, False).groupBy("bucket").agg(
@@ -1491,19 +1449,19 @@ def dsir_importance_weights(
         )
     )
     totals = t_cnt.agg(
-        _q_log2(F.sum("t_cnt") + n_buckets).alias("q_nt")
-    ).crossJoin(r_cnt.agg(_q_log2(F.sum("r_cnt") + n_buckets).alias("q_nr")))
+        _q_log2(F.sum("t_cnt") + 1024).alias("q_nt")
+    ).crossJoin(r_cnt.agg(_q_log2(F.sum("r_cnt") + 1024).alias("q_nr")))
     per_doc = (
         bucketed(raw, True)
         .join(F.broadcast(model), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.sum("q_ratio").cast("bigint").alias("__sum_q"),
         )
     )
     return per_doc.crossJoin(F.broadcast(totals)).select(
-        id_col,
+        "doc_id",
         "n_tokens",
         (
             (
@@ -1612,12 +1570,7 @@ def bm25_search_against_index(
 _Q_BACKOFF_ALPHA = -13219
 
 
-def bigram_lm_scores(
-    df: DataFrame,
-    model_docs: "DataFrame | None" = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_lm_scores(df: DataFrame, model_docs: "DataFrame | None" = None) -> DataFrame:
     """Distributed bigram language-model scoring with Stupid Backoff
     (Brants et al. 2007, "Large Language Models in Machine Translation"
     — the score function DESIGNED for MapReduce-scale LMs: no
@@ -1651,7 +1604,7 @@ def bigram_lm_scores(
         model_docs = df
 
     def transitions(frame: DataFrame) -> DataFrame:
-        toks = whitespace_tokens(F.col(text_col))
+        toks = whitespace_tokens(F.col("text"))
         size = F.size(toks)
         pairs = F.zip_with(
             F.slice(toks, 1, F.greatest(size - 1, F.lit(0))),
@@ -1659,11 +1612,11 @@ def bigram_lm_scores(
             lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
         )
         return frame.select(
-            F.col(id_col), F.explode(pairs).alias("__t")
-        ).select(id_col, F.col("__t.w1").alias("w1"), F.col("__t.w2").alias("w2"))
+            F.col("doc_id"), F.explode(pairs).alias("__t")
+        ).select("doc_id", F.col("__t.w1").alias("w1"), F.col("__t.w2").alias("w2"))
 
     uc = (
-        model_docs.select(F.explode(whitespace_tokens(F.col(text_col))).alias("w"))
+        model_docs.select(F.explode(whitespace_tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -1684,7 +1637,7 @@ def bigram_lm_scores(
         )
         .crossJoin(F.broadcast(total))
         .select(
-            id_col,
+            "doc_id",
             F.when(
                 F.col("bc").isNotNull(), _q_log2(F.col("bc")) - _q_log2(F.col("c1"))
             )
@@ -1696,15 +1649,15 @@ def bigram_lm_scores(
             .alias("__q"),
         )
     )
-    per_doc = tr.groupBy(id_col).agg(
+    per_doc = tr.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_transitions"),
         F.sum("__q").cast("bigint").alias("__s"),
     )
     return (
-        df.select(id_col).dropDuplicates([id_col])
-        .join(per_doc, id_col, "left")
+        df.select("doc_id").dropDuplicates(["doc_id"])
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_transitions"), F.lit(0).cast("bigint")).alias(
                 "n_transitions"
             ),

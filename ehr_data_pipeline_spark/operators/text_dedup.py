@@ -117,22 +117,22 @@ def hashed_shingle_set(col: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
     return F.array_distinct(F.transform(shingle_set(col, k), base_shingle_hash))
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup on the normalized-text fingerprint — keeps one arbitrary
     row per distinct content (hash-aggregate, one shuffle). For a
     deterministic survivor use keep_first on __fp with an explicit order."""
-    return df.withColumn("__fp", fingerprint128(F.col(text_col))).dropDuplicates(
+    return df.withColumn("__fp", fingerprint128(F.col("text"))).dropDuplicates(
         ["__fp"]
     ).drop("__fp")
 
 
-def exact_dup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dup_stats(df: DataFrame) -> DataFrame:
     """Corpus-level exact-duplication report in one groupBy pass:
     (n_docs, n_distinct, n_dup_groups, n_rows_in_dup_groups) — the
     duplicate_group_stats shape (A4 keep=False semantics) keyed by content
     fingerprint instead of relational keys."""
     groups = (
-        df.select(fingerprint128(F.col(text_col)).alias("fp"))
+        df.select(fingerprint128(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -286,11 +286,8 @@ def jaccard_pairs(
 
 def curate_corpus_funnel(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_quality: float = 0.5,
     jaccard_threshold: float = 0.8,
-    k: int = DEFAULT_SHINGLE_K,
 ) -> DataFrame:
     """The composed LLM-corpus curation pipeline — the operators above
     chained the way a training-data run chains them, reported as a funnel
@@ -312,15 +309,15 @@ def curate_corpus_funnel(
     oracle-checkable."""
     from ehr_data_pipeline_spark.operators.text_analysis import text_stats
 
-    base = df.select(id_col, text_col)
-    quality = text_stats(F.col(text_col))["quality_score"]
+    base = df.select("doc_id", "text")
+    quality = text_stats(F.col("text"))["quality_score"]
     q = base.filter(quality >= min_quality)
-    fp = q.select(F.col(id_col), fingerprint128(F.col(text_col)).alias("__fp"))
-    keep = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col)).select(id_col)
-    e = q.join(keep, id_col, "left_semi")
-    pairs = jaccard_pairs(e, id_col, text_col, jaccard_threshold, k)
-    removed = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    n = e.join(removed, id_col, "left_anti")
+    fp = q.select(F.col("doc_id"), fingerprint128(F.col("text")).alias("__fp"))
+    keep = fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
+    e = q.join(keep, "doc_id", "left_semi")
+    pairs = jaccard_pairs(e, "doc_id", "text", jaccard_threshold, DEFAULT_SHINGLE_K)
+    removed = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    n = e.join(removed, "doc_id", "left_anti")
 
     def stage(idx: int, name: str, frame: DataFrame) -> DataFrame:
         return frame.agg(F.count(F.lit(1)).alias("n_docs")).select(
@@ -798,17 +795,12 @@ def _rep_minhash_pairs(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
-    k: int = DEFAULT_SHINGLE_K,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
     sig_agree: int = 0,
 ) -> DataFrame:
     """Near-dup pairs at scale: shingle → MinHash signature → band-bucket
     candidate join → exact-Jaccard verification. ``sig_agree`` (0 = off)
-    additionally requires that many of the ``num_hashes`` MinHash
+    additionally requires that many of the ``DEFAULT_NUM_HASHES`` MinHash
     positions to agree before a candidate's exact intersection runs —
     see :func:`_verified` for the estimator argument, cost, and
     the measured recall trade.
@@ -835,22 +827,18 @@ def minhash_lsh_pairs(
     ``release_builder_caches`` for the cache lifetime. In a
     persistent 100 TB deployment the index is written ONCE bucketed by
     band key (sinks.write_bucketed) and never recomputed per run."""
-    grouped = _shingle_groups(df, id_col, text_col, k)
-    sig = _rep_signatures(grouped, num_hashes)
-    pairs = _rep_minhash_pairs(sig, threshold, num_hashes, bands, sig_agree)
+    grouped = _shingle_groups(df, "doc_id", "text", DEFAULT_SHINGLE_K)
+    sig = _rep_signatures(grouped, DEFAULT_NUM_HASHES)
+    pairs = _rep_minhash_pairs(
+        sig, threshold, DEFAULT_NUM_HASHES, DEFAULT_BANDS, sig_agree
+    )
     members = grouped.select("__rid", F.col("id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "jaccard", ("doc_a", "doc_b"))
 
 
 def minhash_dup_groups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
-    k: int = DEFAULT_SHINGLE_K,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    max_iter: int = 20,
     sig_agree: int = 0,
 ) -> DataFrame:
     """Near-dup GROUP membership — the production dedup surface
@@ -865,22 +853,22 @@ def minhash_dup_groups(
     Jaccard 1.0). Equals the transitive closure of
     :func:`minhash_lsh_pairs` exactly — the oracle replays that with a
     recursive CTE."""
-    grouped = _shingle_groups(df, id_col, text_col, k)
-    sig = _rep_signatures(grouped, num_hashes)
-    pairs = _rep_minhash_pairs(sig, threshold, num_hashes, bands, sig_agree)
+    grouped = _shingle_groups(df, "doc_id", "text", DEFAULT_SHINGLE_K)
+    sig = _rep_signatures(grouped, DEFAULT_NUM_HASHES)
+    pairs = _rep_minhash_pairs(
+        sig, threshold, DEFAULT_NUM_HASHES, DEFAULT_BANDS, sig_agree
+    )
     members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
     # an identical-set group's Jaccard 1.0 clears any real threshold ≤ 1.0;
     # duplicated input ids collapse to one membership row
     return _rep_group_membership(
-        pairs, members, id_col, threshold <= 1.0, max_iter
+        pairs, members, "doc_id", threshold <= 1.0, 20
     ).distinct()
 
 
 def dedup_against_index(
     batch: DataFrame,
     index: DataFrame,
-    text_col: str = "text",
-    fp_col: str = "fp",
     id_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental exact dedup — the shape a CONTINUOUS ingest needs:
@@ -896,26 +884,19 @@ def dedup_against_index(
     co-located buckets with no shuffle of the history."""
     from ehr_data_pipeline_spark.operators.dedup import keep_first
 
-    fp = fingerprint128(F.col(text_col))
-    b = batch.withColumn(fp_col, fp)
+    fp = fingerprint128(F.col("text"))
+    b = batch.withColumn("fp", fp)
     if id_col is None:
-        b = b.dropDuplicates([fp_col])
+        b = b.dropDuplicates(["fp"])
     else:
-        b = keep_first(b, keys=[fp_col], order_by=[F.col(id_col).asc()])
-    fresh = b.join(index.select(fp_col), fp_col, "left_anti")
-    return fresh.drop(fp_col), fresh.select(fp_col)
+        b = keep_first(b, keys=["fp"], order_by=[F.col(id_col).asc()])
+    fresh = b.join(index.select("fp"), "fp", "left_anti")
+    return fresh.drop("fp"), fresh.select("fp")
 
 
-def ngram_contamination(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 13,
-    min_shared: int = 1,
-) -> DataFrame:
+def ngram_contamination(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: for every corpus doc, how many of its
-    word ``n``-grams appear in ANY benchmark document (the standard
+    word 13-grams appear in ANY benchmark document (the standard
     13-gram overlap rule from GPT-3/PaLM data curation). A contaminated
     doc shares eval content verbatim and must be dropped before
     training.
@@ -926,7 +907,7 @@ def ngram_contamination(
     when the benchmark is small, which it always is relative to a
     training corpus), then a per-doc count. Returns
     (doc_id, n_ngrams, n_contaminated, contamination_ratio) for docs
-    with at least ``min_shared`` hits."""
+    with at least one hit."""
     from ehr_data_pipeline_spark.operators.text_analysis import (
         normalize_text,
         portable_hash60,
@@ -943,10 +924,10 @@ def ngram_contamination(
         # fewer-than-n tokens replays the old size(toks) >= n guard
         # (pinned in tests/test_text_analysis.py).
         grams = F.transform(
-            word_ngram_strings(normalize_text(F.col(text_col)), n),
+            word_ngram_strings(normalize_text(F.col("text")), 13),
             portable_hash60,
         )
-        return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("gh"))
+        return df.select(F.col("doc_id").alias("id"), F.explode(grams).alias("gh"))
 
     corpus_grams = gram_hashes(ensure_min_partitions(corpus))
     bench_set = gram_hashes(benchmark).select("gh").distinct()
@@ -955,12 +936,12 @@ def ngram_contamination(
         corpus_grams.join(F.broadcast(bench_set), "gh")
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_contaminated"))
-        .filter(F.col("n_contaminated") >= min_shared)
+        .filter(F.col("n_contaminated") >= 1)
     )
     return (
         hits.join(totals, "id")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_ngrams",
             "n_contaminated",
             F.round(
@@ -1078,8 +1059,6 @@ def duplicate_spans(
 
 def strip_duplicate_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -1098,13 +1077,13 @@ def strip_duplicate_spans(
     from ehr_data_pipeline_spark.operators.text_analysis import whitespace_tokens
 
     spans = duplicate_spans(
-        df, id_col=id_col, text_col=text_col, window=window, min_count=min_count
-    ).select(F.col(id_col).alias("id"), "span_start", "span_end")
+        df, id_col="doc_id", text_col="text", window=window, min_count=min_count
+    ).select(F.col("doc_id").alias("id"), "span_start", "span_end")
     toks = (
         ensure_min_partitions(df)
         .select(
-            F.col(id_col).alias("id"),
-            F.posexplode(whitespace_tokens(F.col(text_col))).alias("pos", "tok"),
+            F.col("doc_id").alias("id"),
+            F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "tok"),
         )
         .where(F.col("tok") != "")
     )
@@ -1115,7 +1094,7 @@ def strip_duplicate_spans(
     )
     kept_flag = toks.join(covered, ["id", "pos"], "left_anti")
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .distinct()
         .join(
             toks.groupBy("id").agg(
@@ -1139,7 +1118,7 @@ def strip_duplicate_spans(
             "left",
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce(F.col("dedup_text"), F.lit("")).alias("dedup_text"),
             F.coalesce(F.col("n_tokens"), F.lit(0)).cast("bigint").alias("n_tokens"),
             F.coalesce(F.col("n_tokens_kept"), F.lit(0)).cast("bigint").alias(
@@ -1542,8 +1521,6 @@ def _rep_simhash_pairs(
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_distance: int = 3,
     n_bands: int = DEFAULT_BANDS,
     total_bits: int = 60,
@@ -1573,7 +1550,7 @@ def simhash_near_dup_pairs(
     family member at 100 TB; hot buckets (common band values from
     boilerplate) are the skew risk, handled by AQE skew-join same as the
     MinHash bands."""
-    grouped = _simhash_groups(df, id_col, text_col, total_bits)
+    grouped = _simhash_groups(df, "doc_id", "text", total_bits)
     pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
     members = grouped.select("__rid", F.col("id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "hamming", ("doc_a", "doc_b"))
@@ -1581,12 +1558,9 @@ def simhash_near_dup_pairs(
 
 def simhash_dup_groups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_distance: int = 3,
     n_bands: int = DEFAULT_BANDS,
     total_bits: int = 60,
-    max_iter: int = 20,
 ) -> DataFrame:
     """SimHash near-dup GROUP membership — the linear-output production
     surface completing the group-twin triple (MinHash →
@@ -1599,11 +1573,11 @@ def simhash_dup_groups(
     with no external neighbor is its own cluster (mutual distance 0).
     Equals the transitive closure of :func:`simhash_near_dup_pairs`
     exactly — the oracle replays that equivalence with a recursive CTE."""
-    grouped = _simhash_groups(df, id_col, text_col, total_bits)
+    grouped = _simhash_groups(df, "doc_id", "text", total_bits)
     pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
     members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
     # an identical-sketch group's distance 0 clears any real
     # max_distance ≥ 0; duplicated input ids collapse to one membership row
     return _rep_group_membership(
-        pairs, members, id_col, max_distance >= 0, max_iter
+        pairs, members, "doc_id", max_distance >= 0, 20
     ).distinct()

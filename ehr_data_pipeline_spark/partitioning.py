@@ -19,12 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Repartition ``df`` to ``n`` (default: the session's default
-    parallelism) iff it currently has fewer partitions. The check is
-    driver-side plan inspection — no job runs."""
-    sc = df.sparkSession.sparkContext
-    target = n or sc.defaultParallelism
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the session's default parallelism iff it
+    currently has fewer partitions. The check is driver-side plan
+    inspection — no job runs."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -75,7 +74,6 @@ def write_range_partitioned(
     path: str,
     cols: "Sequence[str]",
     n_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Globally-sorted parquet layout: range-partition on ``cols`` (each
     output file owns a contiguous, non-overlapping key range) and sort
@@ -91,7 +89,7 @@ def write_range_partitioned(
     (
         df.repartitionByRange(n, *[F.col(c) for c in cols])
         .sortWithinPartitions(*cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -102,7 +100,6 @@ def write_zordered(
     cols: "Sequence[tuple[str, float, float]]",
     bits: int = 16,
     n_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` clustered by its Z-order key: range-partition on the
     key (each output file owns a contiguous key range = a small
@@ -115,6 +112,6 @@ def write_zordered(
         keyed.repartitionByRange(n, "__zkey")
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

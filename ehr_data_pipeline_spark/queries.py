@@ -74,8 +74,8 @@ def register(name: str, oracle: str | None = None, bench: bool = False):
     return deco
 
 
-def dec(col: str | Column, scale: int = 6) -> Column:
-    """Exact-sum helper: cast a double column to DECIMAL(18,scale) so SUM is
+def dec(col: str | Column) -> Column:
+    """Exact-sum helper: cast a double column to DECIMAL(18,6) so SUM is
     order-independent (decimal addition is exact; double addition is not).
 
     Value-domain contract (the full statement lives in
@@ -91,7 +91,7 @@ def dec(col: str | Column, scale: int = 6) -> Column:
     oracles keep the plain cast."""
     from ehr_data_pipeline_spark.functions.measurement import valid_measurement
 
-    return valid_measurement(col).cast(f"decimal(18,{scale})")
+    return valid_measurement(col).cast("decimal(18,6)")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

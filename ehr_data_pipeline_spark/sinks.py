@@ -225,22 +225,17 @@ def write_jdbc(
         )
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """CSV sink (S6, json_pipeline.py:1058-1076): header row, distributed
     part files. ``index=False`` parity is automatic (Spark has no index)."""
-    normalize_columns(df).write.option("header", True).mode(mode).csv(path)
+    normalize_columns(df).write.option("header", True).mode("overwrite").csv(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: tuple[str, ...] = (),
-) -> None:
+def write_parquet(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
     """Parquet sink — the engine's canonical format. ``partition_by`` gives
     directory partition pruning on re-read (e.g. by resource type or
     ingest date at 100 TB)."""
-    writer = normalize_columns(df).write.mode(mode)
+    writer = normalize_columns(df).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -252,7 +247,6 @@ def write_bucketed(
     bucket_cols: tuple[str, ...] | list[str],
     n_buckets: int = 32,
     sort_cols: tuple[str, ...] | list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed parquet table — the co-located-join storage layout for
     100 TB fact tables. Writing both sides of a hot join (e.g. orders and
@@ -267,7 +261,7 @@ def write_bucketed(
     writer = normalize_columns(df).write.bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
-    writer.mode(mode).format("parquet").saveAsTable(table)
+    writer.mode("overwrite").format("parquet").saveAsTable(table)
 
 
 def compact_parquet(
@@ -306,7 +300,6 @@ def write_entity_tables(
     tables: dict[str, DataFrame],
     out_dir: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> dict[str, str]:
     """Write the six FHIR entity tables (the ``×6`` sink loops,
     json_pipeline.py:914-928 JDBC / :1058-1076 CSV) under
@@ -334,7 +327,6 @@ def write_entity_tables(
                 inheritable_thread_target(df.sparkSession)(write),
                 df,
                 paths[name],
-                mode=mode,
             )
             for name, df in tables.items()
         ]

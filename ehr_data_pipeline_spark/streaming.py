@@ -148,7 +148,6 @@ def enrich_stream_static(
     stream: DataFrame,
     dim: DataFrame,
     on: str | list[str],
-    how: str = "left",
 ) -> DataFrame:
     """Stream-static enrichment join: each microbatch of the stream joins
     against the (bounded) dimension DataFrame. The static side is
@@ -157,29 +156,25 @@ def enrich_stream_static(
     state store (stream-static joins are stateless by definition; only
     stream-stream joins buffer rows). At 100 TB stream rates the
     broadcast is the difference between a per-microbatch shuffle of the
-    stream and none. ``how`` is stream-side outer at most (left/inner) —
-    right/full would need unbounded state over the static side's unmatched
-    keys and Spark rejects it."""
+    stream and none. The join is stream-side left outer — right/full
+    would need unbounded state over the static side's unmatched keys and
+    Spark rejects it."""
     keys = [on] if isinstance(on, str) else list(on)
-    return stream.join(F.broadcast(dim), keys, how)
+    return stream.join(F.broadcast(dim), keys, "left")
 
 
-def dedup_events_stream(
-    events: DataFrame,
-    keys: tuple[str, ...] | list[str] = ("event_id",),
-    watermark: str = "2 hours",
-) -> DataFrame:
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup — the stream twin of the batch key-dedup
     (operators.dedup.keep_first / SURVEY U2): emits the first occurrence
-    of each key and drops re-deliveries (at-least-once sources, retried
-    producers). ``dropDuplicatesWithinWatermark`` keeps a key's state
-    only until the watermark passes its event time + delay, so state is
+    of each ``event_id`` and drops re-deliveries (at-least-once sources,
+    retried producers). ``dropDuplicatesWithinWatermark`` keeps a key's state
+    only until the watermark passes its event time + 2 hours, so state is
     O(keys per watermark window), not O(keys ever seen) — the property
     that lets a 100 TB/day ingest run forever. Exactly-once *within* the
     watermark horizon; a duplicate arriving later than the delay is
-    treated as new (the standard trade, tuned by the watermark)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
+    treated as new (the standard trade)."""
+    return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
 
 
@@ -190,7 +185,6 @@ def interval_join_stream(
     left_time: str,
     right_time: str,
     lookback: str = "10 minutes",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-stream equi-key INTERVAL join: each left event pairs with
     the same key's right events in ``[left_time - lookback, left_time]``
@@ -201,7 +195,7 @@ def interval_join_stream(
     of metadata to bound state: the watermarks tell the store how late
     either side can still arrive, and the time-range predicate tells it
     how long a buffered row can still find partners — together each side
-    buffers only ``watermark + lookback`` of history, so state is
+    buffers only 2 hours + ``lookback`` of history, so state is
     O(arrival rate × horizon), not O(stream length). Without the range
     condition Spark rejects/unbounded-buffers a stream-stream join.
     ``right_time`` must differ from ``left_time`` in name (the range
@@ -209,8 +203,8 @@ def interval_join_stream(
     the left side in the output. Inner join: late rows beyond the
     watermark drop, the standard trade."""
     keys = [on] if isinstance(on, str) else list(on)
-    lw = left.withWatermark(left_time, watermark)
-    rw = right.withWatermark(right_time, watermark)
+    lw = left.withWatermark(left_time, "2 hours")
+    rw = right.withWatermark(right_time, "2 hours")
     cond = None
     for k in keys:
         eq = lw[k] == rw[k]
@@ -242,11 +236,7 @@ def _ewma_fold(values, n: int, ewma: float | None, alpha: float):
     return n, ewma
 
 
-def user_value_ewma_stream(
-    events: DataFrame,
-    alpha: float = 0.3,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
+def user_value_ewma_stream(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     per-user exponentially-weighted moving average of ``value``. An EWMA is
     an ORDER-DEPENDENT fold over each user's event history — not
@@ -255,14 +245,10 @@ def user_value_ewma_stream(
     for.
 
     Mechanics: state = (n, ewma, last_event_us) per user, updated by
-    folding each microbatch's rows in ``ts`` order; one updated row per
-    user per microbatch (update mode). With ``state_ttl_ms`` set, a
-    processing-time timeout evicts users idle longer than the TTL — state
-    is O(active users), not O(users ever seen); that's the long-running
-    production mode. Leave it ``None`` for bounded drains
-    (``availableNow`` backfills/tests): with a registered timeout Spark
-    keeps scheduling state-cleanup microbatches after the data is
-    exhausted and the drain never terminates. Python is in the loop, but
+    folding each microbatch's rows in ``ts`` order (alpha 0.3); one
+    updated row per user per microbatch (update mode). No state timeout
+    is registered, so ``availableNow`` drains terminate once the data is
+    exhausted. Python is in the loop, but
     Arrow-batched and only O(|microbatch|) per trigger — the 100 TB
     backfill cost is paced by ``maxFilesPerTrigger``, and state lives in
     the JVM state store between triggers."""
@@ -270,38 +256,28 @@ def user_value_ewma_stream(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
         (user_id,) = key
         n, ewma, last_us = state.get if state.exists else (0, None, None)
         batch = pd.concat(list(pdfs)).sort_values("ts")
         if len(batch):
-            n, ewma = _ewma_fold(batch["value"].to_list(), n, ewma, alpha)
+            n, ewma = _ewma_fold(batch["value"].to_list(), n, ewma, 0.3)
             last_us = int(batch["ts"].astype("int64").max()) // 1000
         state.update((n, ewma, last_us))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
         yield pd.DataFrame(
             [{"user_id": user_id, "n_events": n, "ewma": ewma,
               "last_event_us": last_us}]
         )
 
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if state_ttl_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
     return events.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=EWMA_OUTPUT_SCHEMA,
         stateStructType=EWMA_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout_conf,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def user_value_ewma_batch(events: DataFrame, alpha: float = 0.3) -> DataFrame:
+def user_value_ewma_batch(events: DataFrame) -> DataFrame:
     """Batch twin of :func:`user_value_ewma_stream` (``applyInPandas``,
     same fold) — the correctness oracle for the stateful stream: an
     ``availableNow`` drain over a static table must produce exactly these
@@ -310,7 +286,7 @@ def user_value_ewma_batch(events: DataFrame, alpha: float = 0.3) -> DataFrame:
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts")
-        n, ewma = _ewma_fold(pdf["value"].to_list(), 0, None, alpha)
+        n, ewma = _ewma_fold(pdf["value"].to_list(), 0, None, 0.3)
         return pd.DataFrame(
             [{
                 "user_id": pdf["user_id"].iloc[0],
@@ -399,7 +375,6 @@ def scd2_dimension_sink(
     dim_path: str,
     keys: "Sequence[str]",
     attrs: "Sequence[str]",
-    ts_col: str = "ts",
     tiebreak: str | None = None,
 ):
     """foreachBatch maintainer for an SCD2 dimension fed by an event
@@ -428,9 +403,9 @@ def scd2_dimension_sink(
 
     return incremental_epoch_sink(
         dim_path,
-        init_fn=lambda b: scd2_compress(b, keys, attrs, ts_col, tiebreak),
+        init_fn=lambda b: scd2_compress(b, keys, attrs, "ts", tiebreak),
         merge_fn=lambda state, b: scd2_apply_batch(
-            state, b, keys, attrs, ts_col, tiebreak
+            state, b, keys, attrs, "ts", tiebreak
         ),
     )
 
@@ -530,13 +505,7 @@ def read_epoch_state(spark: SparkSession, state_path: str) -> DataFrame:
     return spark.read.parquet(f"{state_path}/epoch={max(epochs)}")
 
 
-def rollup_maintenance_sink(
-    rollup_path: str,
-    bucket: str = "hour",
-    keys: "Sequence[str]" = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-):
+def rollup_maintenance_sink(rollup_path: str):
     """foreachBatch maintainer for a continuous aggregate (hypertable
     rollup): each microbatch's partial rollup merges cell-wise into the
     maintained rollup (``operators.temporal.rollup_merge`` — mergeable
@@ -550,7 +519,7 @@ def rollup_maintenance_sink(
     )
 
     def roll(df: DataFrame) -> DataFrame:
-        return time_rollup(df, bucket, keys, ts_col, value_col)
+        return time_rollup(df, "hour", ("event_type",), "ts", "value")
 
     return incremental_epoch_sink(
         rollup_path,
@@ -593,28 +562,21 @@ def read_hll_estimate(
     return hll_estimate(read_epoch_state(spark, state_path), group_cols)
 
 
-def cm_maintenance_sink(
-    state_path: str,
-    col: str,
-    depth: int | None = None,
-    width: int | None = None,
-):
+def cm_maintenance_sink(state_path: str, col: str):
     """foreachBatch maintainer for streaming frequency estimates: each
     microbatch's count-min cells merge cell-wise (SUM) into the
     maintained sketch (``operators.sketches.cm_merge``). Cell-wise
     addition commutes, so no event-time ordering is needed; state is
-    ≤ depth×width rows forever. NOT replay-idempotent by itself (sums
+    ≤ DEFAULT_DEPTH×DEFAULT_WIDTH rows forever. NOT replay-idempotent by itself (sums
     double-count) — exactly-once comes from the epoch sink's
     read-strictly-below/overwrite-own contract, which recomputes a
     replayed batch from the same predecessor."""
     from ehr_data_pipeline_spark.operators import sketches as sk
 
-    d = sk.DEFAULT_DEPTH if depth is None else depth
-    w = sk.DEFAULT_WIDTH if width is None else width
     return incremental_epoch_sink(
         state_path,
-        init_fn=lambda b: sk.cm_build(b, col, d, w),
-        merge_fn=lambda state, b: sk.cm_merge(state, sk.cm_build(b, col, d, w)),
+        init_fn=lambda b: sk.cm_build(b, col),
+        merge_fn=lambda state, b: sk.cm_merge(state, sk.cm_build(b, col)),
     )
 
 
@@ -623,8 +585,6 @@ def hist_maintenance_sink(
     col: str,
     lo: float,
     hi: float,
-    n_bins: int | None = None,
-    group_cols: "tuple[str, ...]" = (),
 ):
     """foreachBatch maintainer for streaming quantile summaries: each
     microbatch's fixed-grid histogram merges cell-wise (SUM) into the
@@ -634,14 +594,10 @@ def hist_maintenance_sink(
     count-min sink."""
     from ehr_data_pipeline_spark.operators import sketches as sk
 
-    nb = sk.HIST_BINS if n_bins is None else n_bins
     return incremental_epoch_sink(
         state_path,
-        init_fn=lambda b: sk.hist_build(b, col, lo, hi, nb, group_cols),
-        merge_fn=lambda state, b: sk.hist_merge(
-            state, sk.hist_build(b, col, lo, hi, nb, group_cols),
-            group_cols=group_cols,
-        ),
+        init_fn=lambda b: sk.hist_build(b, col, lo, hi),
+        merge_fn=lambda state, b: sk.hist_merge(state, sk.hist_build(b, col, lo, hi)),
     )
 
 
@@ -656,12 +612,6 @@ def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
 def near_dedup_maintenance_sink(
     index_path: str,
     fresh_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    k: int = 4,
-    num_hashes: int = 16,
-    bands: int = 4,
     auto_compact_every: "int | None" = None,
 ):
     """foreachBatch maintainer for CONTINUOUS near-dup dedup — the
@@ -701,13 +651,18 @@ def near_dedup_maintenance_sink(
     first, same policy). Every batch entry first RESUMES any pending
     compaction (auto or manual) so a crash mid-compaction can never
     leave a replayed batch reading a torn merged epoch (ADVICE r10)."""
-    from ehr_data_pipeline_spark.operators.text_dedup import release_builder_caches
+    from ehr_data_pipeline_spark.operators.text_dedup import (
+        DEFAULT_BANDS,
+        DEFAULT_NUM_HASHES,
+        DEFAULT_SHINGLE_K,
+        release_builder_caches,
+    )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         try:
             _near_dedup_epoch(
-                batch_df, batch_id, index_path, fresh_path, id_col, text_col,
-                threshold, k, num_hashes, bands,
+                batch_df, batch_id, index_path, fresh_path, "doc_id", "text",
+                0.6, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES, DEFAULT_BANDS,
             )
             _auto_compact(batch_df.sparkSession, index_path, auto_compact_every)
         finally:
@@ -968,9 +923,6 @@ def read_near_dedup_fresh(spark: SparkSession, fresh_path: str) -> DataFrame:
 def paragraph_dedup_maintenance_sink(
     index_path: str,
     clean_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
     auto_compact_every: "int | None" = None,
 ):
     """foreachBatch maintainer for CONTINUOUS paragraph dedup — the
@@ -1009,10 +961,10 @@ def paragraph_dedup_maintenance_sink(
         spark = batch_df.sparkSession
         index = _index_below(
             spark, index_path, batch_id,
-            build_paragraph_index(batch_df.limit(0), text_col, sep),
+            build_paragraph_index(batch_df.limit(0), "text", "\n\n"),
         )
         cleaned, _new_entries = paragraph_dedup_against_index(
-            batch_df, index, text_col, id_col, sep
+            batch_df, index, "text", "doc_id", "\n\n"
         )
         cleaned.write.mode("overwrite").parquet(
             f"{clean_path}/epoch={batch_id}"
@@ -1028,10 +980,10 @@ def paragraph_dedup_maintenance_sink(
         landed = spark.read.parquet(f"{clean_path}/epoch={batch_id}")
         build_paragraph_index(
             landed.filter(F.col("n_kept") > 0).select(
-                F.col("clean_text").alias(text_col)
+                F.col("clean_text").alias("text")
             ),
-            text_col,
-            sep,
+            "text",
+            "\n\n",
         ).write.mode("overwrite").parquet(f"{index_path}/epoch={batch_id}")
         _auto_compact(spark, index_path, auto_compact_every)
 
@@ -1042,14 +994,8 @@ def curation_maintenance_sink(
     para_index_path: str,
     minhash_index_path: str,
     clean_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     blocklist: "tuple[str, ...]" = (),
-    min_line_words: int = 5,
-    min_sentences: int = 3,
     sep: str = "\n",
-    threshold: float = 0.6,
-    auto_compact_every: "int | None" = None,
 ):
     """foreachBatch maintainer for the FULL curation funnel run
     continuously — the streaming composition of the classic web-corpus
@@ -1080,14 +1026,14 @@ def curation_maintenance_sink(
     single-stage sink: a batch reads BOTH indexes strictly below its own
     id and overwrites its own three epoch directories, so a replayed
     batch recomputes from identical predecessors; each index read first
-    resumes any pending compaction on its path (ADVICE r10), and
-    ``auto_compact_every`` applies the proven paragraph-sink policy to
-    both. At 100 TB the expensive lineage runs ONCE per microbatch: two
-    narrow cleaning passes, one content-keyed window + fingerprint
-    join, one band-bucket join — stage-3 survivors are persisted, and
-    BOTH index deltas rebuild from already-materialized data (the
-    paragraph delta from the persisted survivors, the minhash delta
-    from the landed fresh parquet — ADVICE r11), so no write action
+    resumes any pending compaction on its path (ADVICE r10); compact
+    long-lived indexes with :func:`compact_epochs`. At 100 TB the
+    expensive lineage runs ONCE per microbatch: two narrow cleaning
+    passes, one content-keyed window + fingerprint join, one band-bucket
+    join — stage-3 survivors are persisted, and BOTH index deltas
+    rebuild from already-materialized data (the paragraph delta from the
+    persisted survivors, the minhash delta from the landed fresh
+    parquet — ADVICE r11), so no write action
     re-runs the candidate join and no stage rescans history. Read the
     admitted corpus back with :func:`read_near_dedup_fresh` (same epoch
     layout)."""
@@ -1107,43 +1053,41 @@ def curation_maintenance_sink(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # stages 1+2: stateless page cleaning (one narrow pass)
-        page = batch_df.select(id_col, text_col)
+        page = batch_df.select("doc_id", "text")
         if blocklist:
-            page = c4_blocklist_filter(page, blocklist, text_col)
+            page = c4_blocklist_filter(page, blocklist, "text")
         lined = c4_line_filter(
-            page, text_col, id_col, min_line_words, min_sentences
-        ).select(id_col, F.col("clean_text").alias(text_col))
+            page, "text", "doc_id", 5, 3
+        ).select("doc_id", F.col("clean_text").alias("text"))
 
         # stage 3: paragraph dedup against the maintained index
         para_index = _index_below(
             spark, para_index_path, batch_id,
-            build_paragraph_index(lined.limit(0), text_col, sep),
+            build_paragraph_index(lined.limit(0), "text", sep),
         )
         # the operator's new-entries frame is deliberately discarded:
         # the index delta is rebuilt below from the persisted survivors
         # (same single-materialization argument as the paragraph sink)
         para_cleaned, _ = paragraph_dedup_against_index(
-            lined, para_index, text_col, id_col, sep
+            lined, para_index, "text", "doc_id", sep
         )
         kept = para_cleaned.filter(F.col("n_kept") > 0).select(
-            id_col, F.col("clean_text").alias(text_col)
+            "doc_id", F.col("clean_text").alias("text")
         )
         kept = kept.persist()  # feeds stage 4 AND the paragraph delta
         try:
             # stage 4: near-dup dedup against the maintained MinHash index
             _near_dedup_epoch(
-                kept, batch_id, minhash_index_path, clean_path, id_col,
-                text_col, threshold, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES,
+                kept, batch_id, minhash_index_path, clean_path, "doc_id",
+                "text", 0.6, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES,
                 DEFAULT_BANDS,
             )
             # paragraph delta from the persisted stage-3 survivors (the
             # admitted paragraphs ARE their paragraphs — same lossless
             # re-split argument as the paragraph sink)
-            build_paragraph_index(kept, text_col, sep).write.mode(
+            build_paragraph_index(kept, "text", sep).write.mode(
                 "overwrite"
             ).parquet(f"{para_index_path}/epoch={batch_id}")
-            for p in (para_index_path, minhash_index_path):
-                _auto_compact(spark, p, auto_compact_every)
         finally:
             kept.unpersist()
             release_builder_caches()
@@ -1155,9 +1099,6 @@ def semantic_dedup_maintenance_sink(
     index_path: str,
     fresh_path: str,
     centroids: "list[tuple[int, list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
     dim: "int | None" = None,
     auto_compact_every: "int | None" = None,
 ):
@@ -1207,11 +1148,11 @@ def semantic_dedup_maintenance_sink(
         spark = batch_df.sparkSession
         index = _index_below(
             spark, index_path, batch_id,
-            batch_df.select(id_col, vec_col).limit(0),
+            batch_df.select("vec_id", "embedding").limit(0),
         )
         try:
             fresh, new_entries = semantic_dedup_against_index(
-                batch_df, index, centroids, threshold, id_col, vec_col, dim
+                batch_df, index, centroids, 0.4, "vec_id", "embedding", dim
             )
             fresh.write.mode("overwrite").parquet(
                 f"{fresh_path}/epoch={batch_id}"
@@ -1231,8 +1172,6 @@ def run_ivf_index_stream(
     centroids: "list[tuple[int, list[float]]]",
     index_path: str,
     checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> StreamingQuery:
     """Continuous maintenance of the PERSISTED IVF index
@@ -1257,9 +1196,10 @@ def run_ivf_index_stream(
         raise ValueError("run_ivf_index_stream needs a trained quantizer "
                          "(centroids == [] would land an unsearchable index)")
     assigned = _assign_cells(
-        vectors.where(_valid(id_col, vec_col, dim)).select(id_col, vec_col),
-        centroids, vec_col, "cid",
-    ).select(id_col, "cid", vec_col)
+        vectors.where(_valid("vec_id", "embedding", dim))
+        .select("vec_id", "embedding"),
+        centroids, "embedding", "cid",
+    ).select("vec_id", "cid", "embedding")
     query = (
         assigned.writeStream.format("parquet")
         .option("path", index_path)
@@ -1274,8 +1214,6 @@ def run_ivf_index_stream(
 def bm25_index_maintenance_sink(
     postings_path: str,
     lengths_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     auto_compact_every: "int | None" = None,
 ):
     """foreachBatch maintainer for the CONTINUOUS BM25 inverted index —
@@ -1306,7 +1244,7 @@ def bm25_index_maintenance_sink(
         _resume_pending_compaction(spark, postings_path)
         _resume_pending_compaction(spark, lengths_path)
         _heal_bm25_compaction_skew(spark, postings_path, lengths_path)
-        postings, lengths = bm25_index_build(batch_df, id_col, text_col)
+        postings, lengths = bm25_index_build(batch_df, "doc_id", "text")
         # lengths FIRST: the intersection reader is already torn-proof;
         # this order additionally softens a torn epoch for a naive
         # per-table reader — lengths-without-postings only shifts the

@@ -74,9 +74,11 @@ def _canon_column(s: pd.Series) -> list:
     """Column-vectorized :func:`_canon_value`: dtype dispatch replaces a
     per-cell Python call for the common dtypes (floats, ints, bools,
     datetimes); object columns keep the per-value path. Semantics are
-    IDENTICAL to mapping _canon_value over the cells — including the
-    NaT-stays-NaT quirk (NaT != NaT, so frames containing null
-    timestamps mismatch, exactly as the row-wise form behaved)."""
+    IDENTICAL to mapping _canon_value over the cells, including a null
+    timestamp staying ``pd.NaT``. ``NaT != NaT``, but ``pd.NaT`` is a
+    singleton and tuple and ``Counter`` equality check identity first, so
+    frames with null timestamps in the same rows compare equal, at any
+    datetime resolution."""
     dt = s.dtype
     if pd.api.types.is_float_dtype(dt):
         return [None if v != v else ("__float__", v + 0.0) for v in s.tolist()]
@@ -88,8 +90,9 @@ def _canon_column(s: pd.Series) -> list:
         # engines, so DuckDB's [us] and Spark's [ns] agree) and, within
         # the multiset compare, verdict-identical to naive-datetime
         # objects (both sides map through the same injection). Columns
-        # with NaT keep the object path so the NaT != NaT quirk is
-        # preserved; tz-aware or out-of-ns-range values fall back too.
+        # with NaT keep the object path, where each null stays the
+        # pd.NaT singleton; tz-aware or out-of-ns-range values fall back
+        # too.
         if getattr(dt, "tz", None) is None and not s.isna().any():
             vals = s.to_numpy()
             if _in_ns_range(vals):

@@ -296,7 +296,7 @@ def test_canon_multiset_verdicts_match_slow_path():
     the driver's typed hashing catches)."""
     import pandas as pd
 
-    from tests.oracle_utils import compare_spark_vs_oracle, _canon_multiset
+    from tests.oracle_utils import _canon_multiset, canon_rows
 
     a = pd.DataFrame({
         "i": [1, 2, 3],
@@ -323,6 +323,17 @@ def test_canon_multiset_verdicts_match_slow_path():
     # NaN compares equal to NaN (canonicalized to None), like the old path
     g = a.iloc[[1, 0, 2]].reset_index(drop=True)
     assert _canon_multiset(a) == _canon_multiset(g)
+    # a null timestamp matches itself ([ns] vs [us], reordered): pd.NaT is
+    # a singleton and tuple/Counter equality checks identity first
+    n = a.copy(); n.loc[1, "t"] = pd.NaT
+    m = n.iloc[[2, 0, 1]].reset_index(drop=True)
+    m["t"] = m["t"].astype("datetime64[us]")
+    assert _canon_multiset(n) == _canon_multiset(m)
+    assert canon_rows(n) == canon_rows(m)
+    # ... but not once the null moves to another row
+    o = n.copy(); o.loc[1, "t"] = a.loc[1, "t"]; o.loc[0, "t"] = pd.NaT
+    assert _canon_multiset(n) != _canon_multiset(o)
+    assert canon_rows(n) != canon_rows(o)
 
 
 def test_compare_spark_vs_oracle_accepts_pandas(spark):

@@ -126,9 +126,9 @@ def test_write_entity_tables_runs_every_write_at_once(spark, tmp_path, monkeypat
     barrier = threading.Barrier(len(extracted), timeout=20)
     real = sinks.write_parquet
 
-    def gated(df, path, mode="overwrite"):
+    def gated(df, path):
         barrier.wait()
-        real(df, path, mode=mode)
+        real(df, path)
 
     monkeypatch.setattr(sinks, "write_parquet", gated)
     paths = write_entity_tables(extracted, str(tmp_path / "entities"))
