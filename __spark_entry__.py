@@ -33,6 +33,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each query (omitted for
-    non-SQL-expressible ops — driver falls back to a rows-only check)."""
+    """DuckDB-runnable ANSI SQL twin for each query."""
     return Q.oracles()

@@ -66,12 +66,10 @@ def valid_measurement(col: str | Column) -> Column:
     return F.when(ok, c)
 
 
-def measurement_sql(expr: str = "value") -> str:
-    """The DuckDB oracle twin of :func:`valid_measurement` — splice into
-    oracle SQL wherever the Spark plan uses the guard."""
-    return (
-        f"CASE WHEN isfinite({expr}) AND abs({expr}) < 1e12 THEN {expr} END"
-    )
+def measurement_sql() -> str:
+    """The DuckDB oracle twin of :func:`valid_measurement` on ``value`` —
+    splice into oracle SQL wherever the Spark plan uses the guard."""
+    return "CASE WHEN isfinite(value) AND abs(value) < 1e12 THEN value END"
 
 
 def valid_vector(col: str | Column, dim: int) -> Column:
@@ -113,14 +111,15 @@ def valid_vector(col: str | Column, dim: int) -> Column:
     )
 
 
-def vector_sql(expr: str = "embedding", dim: int = 64) -> str:
-    """DuckDB oracle twin of :func:`valid_vector`."""
+def vector_sql() -> str:
+    """DuckDB oracle twin of :func:`valid_vector` on a 64-component
+    ``embedding``."""
     return (
-        f"({expr} IS NOT NULL AND len({expr}) = {dim}"
-        f" AND len(list_filter({expr}, x -> x IS NULL"
-        f" OR NOT isfinite(CAST(x AS DOUBLE))"
-        f" OR abs(CAST(x AS DOUBLE)) >= 1e12)) = 0"
-        f" AND len(list_filter({expr}, x -> CAST(x AS DOUBLE) <> 0)) > 0)"
+        "(embedding IS NOT NULL AND len(embedding) = 64"
+        " AND len(list_filter(embedding, x -> x IS NULL"
+        " OR NOT isfinite(CAST(x AS DOUBLE))"
+        " OR abs(CAST(x AS DOUBLE)) >= 1e12)) = 0"
+        " AND len(list_filter(embedding, x -> CAST(x AS DOUBLE) <> 0)) > 0)"
     )
 
 

@@ -43,44 +43,41 @@ DEFAULT_DOC_DROP_LITERALS: tuple[str, ...] = ("{",)
 # banners), independent of the page-level markers.
 LINE_DROP_WORD = "javascript"
 
+# C4 keeps a line only when it has at least this many whitespace words.
+MIN_LINE_WORDS = 5
 
-def c4_line_flags(line: Column, min_line_words: int = 5) -> Column:
+
+def c4_line_flags(line: Column) -> Column:
     """True iff a single line survives the C4 line rules: ends in terminal
-    punctuation, has at least ``min_line_words`` whitespace words, and
+    punctuation, has at least ``MIN_LINE_WORDS`` whitespace words, and
     does not mention the javascript banner word. Exposed separately so
     audits can count which rule rejected a line."""
     return (
         line.rlike(TERMINAL_PUNCT_RE)
-        & (F.size(F.split(F.trim(line), r"\s+")) >= min_line_words)
+        & (F.size(F.split(F.trim(line), r"\s+")) >= MIN_LINE_WORDS)
         & ~F.lower(line).contains(LINE_DROP_WORD)
     )
 
 
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_words: int = 5,
-    min_sentences: int = 3,
-) -> DataFrame:
-    """C4-style cleaning (Raffel et al. 2020 §2.2): keep only lines that
-    end in a terminal punctuation mark, contain >= ``min_line_words``
-    words, and don't mention javascript; then drop the whole document if
-    it contains any page-level marker ('lorem ipsum', a curly brace) or
-    if the cleaned text has fewer than ``min_sentences`` sentences
-    (terminal-punctuation marks).
+def c4_line_filter(df: DataFrame, min_sentences: int = 3) -> DataFrame:
+    """C4-style cleaning (Raffel et al. 2020 §2.2) of ``text``: keep only
+    lines that end in a terminal punctuation mark, contain >=
+    ``MIN_LINE_WORDS`` words, and don't mention javascript; then drop the
+    whole document if it contains any page-level marker ('lorem ipsum', a
+    curly brace) or if the cleaned text has fewer than ``min_sentences``
+    sentences (terminal-punctuation marks).
 
-    Returns one row per SURVIVING document: the id, ``clean_text`` (kept
-    lines rejoined with newlines), and audit counts ``n_lines``,
+    Returns one row per SURVIVING document: ``doc_id``, ``clean_text``
+    (kept lines rejoined with newlines), and audit counts ``n_lines``,
     ``n_kept_lines``, ``n_sentences``. NULL text behaves as '' (the
     normalize_text contract) and is dropped by the sentence floor.
 
     One narrow pass, no shuffle, no UDF — every rule is a native
     split/filter/regexp expression with an exact DuckDB twin, so the
     full cleaned output is hash-checkable cross-engine."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(text, "\n")
-    kept = F.filter(lines, lambda l: c4_line_flags(l, min_line_words))
+    kept = F.filter(lines, c4_line_flags)
     clean = F.array_join(kept, "\n")
     marker_hit = F.lit(False)
     for m in DEFAULT_DOC_DROP_MARKERS:
@@ -89,7 +86,7 @@ def c4_line_filter(
         marker_hit = marker_hit | text.contains(m)
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             clean.alias("clean_text"),
             F.size(lines).cast("bigint").alias("n_lines"),
             F.size(kept).cast("bigint").alias("n_kept_lines"),
@@ -125,11 +122,7 @@ def blocklist_hits(text_col: str, blocklist: "tuple[str, ...]") -> Column:
     return F.array_sort(F.array_intersect(_page_words(text_col), block))
 
 
-def c4_blocklist_filter(
-    df: DataFrame,
-    blocklist: "tuple[str, ...]",
-    text_col: str = "text",
-) -> DataFrame:
+def c4_blocklist_filter(df: DataFrame, blocklist: "tuple[str, ...]") -> DataFrame:
     """C4's page-level blocklist rule (Raffel et al. 2020 §2.2: pages
     containing any word on a blocklist are removed entirely — the
     'bad words' filter that runs alongside the structural line rules in
@@ -144,10 +137,10 @@ def c4_blocklist_filter(
     One narrow pass, no shuffle, no UDF; per-word audit counts come
     from :func:`c4_blocklist_audit` over the same shared expression."""
     return df.filter(
-        F.size(blocklist_hits(text_col, tuple(blocklist))) == 0
+        F.size(blocklist_hits("text", tuple(blocklist))) == 0
     ).withColumn(
         "n_words",
-        F.size(F.array_remove(_page_words(text_col), "")).cast("bigint"),
+        F.size(F.array_remove(_page_words("text"), "")).cast("bigint"),
     )
 
 
@@ -211,37 +204,33 @@ def paragraph_dedup(df: DataFrame, sep: str = "\n\n") -> DataFrame:
     partitioning, never collect_list arrival order. Winner selection by
     (id, idx) is a total order, so the output is unique and
     hash-checkable cross-engine."""
-    ranked = _ranked_paragraphs(df, "text", "doc_id", sep)
-    return _reassemble(ranked, "doc_id", sep, keep=F.col("rn") == 1)
+    ranked = _ranked_paragraphs(df, sep)
+    return _reassemble(ranked, sep, keep=F.col("rn") == 1)
 
 
-def _split_paragraphs(text_col: str, sep: str) -> Column:
-    text = F.coalesce(F.col(text_col), F.lit(""))
+def _split_paragraphs(sep: str) -> Column:
+    text = F.coalesce(F.col("text"), F.lit(""))
     # \Q..\E literal-quotes the separator in both Java regex and RE2
     return F.split(text, "\\Q" + sep + "\\E")
 
 
-def _ranked_paragraphs(
-    df: DataFrame, text_col: str, id_col: str, sep: str
-) -> DataFrame:
-    """(id, idx, para, rn): every paragraph occurrence with its
-    first-occurrence rank — rn == 1 marks the (id, idx)-minimal
+def _ranked_paragraphs(df: DataFrame, sep: str) -> DataFrame:
+    """(doc_id, idx, para, rn): every paragraph occurrence with its
+    first-occurrence rank — rn == 1 marks the (doc_id, idx)-minimal
     occurrence of each distinct paragraph."""
     p = df.select(
-        F.col(id_col),
-        F.posexplode(_split_paragraphs(text_col, sep)).alias("idx", "para"),
+        F.col("doc_id"),
+        F.posexplode(_split_paragraphs(sep)).alias("idx", "para"),
     )
-    w = Window.partitionBy("para").orderBy(id_col, "idx")
+    w = Window.partitionBy("para").orderBy("doc_id", "idx")
     return p.withColumn("rn", F.row_number().over(w))
 
 
-def _reassemble(
-    ranked: DataFrame, id_col: str, sep: str, keep: Column
-) -> DataFrame:
+def _reassemble(ranked: DataFrame, sep: str, keep: Column) -> DataFrame:
     """Per-document reassembly of the paragraphs flagged by ``keep``,
     in original position order (sort_array over (idx, para) structs —
     deterministic under any partitioning)."""
-    return ranked.groupBy(id_col).agg(
+    return ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_paragraphs"),
         F.sum(keep.cast("bigint")).alias("n_kept"),
         F.array_join(
@@ -256,11 +245,7 @@ def _reassemble(
     )
 
 
-def build_paragraph_index(
-    df: DataFrame,
-    text_col: str = "text",
-    sep: str = "\n\n",
-) -> DataFrame:
+def build_paragraph_index(df: DataFrame, sep: str = "\n\n") -> DataFrame:
     """Distinct md5 fingerprints of every paragraph in the corpus — the
     historical state :func:`paragraph_dedup_against_index` dedups new
     batches against. Fingerprints only (never text), so at 100 TB the
@@ -269,18 +254,14 @@ def build_paragraph_index(
     buckets with no shuffle of the history — the same index contract as
     ``text_dedup.dedup_against_index``."""
     return (
-        df.select(F.explode(_split_paragraphs(text_col, sep)).alias("para"))
+        df.select(F.explode(_split_paragraphs(sep)).alias("para"))
         .select(F.md5("para").alias("pfp"))
         .distinct()
     )
 
 
 def paragraph_dedup_against_index(
-    batch: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n\n",
+    batch: DataFrame, index: DataFrame, sep: str = "\n\n"
 ) -> "tuple[DataFrame, DataFrame]":
     """Incremental paragraph dedup — the continuous-ingest cadence of
     :func:`paragraph_dedup` (the same batch/incremental symmetry as the
@@ -296,12 +277,12 @@ def paragraph_dedup_against_index(
     fingerprint join against the index (bucket-pruned when the index is
     bucketed by fingerprint), one id-keyed reassembly — the history is
     never rewritten or windowed."""
-    ranked = _ranked_paragraphs(batch, text_col, id_col, sep).withColumn(
+    ranked = _ranked_paragraphs(batch, sep).withColumn(
         "pfp", F.md5("para")
     )
     seen = index.select("pfp").distinct().withColumn("__seen", F.lit(True))
     j = ranked.join(seen, "pfp", "left")
     keep = (F.col("rn") == 1) & F.col("__seen").isNull()
-    cleaned = _reassemble(j, id_col, sep, keep=keep)
+    cleaned = _reassemble(j, sep, keep=keep)
     new_entries = j.filter(keep).select("pfp")
     return cleaned, new_entries

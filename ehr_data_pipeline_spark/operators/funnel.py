@@ -32,12 +32,10 @@ from pyspark.sql import functions as F
 def funnel_user_steps(
     df: DataFrame,
     steps: Sequence[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     within: str | None = None,
 ) -> DataFrame:
-    """Per-user funnel completion times: one row per user who completed
+    """Per-user funnel completion times over ``event_type`` and ``ts``:
+    one row per ``user_id`` who completed
     at least step 1, with a ``step{i}_ts`` column per completed step
     (null once the chain breaks). ``within`` (an INTERVAL literal like
     ``'2 hours'``) additionally requires every later step to land within
@@ -45,15 +43,15 @@ def funnel_user_steps(
     if not steps:
         raise ValueError("steps must be non-empty")
     first = (
-        df.filter(F.col(type_col) == steps[0])
-        .groupBy(F.col(user_col).alias("user"))
-        .agg(F.min(ts_col).alias("step1_ts"))
+        df.filter(F.col("event_type") == steps[0])
+        .groupBy(F.col("user_id").alias("user"))
+        .agg(F.min("ts").alias("step1_ts"))
     )
     out = first
     for i, step in enumerate(steps[1:], start=2):
         prev = f"step{i - 1}_ts"
-        ev = df.filter(F.col(type_col) == step).select(
-            F.col(user_col).alias("__u"), F.col(ts_col).alias("__t")
+        ev = df.filter(F.col("event_type") == step).select(
+            F.col("user_id").alias("__u"), F.col("ts").alias("__t")
         )
         cond = (out["user"] == ev["__u"]) & (ev["__t"] > out[prev])
         if within is not None:
@@ -65,7 +63,7 @@ def funnel_user_steps(
             .groupBy(*[F.col(c) for c in out.columns])
             .agg(F.min("__t").alias(f"step{i}_ts"))
         )
-    return out.withColumnRenamed("user", user_col)
+    return out.withColumnRenamed("user", "user_id")
 
 
 def funnel_counts(
@@ -78,7 +76,7 @@ def funnel_counts(
     conversion rate from step 1 (1.0 for step 1 itself). ONE aggregate
     over the per-user frame, then an in-row explode into the k report
     rows — the per-user chain is computed once, not once per step."""
-    per_user = funnel_user_steps(df, steps, "user_id", "ts", "event_type", within)
+    per_user = funnel_user_steps(df, steps, within)
     counts = per_user.agg(
         *[
             F.count(F.col(f"step{i}_ts")).alias(f"__n{i}")

@@ -76,6 +76,9 @@ ASSET_SCHEMA = StructType(
 
 _MEDIA_TYPES = ("image", "audio", "video")
 
+# Audio segment width in milliseconds (segment_audio).
+SEGMENT_MS = 1000
+
 
 def synthesize_assets(documents: DataFrame) -> DataFrame:
     """Derive a deterministic multimodal asset table from the driver's
@@ -278,23 +281,23 @@ def resize_images(assets: DataFrame, target_w: int, target_h: int) -> DataFrame:
     return images.mapInPandas(run, schema=ASSET_SCHEMA)
 
 
-def segment_audio(assets: DataFrame, segment_ms: int = 1000) -> DataFrame:
-    """Fixed-window segmentation for audio assets — the audio analogue
-    of :func:`sample_frames`: each asset fans out to its
-    ⌈duration/segment⌉ windows (``sequence`` + ``explode``, pure JVM)
-    with half-open [start_ms, end_ms) bounds, the per-segment sample
-    count derived from the rate by integer arithmetic, and an
-    audio-typed per-segment asset row; per-segment decode happens only
-    downstream, on the segments a caller keeps. The last window is
-    truncated to the asset's duration. Assets with a zero/negative
-    duration yield no segments (filtered explicitly — a descending
-    ``sequence(0, -1)`` would otherwise fabricate a phantom window)."""
+def segment_audio(assets: DataFrame) -> DataFrame:
+    """Fixed-window (``SEGMENT_MS``) segmentation for audio assets — the
+    audio analogue of :func:`sample_frames`: each asset fans out to its
+    ⌈duration/segment⌉ windows (``sequence`` + ``explode``, pure JVM) with
+    half-open [start_ms, end_ms) bounds, the per-segment sample count
+    derived from the rate by integer arithmetic, and an audio-typed
+    per-segment asset row; per-segment decode happens only downstream, on
+    the segments a caller keeps. The last window is truncated to the asset's
+    duration. Assets with a zero/negative duration yield no segments
+    (filtered explicitly — a descending ``sequence(0, -1)`` would otherwise
+    fabricate a phantom window)."""
     audio = assets.filter(
         (F.col("media_meta.media_type") == "audio")
         & (F.col("media_meta.duration_ms") > 0)
     )
     n_segments = F.expr(
-        f"(media_meta.duration_ms + {segment_ms - 1}) div {segment_ms}"
+        f"(media_meta.duration_ms + {SEGMENT_MS - 1}) div {SEGMENT_MS}"
     )
     segs = audio.select(
         "asset_id",
@@ -305,10 +308,10 @@ def segment_audio(assets: DataFrame, segment_ms: int = 1000) -> DataFrame:
         ),
     ).select(
         "*",
-        (F.col("segment_idx").cast("bigint") * segment_ms).alias("start_ms"),
+        (F.col("segment_idx").cast("bigint") * SEGMENT_MS).alias("start_ms"),
         F.least(
             F.col("media_meta.duration_ms"),
-            (F.col("segment_idx").cast("bigint") + 1) * segment_ms,
+            (F.col("segment_idx").cast("bigint") + 1) * SEGMENT_MS,
         ).alias("end_ms"),
     )
     seg_len = F.col("end_ms") - F.col("start_ms")
@@ -340,9 +343,9 @@ def segment_audio(assets: DataFrame, segment_ms: int = 1000) -> DataFrame:
     )
 
 
-def sample_frames(assets: DataFrame, every_n: int = 2) -> DataFrame:
+def sample_frames(assets: DataFrame) -> DataFrame:
     """Frame sampling for video assets: the frame index fan-out is pure
-    JVM (``sequence`` + ``explode`` — 0, every_n, 2·every_n, … up to
+    JVM (``sequence`` + ``explode`` — every 2nd frame: 0, 2, 4, … up to
     n_frames−1); per-frame decode happens only for sampled frames. Emits
     one image-typed asset row per sampled frame, with the frame index
     appended so downstream feature extraction keys on (asset, frame)."""
@@ -355,7 +358,7 @@ def sample_frames(assets: DataFrame, every_n: int = 2) -> DataFrame:
             F.sequence(
                 F.lit(0),
                 F.col("media_meta.n_frames") - 1,
-                F.lit(every_n),
+                F.lit(2),
             )
         ).alias("frame_idx"),
     )

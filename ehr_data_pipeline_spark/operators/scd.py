@@ -50,10 +50,9 @@ def scd2_compress(
     df: DataFrame,
     keys: Sequence[str],
     attrs: Sequence[str],
-    ts_col: str = "ts",
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Compress an event log into SCD2 version rows.
+    """Compress an event log (event time ``ts``) into SCD2 version rows.
 
     Output: keys + attrs + (version, valid_from, valid_to, is_current,
     n_events). A version starts whenever ANY tracked attribute differs
@@ -68,13 +67,13 @@ def scd2_compress(
     nondeterministic.
 
     Timeline contract (``functions/measurement.py``): an event with a
-    NULL ``ts_col`` has no position on the timeline and is excluded —
+    NULL ``ts`` has no position on the timeline and is excluded —
     which also keeps the lag(ts)-is-null first-event detection below
     sound (it relies on ts never being null for an included event)."""
-    df = df.where(F.col(ts_col).isNotNull())
+    df = df.where(F.col("ts").isNotNull())
     keys = list(keys)
     attrs = list(attrs)
-    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col("ts")] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(*keys).orderBy(*order)
 
     # the first event of a key must ALWAYS open run 1 — detected via
@@ -83,7 +82,7 @@ def scd2_compress(
     # attrs are all null: eqNullSafe(null, lag=null) is true, the run
     # counter would start at 0, and scd2_apply_batch's version==1
     # first-run selection would miss the key entirely.
-    changed = F.lag(ts_col).over(w).isNull()
+    changed = F.lag("ts").over(w).isNull()
     for a in attrs:
         changed = changed | ~F.col(a).eqNullSafe(F.lag(a).over(w))
     run = F.sum(F.when(changed, 1).otherwise(0)).over(
@@ -91,7 +90,7 @@ def scd2_compress(
     )
     runs = df.withColumn("__run", run)
     g = runs.groupBy(*keys, F.col("__run"), *[F.col(a) for a in attrs]).agg(
-        F.min(ts_col).alias("valid_from"),
+        F.min("ts").alias("valid_from"),
         F.count(F.lit(1)).alias("n_events"),
     )
     wv = Window.partitionBy(*keys).orderBy("__run")
@@ -111,7 +110,6 @@ def scd2_apply_batch(
     batch: DataFrame,
     keys: Sequence[str],
     attrs: Sequence[str],
-    ts_col: str = "ts",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Merge a new event batch into an existing SCD2 table produced by
@@ -120,7 +118,7 @@ def scd2_apply_batch(
     be later than the dim's per-key history (append-only event time)."""
     keys = list(keys)
     attrs = list(attrs)
-    upd = scd2_compress(batch, keys, attrs, ts_col, tiebreak)
+    upd = scd2_compress(batch, keys, attrs, tiebreak)
 
     # the batch's first run per key is version == 1 by construction —
     # no tie-prone valid_from ranking needed

@@ -65,21 +65,21 @@ from ehr_data_pipeline_spark.partitioning import ensure_min_partitions
 DEFAULT_PLANES = 8
 
 
-def infer_dim(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> "int | None":
+def infer_dim(df: DataFrame) -> "int | None":
     """Vector dimensionality when the caller doesn't supply it: the most
-    common length among rows with a non-NULL id and vector, ties going
-    to the smaller length — deterministic, and a few malformed vectors
-    cannot set the dimension that excludes the valid ones. One job at
-    call time: the mode rides a ``noop`` scan as an observed metric, so
+    common length among rows with a non-NULL ``vec_id`` and ``embedding``,
+    ties going to the smaller length — deterministic, and a few malformed
+    vectors cannot set the dimension that excludes the valid ones. One job
+    at call time: the mode rides a ``noop`` scan as an observed metric, so
     no shuffle runs. Returns ``None`` for an empty / all-NULL input, in
-    which case the operators short-circuit to an empty result instead
-    of silently excluding every row (ADVICE r7: a caller with
-    non-64-dim embeddings who omitted ``dim`` used to get empty output
-    from the default-64 validity guard)."""
+    which case the operators short-circuit to an empty result instead of
+    silently excluding every row (ADVICE r7: a caller with non-64-dim
+    embeddings who omitted ``dim`` used to get empty output from the
+    default-64 validity guard)."""
     obs = Observation()
     (
-        df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("__d"))
+        df.where(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
+        .select(F.size("embedding").alias("__d"))
         .observe(obs, F.mode("__d", deterministic=True).alias("dim"))
         .write.format("noop")
         .mode("overwrite")
@@ -89,34 +89,34 @@ def infer_dim(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding")
     return None if dim is None else int(dim)
 
 
-def _resolve_dim(df: DataFrame, dim: "int | None", id_col: str, vec_col: str) -> "int | None":
-    return dim if dim is not None else infer_dim(df, id_col, vec_col)
+def _resolve_dim(df: DataFrame, dim: "int | None") -> "int | None":
+    return dim if dim is not None else infer_dim(df)
 
 
-def _empty_knn(df: DataFrame, id_col: str) -> DataFrame:
+def _empty_knn(df: DataFrame) -> DataFrame:
     """Empty (query_id, neighbor_id, rank, cosine) frame with the id
     column's real type — the dim-inference-failed (empty corpus) result."""
     return df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("query_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.lit(1).alias("rank"),
         F.lit(0.0).alias("cosine"),
     ).limit(0)
 
 
-def _empty_pairs(df: DataFrame, id_col: str) -> DataFrame:
+def _empty_pairs(df: DataFrame) -> DataFrame:
     """Empty (id_a, id_b, cosine) frame — ditto for the pair surfaces."""
     return df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_a"),
+        F.col("vec_id").alias("id_b"),
         F.lit(0.0).alias("cosine"),
     ).limit(0)
 
 
-def _valid(id_col: str, vec_col: str, dim: int) -> Column:
-    """The embeddings-contract row filter: a non-NULL id and a valid
-    ``dim``-vector (functions/measurement.py)."""
-    return F.col(id_col).isNotNull() & valid_vector(F.col(vec_col), dim)
+def _valid(dim: int) -> Column:
+    """The embeddings-contract row filter: a non-NULL ``vec_id`` and a
+    valid ``dim``-component ``embedding`` (functions/measurement.py)."""
+    return F.col("vec_id").isNotNull() & valid_vector(F.col("embedding"), dim)
 
 
 def to_double(arr: Column) -> Column:
@@ -174,10 +174,10 @@ def brute_force_knn(
     contract, functions/measurement.py) are excluded on BOTH sides at
     entry; when ``dim`` is omitted it is inferred from the corpus
     (:func:`infer_dim`)."""
-    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
+    dim = _resolve_dim(corpus, dim)
     if dim is None:
-        return _empty_knn(corpus, "vec_id")
-    keep = _valid("vec_id", "embedding", dim)
+        return _empty_knn(corpus)
+    keep = _valid(dim)
     q = F.broadcast(
         queries.where(keep).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
@@ -326,10 +326,10 @@ def lsh_knn(
     cross join — and AQE splits skewed hot buckets. Invalid vectors are
     excluded on both sides per the embeddings contract
     (functions/measurement.py); ``dim=None`` infers it from the corpus."""
-    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
+    dim = _resolve_dim(corpus, dim)
     if dim is None:
-        return _empty_knn(corpus, "vec_id")
-    keep = _valid("vec_id", "embedding", dim)
+        return _empty_knn(corpus)
+    keep = _valid(dim)
     c = _with_table_buckets(
         ensure_min_partitions(corpus.where(keep)).select(
             F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
@@ -375,10 +375,10 @@ def cosine_near_dup_pairs(
     Each row's norm ``sqrt(v·v)`` is computed once before the join, so a
     pair costs one fold (``a·b``) instead of :func:`cosine`'s three; the
     folds and their order are the same, so the doubles are identical."""
-    dim = _resolve_dim(df, dim, "vec_id", "embedding")
+    dim = _resolve_dim(df, dim)
     if dim is None:
-        return _empty_pairs(df, "vec_id")
-    df = ensure_min_partitions(df.where(_valid("vec_id", "embedding", dim)))
+        return _empty_pairs(df)
+    df = ensure_min_partitions(df.where(_valid(dim)))
     norm = _norm(F.col("embedding"))
     a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"),
                   norm.alias("__na"))
@@ -393,9 +393,7 @@ def cosine_near_dup_pairs(
     )
 
 
-def _vector_groups(
-    df: DataFrame, id_col: str, vec_col: str, dim: int
-) -> DataFrame:
+def _vector_groups(df: DataFrame, dim: int) -> DataFrame:
     """Identical-vector groups — the distinct-first work-avoidance core
     of the pair surfaces: one (__id, __v, __rid, __n) row per input id,
     where __rid is the group representative (minimum id among rows whose
@@ -410,8 +408,8 @@ def _vector_groups(
     duplicate full rows collapse at the id-dedup (the pair contract is
     one vector per id)."""
     valid = (
-        ensure_min_partitions(df.where(_valid(id_col, vec_col, dim)))
-        .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+        ensure_min_partitions(df.where(_valid(dim)))
+        .select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
         .dropDuplicates(["__id"])
     )
     gw = Window.partitionBy("__v")
@@ -512,32 +510,26 @@ def lsh_near_dup_pairs(
     pipeline plus both expansion joins — 3 consumers; without the cache
     the scan + group window recompute per consumer); cache lifetime as
     documented at ``text_dedup.release_builder_caches``."""
-    dim = _resolve_dim(df, dim, "vec_id", "embedding")
+    dim = _resolve_dim(df, dim)
     if dim is None:
-        return _empty_pairs(df, "vec_id")
-    mem = _persist_tracked(_vector_groups(df, "vec_id", "embedding", dim))
+        return _empty_pairs(df)
+    mem = _persist_tracked(_vector_groups(df, dim))
     pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
     members = mem.select("__rid", F.col("__id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "cosine", ("id_a", "id_b"))
 
 
-def lsh_near_dup_groups(
-    df: DataFrame,
-    threshold: float = 0.4,
-    dim: "int | None" = None,
-    n_planes: int = 4,
-    n_tables: int = 8,
-) -> DataFrame:
-    """Near-dup GROUP membership — the production dedup surface
-    (VERDICT r7 #1): (id, group_id) for every vector that belongs to a
-    near-duplicate cluster, where group_id is the minimum id reachable
-    through the verified near-dup pair graph (transitive closure via
-    ``near_dup_components``) — a deterministic canonical representative,
-    so "keep group_id, drop the rest" is a stable dedup policy. Output
-    is LINEAR in corpus size (one row per clustered vector), unlike the
-    pair surface whose output is quadratic in duplicate-group size —
-    this is the variant whose cost stays flat on duplicate-heavy
-    corpora.
+def lsh_near_dup_groups(df: DataFrame, dim: "int | None" = None) -> DataFrame:
+    """Near-dup GROUP membership — the production dedup surface (VERDICT r7
+    #1): (id, group_id) for every vector that belongs to a near-duplicate
+    cluster at cosine 0.4 (4 planes × 8 tables), where group_id is the
+    minimum id reachable through the verified near-dup pair graph
+    (transitive closure via ``near_dup_components``) — a deterministic
+    canonical representative, so "keep group_id, drop the rest" is a stable
+    dedup policy. Output is LINEAR in corpus size (one row per clustered
+    vector), unlike the pair surface whose output is quadratic in
+    duplicate-group size — this is the variant whose cost stays flat on
+    duplicate-heavy corpora.
 
     Scale shape: components run over the DISTINCT-vector rep graph only
     (``text_dedup._rep_group_membership``: groups of identical vectors
@@ -546,19 +538,16 @@ def lsh_near_dup_groups(
     mutual near-dups at cosine 1.0 by definition). Matches the transitive
     closure of :func:`lsh_near_dup_pairs` exactly — the oracle replays
     that equivalence with a recursive CTE."""
-    dim = _resolve_dim(df, dim, "vec_id", "embedding")
+    dim = _resolve_dim(df, dim)
     if dim is None:
         return df.select(
             F.col("vec_id"), F.col("vec_id").alias("group_id")
         ).limit(0)
-    mem = _persist_tracked(_vector_groups(df, "vec_id", "embedding", dim))
-    pairs = _rep_near_dup_pairs(mem, threshold, dim, n_planes, n_tables)
+    mem = _persist_tracked(_vector_groups(df, dim))
+    pairs = _rep_near_dup_pairs(mem, 0.4, dim, 4, 8)
     members = mem.select(F.col("__id").alias("__m"), "__rid", "__n")
-    # an identical-vector group's self cosine (1.0) clears any real
-    # threshold ≤ 1.0; no distinct() — _vector_groups already dedups ids
-    return _rep_group_membership(
-        pairs, members, "vec_id", threshold <= 1.0, max_iter=20
-    )
+    # no distinct() — _vector_groups already dedups ids
+    return _rep_group_membership(pairs, members, "vec_id")
 
 
 def _double_sql(x: float) -> str:
@@ -703,8 +692,6 @@ def train_ivf_centroids(
     df: DataFrame,
     n_list: int = 8,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> list[tuple[int, list[float]]]:
     """Coarse-quantizer training for IVF: deterministic seeding (the
@@ -719,14 +706,14 @@ def train_ivf_centroids(
     deterministic smallest-id seeds are always valid vectors (embeddings
     contract, functions/measurement.py); ``dim=None`` infers it from the
     data (empty input ⇒ no centroids)."""
-    dim = _resolve_dim(df, dim, id_col, vec_col)
+    dim = _resolve_dim(df, dim)
     if dim is None:
         return []
-    df = df.where(_valid(id_col, vec_col, dim))
+    df = df.where(_valid(dim))
     seed = [
         (i, [float(x) for x in r[1]])
         for i, r in enumerate(
-            df.select(id_col, vec_col).orderBy(id_col).limit(n_list).collect()
+            df.select("vec_id", "embedding").orderBy("vec_id").limit(n_list).collect()
         )
     ]
     if not seed:
@@ -738,7 +725,7 @@ def train_ivf_centroids(
     dim = len(seed[0][1])
     for _ in range(n_iters):
         assigned = _assign_cells(
-            df.select(F.col(vec_col).alias("__v")), centroids, "__v", "cid"
+            df.select(F.col("embedding").alias("__v")), centroids, "__v", "cid"
         )
         means = assigned.groupBy("cid").agg(
             *[
@@ -774,20 +761,20 @@ def ivf_knn(
     Invalid vectors are excluded from index, training and queries per
     the embeddings contract (functions/measurement.py); ``dim=None``
     infers it from the corpus."""
-    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
+    dim = _resolve_dim(corpus, dim)
     if dim is None:
-        return _empty_knn(corpus, "vec_id")
-    keep = _valid("vec_id", "embedding", dim)
+        return _empty_knn(corpus)
+    keep = _valid(dim)
     corpus, queries = corpus.where(keep), queries.where(keep)
-    centroids = train_ivf_centroids(corpus, n_list, n_iters, "vec_id", "embedding", dim)
+    centroids = train_ivf_centroids(corpus, n_list, n_iters, dim)
     if not centroids:
         # empty corpus ⇒ empty index ⇒ empty result, correct schema
-        return _empty_knn(corpus, "vec_id")
+        return _empty_knn(corpus)
     index = _assign_cells(
         ensure_min_partitions(corpus).select("vec_id", "embedding"),
         centroids, "embedding", "cid",
     )
-    return _probe_cells(queries, index, centroids, k, n_probe, "vec_id", "embedding")
+    return _probe_cells(queries, index, centroids, k, n_probe)
 
 
 def _probe_cells(
@@ -796,21 +783,19 @@ def _probe_cells(
     centroids: "list[tuple[int, list[float]]]",
     k: int,
     n_probe: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """The IVF search step shared by :func:`ivf_knn` and
     :func:`ivf_knn_against_index`: each query explodes its ``n_probe``
     nearest cells, joins the (id, cid, vector) ``index`` on cid, and
     :func:`_top_k` re-ranks the probed cells' rows exactly."""
-    probes = F.slice(_centroid_dists(vec_col, centroids), 1, n_probe)
+    probes = F.slice(_centroid_dists("embedding", centroids), 1, n_probe)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
         F.explode(probes).alias("__p"),
     ).select("query_id", "__qv", F.col("__p.cid").alias("cid"))
     c = index.select(
-        F.col(id_col).alias("neighbor_id"), "cid", F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), "cid", F.col("embedding").alias("__cv")
     )
     return _top_k(q.join(c, "cid"), k)
 
@@ -843,7 +828,6 @@ def semantic_dedup(
     df: DataFrame,
     n_clusters: "int | None" = None,
     threshold: float = 0.4,
-    n_iters: int = 0,
     dim: "int | None" = None,
     target_cluster_size: int = 1024,
 ) -> DataFrame:
@@ -888,14 +872,13 @@ def semantic_dedup(
     costs one assignment + its rep's comparisons, not k), and members
     inherit the verdict through one id-equi join — every non-rep member
     is a duplicate of its own rep (cosine exactly 1.0 after rounding)
-    for any threshold <= 1.0. The registered query seeds without Lloyd
-    refinement (``n_iters=0`` — the ``emb_ivf_knn`` precedent) so the
-    quantizer, the assignment argmin and the drop rule are all
-    SQL-derivable and the whole decision is hash-checked; ``n_iters>0``
-    runs the identical plan on refined centroids. Invalid vectors are
+    for any threshold <= 1.0. The quantizer is seeded without Lloyd
+    refinement (the ``emb_ivf_knn`` precedent) so the quantizer, the
+    assignment argmin and the drop rule are all SQL-derivable and the
+    whole decision is hash-checked. Invalid vectors are
     excluded at entry per the embeddings contract
     (functions/measurement.py); ``dim=None`` infers it from the data."""
-    dim = _resolve_dim(df, dim, "vec_id", "embedding")
+    dim = _resolve_dim(df, dim)
 
     def empty() -> DataFrame:
         return df.select(
@@ -906,7 +889,7 @@ def semantic_dedup(
 
     if dim is None:
         return empty()
-    mem = _persist_tracked(_vector_groups(df, "vec_id", "embedding", dim))
+    mem = _persist_tracked(_vector_groups(df, dim))
     if n_clusters is None:
         # exact distinct-vector count as ONE map-side-partial aggregate
         # over the source scan — NOT a count over the group frame, which
@@ -920,12 +903,12 @@ def semantic_dedup(
         # distinct vectors. The exact count stays the k source: approx
         # would break the oracle's replay of the derivation.
         n_reps = (
-            df.where(_valid("vec_id", "embedding", dim))
+            df.where(_valid(dim))
             .agg(F.countDistinct("embedding").alias("__n"))
             .collect()[0]["__n"]
         )
         n_clusters = auto_n_clusters(n_reps, target_cluster_size)
-    centroids = train_ivf_centroids(df, n_clusters, n_iters, "vec_id", "embedding", dim)
+    centroids = train_ivf_centroids(df, n_clusters, 0, dim)
     if not centroids:
         return empty()
     # assignment is consumed three times (both pairwise sides + the
@@ -983,9 +966,6 @@ def semantic_dedup_against_index(
     batch: DataFrame,
     index: DataFrame,
     centroids: "list[tuple[int, list[float]]]",
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: "int | None" = None,
 ) -> "tuple[DataFrame, DataFrame]":
     """Incremental SemDeDup for continuous ingest — the semantic
@@ -995,7 +975,7 @@ def semantic_dedup_against_index(
     (``centroids`` — train once on history, hold fixed across batches so
     cell assignments never move). A batch vector drops iff some indexed
     vector OR some lower-id batch vector shares its cell at
-    ROUND(cosine, 6) >= threshold — the same independent-evaluation rule
+    ROUND(cosine, 6) >= 0.4 — the same independent-evaluation rule
     as the near-dup family, so when index ids all precede batch ids the
     result is IDENTICAL to batch-mode :func:`semantic_dedup` restricted
     to the batch (asserted in tests). Returns ``(fresh, new_entries)``:
@@ -1014,14 +994,12 @@ def semantic_dedup_against_index(
     still applies). At 100 TB the index is written
     partitioned BY cell id, so each batch cell joins a partition-pruned
     read and history never rescans."""
-    dim = _resolve_dim(index, dim, id_col, vec_col) or _resolve_dim(
-        batch, dim, id_col, vec_col
-    )
-    empty_entries = batch.select(F.col(id_col), F.col(vec_col)).limit(0)
+    dim = _resolve_dim(index, dim) or _resolve_dim(batch, dim)
+    empty_entries = batch.select(F.col("vec_id"), F.col("embedding")).limit(0)
     if dim is None:
         return batch.limit(0), empty_entries
-    keep = _valid(id_col, vec_col, dim)
-    mem = _persist_tracked(_vector_groups(batch, id_col, vec_col, dim))
+    keep = _valid(dim)
+    mem = _persist_tracked(_vector_groups(batch, dim))
     reps = mem.where(F.col("__id") == F.col("__rid")).select("__id", "__v")
     if not centroids:
         # ADVICE r8: an empty quantizer disables ALL cross-vector dedup
@@ -1043,7 +1021,7 @@ def semantic_dedup_against_index(
                 RuntimeWarning,
                 stacklevel=2,
             )
-        fresh_ids = reps.select(F.col("__id").alias(id_col))
+        fresh_ids = reps.select(F.col("__id").alias("vec_id"))
     else:
         # bt feeds the history probe AND both within-batch pairwise
         # sides; persist so assignment (N·k·dim once k is corpus-scaled)
@@ -1053,7 +1031,7 @@ def semantic_dedup_against_index(
         )
         hist = _assign_cells(
             ensure_min_partitions(index.where(keep))
-            .select(F.col(vec_col).alias("__hv"))
+            .select(F.col("embedding").alias("__hv"))
             .dropDuplicates(),
             centroids, "__hv", "__cid",
         )
@@ -1063,16 +1041,16 @@ def semantic_dedup_against_index(
                 "__id",
                 F.round(cosine(F.col("__v"), F.col("__hv")), 6).alias("__c"),
             )
-            .filter(F.col("__c") >= F.lit(threshold))
+            .filter(F.col("__c") >= F.lit(0.4))
             .select("__id")
         )
-        dropped = hist_hits.unionByName(_cell_dup_ids(bt, threshold)).distinct()
+        dropped = hist_hits.unionByName(_cell_dup_ids(bt, 0.4)).distinct()
         fresh_ids = (
             reps.join(dropped, reps["__id"] == dropped["__id"], "left_anti")
-            .select(F.col("__id").alias(id_col))
+            .select(F.col("__id").alias("vec_id"))
         )
-    fresh = batch.where(keep).dropDuplicates([id_col]).join(fresh_ids, id_col)
-    new_entries = fresh.select(F.col(id_col), F.col(vec_col))
+    fresh = batch.where(keep).dropDuplicates(["vec_id"]).join(fresh_ids, "vec_id")
+    new_entries = fresh.select(F.col("vec_id"), F.col("embedding"))
     return fresh, new_entries
 
 
@@ -1127,7 +1105,7 @@ def semantic_contamination(
     one) and only under id collisions between corpus and benchmark —
     keep the id spaces disjoint (the decontamination shape, and the
     registered usage) for exact top-1 semantics."""
-    dim = _resolve_dim(corpus, dim, "vec_id", "embedding")
+    dim = _resolve_dim(corpus, dim)
 
     def empty() -> DataFrame:
         return corpus.select(
@@ -1138,14 +1116,14 @@ def semantic_contamination(
 
     if dim is None:
         return empty()
-    keep = _valid("vec_id", "embedding", dim)
+    keep = _valid(dim)
     b = F.broadcast(
         benchmark.where(keep)
         .select(F.col("vec_id").alias("benchmark_id"), F.col("embedding").alias("__bv"))
         .groupBy("__bv")
         .agg(F.min("benchmark_id").alias("benchmark_id"))
     )
-    mem = _persist_tracked(_vector_groups(corpus, "vec_id", "embedding", dim))
+    mem = _persist_tracked(_vector_groups(corpus, dim))
     reps = mem.where(F.col("__id") == F.col("__rid")).select(
         F.col("__id").alias("__rid2"), F.col("__v").alias("__cv")
     )
@@ -1200,13 +1178,8 @@ def dequantize_int8(quant: Column) -> Column:
     )
 
 
-def label_centroids(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Per-label mean vector — the assignment step of IVF-style coarse
+def label_centroids(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Per-``label`` mean ``embedding`` — the assignment step of IVF-style coarse
     quantization (and a useful clustering report on its own). One shuffle
     on the label; components are quantized to 1e-7 fixed-point BIGINTs
     before summing, so the aggregate is exact integer math —
@@ -1217,11 +1190,11 @@ def label_centroids(
     under ANSI on both engines. ``dim`` stays an explicit parameter here
     (no inference): it determines the OUTPUT SCHEMA (c0..c{dim-1}), and a
     DataFrame's schema must not depend on the data."""
-    df = df.where(valid_vector(F.col(vec_col), dim))
+    df = df.where(valid_vector(F.col("embedding"), dim))
     comps = [
         (
             F.sum(
-                F.round(F.element_at(F.col(vec_col), d + 1).cast("double") * 1e7)
+                F.round(F.element_at(F.col("embedding"), d + 1).cast("double") * 1e7)
                 .cast("bigint")
             ).cast("double")
             / F.lit(1e7)
@@ -1229,15 +1202,11 @@ def label_centroids(
         ).alias(f"c{d}")
         for d in range(dim)
     ]
-    return df.groupBy(label_col).agg(F.count(F.lit(1)).alias("n_vectors"), *comps)
+    return df.groupBy("label").agg(F.count(F.lit(1)).alias("n_vectors"), *comps)
 
 
-def gram_matrix(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Distributed Gram matrix XᵀX over an embedding column — the
+def gram_matrix(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Distributed Gram matrix XᵀX over the ``embedding`` column — the
     second-moment statistics PCA/whitening and SemDeDup-style
     preprocessing start from (dim² scalars summarize the whole corpus's
     covariance structure up to the mean). Output: one row per (d1, d2)
@@ -1253,12 +1222,12 @@ def gram_matrix(
     across partitions and oracle-checkable. Invalid vectors are
     excluded at entry (embeddings contract): a NaN component would
     abort the BIGINT quantization under ANSI on both engines."""
-    df = df.where(valid_vector(F.col(vec_col), dim))
+    df = df.where(valid_vector(F.col("embedding"), dim))
     e = df.select(
         F.posexplode(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+            F.transform(F.col("embedding"), lambda x: x.cast("double"))
         ).alias("d1", "x1"),
-        F.col(vec_col).alias("__v"),
+        F.col("embedding").alias("__v"),
     )
     sums = [
         F.sum(
@@ -1302,13 +1271,13 @@ def build_ivf_index(
     index. Duplicate ids collapse to one row (the index contract is one
     vector per id); ``centroids == []`` (empty history) yields an empty
     index with the contract schema."""
-    dim = _resolve_dim(df, dim, "vec_id", "embedding")
+    dim = _resolve_dim(df, dim)
     if dim is None or not centroids:
         return df.select(
             F.col("vec_id"), F.lit(0).alias("cid"), F.col("embedding")
         ).limit(0)
     return _assign_cells(
-        ensure_min_partitions(df.where(_valid("vec_id", "embedding", dim)))
+        ensure_min_partitions(df.where(_valid(dim)))
         .dropDuplicates(["vec_id"])
         .select("vec_id", "embedding"),
         centroids, "embedding", "cid",
@@ -1319,11 +1288,10 @@ def ivf_knn_against_index(
     queries: DataFrame,
     index: DataFrame,
     centroids: "list[tuple[int, list[float]]]",
-    k: int = 3,
     n_probe: int = 2,
     dim: "int | None" = None,
 ) -> DataFrame:
-    """ANN search against a PERSISTED IVF index (``build_ivf_index``
+    """ANN top-3 search against a PERSISTED IVF index (``build_ivf_index``
     output, read back from its partitioned layout) — the serving-path
     completion of the similarity family: the index is maintained
     incrementally (append assignments per batch; streaming via the
@@ -1340,10 +1308,10 @@ def ivf_knn_against_index(
     the assignment across query batches (only this path dedups ids).
     Self-matches (query id == index id) are excluded, as in the whole
     kNN family."""
-    dim = _resolve_dim(queries, dim, "vec_id", "embedding")
+    dim = _resolve_dim(queries, dim)
     if dim is None or not centroids:
-        return _empty_knn(queries, "vec_id")
+        return _empty_knn(queries)
     q = ensure_min_partitions(
-        queries.where(_valid("vec_id", "embedding", dim))
+        queries.where(_valid(dim))
     ).dropDuplicates(["vec_id"])
-    return _probe_cells(q, index, centroids, k, n_probe, "vec_id", "embedding")
+    return _probe_cells(q, index, centroids, 3, n_probe)

@@ -72,8 +72,8 @@ def salted_join(
     return joined.drop("__salt")
 
 
-def skewed_key_stats(df: DataFrame, key_cols: list[str], top_k: int = 10) -> DataFrame:
-    """Skew diagnosis: the top-k heaviest keys with their share of all
+def skewed_key_stats(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Skew diagnosis: the 10 heaviest keys with their share of all
     rows — the number you look at before choosing n_salts. One LAZY
     plan: the scalar total is a broadcast one-row cross join over the
     same counts aggregate (an eager ``df.count()`` here would run a
@@ -94,5 +94,5 @@ def skewed_key_stats(df: DataFrame, key_cols: list[str], top_k: int = 10) -> Dat
             F.col("n_rows").desc(),
             *[F.col(c).asc_nulls_last() for c in key_cols],
         )
-        .limit(top_k)
+        .limit(10)
     )

@@ -243,15 +243,9 @@ def gapfill_time_series(df: DataFrame) -> DataFrame:
     )
 
 
-def time_rollup(
-    events: DataFrame,
-    bucket: str = "hour",
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Time-bucketed rollup in MERGEABLE partial form (the hypertable /
-    continuous-aggregate building block): per (bucket_start, keys) —
+def time_rollup(events: DataFrame) -> DataFrame:
+    """Hourly rollup in MERGEABLE partial form (the hypertable /
+    continuous-aggregate building block): per (bucket_start, event_type) —
     n_events, n_values, exact DECIMAL sum, min, max. Every statistic is
     mergeable, so rollups of disjoint event slices combine cell-wise
     with :func:`rollup_merge` instead of re-reading history; derived
@@ -261,14 +255,14 @@ def time_rollup(
     (n_values/sum/min/max all see the :func:`finite` projection), so the
     rollup never mixes a clean sum with an Inf-poisoned max.
 
-    Timeline contract: NULL-``ts_col`` events are off the timeline and
+    Timeline contract: NULL-``ts`` events are off the timeline and
     excluded (``functions/measurement.py``); ``n_events`` counts every
     on-timeline event, ``n_values`` only the valid measurements."""
-    v = finite(value_col)
+    v = finite("value")
     return (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .groupBy(
-            F.date_trunc(bucket, F.col(ts_col)).alias("bucket_start"), *keys
+            F.date_trunc("hour", F.col("ts")).alias("bucket_start"), "event_type"
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),

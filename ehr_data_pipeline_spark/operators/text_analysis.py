@@ -320,15 +320,15 @@ def _pretokenizer(name: str):
     return _PRETOKENIZERS[name]
 
 
-def _initial_state(df: DataFrame, text_col: str, pretokenizer: str) -> DataFrame:
-    """Round-0 trainer state: one row per pretoken OCCURRENCE, ``syms`` =
+def _initial_state(df: DataFrame, pretokenizer: str) -> DataFrame:
+    """Round-0 trainer state: one row per pretoken OCCURRENCE of ``text``, ``syms`` =
     its symbols joined by ``BPE_SEP`` (the state BPE training starts
     from). A narrow explode + in-row symbol split/join; at 100 TB this is
     the corpus re-expressed one pretoken per row, the layout every
     subsequent round's pair count and merge-apply pass works over."""
     pretokens, symbols = _pretokenizer(pretokenizer)
     return df.select(
-        F.explode(pretokens(F.col(text_col))).alias("__w")
+        F.explode(pretokens(F.col("text"))).alias("__w")
     ).select(F.array_join(symbols(F.col("__w")), BPE_SEP).alias("syms"))
 
 
@@ -440,9 +440,7 @@ def bpe_trainer_rounds(
     corpus_tokens_after`` — each round strictly decreases the token
     count by the pair's non-overlapping occurrence count. Stops early if
     no pairs remain."""
-    return bpe_batched_trainer_rounds(
-        df, "text", n_rounds, 1, pretokenizer
-    ).drop("pos")
+    return bpe_batched_trainer_rounds(df, n_rounds, 1, pretokenizer).drop("pos")
 
 
 def _select_compatible_pairs(
@@ -479,7 +477,6 @@ def _select_compatible_pairs(
 
 def bpe_batched_trainer_rounds(
     df: DataFrame,
-    text_col: str = "text",
     n_rounds: int = 2,
     batch_size: int = 3,
     pretokenizer: str = "word",
@@ -538,7 +535,7 @@ def bpe_batched_trainer_rounds(
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     spark = df.sparkSession
-    state = _initial_state(df, text_col, pretokenizer).persist()
+    state = _initial_state(df, pretokenizer).persist()
     rows: list = []
     retained = [state]
     try:
@@ -658,20 +655,16 @@ def bpe_trained_token_counts_df(
                 "n_tokens"
             ),
         )
-    return _bpe_trained_counts_arrow(
-        df, merges, "doc_id", "text", pretokenizer
-    )
+    return _bpe_trained_counts_arrow(df, merges, pretokenizer)
 
 
 def _bpe_trained_counts_arrow(
     df: DataFrame,
     merges: "tuple[tuple[str, str], ...]",
-    id_col: str,
-    text_col: str,
     pretokenizer: str = "word",
 ) -> DataFrame:
-    """Arrow-batched twin of the trained-table token counters for large
-    merge tables: one ``mapInPandas`` pass whose per-word loop is the
+    """Arrow-batched twin of the trained-table token counters (per
+    ``doc_id``, over ``text``) for large merge tables: one ``mapInPandas`` pass whose per-word loop is the
     SAME left-greedy non-overlapping merge-apply the native expression
     chain (and the oracles' gaps-and-islands SQL) implements — fuse
     every leftmost (l, r) adjacency, whole symbols only, merges in
@@ -697,7 +690,7 @@ def _bpe_trained_counts_arrow(
     ws_re = _re.compile(r"\s+", _re.ASCII)
     table = [(l, r) for l, r in merges]
     schema = StructType(
-        [df.schema[id_col], StructField("n_tokens", LongType(), False)]
+        [df.schema["doc_id"], StructField("n_tokens", LongType(), False)]
     )
 
     def count_text(text: "str | None") -> int:
@@ -729,10 +722,10 @@ def _bpe_trained_counts_arrow(
     def apply_batches(batches):
         for pdf in batches:
             yield pdf.assign(
-                n_tokens=pdf[text_col].map(count_text).astype("int64")
-            )[[id_col, "n_tokens"]]
+                n_tokens=pdf["text"].map(count_text).astype("int64")
+            )[["doc_id", "n_tokens"]]
 
-    return df.select(id_col, text_col).mapInPandas(apply_batches, schema)
+    return df.select("doc_id", "text").mapInPandas(apply_batches, schema)
 
 
 def char_class_count(col: Column, char_class: str) -> Column:
@@ -855,14 +848,12 @@ def ngrams(col: Column, n: int = 2) -> Column:
     return word_ngram_strings(normalize_text(col), n)
 
 
-def top_ngrams(
-    df: DataFrame, text_col: str = "text", n: int = 2, k: int = 20
-) -> DataFrame:
-    """Corpus-wide top-k n-grams. One explode + one shuffle (partial
+def top_ngrams(df: DataFrame, k: int = 20) -> DataFrame:
+    """Corpus-wide top-k word bigrams of ``text``. One explode + one shuffle (partial
     aggregation map-side), top-k via TakeOrderedAndProject with a
     deterministic tiebreak on the n-gram string."""
     return (
-        df.select(F.explode(ngrams(F.col(text_col), n)).alias("ngram"))
+        df.select(F.explode(ngrams(F.col("text"), 2)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.col("n_occurrences").desc(), F.col("ngram").asc())
@@ -963,36 +954,30 @@ def winnow_from_hashes(hs: Column, w: int = 4) -> Column:
     return F.array_sort(F.array_distinct(mins))
 
 
-def winnow_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, MOSS):
-    per doc, hash every character k-gram (the rolling-hash stream), then
-    keep the minimum of each w-length window. Guarantees any shared
-    substring of length >= k+w-1 produces a shared fingerprint while
+    per doc, hash every character k-gram (k = 8, the rolling-hash stream),
+    then keep the minimum of each w-length window (w = 4). Guarantees any
+    shared substring of length >= k+w-1 produces a shared fingerprint while
     keeping ~2/(w+1) of the hashes. Two narrow in-row passes (hash stream,
-    then window minima) — no shuffle. Returns (id_col, fps array<bigint>)."""
-    h = df.select(F.col(id_col), kgram_hash_seq(F.col(text_col), k).alias("hs"))
-    return h.select(id_col, winnow_from_hashes(F.col("hs"), w).alias("fps"))
+    then window minima) — no shuffle. Returns (id_col, fps
+    array<bigint>)."""
+    h = df.select(F.col(id_col), kgram_hash_seq(F.col(text_col), 8).alias("hs"))
+    return h.select(id_col, winnow_from_hashes(F.col("hs"), 4).alias("fps"))
 
 
 def winnow_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 4,
     min_shared: int = 5,
-    max_df: int = 10,
     input_partitions: int | None = None,
 ) -> DataFrame:
-    """Near-dup candidate pairs by shared winnowing fingerprints: explode
-    each doc's fingerprint set, drop *stop-prints* (fingerprints appearing
-    in more than ``max_df`` docs — boilerplate; the same mitigation MOSS
-    uses, and at 100 TB also the hot-bucket skew fix for the join), then
-    self-join WITHIN the remaining fingerprint buckets (Σ|bucket|², never
-    all-pairs), count shared prints per pair, and score
-    overlap = shared / min(rare-print count of A, of B).
+    """Near-dup candidate pairs of ``doc_id`` by shared winnowing
+    fingerprints of ``text``: explode each doc's fingerprint set, drop
+    *stop-prints* (fingerprints appearing in more than 10 docs —
+    boilerplate; the same mitigation MOSS uses, and at 100 TB also the
+    hot-bucket skew fix for the join), then self-join WITHIN the remaining
+    fingerprint buckets (Σ|bucket|², never all-pairs), count shared prints
+    per pair, and score overlap = shared / min(rare-print count of A, of B).
 
     ``input_partitions``: the hash stream is CPU-heavy per row, and
     parquet's bytes-based splitting under-parallelizes small single-file
@@ -1002,37 +987,35 @@ def winnow_pairs(
     shuffle would be pure cost."""
     if input_partitions is not None:
         df = df.repartition(input_partitions)
-    fps = winnow_fingerprints(df, id_col, text_col, k, w)
+    fps = winnow_fingerprints(df, "doc_id", "text")
     # explode_outer, not explode: InferFiltersFromGenerate would add a
     # size(fps)>0 filter below the projections with the whole winnow
     # expression INLINED — re-evaluating the md5 stream once per window
     # (O(n²) per doc). fps is never empty by construction, so the
     # null-filter above the Generate is semantically equivalent and cheap.
     e = (
-        fps.select(id_col, F.explode_outer("fps").alias("fp"))
+        fps.select("doc_id", F.explode_outer("fps").alias("fp"))
         .filter(F.col("fp").isNotNull())
     )
     # stop-print removal: bucket sizes are a tiny aggregate; the join back
-    # onto the exploded prints broadcasts at any scale where max_df is small
-    rare = e.groupBy("fp").count().filter(F.col("count") <= max_df).select("fp")
+    # onto the exploded prints broadcasts at any scale
+    rare = e.groupBy("fp").count().filter(F.col("count") <= 10).select("fp")
     er = e.join(rare, "fp")
-    counts = er.groupBy(id_col).agg(F.count(F.lit(1)).alias("nfp"))
+    counts = er.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nfp"))
     a = er.alias("a")
     b = er.alias("b")
     pairs = (
         a.join(
             b,
             (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    ca = counts.select(F.col(id_col).alias("doc_a"), F.col("nfp").alias("nfp_a"))
-    cb = counts.select(F.col(id_col).alias("doc_b"), F.col("nfp").alias("nfp_b"))
+    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("nfp").alias("nfp_a"))
+    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("nfp").alias("nfp_b"))
     return (
         pairs.join(ca, "doc_a")
         .join(cb, "doc_b")
@@ -1473,30 +1456,26 @@ def dsir_importance_weights(raw: DataFrame, target: DataFrame) -> DataFrame:
     )
 
 
-def bm25_index_build(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> "tuple[DataFrame, DataFrame]":
-    """The PERSISTED BM25 inverted index for a corpus — retrieval's
-    member of the engine's maintained-index family (MinHash bands, IVF
-    cells, exact fingerprints): ``(postings, lengths)`` where postings
-    is one (tok, id, tf) row per distinct doc-term and lengths one
-    (id, dl) row per doc. Both are MERGEABLE by plain union over
-    disjoint doc sets — term and length statistics are additive — so an
-    ingest batch appends ``bm25_index_build(batch)`` and never re-reads
-    history; idf/avgdl are derived at SEARCH time from the accumulated
-    tables, which is exactly BM25 over the grown corpus. At 100 TB the
-    postings land bucketed by ``tok`` (``sinks.write_bucketed``), so a
-    query's term lookup is a bucket-pruned read instead of a corpus
-    scan; lengths are one narrow row per doc. Tokenization is the
-    engine-wide whitespace contract (NULL text ≡ '')."""
-    toks = whitespace_tokens(F.col(text_col))
+def bm25_index_build(df: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """The PERSISTED BM25 inverted index for a corpus (``doc_id``, ``text``)
+    — retrieval's member of the engine's maintained-index family (MinHash
+    bands, IVF cells, exact fingerprints): ``(postings, lengths)`` where
+    postings is one (tok, id, tf) row per distinct doc-term and lengths one
+    (id, dl) row per doc. Both are MERGEABLE by plain union over disjoint
+    doc sets — term and length statistics are additive — so an ingest batch
+    appends ``bm25_index_build(batch)`` and never re-reads history;
+    idf/avgdl are derived at SEARCH time from the accumulated tables, which
+    is exactly BM25 over the grown corpus. At 100 TB the postings land
+    bucketed by ``tok`` (``sinks.write_bucketed``), so a query's term lookup
+    is a bucket-pruned read instead of a corpus scan; lengths are one narrow
+    row per doc. Tokenization is the engine-wide whitespace contract (NULL
+    text ≡ '')."""
+    toks = whitespace_tokens(F.col("text"))
     lengths = df.select(
-        F.col(id_col).alias("id"), F.size(toks).cast("bigint").alias("dl")
+        F.col("doc_id").alias("id"), F.size(toks).cast("bigint").alias("dl")
     )
     postings = (
-        df.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
+        df.select(F.col("doc_id").alias("id"), F.explode(toks).alias("tok"))
         .groupBy("tok", "id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
@@ -1507,18 +1486,15 @@ def bm25_search_against_index(
     postings: DataFrame,
     lengths: DataFrame,
     query_terms: "list[str]",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """Okapi BM25 over a persisted index (``bm25_index_build`` output,
-    possibly the union of many appended batches) — the one scoring
-    implementation; the corpus-scanning :func:`bm25_scores` is the
-    index build followed by this search. It touches only the query
-    terms' posting rows plus the narrow lengths table. Corpus stats
-    (n_docs, total token count, per-term document frequencies) derive
-    from the index at search time, so scores always reflect the CURRENT
-    accumulated corpus.
+    """Okapi BM25 (k1 = 1.2, b = 0.75) per ``doc_id`` over a persisted index
+    (``bm25_index_build`` output, possibly the union of many appended
+    batches) — the one scoring implementation; the corpus-scanning
+    :func:`bm25_scores` is the index build followed by this search. It
+    touches only the query terms' posting rows plus the narrow lengths
+    table. Corpus stats (n_docs, total token count, per-term document
+    frequencies) derive from the index at search time, so scores always
+    reflect the CURRENT accumulated corpus.
 
     Cross-engine determinism: each per-term score is one fixed IEEE
     chain over exact inputs, then quantized to 1e-6 units as a BIGINT
@@ -1526,6 +1502,7 @@ def bm25_search_against_index(
     the integer Σ commutes — the unigram-LM/DSIR trick), and the IDF's
     libm log2 is itself pre-quantized to 1e-4 bits. ``bm25`` is the one
     final division of the exact micro total."""
+    k1, b = 1.2, 0.75
     terms = sorted(set(query_terms))
     corpus = lengths.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1558,7 +1535,7 @@ def bm25_search_against_index(
         scored.groupBy("id")
         .agg(F.sum("q_term").cast("bigint").alias("bm25_micro"))
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "bm25_micro",
             (F.col("bm25_micro").cast("double") / F.lit(1000000.0)).alias("bm25"),
         )

@@ -49,6 +49,14 @@ from ehr_data_pipeline_spark.partitioning import ensure_min_partitions
 DEFAULT_SHINGLE_K = 4
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
+# Jaccard floor of every MinHash near-dup surface.
+MINHASH_THRESHOLD = 0.6
+# SimHash sketch width and the Hamming radius of a near-dup pair (3 < 4
+# bands, so banding finds every pair: see simhash_near_dup_pairs).
+SIMHASH_BITS = 60
+SIMHASH_MAX_DISTANCE = 3
+# Token window of exact-substring dedup (duplicate_spans).
+SPAN_WINDOW = 8
 
 
 def shingle_set(col: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
@@ -105,16 +113,17 @@ def jaccard_distinct(sa: Column, sb: Column) -> Column:
     )
 
 
-def hashed_shingle_set(col: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
-    """Distinct 32-bit hashes of the character k-grams — Broder's original
-    shingling construction (fixed-width shingle hashes, not strings). The
-    Jaccard over hash sets equals the string-shingle Jaccard up to ~2^-32
-    collision probability per shingle pair, and buys: ~2.6× cheaper pair
-    verification (bigint array_intersect vs strings, measured at sf0.1),
-    ~4× smaller shuffle payloads, and engine portability (the md5-derived
-    hash replays in DuckDB, so every downstream query stays
-    oracle-checkable). Empty array when the text is shorter than k."""
-    return F.array_distinct(F.transform(shingle_set(col, k), base_shingle_hash))
+def hashed_shingle_set(col: Column) -> Column:
+    """Distinct 32-bit hashes of the character k-grams (k =
+    ``DEFAULT_SHINGLE_K``) — Broder's original shingling construction
+    (fixed-width shingle hashes, not strings). The Jaccard over hash sets
+    equals the string-shingle Jaccard up to ~2^-32 collision probability per
+    shingle pair, and buys: ~2.6× cheaper pair verification (bigint
+    array_intersect vs strings, measured at sf0.1), ~4× smaller shuffle
+    payloads, and engine portability (the md5-derived hash replays in
+    DuckDB, so every downstream query stays oracle-checkable). Empty array
+    when the text is shorter than k."""
+    return F.array_distinct(F.transform(shingle_set(col), base_shingle_hash))
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -146,21 +155,15 @@ def exact_dup_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    k: int = DEFAULT_SHINGLE_K,
-) -> DataFrame:
-    """EXACT n-gram Jaccard pairs (doc_a < doc_b, jaccard >= threshold)
-    without all-pairs: prefix filtering (AllPairs/PPJoin, Chaudhuri et
-    al. / Xiao et al.). Similarity is over hashed shingle sets (see
-    hashed_shingle_set); docs shorter than k have none and pair with
-    nobody. Output is IDENTICAL to the all-pairs nested-loop join —
-    prefix filtering is lossless; that join is the brute-force twin in
-    tests/test_text_dedup.py — but the candidate join touches only rare
-    shingles:
+def jaccard_pairs(df: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """EXACT n-gram Jaccard pairs (doc_a < doc_b, jaccard >= threshold) of
+    ``text``, keyed by ``doc_id``, without all-pairs: prefix filtering
+    (AllPairs/PPJoin, Chaudhuri et al. / Xiao et al.). Similarity is over
+    hashed shingle sets (see hashed_shingle_set); docs shorter than k have
+    none and pair with nobody. Output is IDENTICAL to the all-pairs
+    nested-loop join — prefix filtering is lossless; that join is the
+    brute-force twin in tests/test_text_dedup.py — but the candidate join
+    touches only rare shingles:
 
     1. global document frequency per shingle (one groupBy);
     2. per doc, order shingles rarest-first (df, then shingle — one
@@ -201,7 +204,7 @@ def jaccard_pairs(
     referenced by the RETURNED lazy plan, so it lives until
     ``release_builder_caches()`` / ``spark.catalog.clearCache()``."""
     base = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"), hashed_shingle_set(F.col(text_col), k).alias("sh")
+        F.col("doc_id").alias("id"), hashed_shingle_set(F.col("text")).alias("sh")
     ).filter(F.size("sh") > 0)
     base = _persist_tracked(base)
     e = base.select("id", F.size("sh").alias("nsh"), F.explode("sh").alias("g"))
@@ -284,22 +287,18 @@ def jaccard_pairs(
     )
 
 
-def curate_corpus_funnel(
-    df: DataFrame,
-    min_quality: float = 0.5,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
+def curate_corpus_funnel(df: DataFrame) -> DataFrame:
     """The composed LLM-corpus curation pipeline — the operators above
     chained the way a training-data run chains them, reported as a funnel
     (stage_idx, stage, n_docs):
 
     1. **all** — the raw corpus;
-    2. **quality** — docs whose heuristic quality score clears
-       ``min_quality`` (text_analysis.text_stats, narrow pass);
+    2. **quality** — docs whose heuristic quality score is at least 0.5
+       (text_analysis.text_stats, narrow pass);
     3. **exact_dedup** — deterministic keep-lowest-id survivor per
        normalized-content fingerprint (one shuffle);
     4. **near_dedup** — greedy near-dup removal: for every surviving pair
-       with Jaccard >= threshold, the higher id drops. Greedy-by-id is
+       with Jaccard >= 0.8, the higher id drops. Greedy-by-id is
        order-deterministic and transitively safe (a kept doc's dups all
        reference a lower id).
 
@@ -311,11 +310,11 @@ def curate_corpus_funnel(
 
     base = df.select("doc_id", "text")
     quality = text_stats(F.col("text"))["quality_score"]
-    q = base.filter(quality >= min_quality)
+    q = base.filter(quality >= 0.5)
     fp = q.select(F.col("doc_id"), fingerprint128(F.col("text")).alias("__fp"))
     keep = fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     e = q.join(keep, "doc_id", "left_semi")
-    pairs = jaccard_pairs(e, "doc_id", "text", jaccard_threshold, DEFAULT_SHINGLE_K)
+    pairs = jaccard_pairs(e, 0.8)
     removed = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     n = e.join(removed, "doc_id", "left_anti")
 
@@ -458,14 +457,12 @@ def _sig_agreement(a: Column, b: Column) -> Column:
     return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
 
 
-def _band_entries(
-    sig: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
+def _band_entries(sig: DataFrame) -> DataFrame:
     """(id, nsh, band_idx, band_key) inverted-index entries from an
     (id, sh, sig) MinHash index frame — one row per (doc, band), the
     LSH banding construction shared by the all-pairs and incremental
     near-dup paths."""
-    rows = num_hashes // bands
+    rows = DEFAULT_NUM_HASHES // DEFAULT_BANDS
     return sig.select(
         "id",
         F.size("sh").alias("nsh"),
@@ -479,7 +476,7 @@ def _band_entries(
                             for j in range(rows)
                         ]).alias("band_key"),
                     )
-                    for i in range(bands)
+                    for i in range(DEFAULT_BANDS)
                 ]
             )
         ).alias("band"),
@@ -487,20 +484,16 @@ def _band_entries(
 
 
 def build_minhash_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
-    num_hashes: int = DEFAULT_NUM_HASHES,
+    df: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
 ) -> DataFrame:
-    """The persistent MinHash near-dup index for a corpus: one
-    (id, sh, sig) row per doc with a non-empty shingle set. At 100 TB
-    this is built ONCE, written bucketed (sinks.write_bucketed) and
+    """The persistent MinHash near-dup index for a corpus: one (id, sh, sig)
+    row per ``doc_id`` with a non-empty shingle set of its ``text``. At 100
+    TB this is built ONCE, written bucketed (sinks.write_bucketed) and
     appended to per ingest batch — `near_dedup_against_index` joins new
     batches against it without touching the historical texts."""
     base = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"),
-        hashed_shingle_set(F.col(text_col), k).alias("sh"),
+        F.col("doc_id").alias("id"),
+        hashed_shingle_set(F.col("text")).alias("sh"),
     ).filter(F.size("sh") > 0)
     return base.select(
         "id", "sh", minhash_signature(F.col("sh"), num_hashes).alias("sig")
@@ -508,31 +501,22 @@ def build_minhash_index(
 
 
 def near_dedup_against_index(
-    batch: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    k: int = DEFAULT_SHINGLE_K,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    sig_agree: int = 0,
+    batch: DataFrame, index: DataFrame, sig_agree: int = 0
 ) -> "tuple[DataFrame, DataFrame]":
     """Incremental NEAR-dup dedup — the continuous-ingest twin of
     ``dedup_against_index`` (which is exact-only): drop new-batch docs
-    whose shingle-set Jaccard reaches ``threshold`` against the
+    whose shingle-set Jaccard reaches ``MINHASH_THRESHOLD`` against the
     historical MinHash index (``build_minhash_index`` output) or against
     a lower-id doc of the same batch.
 
-    Drop rule, stated precisely because it is the SQL-replayable
-    contract: a batch doc drops iff it band-collides AND verifies
-    J >= threshold against ANY index doc, or against ANY lower-id batch
-    doc — each test evaluated INDEPENDENTLY (a doc dropped via a doc
-    that was itself dropped still drops: dedup stays conservative and
-    order-deterministic, no sequential dependency between batch rows).
-    With every index id below every batch id, the kept batch ids are
-    exactly those that are never ``doc_b`` of
-    :func:`minhash_lsh_pairs` over history ∪ batch.
+    Drop rule, stated precisely because it is the SQL-replayable contract: a
+    batch doc drops iff it band-collides AND verifies J >= MINHASH_THRESHOLD
+    against ANY index doc, or against ANY lower-id batch doc — each test
+    evaluated INDEPENDENTLY (a doc dropped via a doc that was itself dropped
+    still drops: dedup stays conservative and order-deterministic, no
+    sequential dependency between batch rows). With every index id below
+    every batch id, the kept batch ids are exactly those that are never
+    ``doc_b`` of :func:`minhash_lsh_pairs` over history ∪ batch.
 
     One implementation with the batch surfaces: the in-batch pairs ARE
     :func:`_rep_minhash_pairs` over the batch's rep signatures (minus
@@ -560,20 +544,17 @@ def near_dedup_against_index(
     verification joins (see :func:`_verified`); the index side carries
     its signature already (``build_minhash_index``), so the check is
     free to ship."""
-    grouped = _shingle_groups(batch, id_col, text_col, k)
-    rsig = _rep_signatures(grouped, num_hashes)
+    grouped = _shingle_groups(batch)
+    rsig = _rep_signatures(grouped)
     hist_cand = _band_candidates(
-        _band_entries(rsig, num_hashes, bands),
-        _band_entries(index, num_hashes, bands),
-        threshold,
-        ordered=False,
+        _band_entries(rsig), _band_entries(index), ordered=False
     )
     # unordered group pairs — the drop rule applies them in both
     # directions (the higher group's members always drop; the lower
     # group's members drop above the higher rep)
-    vpairs = _rep_minhash_pairs(
-        rsig, threshold, num_hashes, bands, sig_agree
-    ).where(F.col("doc_a") != F.col("doc_b"))
+    vpairs = _rep_minhash_pairs(rsig, sig_agree).where(
+        F.col("doc_a") != F.col("doc_b")
+    )
     if sig_agree > 0:
         # ADVICE r9: if the index was built with a different num_hashes,
         # zip_with null-pads the shorter signature, the equality lambda
@@ -582,12 +563,13 @@ def near_dedup_against_index(
         # config mismatch raise at execution instead (assert_true is NULL
         # when the length matches, so the guard costs one size check per
         # index row the verification reads). The batch signatures are
-        # built here with num_hashes, so only the index side can differ.
+        # built here with DEFAULT_NUM_HASHES, so only the index side can
+        # differ.
         sig_len_ok = F.assert_true(
-            F.size("sig") == F.lit(num_hashes),
+            F.size("sig") == F.lit(DEFAULT_NUM_HASHES),
             F.lit(
                 "near-dedup sig_agree prefilter: the index's MinHash "
-                f"signatures must have length num_hashes={num_hashes}; "
+                f"signatures must have length num_hashes={DEFAULT_NUM_HASHES}; "
                 "the passed index was built with a different num_hashes"
             ),
         ).isNull()
@@ -595,7 +577,7 @@ def near_dedup_against_index(
             "id", "sh", F.when(sig_len_ok, F.col("sig")).alias("sig")
         )
     hist_matched = (
-        _verified(hist_cand, rsig, index, threshold, sig_agree)
+        _verified(hist_cand, rsig, index, sig_agree)
         .select(F.col("doc_a").alias("__rid"))
         .distinct()
         .withColumn("__hist", F.lit(1))
@@ -618,25 +600,20 @@ def near_dedup_against_index(
         F.col("__hist").isNotNull()
         | (F.col("id") != F.col("__rid"))
         | (F.col("__min_other").isNotNull() & (F.col("id") > F.col("__min_other")))
-    ).select(F.col("id").alias(id_col)).distinct()
-    fresh = batch.join(dropped, id_col, "left_anti")
+    ).select(F.col("id").alias("doc_id")).distinct()
+    fresh = batch.join(dropped, "doc_id", "left_anti")
     # per-doc index entries for the survivors: members share their rep's
     # signature (set-determined), so no per-member re-hashing
     bidx = grouped.select("id", "sh", "__rid").join(
         rsig.select(F.col("id").alias("__rid"), F.col("sig")), "__rid"
     ).select("id", "sh", "sig")
     new_entries = bidx.join(
-        fresh.select(F.col(id_col).alias("id")), "id", "left_semi"
+        fresh.select(F.col("doc_id").alias("id")), "id", "left_semi"
     )
     return fresh, new_entries
 
 
-def _shingle_groups(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-) -> DataFrame:
+def _shingle_groups(df: DataFrame) -> DataFrame:
     """Identical-shingle-set groups — the distinct-first work-avoidance
     core of the MinHash pair surfaces (the text twin of
     similarity._vector_groups): one (id, sh, __rid, __n) row per input
@@ -652,8 +629,8 @@ def _shingle_groups(
     partitioned window — plan-hygiene clean). The groups are persisted
     (every caller reads them from ≥ 3 plan branches)."""
     base = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"),
-        hashed_shingle_set(F.col(text_col), k).alias("sh"),
+        F.col("doc_id").alias("id"),
+        hashed_shingle_set(F.col("text")).alias("sh"),
     ).filter(F.size("sh") > 0)
     gfp = F.md5(
         F.concat_ws(
@@ -673,27 +650,25 @@ def _shingle_groups(
     return _persist_tracked(grouped)
 
 
-def _rep_signatures(grouped: DataFrame, num_hashes: int) -> DataFrame:
+def _rep_signatures(grouped: DataFrame) -> DataFrame:
     """The persisted (id, sh, __n, sig) MinHash signatures of the group
     representatives of a :func:`_shingle_groups` frame — one signature
     per DISTINCT shingle set."""
     reps = grouped.where(F.col("id") == F.col("__rid")).select("id", "sh", "__n")
     return _persist_tracked(reps.select(
-        "id", "sh", "__n", minhash_signature(F.col("sh"), num_hashes).alias("sig")
+        "id", "sh", "__n", minhash_signature(F.col("sh")).alias("sig")
     ))
 
 
-def _band_candidates(
-    a: DataFrame, b: DataFrame, threshold: float, ordered: bool
-) -> DataFrame:
+def _band_candidates(a: DataFrame, b: DataFrame, ordered: bool) -> DataFrame:
     """Materialized distinct (doc_a, doc_b) LSH candidates: the
     (band_idx, band_key) bucket join of two :func:`_band_entries`
     frames, ``doc_a`` from ``a``. ``ordered`` adds ``doc_a < doc_b``
     (a self-join emits each unordered pair once); the history side of
     :func:`near_dedup_against_index` joins unordered.
 
-    Size-ratio pruning (PPJoin-style): J(A,B) <= min(|A|,|B|)/max(...),
-    so candidates failing the ratio can NEVER pass the threshold — they
+    Size-ratio pruning (PPJoin-style): J(A,B) <= min(|A|,|B|)/max(...), so
+    candidates failing the ratio can NEVER pass ``MINHASH_THRESHOLD`` — they
     drop before the expensive intersection. Output set is unchanged."""
     cond = (F.col("a.band_idx") == F.col("b.band_idx")) & (
         F.col("a.band_key") == F.col("b.band_key")
@@ -702,7 +677,7 @@ def _band_candidates(
         cond = cond & (F.col("a.id") < F.col("b.id"))
     cond = cond & (
         F.least(F.col("a.nsh"), F.col("b.nsh"))
-        >= F.lit(threshold) * F.greatest(F.col("a.nsh"), F.col("b.nsh"))
+        >= F.lit(MINHASH_THRESHOLD) * F.greatest(F.col("a.nsh"), F.col("b.nsh"))
     )
     return _materialize_candidates(
         a.alias("a")
@@ -713,14 +688,10 @@ def _band_candidates(
 
 
 def _verified(
-    candidates: DataFrame,
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    sig_agree: int,
+    candidates: DataFrame, left: DataFrame, right: DataFrame, sig_agree: int
 ) -> DataFrame:
-    """(doc_a, doc_b, jaccard) candidates whose exact shingle-set
-    Jaccard reaches ``threshold``: ``doc_a`` is looked up in ``left``,
+    """(doc_a, doc_b, jaccard) candidates whose exact shingle-set Jaccard
+    reaches ``MINHASH_THRESHOLD``: ``doc_a`` is looked up in ``left``,
     ``doc_b`` in ``right`` (both (id, sh, sig) frames), by two id-equi
     joins.
 
@@ -759,17 +730,11 @@ def _verified(
             "doc_b",
             jaccard_distinct(F.col("sa.sh"), F.col("sb.sh")).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= MINHASH_THRESHOLD)
     )
 
 
-def _rep_minhash_pairs(
-    sig: DataFrame,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-    sig_agree: int = 0,
-) -> DataFrame:
+def _rep_minhash_pairs(sig: DataFrame, sig_agree: int = 0) -> DataFrame:
     """(doc_a, doc_b, jaccard) verified near-dup pairs over the DISTINCT
     shingle sets only (``sig`` is :func:`_rep_signatures` output):
     banding + size-ratio prune (:func:`_band_candidates`) + exact-Jaccard
@@ -778,9 +743,9 @@ def _rep_minhash_pairs(
     every band; their Jaccard is exactly 1.0, computed once with the
     same expression so the value is bit-identical to the pairwise
     formula)."""
-    banded = _band_entries(sig, num_hashes, bands)
-    candidates = _band_candidates(banded, banded, threshold, ordered=True)
-    cross = _verified(candidates, sig, sig, threshold, sig_agree)
+    banded = _band_entries(sig)
+    candidates = _band_candidates(banded, banded, ordered=True)
+    cross = _verified(candidates, sig, sig, sig_agree)
     selfp = (
         sig.where(F.col("__n") >= 2)
         .select(
@@ -788,27 +753,23 @@ def _rep_minhash_pairs(
             F.col("id").alias("doc_b"),
             jaccard_distinct(F.col("sh"), F.col("sh")).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= MINHASH_THRESHOLD)
     )
     return cross.unionByName(selfp)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.6,
-    sig_agree: int = 0,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, sig_agree: int = 0) -> DataFrame:
     """Near-dup pairs at scale: shingle → MinHash signature → band-bucket
-    candidate join → exact-Jaccard verification. ``sig_agree`` (0 = off)
-    additionally requires that many of the ``DEFAULT_NUM_HASHES`` MinHash
-    positions to agree before a candidate's exact intersection runs —
-    see :func:`_verified` for the estimator argument, cost, and
-    the measured recall trade.
+    candidate join → exact-Jaccard verification at ``MINHASH_THRESHOLD``.
+    ``sig_agree`` (0 = off) additionally requires that many of the
+    ``DEFAULT_NUM_HASHES`` MinHash positions to agree before a candidate's
+    exact intersection runs — see :func:`_verified` for the estimator
+    argument, cost, and the measured recall trade.
 
     With H=16, b=4 (r=4 rows/band): P(candidate) = 1-(1-J⁴)⁴ — ≈0.99 at
     J=0.9, ≈0.43 at J=0.6 — so near-exact recall for true near-dups and
     sharp suppression of the background. Verified output is always a
-    SUBSET of jaccard_pairs(threshold); candidate recall is the only
+    SUBSET of jaccard_pairs(MINHASH_THRESHOLD); candidate recall is the only
     approximation.
 
     Duplicate-proof: docs with identical canonical shingle sets collapse
@@ -827,20 +788,13 @@ def minhash_lsh_pairs(
     ``release_builder_caches`` for the cache lifetime. In a
     persistent 100 TB deployment the index is written ONCE bucketed by
     band key (sinks.write_bucketed) and never recomputed per run."""
-    grouped = _shingle_groups(df, "doc_id", "text", DEFAULT_SHINGLE_K)
-    sig = _rep_signatures(grouped, DEFAULT_NUM_HASHES)
-    pairs = _rep_minhash_pairs(
-        sig, threshold, DEFAULT_NUM_HASHES, DEFAULT_BANDS, sig_agree
-    )
+    grouped = _shingle_groups(df)
+    pairs = _rep_minhash_pairs(_rep_signatures(grouped), sig_agree)
     members = grouped.select("__rid", F.col("id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "jaccard", ("doc_a", "doc_b"))
 
 
-def minhash_dup_groups(
-    df: DataFrame,
-    threshold: float = 0.6,
-    sig_agree: int = 0,
-) -> DataFrame:
+def minhash_dup_groups(df: DataFrame, sig_agree: int = 0) -> DataFrame:
     """Near-dup GROUP membership — the production dedup surface
     (VERDICT r7 #1): (doc_id, group_id) for every doc in a near-dup
     cluster, group_id = the minimum doc id reachable through the
@@ -853,17 +807,12 @@ def minhash_dup_groups(
     Jaccard 1.0). Equals the transitive closure of
     :func:`minhash_lsh_pairs` exactly — the oracle replays that with a
     recursive CTE."""
-    grouped = _shingle_groups(df, "doc_id", "text", DEFAULT_SHINGLE_K)
-    sig = _rep_signatures(grouped, DEFAULT_NUM_HASHES)
-    pairs = _rep_minhash_pairs(
-        sig, threshold, DEFAULT_NUM_HASHES, DEFAULT_BANDS, sig_agree
-    )
+    grouped = _shingle_groups(df)
+    pairs = _rep_minhash_pairs(_rep_signatures(grouped), sig_agree)
     members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
-    # an identical-set group's Jaccard 1.0 clears any real threshold ≤ 1.0;
+    # an identical-set group's Jaccard 1.0 clears the threshold;
     # duplicated input ids collapse to one membership row
-    return _rep_group_membership(
-        pairs, members, "doc_id", threshold <= 1.0, 20
-    ).distinct()
+    return _rep_group_membership(pairs, members, "doc_id").distinct()
 
 
 def dedup_against_index(
@@ -953,18 +902,13 @@ def ngram_contamination(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     )
 
 
-def token_window_hashes(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-) -> DataFrame:
-    """Every ``window``-token sliding window of every doc as
-    ``(id, pos, wh)`` — the hash stream that exact-substring dedup (Lee
+def token_window_hashes(df: DataFrame) -> DataFrame:
+    """Every ``SPAN_WINDOW``-token sliding window of every doc's ``text``
+    as ``(id, pos, wh)`` — the hash stream that exact-substring dedup (Lee
     et al. 2022, "Deduplicating Training Data Makes Language Models
     Better") detects duplicated spans in. Linear in total tokens: one
     in-row transform builds the window texts, one explode emits them;
-    docs shorter than ``window`` emit nothing. The fingerprint is the
+    docs shorter than the window emit nothing. The fingerprint is the
     FULL 128-bit md5 (not the 60-bit prefix the candidate-generation
     hashes use): window equality here directly deletes text, so it gets
     the same exactness standard as ``exact_dedup``'s fingerprint — at
@@ -985,27 +929,21 @@ def token_window_hashes(
     # tokens replays the old size(toks) >= window guard (pinned in
     # tests/test_text_analysis.py).
     hashes = F.transform(
-        word_ngram_strings(normalize_text(F.col(text_col)), window), F.md5
+        word_ngram_strings(normalize_text(F.col("text")), SPAN_WINDOW), F.md5
     )
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(hashes).alias("pos", "wh"),
     )
 
 
-def duplicate_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def duplicate_spans(df: DataFrame) -> DataFrame:
     """Maximal duplicated token spans per doc — the exact-substring dedup
-    core: any ``window``-token run that appears ≥ ``min_count`` times in
+    core: any ``SPAN_WINDOW``-token run that appears at least twice in
     the corpus (across docs OR repeated within one) marks its positions
     duplicated; overlapping/adjacent marked windows merge into maximal
     spans via gaps-and-islands. Returns
-    ``(id, span_start, span_end, span_tokens)`` with half-open token
+    ``(doc_id, span_start, span_end, span_tokens)`` with half-open token
     intervals.
 
     Plan shape (all linear, no pairwise anything): window hashes →
@@ -1017,18 +955,16 @@ def duplicate_spans(
     nothing."""
     from pyspark.sql import Window
 
-    wins = token_window_hashes(
-        ensure_min_partitions(df), id_col=id_col, text_col=text_col, window=window
-    )
+    wins = token_window_hashes(ensure_min_partitions(df))
     dup_hashes = (
         wins.groupBy("wh")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") >= min_count)
+        .where(F.col("n") >= 2)
         .select("wh")
     )
     marked = wins.join(dup_hashes, "wh", "left_semi")
     w = Window.partitionBy("id").orderBy("pos")
-    prev_max_end = F.max(F.col("pos") + window).over(
+    prev_max_end = F.max(F.col("pos") + SPAN_WINDOW).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     islands = marked.select(
@@ -1046,10 +982,10 @@ def duplicate_spans(
         islands.groupBy("id", "island")
         .agg(
             F.min("pos").cast("bigint").alias("span_start"),
-            (F.max("pos") + window).cast("bigint").alias("span_end"),
+            (F.max("pos") + SPAN_WINDOW).cast("bigint").alias("span_end"),
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_tokens"),
@@ -1057,11 +993,7 @@ def duplicate_spans(
     )
 
 
-def strip_duplicate_spans(
-    df: DataFrame,
-    window: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def strip_duplicate_spans(df: DataFrame) -> DataFrame:
     """Rebuild each doc with its duplicated spans removed (the actual
     dedup step of exact-substring dedup): tokens covered by a
     ``duplicate_spans`` interval are dropped, the remainder re-joins in
@@ -1076,9 +1008,9 @@ def strip_duplicate_spans(
     then one per-doc ordered re-aggregation."""
     from ehr_data_pipeline_spark.operators.text_analysis import whitespace_tokens
 
-    spans = duplicate_spans(
-        df, id_col="doc_id", text_col="text", window=window, min_count=min_count
-    ).select(F.col("doc_id").alias("id"), "span_start", "span_end")
+    spans = duplicate_spans(df).select(
+        F.col("doc_id").alias("id"), "span_start", "span_end"
+    )
     toks = (
         ensure_min_partitions(df)
         .select(
@@ -1292,11 +1224,7 @@ def _expand_rep_pairs(
 
 
 def _rep_group_membership(
-    pairs: DataFrame,
-    members: DataFrame,
-    id_col: str,
-    self_ok: bool,
-    max_iter: int,
+    pairs: DataFrame, members: DataFrame, id_col: str
 ) -> DataFrame:
     """(``id_col``, group_id) near-dup GROUP membership from verified REP
     pairs — the shared tail of the MinHash, SimHash and embedding-LSH
@@ -1307,13 +1235,10 @@ def _rep_group_membership(
     (:func:`near_dup_components`, run over the distinct-payload rep graph
     only: a group of k identical payloads is ONE node); members inherit
     their rep's component through one id-equi join. A group of ≥ 2 with
-    no external neighbor is its own cluster when ``self_ok`` — the
-    payload's measure against itself clears the threshold. Docs in no
-    cluster get no row."""
-    comp = near_dup_components(
-        pairs.where(F.col("doc_a") != F.col("doc_b")), "doc_a", "doc_b",
-        max_iter=max_iter,
-    )
+    no external neighbor is its own cluster — the payload's measure
+    against itself (Jaccard 1.0, Hamming 0, cosine 1.0) clears every
+    family's threshold. Docs in no cluster get no row."""
+    comp = near_dup_components(pairs.where(F.col("doc_a") != F.col("doc_b")))
     return (
         members.join(
             comp.select(F.col("id").alias("__rid"), "component"),
@@ -1323,7 +1248,7 @@ def _rep_group_membership(
         .select(
             F.col("__m").alias(id_col),
             F.when(F.col("component").isNotNull(), F.col("component"))
-            .when((F.col("__n") >= 2) & F.lit(self_ok), F.col("__rid"))
+            .when(F.col("__n") >= 2, F.col("__rid"))
             .alias("group_id"),
         )
         .where(F.col("group_id").isNotNull())
@@ -1423,9 +1348,7 @@ def simhash_sketches(
     ).drop("__dup")
 
 
-def _simhash_groups(
-    df: DataFrame, id_col: str, text_col: str, total_bits: int
-) -> DataFrame:
+def _simhash_groups(df: DataFrame, id_col: str) -> DataFrame:
     """Identical-sketch groups — the distinct-first work-avoidance core
     of the SimHash surfaces (the sketch twin of :func:`_shingle_groups`):
     one (id, __sim, __rid, __n) row per doc, where __rid is the minimum
@@ -1440,7 +1363,7 @@ def _simhash_groups(
     measured shuf ×99.2 at input ×10 on the identical-copy replica,
     SCALE_RATIOS.md r8). The groups are persisted (3 consumers);
     lifetime per ``release_builder_caches``."""
-    rows = simhash_sketches(df, id_col, text_col, total_bits)
+    rows = simhash_sketches(df, id_col, "text", SIMHASH_BITS)
     gw = Window.partitionBy("__sim")
     grouped = rows.select(
         "id",
@@ -1452,12 +1375,7 @@ def _simhash_groups(
     return _persist_tracked(grouped)
 
 
-def _rep_simhash_pairs(
-    grouped: DataFrame,
-    max_distance: int,
-    n_bands: int,
-    total_bits: int,
-) -> DataFrame:
+def _rep_simhash_pairs(grouped: DataFrame, n_bands: int) -> DataFrame:
     """(doc_a, doc_b, hamming) verified near-dup pairs over the DISTINCT
     sketches only: band-bucket candidate join + exact Hamming
     verification on group representatives, plus one SELF row per group of
@@ -1471,7 +1389,7 @@ def _rep_simhash_pairs(
         "id",
         "__sim",
         F.posexplode(
-            F.array(*simhash_bands(F.col("__sim"), n_bands, total_bits))
+            F.array(*simhash_bands(F.col("__sim"), n_bands, SIMHASH_BITS))
         ).alias("band_idx", "band_val"),
     )
     a = e.select(
@@ -1497,7 +1415,7 @@ def _rep_simhash_pairs(
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
             & (F.col("doc_a") < F.col("doc_b"))
-            & (hamming64(F.col("__sa"), F.col("__sb")) <= max_distance),
+            & (hamming64(F.col("__sa"), F.col("__sb")) <= SIMHASH_MAX_DISTANCE),
         )
         .select(
             "doc_a",
@@ -1514,24 +1432,19 @@ def _rep_simhash_pairs(
             F.col("id").alias("doc_b"),
             hamming64(F.col("__sim"), F.col("__sim")).cast("bigint").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_distance)
+        .filter(F.col("hamming") <= SIMHASH_MAX_DISTANCE)
     )
     return cross.unionByName(selfp)
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    max_distance: int = 3,
-    n_bands: int = DEFAULT_BANDS,
-    total_bits: int = 60,
-) -> DataFrame:
+def simhash_near_dup_pairs(df: DataFrame, n_bands: int = DEFAULT_BANDS) -> DataFrame:
     """SimHash near-dup pairs via band-bucket join — the sketch-based
     scale path for Hamming-distance dedup. Each doc's sketch splits into
     ``n_bands`` chunk keys; candidate pairs are docs sharing ANY chunk
     (shuffle on (band_idx, band_value) only — never all-pairs), then the
-    exact Hamming distance filters candidates to ``<= max_distance``.
+    exact Hamming distance filters candidates to ``<= SIMHASH_MAX_DISTANCE``.
 
-    EXACT, not approximate, when ``max_distance < n_bands``: a pair with
+    EXACT, not approximate, when ``SIMHASH_MAX_DISTANCE < n_bands``: a pair with
     at most n_bands−1 differing bits must leave one band untouched
     (pigeonhole), so it is guaranteed to share a bucket — recall 1.0 and
     precision 1.0 (verification filter). That makes the default
@@ -1550,18 +1463,13 @@ def simhash_near_dup_pairs(
     family member at 100 TB; hot buckets (common band values from
     boilerplate) are the skew risk, handled by AQE skew-join same as the
     MinHash bands."""
-    grouped = _simhash_groups(df, "doc_id", "text", total_bits)
-    pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
+    grouped = _simhash_groups(df, "doc_id")
+    pairs = _rep_simhash_pairs(grouped, n_bands)
     members = grouped.select("__rid", F.col("id").alias("__m"))
     return _expand_rep_pairs(pairs, members, "hamming", ("doc_a", "doc_b"))
 
 
-def simhash_dup_groups(
-    df: DataFrame,
-    max_distance: int = 3,
-    n_bands: int = DEFAULT_BANDS,
-    total_bits: int = 60,
-) -> DataFrame:
+def simhash_dup_groups(df: DataFrame, n_bands: int = DEFAULT_BANDS) -> DataFrame:
     """SimHash near-dup GROUP membership — the linear-output production
     surface completing the group-twin triple (MinHash →
     :func:`minhash_dup_groups`, embeddings →
@@ -1573,11 +1481,9 @@ def simhash_dup_groups(
     with no external neighbor is its own cluster (mutual distance 0).
     Equals the transitive closure of :func:`simhash_near_dup_pairs`
     exactly — the oracle replays that equivalence with a recursive CTE."""
-    grouped = _simhash_groups(df, "doc_id", "text", total_bits)
-    pairs = _rep_simhash_pairs(grouped, max_distance, n_bands, total_bits)
+    grouped = _simhash_groups(df, "doc_id")
+    pairs = _rep_simhash_pairs(grouped, n_bands)
     members = grouped.select(F.col("id").alias("__m"), "__rid", "__n")
-    # an identical-sketch group's distance 0 clears any real
-    # max_distance ≥ 0; duplicated input ids collapse to one membership row
-    return _rep_group_membership(
-        pairs, members, "doc_id", max_distance >= 0, 20
-    ).distinct()
+    # an identical-sketch group's distance 0 clears the radius;
+    # duplicated input ids collapse to one membership row
+    return _rep_group_membership(pairs, members, "doc_id").distinct()

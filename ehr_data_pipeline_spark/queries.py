@@ -39,7 +39,7 @@ from ehr_data_pipeline_spark.tables import load_table
 # DuckDB twin of the valid_measurement guard (functions/measurement.py),
 # spliced into every events-family oracle that reads `value` — the oracle
 # half of the engine-wide measurement contract.
-_FIN = measurement_sql("value")
+_FIN = measurement_sql()
 
 # DuckDB twins of text_analysis.normalize_text and whitespace_tokens
 # (lower, collapse whitespace, trim, split on single space) and of the
@@ -60,14 +60,14 @@ def _q_log2_sql(x: str) -> str:
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None => non-SQL-expressible, rows-only check
+    oracle: str  # DuckDB SQL twin the query's rows are hash-checked against
     bench: bool = False  # part of the bench.py headline set
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, bench: bool = False):
+def register(name: str, oracle: str, bench: bool = False):
     def deco(fn):
         REGISTRY[name] = QuerySpec(name, fn, oracle, bench)
         return fn
@@ -1487,7 +1487,7 @@ def doc_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ehr_data_pipeline_spark.operators.text_analysis import top_ngrams
 
     d = _t(spark, sf_dir, "documents")
-    return top_ngrams(d, "text", n=2, k=20)
+    return top_ngrams(d, k=20)
 
 
 # ---------------------------------------------------------------------------
@@ -1669,8 +1669,7 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ehr_data_pipeline_spark.operators.text_dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.6,
-        sig_agree=_MINHASH_SIG_AGREE,
+        _t(spark, sf_dir, "documents"), sig_agree=_MINHASH_SIG_AGREE
     )
 
 
@@ -1700,8 +1699,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pairs = minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.6,
-        sig_agree=_MINHASH_SIG_AGREE,
+        _t(spark, sf_dir, "documents"), sig_agree=_MINHASH_SIG_AGREE
     )
     comp = near_dup_components(pairs)
     return comp.groupBy("component").agg(
@@ -1731,8 +1729,7 @@ def doc_minhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ehr_data_pipeline_spark.operators.text_dedup import minhash_dup_groups
 
     return minhash_dup_groups(
-        _t(spark, sf_dir, "documents"), threshold=0.6,
-        sig_agree=_MINHASH_SIG_AGREE,
+        _t(spark, sf_dir, "documents"), sig_agree=_MINHASH_SIG_AGREE
     )
 
 
@@ -1808,9 +1805,7 @@ def doc_simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verification formulation (fine at sf0.01's corpus size)."""
     from ehr_data_pipeline_spark.operators.text_dedup import simhash_near_dup_pairs
 
-    return simhash_near_dup_pairs(
-        _t(spark, sf_dir, "documents"), max_distance=3, n_bands=4, total_bits=60
-    )
+    return simhash_near_dup_pairs(_t(spark, sf_dir, "documents"), n_bands=4)
 
 
 @register(
@@ -1842,9 +1837,7 @@ def doc_simhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash-checks pairs AND closure end-to-end."""
     from ehr_data_pipeline_spark.operators.text_dedup import simhash_dup_groups
 
-    return simhash_dup_groups(
-        _t(spark, sf_dir, "documents"), max_distance=3, n_bands=4, total_bits=60
-    )
+    return simhash_dup_groups(_t(spark, sf_dir, "documents"), n_bands=4)
 
 
 @register(
@@ -1896,8 +1889,7 @@ def doc_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ehr_data_pipeline_spark.operators.text_analysis import winnow_pairs
 
     d = _t(spark, sf_dir, "documents")
-    return winnow_pairs(d, "doc_id", "text", k=8, w=4, min_shared=5, max_df=10,
-                        input_partitions=32)
+    return winnow_pairs(d, min_shared=5, input_partitions=32)
 
 
 _QUALITY_SQL = """
@@ -1967,9 +1959,9 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ehr_data_pipeline_spark.operators.text_dedup import curate_corpus_funnel
 
     d = _t(spark, sf_dir, "documents")
-    return curate_corpus_funnel(
-        d, min_quality=0.5, jaccard_threshold=0.8
-    ).withColumn("n_docs", F.col("n_docs").cast("bigint"))
+    return curate_corpus_funnel(d).withColumn(
+        "n_docs", F.col("n_docs").cast("bigint")
+    )
 
 
 @register(
@@ -3252,8 +3244,7 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id IS NOT NULL mirrors the family-wide oracle guard CTE — an
     # embeddings row is addressable by id (embeddings contract)
     emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id").isNotNull())
-    return label_centroids(emb, label_col="label", vec_col="embedding",
-                           dim=_CENTROID_COLS_SPARK)
+    return label_centroids(emb, dim=_CENTROID_COLS_SPARK)
 
 
 @register(
@@ -3284,10 +3275,10 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ehr_data_pipeline_spark.operators.similarity import gram_matrix
 
     emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id").isNotNull())
-    return gram_matrix(emb, vec_col="embedding", dim=64)
+    return gram_matrix(emb, dim=64)
 
 
-def _lsh_bucket_sql(table: int, n_planes: int, vec: str = "embedding") -> str:
+def _lsh_bucket_sql(table: int, n_planes: int) -> str:
     """DuckDB twin of one table's key in ``similarity._all_table_buckets``:
     the hyperplanes are md5-seeded Gaussians (``similarity._hyperplane``),
     so the oracle embeds the SAME plane values as SQL literals and replays
@@ -3302,7 +3293,7 @@ def _lsh_bucket_sql(table: int, n_planes: int, vec: str = "embedding") -> str:
         plane = "[" + ",".join(repr(x) for x in _hyperplane(table, p, 64)) + "]"
         proj = (
             f"list_sum(list_transform(range(1, 65), i -> "
-            f"CAST({vec}[i] AS DOUBLE) * ({plane})[i]))"
+            f"CAST(embedding[i] AS DOUBLE) * ({plane})[i]))"
         )
         bits.append(f"(CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END)")
     return "(" + " || ".join(bits) + ")"
@@ -3492,7 +3483,7 @@ def emb_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = train_ivf_centroids(hist, n_list=8, n_iters=0, dim=64)
     index = build_ivf_index(hist, cents, dim=64)
     qs = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 10))
-    return ivf_knn_against_index(qs, index, cents, k=3, n_probe=4, dim=64)
+    return ivf_knn_against_index(qs, index, cents, n_probe=4, dim=64)
 
 
 @register(
@@ -3529,7 +3520,7 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id; state per 100 TB stream partition is O(open sessions)."""
     from ehr_data_pipeline_spark.streaming import sessionize
 
-    return sessionize(_t(spark, sf_dir, "events"), gap="30 minutes", watermark=None)
+    return sessionize(_t(spark, sf_dir, "events"), watermark=None)
 
 
 # Fixed id slice for the registered exact cosine near-dup query — covers
@@ -3702,10 +3693,7 @@ def emb_lsh_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the iterative algorithm is hash-checked end-to-end."""
     from ehr_data_pipeline_spark.operators.similarity import lsh_near_dup_groups
 
-    return lsh_near_dup_groups(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4, dim=64, n_planes=4,
-        n_tables=8,
-    )
+    return lsh_near_dup_groups(_t(spark, sf_dir, "embeddings"), dim=64)
 
 
 # SemDeDup's seeded quantizer: auto-sized k (distinct vectors / 64,
@@ -3780,7 +3768,7 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return semantic_dedup(
         _t(spark, sf_dir, "embeddings"), n_clusters=None,
-        target_cluster_size=64, threshold=0.4, n_iters=0, dim=64,
+        target_cluster_size=64, threshold=0.4, dim=64,
     )
 
 
@@ -3842,7 +3830,7 @@ def emb_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     k = auto_n_clusters(n_reps, target_cluster_size=64)
     cents = train_ivf_centroids(emb, n_list=k, n_iters=0, dim=64)
     fresh, _new_entries = semantic_dedup_against_index(
-        batch, history, cents, threshold=0.4, dim=64
+        batch, history, cents, dim=64
     )
     return fresh.select("vec_id")
 
@@ -4392,7 +4380,7 @@ def events_user_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts)."""
     from ehr_data_pipeline_spark.operators.skew import skewed_key_stats
 
-    return skewed_key_stats(_t(spark, sf_dir, "events"), ["user_id"], top_k=10)
+    return skewed_key_stats(_t(spark, sf_dir, "events"), ["user_id"])
 
 
 @register(
@@ -4624,9 +4612,7 @@ def media_audio_segment_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_assets,
     )
 
-    segs = segment_audio(
-        synthesize_assets(_t(spark, sf_dir, "documents")), segment_ms=1000
-    )
+    segs = segment_audio(synthesize_assets(_t(spark, sf_dir, "documents")))
     return segs.select(
         "asset_id",
         F.col("segment_idx").cast("int").alias("segment_idx"),
@@ -4659,16 +4645,13 @@ def media_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame payload; this query emits (asset, frame_idx, dims, payload
     md5), so the fan-out arithmetic and per-frame payload derivation —
     the Spark-side plumbing the fake codec sits behind — have a full SQL
-    twin. The decode itself stays in the rows-only
-    ``media_image_features`` (numpy is not SQL-expressible)."""
+    twin. The decode itself is checked by ``media_image_features``."""
     from ehr_data_pipeline_spark.operators.multimodal import (
         sample_frames,
         synthesize_assets,
     )
 
-    frames = sample_frames(
-        synthesize_assets(_t(spark, sf_dir, "documents")), every_n=2
-    )
+    frames = sample_frames(synthesize_assets(_t(spark, sf_dir, "documents")))
     return frames.select(
         "asset_id",
         F.col("frame_idx").cast("int").alias("frame_idx"),
@@ -5439,9 +5422,7 @@ def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the shape survives a 100× corpus unchanged."""
     from ehr_data_pipeline_spark.operators.text_dedup import duplicate_spans
 
-    return duplicate_spans(
-        _t(spark, sf_dir, "documents"), window=8, min_count=2
-    )
+    return duplicate_spans(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -5483,9 +5464,7 @@ def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary tokens — hash-checks without bloating the result set."""
     from ehr_data_pipeline_spark.operators.text_dedup import strip_duplicate_spans
 
-    out = strip_duplicate_spans(
-        _t(spark, sf_dir, "documents"), window=8, min_count=2
-    )
+    out = strip_duplicate_spans(_t(spark, sf_dir, "documents"))
     return out.select(
         "doc_id",
         F.md5(F.col("dedup_text")).alias("dedup_fp"),
@@ -5855,9 +5834,7 @@ def _bpe_trainer_oracle(n_rounds: int, base_sql: str = _BPE_BASE_SQL) -> str:
     return base_sql + rounds + selects
 
 
-def _bpe_trained_counts_oracle(
-    n_rounds: int = 3, base_sql: str = _BPE_BASE_SQL
-) -> str:
+def _bpe_trained_counts_oracle(base_sql: str = _BPE_BASE_SQL) -> str:
     """Per-document token counts under the table the 3-round trainer
     learns: the SAME chained round CTEs (the state carries doc_id +
     word id, so the per-round merge-apply IS the per-document one),
@@ -5867,13 +5844,13 @@ def _bpe_trained_counts_oracle(
     early-stopped shorter merge tuple. ``base_sql`` selects the round-0
     state (ASCII word default, or _BPE_BYTE_BASE_SQL for the byte-level
     pretokenizer) — every round CTE is shared."""
-    rounds = "".join(_bpe_round_sql(i) for i in range(1, n_rounds + 1))
-    return base_sql + rounds + f"""
+    rounds = "".join(_bpe_round_sql(i) for i in range(1, 4))
+    return base_sql + rounds + """
     SELECT d.doc_id, CAST(coalesce(t.n, 0) AS BIGINT) AS n_tokens
     FROM documents d LEFT JOIN (
       SELECT doc_id,
              CAST(sum(len(string_split(syms, chr(31)))) AS BIGINT) AS n
-      FROM s{n_rounds} GROUP BY doc_id) t ON t.doc_id = d.doc_id
+      FROM s3 GROUP BY doc_id) t ON t.doc_id = d.doc_id
     """
 
 
@@ -5970,11 +5947,7 @@ def _bpe_batched_round_sql(i: int, batch_size: int, window: int) -> str:
     )"""
 
 
-def _bpe_batched_trainer_oracle(
-    n_rounds: int,
-    batch_size: int,
-    base_sql: str = _BPE_BASE_SQL,
-) -> str:
+def _bpe_batched_trainer_oracle(n_rounds: int, batch_size: int) -> str:
     rounds = "".join(
         _bpe_batched_round_sql(i, batch_size, 8 * batch_size)
         for i in range(1, n_rounds + 1)
@@ -5987,12 +5960,12 @@ def _bpe_batched_trainer_oracle(
     FROM sel{i}"""
         for i in range(1, n_rounds + 1)
     )
-    return base_sql + rounds + selects
+    return _BPE_BASE_SQL + rounds + selects
 
 
 @register(
     "doc_bpe_trained_token_counts",
-    oracle=_bpe_trained_counts_oracle(3),
+    oracle=_bpe_trained_counts_oracle(),
 )
 def doc_bpe_trained_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY side of distributed BPE training
@@ -6074,7 +6047,7 @@ def doc_bpe_byte_trainer_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_bpe_byte_trained_token_counts",
-    oracle=_bpe_trained_counts_oracle(3, base_sql=_BPE_BYTE_BASE_SQL),
+    oracle=_bpe_trained_counts_oracle(_BPE_BYTE_BASE_SQL),
 )
 def doc_bpe_byte_trained_token_counts(
     spark: SparkSession, sf_dir: str
@@ -6731,7 +6704,7 @@ def user_event_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "events")
     return scd2_compress(
-        e, keys=["user_id"], attrs=["event_type"], ts_col="ts", tiebreak="event_id"
+        e, keys=["user_id"], attrs=["event_type"], tiebreak="event_id"
     )
 
 
@@ -6755,9 +6728,7 @@ def user_event_type_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "events")
-    args = dict(
-        keys=["user_id"], attrs=["event_type"], ts_col="ts", tiebreak="event_id"
-    )
+    args = dict(keys=["user_id"], attrs=["event_type"], tiebreak="event_id")
     b1 = e.filter(F.col("ts") < "2024-01-16")
     b2 = e.filter(F.col("ts") >= "2024-01-16")
     return scd2_apply_batch(scd2_compress(b1, **args), b2, **args)
@@ -7394,7 +7365,7 @@ def _guard_embeddings_oracle(sql: str) -> str:
     cte = (
         "embeddings AS (SELECT * FROM main.embeddings"
         " WHERE vec_id IS NOT NULL AND "
-        + vector_sql("embedding", 64) + ")"
+        + vector_sql() + ")"
     )
     s = sql.lstrip()
     # RECURSIVE must immediately follow WITH, so splice the guard CTE
@@ -7419,8 +7390,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracles() -> dict[str, str]:
-    return {name: spec.oracle for name, spec in REGISTRY.items()
-            if spec.oracle is not None}
+    return {name: spec.oracle for name, spec in REGISTRY.items()}
 
 
 def bench_queries() -> dict[str, QuerySpec]:

@@ -268,14 +268,13 @@ def compact_parquet(
     spark,
     in_path: str,
     out_path: str,
-    target_file_mb: int = 256,
     sort_within_by: tuple[str, ...] | list[str] = (),
 ) -> int:
     """Small-file compaction — the maintenance job every long-running
     ingest needs: streaming/micro-batch sinks and fine-grained partitions
     accumulate files far below the efficient scan size, and at 100 TB the
     driver-side file listing + per-file open overhead dominates reads.
-    Rewrites the dataset into ceil(bytes / target) files; with
+    Rewrites the dataset into ceil(bytes / 256 MB) files; with
     ``sort_within_by``, rows are clustered inside each file so parquet
     row-group min/max stats prune reads on those columns (poor-man's
     Z-order for one sort dimension). Writes to ``out_path`` (never
@@ -287,7 +286,7 @@ def compact_parquet(
     jpath = spark._jvm.org.apache.hadoop.fs.Path(in_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     total_bytes = fs.getContentSummary(jpath).getLength()
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
+    n_files = max(1, math.ceil(total_bytes / (256 * 1024 * 1024)))
     if sort_within_by:
         df = df.repartition(n_files).sortWithinPartitions(*sort_within_by)
     else:

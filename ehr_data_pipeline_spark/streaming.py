@@ -105,18 +105,14 @@ def hourly_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFr
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = "2 hours",
-) -> DataFrame:
+def sessionize(events: DataFrame, watermark: str | None = "2 hours") -> DataFrame:
     """Gap-based per-user sessionization — the canonical custom stateful
     streaming operator, expressed with the BUILT-IN ``session_window``
     (merging-window state in the JVM state store; no Python in the loop —
     ``applyInPandasWithState`` stays reserved for semantics built-ins
     can't express). A session groups a user's events while consecutive
-    gaps are <= ``gap`` — the boundary is INCLUSIVE (session windows
-    [t, t+gap] merge on touch), so an event exactly ``gap`` after its
+    gaps are <= 30 minutes — the boundary is INCLUSIVE (session windows
+    [t, t+gap] merge on touch), so an event exactly 30 minutes after its
     predecessor still extends the session; only a strictly larger gap
     starts a new one. Pinned cross-engine by the exact-gap pair in
     tests/test_edge_corpus.py.
@@ -134,7 +130,7 @@ def sessionize(
     if watermark is not None:
         events = events.withWatermark("ts", watermark)
     return (
-        events.groupBy(F.session_window("ts", gap), F.col("user_id"))
+        events.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
         .agg(
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
@@ -184,10 +180,9 @@ def interval_join_stream(
     on: str | list[str],
     left_time: str,
     right_time: str,
-    lookback: str = "10 minutes",
 ) -> DataFrame:
     """Stream-stream equi-key INTERVAL join: each left event pairs with
-    the same key's right events in ``[left_time - lookback, left_time]``
+    the same key's right events in ``[left_time - 10 minutes, left_time]``
     — the streaming twin of ``operators.temporal.range_join`` (batch
     output is the correctness oracle, asserted in tests).
 
@@ -195,7 +190,7 @@ def interval_join_stream(
     of metadata to bound state: the watermarks tell the store how late
     either side can still arrive, and the time-range predicate tells it
     how long a buffered row can still find partners — together each side
-    buffers only 2 hours + ``lookback`` of history, so state is
+    buffers only 2 hours + 10 minutes of history, so state is
     O(arrival rate × horizon), not O(stream length). Without the range
     condition Spark rejects/unbounded-buffers a stream-stream join.
     ``right_time`` must differ from ``left_time`` in name (the range
@@ -211,7 +206,7 @@ def interval_join_stream(
         cond = eq if cond is None else cond & eq
     cond = (
         cond
-        & (F.col(right_time) >= F.col(left_time) - F.expr(f"INTERVAL {lookback}"))
+        & (F.col(right_time) >= F.col(left_time) - F.expr("INTERVAL 10 minutes"))
         & (F.col(right_time) <= F.col(left_time))
     )
     joined = lw.join(rw, cond, "inner")
@@ -224,14 +219,18 @@ EWMA_OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, ewma double, last_event_us bigint"
 )
 EWMA_STATE_SCHEMA = "n bigint, ewma double, last_event_us bigint"
+EWMA_ALPHA = 0.3
 
 
-def _ewma_fold(values, n: int, ewma: float | None, alpha: float):
+def _ewma_fold(values, n: int, ewma: float | None):
     """Order-dependent EWMA fold shared by the streaming state update and
     the batch twin — one code path, so stream == batch exactly (same IEEE
     ops in the same order)."""
     for v in values:
-        ewma = float(v) if ewma is None else alpha * float(v) + (1.0 - alpha) * ewma
+        ewma = (
+            float(v) if ewma is None
+            else EWMA_ALPHA * float(v) + (1.0 - EWMA_ALPHA) * ewma
+        )
         n += 1
     return n, ewma
 
@@ -260,7 +259,7 @@ def user_value_ewma_stream(events: DataFrame) -> DataFrame:
         n, ewma, last_us = state.get if state.exists else (0, None, None)
         batch = pd.concat(list(pdfs)).sort_values("ts")
         if len(batch):
-            n, ewma = _ewma_fold(batch["value"].to_list(), n, ewma, 0.3)
+            n, ewma = _ewma_fold(batch["value"].to_list(), n, ewma)
             last_us = int(batch["ts"].astype("int64").max()) // 1000
         state.update((n, ewma, last_us))
         yield pd.DataFrame(
@@ -286,7 +285,7 @@ def user_value_ewma_batch(events: DataFrame) -> DataFrame:
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts")
-        n, ewma = _ewma_fold(pdf["value"].to_list(), 0, None, 0.3)
+        n, ewma = _ewma_fold(pdf["value"].to_list(), 0, None)
         return pd.DataFrame(
             [{
                 "user_id": pdf["user_id"].iloc[0],
@@ -403,10 +402,8 @@ def scd2_dimension_sink(
 
     return incremental_epoch_sink(
         dim_path,
-        init_fn=lambda b: scd2_compress(b, keys, attrs, "ts", tiebreak),
-        merge_fn=lambda state, b: scd2_apply_batch(
-            state, b, keys, attrs, "ts", tiebreak
-        ),
+        init_fn=lambda b: scd2_compress(b, keys, attrs, tiebreak),
+        merge_fn=lambda state, b: scd2_apply_batch(state, b, keys, attrs, tiebreak),
     )
 
 
@@ -519,7 +516,7 @@ def rollup_maintenance_sink(rollup_path: str):
     )
 
     def roll(df: DataFrame) -> DataFrame:
-        return time_rollup(df, "hour", ("event_type",), "ts", "value")
+        return time_rollup(df)
 
     return incremental_epoch_sink(
         rollup_path,
@@ -651,19 +648,11 @@ def near_dedup_maintenance_sink(
     first, same policy). Every batch entry first RESUMES any pending
     compaction (auto or manual) so a crash mid-compaction can never
     leave a replayed batch reading a torn merged epoch (ADVICE r10)."""
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        DEFAULT_BANDS,
-        DEFAULT_NUM_HASHES,
-        DEFAULT_SHINGLE_K,
-        release_builder_caches,
-    )
+    from ehr_data_pipeline_spark.operators.text_dedup import release_builder_caches
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         try:
-            _near_dedup_epoch(
-                batch_df, batch_id, index_path, fresh_path, "doc_id", "text",
-                0.6, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES, DEFAULT_BANDS,
-            )
+            _near_dedup_epoch(batch_df, batch_id, index_path, fresh_path)
             _auto_compact(batch_df.sparkSession, index_path, auto_compact_every)
         finally:
             release_builder_caches()
@@ -672,16 +661,7 @@ def near_dedup_maintenance_sink(
 
 
 def _near_dedup_epoch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    fresh_path: str,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    k: int,
-    num_hashes: int,
-    bands: int,
+    batch_df: DataFrame, batch_id: int, index_path: str, fresh_path: str
 ) -> None:
     """One microbatch of continuous MinHash near-dedup, shared by the
     near-dedup and curation sinks: read the index epochs below
@@ -691,16 +671,15 @@ def _near_dedup_epoch(
     before either write, so a replayed batch recomputes from the same
     predecessors.
 
-    The delta is rebuilt from the LANDED fresh parquet, and the
-    operator's new-entries frame is discarded (ADVICE r11, low): that
-    frame shares the band-join lineage with ``fresh``, while the rebuild
-    is content-identical because (sh, sig) are pure functions of the
-    text under the same (k, num_hashes). Profiled at sf0.1 (NOTES_r12),
-    the two are wall-parity today because the operator persists its
-    band-join intermediates, so the rebuild is chosen for
-    cache-independence: under executor memory pressure those persists
-    evict and a second action would silently re-run the candidate join,
-    while the landed read is deterministic O(batch) I/O."""
+    The delta is rebuilt from the LANDED fresh parquet, and the operator's
+    new-entries frame is discarded (ADVICE r11, low): that frame shares the
+    band-join lineage with ``fresh``, while the rebuild is content-identical
+    because (sh, sig) are pure functions of the text. Profiled at sf0.1
+    (NOTES_r12), the two are wall-parity today because the operator persists
+    its band-join intermediates, so the rebuild is chosen for
+    cache-independence: under executor memory pressure those persists evict
+    and a second action would silently re-run the candidate join, while the
+    landed read is deterministic O(batch) I/O."""
     from ehr_data_pipeline_spark.operators.text_dedup import (
         build_minhash_index,
         near_dedup_against_index,
@@ -709,16 +688,14 @@ def _near_dedup_epoch(
     spark = batch_df.sparkSession
     index = _index_below(
         spark, index_path, batch_id,
-        build_minhash_index(batch_df.limit(0), id_col, text_col, k, num_hashes),
+        build_minhash_index(batch_df.limit(0)),
     )
-    fresh, _ = near_dedup_against_index(
-        batch_df, index, id_col, text_col, threshold, k, num_hashes, bands
-    )
+    fresh, _ = near_dedup_against_index(batch_df, index)
     fresh.write.mode("overwrite").parquet(f"{fresh_path}/epoch={batch_id}")
     landed = spark.read.parquet(f"{fresh_path}/epoch={batch_id}")
-    build_minhash_index(landed, id_col, text_col, k, num_hashes).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/epoch={batch_id}")
+    build_minhash_index(landed).write.mode("overwrite").parquet(
+        f"{index_path}/epoch={batch_id}"
+    )
 
 
 def _resume_pending_compaction(spark: SparkSession, state_path: str) -> int:
@@ -961,11 +938,9 @@ def paragraph_dedup_maintenance_sink(
         spark = batch_df.sparkSession
         index = _index_below(
             spark, index_path, batch_id,
-            build_paragraph_index(batch_df.limit(0), "text", "\n\n"),
+            build_paragraph_index(batch_df.limit(0)),
         )
-        cleaned, _new_entries = paragraph_dedup_against_index(
-            batch_df, index, "text", "doc_id", "\n\n"
-        )
+        cleaned, _new_entries = paragraph_dedup_against_index(batch_df, index)
         cleaned.write.mode("overwrite").parquet(
             f"{clean_path}/epoch={batch_id}"
         )
@@ -982,8 +957,6 @@ def paragraph_dedup_maintenance_sink(
             landed.filter(F.col("n_kept") > 0).select(
                 F.col("clean_text").alias("text")
             ),
-            "text",
-            "\n\n",
         ).write.mode("overwrite").parquet(f"{index_path}/epoch={batch_id}")
         _auto_compact(spark, index_path, auto_compact_every)
 
@@ -1043,49 +1016,38 @@ def curation_maintenance_sink(
         c4_line_filter,
         paragraph_dedup_against_index,
     )
-    from ehr_data_pipeline_spark.operators.text_dedup import (
-        DEFAULT_BANDS,
-        DEFAULT_NUM_HASHES,
-        DEFAULT_SHINGLE_K,
-        release_builder_caches,
-    )
+    from ehr_data_pipeline_spark.operators.text_dedup import release_builder_caches
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # stages 1+2: stateless page cleaning (one narrow pass)
         page = batch_df.select("doc_id", "text")
         if blocklist:
-            page = c4_blocklist_filter(page, blocklist, "text")
-        lined = c4_line_filter(
-            page, "text", "doc_id", 5, 3
-        ).select("doc_id", F.col("clean_text").alias("text"))
+            page = c4_blocklist_filter(page, blocklist)
+        lined = c4_line_filter(page).select(
+            "doc_id", F.col("clean_text").alias("text")
+        )
 
         # stage 3: paragraph dedup against the maintained index
         para_index = _index_below(
             spark, para_index_path, batch_id,
-            build_paragraph_index(lined.limit(0), "text", sep),
+            build_paragraph_index(lined.limit(0), sep),
         )
         # the operator's new-entries frame is deliberately discarded:
         # the index delta is rebuilt below from the persisted survivors
         # (same single-materialization argument as the paragraph sink)
-        para_cleaned, _ = paragraph_dedup_against_index(
-            lined, para_index, "text", "doc_id", sep
-        )
+        para_cleaned, _ = paragraph_dedup_against_index(lined, para_index, sep)
         kept = para_cleaned.filter(F.col("n_kept") > 0).select(
             "doc_id", F.col("clean_text").alias("text")
         )
         kept = kept.persist()  # feeds stage 4 AND the paragraph delta
         try:
             # stage 4: near-dup dedup against the maintained MinHash index
-            _near_dedup_epoch(
-                kept, batch_id, minhash_index_path, clean_path, "doc_id",
-                "text", 0.6, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES,
-                DEFAULT_BANDS,
-            )
+            _near_dedup_epoch(kept, batch_id, minhash_index_path, clean_path)
             # paragraph delta from the persisted stage-3 survivors (the
             # admitted paragraphs ARE their paragraphs — same lossless
             # re-split argument as the paragraph sink)
-            build_paragraph_index(kept, "text", sep).write.mode(
+            build_paragraph_index(kept, sep).write.mode(
                 "overwrite"
             ).parquet(f"{para_index_path}/epoch={batch_id}")
         finally:
@@ -1152,7 +1114,7 @@ def semantic_dedup_maintenance_sink(
         )
         try:
             fresh, new_entries = semantic_dedup_against_index(
-                batch_df, index, centroids, 0.4, "vec_id", "embedding", dim
+                batch_df, index, centroids, dim
             )
             fresh.write.mode("overwrite").parquet(
                 f"{fresh_path}/epoch={batch_id}"
@@ -1172,31 +1134,31 @@ def run_ivf_index_stream(
     centroids: "list[tuple[int, list[float]]]",
     index_path: str,
     checkpoint: str,
-    dim: int = 64,
 ) -> StreamingQuery:
     """Continuous maintenance of the PERSISTED IVF index
     (``similarity.build_ivf_index`` layout) — deliberately the NATIVE
-    Structured Streaming parquet sink rather than a foreachBatch
-    maintainer: cell assignment (``similarity._assign_cells`` — the
-    native argmin against the fixed literal quantizer, or its Arrow twin
-    above the measured crossover) is a narrow map, so it composes with
-    ``readStream`` directly, the file sink's transaction log provides
-    exactly-once for appends, and ``partitionBy("cid")`` lands the hive layout that makes
-    every :func:`~ehr_data_pipeline_spark.operators.similarity.ivf_knn_against_index`
+    Structured Streaming parquet sink rather than a foreachBatch maintainer:
+    cell assignment (``similarity._assign_cells`` — the native argmin
+    against the fixed literal quantizer, or its Arrow twin above the
+    measured crossover) is a narrow map, so it composes with ``readStream``
+    directly, the file sink's transaction log provides exactly-once for
+    appends, and ``partitionBy("cid")`` lands the hive layout that makes
+    every
+    :func:`~ehr_data_pipeline_spark.operators.similarity.ivf_knn_against_index`
     probe join a partition-pruned read. No custom epoch state is needed
     because the index is APPEND-ONLY facts (id, cid, vector) with no
-    cross-batch interaction — the quantizer is trained once and held
-    fixed, the same contract as the semantic-dedup sink. ``dim`` is
-    explicit: inference would require an action, which a streaming plan
-    cannot run. Read the accumulated index back with a plain
-    ``spark.read.parquet(index_path)``."""
+    cross-batch interaction — the quantizer is trained once and held fixed,
+    the same contract as the semantic-dedup sink. Vectors have 64
+    components, fixed rather than inferred: inference would require an
+    action, which a streaming plan cannot run. Read the accumulated index
+    back with a plain ``spark.read.parquet(index_path)``."""
     from ehr_data_pipeline_spark.operators.similarity import _assign_cells, _valid
 
     if not centroids:
         raise ValueError("run_ivf_index_stream needs a trained quantizer "
                          "(centroids == [] would land an unsearchable index)")
     assigned = _assign_cells(
-        vectors.where(_valid("vec_id", "embedding", dim))
+        vectors.where(_valid(64))
         .select("vec_id", "embedding"),
         centroids, "embedding", "cid",
     ).select("vec_id", "cid", "embedding")
@@ -1244,7 +1206,7 @@ def bm25_index_maintenance_sink(
         _resume_pending_compaction(spark, postings_path)
         _resume_pending_compaction(spark, lengths_path)
         _heal_bm25_compaction_skew(spark, postings_path, lengths_path)
-        postings, lengths = bm25_index_build(batch_df, "doc_id", "text")
+        postings, lengths = bm25_index_build(batch_df)
         # lengths FIRST: the intersection reader is already torn-proof;
         # this order additionally softens a torn epoch for a naive
         # per-table reader — lengths-without-postings only shifts the

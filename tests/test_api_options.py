@@ -1,29 +1,42 @@
-"""Every public option has a caller (no Spark).
+"""Every public option has a caller that changes it (no Spark).
 
 A defaulted parameter of a public top-level function under
 ``ehr_data_pipeline_spark/`` is an option. An option that no call in the
 package, ``tools/``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py``
-or ``tests/`` ever sets is a configuration that nothing runs: it should
-be a constant. This test fails on any such option, so that knobs do not
-grow back.
+or ``tests/`` sets to a value other than its default has one value in
+use: it should be a constant. This test fails on any such option, so that
+knobs do not grow back, not even as calls that pass the default.
 
-A call sets a parameter when it names the function (directly or as an
-attribute, ``mod.fn(...)``) and passes the parameter by position or by
-keyword. ``**name``, where ``name`` is bound once in the calling scope to
-a ``dict(...)`` call or a ``{...}`` display with literal keys, sets those
-keys; any other ``*args`` or ``**kwargs`` sets every parameter.
+A call reaches a function when it names it directly, as an attribute
+(``mod.fn(...)``), through an import alias (``from m import fn as g``),
+or through a name bound once in the calling scope to a lookup in a
+literal dict of functions (``write = {"csv": write_csv, ...}.get(fmt)``).
+``pool.submit(fn, *args)`` calls ``fn(*args)``, also when ``fn`` is
+wrapped as ``wrapper(...)(fn)``.
+
+A call sets a parameter when it passes it, by position or by keyword, a
+value other than the default. A literal equal to the default literal, or
+an expression with the default's source text (``k=DEFAULT_SHINGLE_K``),
+is the default. ``**name``, where ``name`` is bound once in the calling
+scope to a ``dict(...)`` call or a ``{...}`` display with literal keys,
+passes those items; any other ``*args`` or ``**kwargs`` sets every
+parameter.
 """
 from __future__ import annotations
 
 import ast
 import pathlib
+import textwrap
 from collections import defaultdict
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = "ehr_data_pipeline_spark"
 
 # Deployment settings: set by whoever runs the library, not by its code.
-ALLOWED_UNSET = {"get_spark.master", "write_jdbc.properties"}
+# ``run_pipeline.fmt`` is set only by the benchmark's own files
+# (perfbench/workloads.py), which pass the default; they stay unchanged so
+# that benchmark runs of different commits compare.
+ALLOWED_UNSET = {"get_spark.master", "write_jdbc.properties", "run_pipeline.fmt"}
 
 
 def _files() -> list[pathlib.Path]:
@@ -35,55 +48,111 @@ def _files() -> list[pathlib.Path]:
     return files + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 
 
-def _options(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[str]:
+def _options(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> dict[str, ast.expr]:
+    """Option name -> default expression."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    names = [x.arg for x in pos[len(pos) - len(a.defaults):]]
-    return names + [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    out = {x.arg: d for x, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    out.update((x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+    return out
 
 
-def _dict_keys(node: ast.expr) -> set[str] | None:
-    """Keys of a literal ``dict(k=...)`` call or ``{"k": ...}`` display."""
+def _is_default(value: ast.expr, default: ast.expr) -> bool:
+    """An equal literal, or the same source text."""
+    try:
+        return repr(ast.literal_eval(value)) == repr(ast.literal_eval(default))
+    except (ValueError, TypeError):
+        return ast.unparse(value) == ast.unparse(default)
+
+
+def _name(node: ast.expr) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    return node.attr if isinstance(node, ast.Attribute) else None
+
+
+def _dict_items(node: ast.expr | None) -> dict[str, ast.expr] | None:
+    """Items of a literal ``dict(k=...)`` call or ``{"k": ...}`` display."""
     if isinstance(node, ast.Call) and isinstance(node.func, ast.Name) \
             and node.func.id == "dict" and not node.args \
             and all(k.arg is not None for k in node.keywords):
-        return {k.arg for k in node.keywords}
+        return {k.arg: k.value for k in node.keywords}
     if isinstance(node, ast.Dict) and all(
         isinstance(k, ast.Constant) and isinstance(k.value, str) for k in node.keys
     ):
-        return {k.value for k in node.keys}
+        return {k.value: v for k, v in zip(node.keys, node.values)}
     return None
 
 
-def _bound_dicts(scope: ast.AST) -> dict[str, set[str]]:
-    """Names assigned exactly once in ``scope``, to a literal dict."""
+def _dispatched(node: ast.expr | None) -> list[str] | None:
+    """Functions a ``{key: fn, ...}.get(k)`` or ``{...}[k]`` lookup returns."""
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+            and node.func.attr == "get":
+        node = node.func.value
+    elif isinstance(node, ast.Subscript):
+        node = node.value
+    if not isinstance(node, ast.Dict):
+        return None
+    names = [_name(v) for v in node.values]
+    return names if all(names) else None
+
+
+def _bindings(scope: ast.AST) -> dict[str, ast.expr]:
+    """Names assigned exactly once in ``scope``, to their value."""
     seen: dict[str, list[ast.expr]] = defaultdict(list)
     for node in ast.walk(scope):
         if isinstance(node, ast.Assign):
             for t in node.targets:
                 if isinstance(t, ast.Name):
                     seen[t.id].append(node.value)
-    out = {}
-    for name, values in seen.items():
-        keys = _dict_keys(values[0]) if len(values) == 1 else None
-        if keys is not None:
-            out[name] = keys
-    return out
+    return {name: values[0] for name, values in seen.items() if len(values) == 1}
 
 
-def _set_by(call: ast.Call, params: list[str], dicts: dict[str, set[str]]) -> set[str] | None:
-    """Parameters the call sets; None means every parameter."""
+def _aliases(tree: ast.Module) -> dict[str, str]:
+    """``from m import f as g`` anywhere in the module: g -> f."""
+    return {
+        a.asname: a.name
+        for node in ast.walk(tree) if isinstance(node, ast.ImportFrom)
+        for a in node.names if a.asname
+    }
+
+
+def _direct(call: ast.Call) -> ast.Call:
+    """``pool.submit(fn, *args)`` as ``fn(*args)``; any other call as is."""
+    if _name(call.func) != "submit" or not call.args:
+        return call
+    fn = call.args[0]
+    while isinstance(fn, ast.Call) and len(fn.args) == 1 and isinstance(fn.func, ast.Call):
+        fn = fn.args[0]  # wrapper(...)(fn)
+    return ast.Call(func=fn, args=call.args[1:], keywords=call.keywords)
+
+
+def _callees(func: ast.expr, aliases: dict[str, str], bound: dict[str, ast.expr]) -> list[str]:
+    if isinstance(func, ast.Attribute):
+        return [func.attr]
+    if not isinstance(func, ast.Name):
+        return []
+    names = _dispatched(bound.get(func.id)) or [func.id]
+    return [aliases.get(n, n) for n in names]
+
+
+def _set_by(call: ast.Call, fn: ast.FunctionDef, bound: dict[str, ast.expr]) -> set[str] | None:
+    """Options the call sets to a value other than their default; None
+    means every option."""
     if any(isinstance(a, ast.Starred) for a in call.args):
         return None
-    out = set(params[: len(call.args)])
+    params = [x.arg for x in fn.args.posonlyargs + fn.args.args]
+    passed = list(zip(params, call.args))
     for k in call.keywords:
         if k.arg is not None:
-            out.add(k.arg)
-        elif isinstance(k.value, ast.Name) and k.value.id in dicts:
-            out |= dicts[k.value.id]
-        else:
+            passed.append((k.arg, k.value))
+            continue
+        items = _dict_items(bound.get(k.value.id)) if isinstance(k.value, ast.Name) else None
+        if items is None:
             return None
-    return out
+        passed += items.items()
+    defaults = _options(fn)
+    return {p for p, v in passed if p in defaults and not _is_default(v, defaults[p])}
 
 
 def _scopes(tree: ast.Module):
@@ -97,48 +166,90 @@ def _scopes(tree: ast.Module):
     yield from walk(tree, tree)
 
 
-def unset_options() -> list[str]:
-    trees = {p: ast.parse(p.read_text()) for p in _files()}
+def unset_options(sources: dict[str, str] | None = None) -> list[str]:
+    """``path:line function.option`` for every option no call changes.
+    ``sources`` (path -> text) replaces the repository's files; a path
+    under ``ehr_data_pipeline_spark/`` defines options."""
+    if sources is None:
+        sources = {str(p.relative_to(ROOT)): p.read_text() for p in _files()}
+    trees = {p: ast.parse(text) for p, text in sources.items()}
     defs = defaultdict(list)
     for p, tree in trees.items():
-        if p.is_relative_to(ROOT / PACKAGE):
+        if p.startswith(PACKAGE + "/"):
             for node in tree.body:
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
                         and not node.name.startswith("_"):
                     defs[node.name].append((p, node))
     set_params: dict[tuple, set[str] | None] = defaultdict(set)
     for tree in trees.values():
-        dict_cache: dict[int, dict[str, set[str]]] = {}
+        aliases = _aliases(tree)
+        bound_cache: dict[int, dict[str, ast.expr]] = {}
         for call, scope in _scopes(tree):
-            f = call.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            for p, fn in defs.get(name, ()):
-                key = (p, fn.name, fn.lineno)
-                if set_params[key] is None:
-                    continue
-                if id(scope) not in dict_cache:
-                    dict_cache[id(scope)] = _bound_dicts(scope)
-                params = [x.arg for x in fn.args.posonlyargs + fn.args.args]
-                got = _set_by(call, params, dict_cache[id(scope)])
-                set_params[key] = None if got is None else set_params[key] | got
+            if id(scope) not in bound_cache:
+                bound_cache[id(scope)] = _bindings(scope)
+            bound = bound_cache[id(scope)]
+            call = _direct(call)
+            for name in _callees(call.func, aliases, bound):
+                for p, fn in defs.get(name, ()):
+                    key = (p, fn.name, fn.lineno)
+                    if set_params[key] is None:
+                        continue
+                    got = _set_by(call, fn, bound)
+                    set_params[key] = None if got is None else set_params[key] | got
     unset = []
     for name, found in defs.items():
         for p, fn in found:
             done = set_params[(p, fn.name, fn.lineno)]
             for opt in _options(fn):
                 if done is not None and opt not in done:
-                    unset.append(f"{p.relative_to(ROOT)}:{fn.lineno} {name}.{opt}")
+                    unset.append(f"{p}:{fn.lineno} {name}.{opt}")
     return sorted(unset)
 
 
 def test_every_public_option_has_a_caller():
     offenders = [u for u in unset_options() if u.split()[1] not in ALLOWED_UNSET]
     assert not offenders, (
-        f"{len(offenders)} public options that no call sets; make each a "
-        "constant (or add the call that needs another value):\n" + "\n".join(offenders)
+        f"{len(offenders)} public options that no call sets to another value "
+        "than the default; make each a constant (or add the call that needs "
+        "another value):\n" + "\n".join(offenders)
     )
 
 
 def test_allowlist_names_unset_options():
     unset = {u.split()[1] for u in unset_options()}
     assert ALLOWED_UNSET <= unset, ALLOWED_UNSET - unset
+
+
+def test_scan_compares_values_and_resolves_aliases():
+    lib = textwrap.dedent('''
+        DEFAULT_K = 5
+
+        def pairs(df, threshold=0.6, k=DEFAULT_K, keys=("a",)):
+            pass
+
+        def stats(df, keys=None, mode="x"):
+            pass
+
+        def write_csv(df, path, mode="overwrite"):
+            pass
+
+        def write_parquet(df, path, mode="overwrite"):
+            pass
+
+        def load(path, fmt="json", strict=True):
+            pass
+    ''')
+    caller = textwrap.dedent('''
+        from ehr_data_pipeline_spark.lib import pairs, stats as st
+
+        def run(df, fmt, pool, wrap):
+            pairs(df, threshold=0.60, k=DEFAULT_K, keys=("a",))
+            st(df, keys=["k"])
+            write = {"csv": write_csv, "parquet": write_parquet}.get(fmt)
+            write(df, "p", mode="append")
+            opts = dict(strict=True)
+            pool.submit(wrap(df)(load), "p", "csv", **opts)
+    ''')
+    unset = {u.split()[1] for u in unset_options(
+        {f"{PACKAGE}/lib.py": lib, "tools/caller.py": caller})}
+    assert unset == {"pairs.threshold", "pairs.k", "pairs.keys", "stats.mode", "load.strict"}

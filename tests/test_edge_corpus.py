@@ -49,7 +49,7 @@ def _oracles_reading(pred) -> list[str]:
     satisfies ``pred`` — each sweep below auto-discovers its queries."""
     return [
         n for n, s in REGISTRY.items()
-        if s.oracle is not None and pred(_oracle_tables(s.oracle))
+        if pred(_oracle_tables(s.oracle))
     ]
 
 

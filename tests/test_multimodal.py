@@ -102,7 +102,7 @@ def test_resize_then_features_composes(assets):
 
 
 def test_frame_sampling_fanout_and_features(assets):
-    frames = sample_frames(assets, every_n=2)
+    frames = sample_frames(assets)
     vids = assets.filter(F.col("media_meta.media_type") == "video").select(
         "asset_id", F.col("media_meta.n_frames").alias("nf")
     )
@@ -124,7 +124,7 @@ def test_frame_sampling_fanout_and_features(assets):
 def test_audio_segmentation_covers_duration_exactly(assets):
     from ehr_data_pipeline_spark.operators.multimodal import segment_audio
 
-    segs = segment_audio(assets, segment_ms=1000)
+    segs = segment_audio(assets)
     rows = segs.collect()
     assert rows, "no audio assets segmented"
     by_asset: dict[int, list] = {}
@@ -154,7 +154,7 @@ def test_audio_segmentation_covers_duration_exactly(assets):
 def test_audio_segment_payloads_differ_per_segment(assets):
     from ehr_data_pipeline_spark.operators.multimodal import segment_audio
 
-    segs = segment_audio(assets, segment_ms=1000)
+    segs = segment_audio(assets)
     two = (
         segs.groupBy("asset_id")
         .agg(
@@ -179,6 +179,6 @@ def test_audio_segmentation_skips_nonpositive_durations(spark):
         "format:string,width:int,height:int,n_frames:int,sample_rate_hz:int,"
         "duration_ms:long>",
     )
-    got = segment_audio(rows, segment_ms=1000).collect()
+    got = segment_audio(rows).collect()
     assert {r["asset_id"] for r in got} == {2}
     assert all(r["start_ms"] >= 0 and r["end_ms"] > r["start_ms"] for r in got)

@@ -221,7 +221,7 @@ def test_semantic_dedup_matches_python_reference(spark, vecs, n_clusters, thr):
     got = {
         r["vec_id"]: (r["cluster_id"], r["kept"])
         for r in semantic_dedup(
-            df, n_clusters=n_clusters, threshold=thr, n_iters=0, dim=4
+            df, n_clusters=n_clusters, threshold=thr, dim=4
         ).collect()
     }
 

@@ -15,8 +15,7 @@ from tests.oracle_utils import (
     unwrap_prefetched,
 )
 
-ORACLE_NAMES = [n for n, s in REGISTRY.items() if s.oracle is not None]
-ROWS_ONLY_NAMES = [n for n, s in REGISTRY.items() if s.oracle is None]
+NAMES = list(REGISTRY)
 
 
 @pytest.fixture(scope="module")
@@ -34,11 +33,11 @@ def oracle_results(spark, sf_dir):
     # suite run, VERDICT r14 #2); each test below compares its own
     # prefetched frame, so per-query reporting is unchanged
     return prefetch_spark_pdfs(
-        {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir)) for n in ORACLE_NAMES}
+        {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir)) for n in NAMES}
     )
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES)
+@pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(con, oracle_results, name):
     compare_spark_vs_oracle(
         unwrap_prefetched(oracle_results, name), con,
@@ -46,7 +45,7 @@ def test_query_matches_oracle(con, oracle_results, name):
     )
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES)
+@pytest.mark.parametrize("name", NAMES)
 def test_oracle_types_no_hugeint(con, name):
     """Oracle type lint: a bare SUM(BIGINT) in DuckDB types as HUGEINT,
     which pandas renders as float64 ("123.0") while Spark's BIGINT renders
@@ -67,21 +66,6 @@ def test_oracle_types_no_hugeint(con, name):
     )
 
 
-@pytest.fixture(scope="module")
-def rows_only_results(spark, sf_dir):
-    return prefetch_spark_pdfs(
-        {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir))
-         for n in ROWS_ONLY_NAMES}
-    )
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_query_runs(sf_dir, rows_only_results, name):
-    pdf = unwrap_prefetched(rows_only_results, name)
-    assert len(pdf) > 0, f"{name}: rows-only query returned no rows at {sf_dir}"
-    assert len(pdf.columns) > 0
-
-
 def test_entry_smoke(spark):
     import __spark_entry__ as mod
 
@@ -97,12 +81,12 @@ def test_entry_smoke(spark):
 
 def test_driver_export_follows_registry_order():
     """The driver contract exports the registry as registered: every
-    query once, in registration order, and every oracle in that same
-    order (entries without an oracle skipped). No Spark session needed."""
+    query once, in registration order, and its oracle in that same
+    order. No Spark session needed."""
     import __spark_entry__ as mod
 
-    assert list(mod.queries()) == list(REGISTRY)
-    assert list(mod.oracle_sql()) == ORACLE_NAMES
+    assert list(mod.queries()) == NAMES
+    assert list(mod.oracle_sql()) == NAMES
 
 
 def test_corpus_build_manifest_cache_released(spark):

@@ -45,7 +45,7 @@ def test_scd2_compress_runs_and_nulls(spark):
         rows, "user_id long, ts timestamp, event_type string, event_id long"
     )
     out = _rows(
-        scd2_compress(df, ["user_id"], ["event_type"], "ts", tiebreak="event_id")
+        scd2_compress(df, ["user_id"], ["event_type"], tiebreak="event_id")
     )
     assert out[(1, 0)] == ("a", 2, False, 2)
     assert out[(1, 2)] == ("b", 3, False, 1)
@@ -67,7 +67,7 @@ def test_scd2_compress_tiebreak_is_total(spark):
         rows, "user_id long, ts timestamp, event_type string, event_id long"
     )
     out = scd2_compress(
-        df, ["user_id"], ["event_type"], "ts", tiebreak="event_id"
+        df, ["user_id"], ["event_type"], tiebreak="event_id"
     ).collect()
     # order by (ts, event_id): a, b, a -> three single-event versions,
     # exactly one of them open
@@ -96,7 +96,7 @@ def test_scd2_apply_batch_equals_full_rebuild(spark):
     b2_min = b2.agg(F.min("ts")).collect()[0][0]
     assert b1_max <= b2_min, "time split premise violated"
 
-    args = dict(keys=["user_id"], attrs=["event_type"], ts_col="ts", tiebreak="event_id")
+    args = dict(keys=["user_id"], attrs=["event_type"], tiebreak="event_id")
     full = scd2_compress(e, **args)
     merged = scd2_apply_batch(scd2_compress(b1, **args), b2, **args)
 
@@ -118,7 +118,7 @@ def test_scd2_apply_batch_new_and_absent_keys(spark):
         [(1, _ts(5), "b", 3), (3, _ts(5), "z", 4)],
         "user_id long, ts timestamp, event_type string, event_id long",
     )
-    args = dict(keys=["user_id"], attrs=["event_type"], ts_col="ts", tiebreak="event_id")
+    args = dict(keys=["user_id"], attrs=["event_type"], tiebreak="event_id")
     out = scd2_apply_batch(scd2_compress(b1, **args), b2, **args)
     merged = _rows(out)
     assert merged[(1, 0)] == ("a", 5, False, 1)   # closed by the batch
@@ -146,7 +146,7 @@ def test_scd2_same_timestamp_runs_total_order(spark):
         rows, "user_id long, ts timestamp, event_type string, event_id long"
     )
     out = sorted(
-        scd2_compress(df, ["user_id"], ["event_type"], "ts", tiebreak="event_id")
+        scd2_compress(df, ["user_id"], ["event_type"], tiebreak="event_id")
         .collect(),
         key=lambda r: r["version"],
     )
@@ -170,7 +170,7 @@ def test_scd2_apply_batch_null_keys_merge(spark):
         [(None, _ts(5), "a", 2), (None, _ts(6), "b", 3)],
         "user_id long, ts timestamp, event_type string, event_id long",
     )
-    args = dict(keys=["user_id"], attrs=["event_type"], ts_col="ts", tiebreak="event_id")
+    args = dict(keys=["user_id"], attrs=["event_type"], tiebreak="event_id")
     full = {tuple(r) for r in scd2_compress(
         b1.unionByName(b2), **args).collect()}
     merged = {tuple(r) for r in scd2_apply_batch(
@@ -188,7 +188,7 @@ def test_scd2_all_null_attrs_first_event(spark):
         [(1, _ts(0), None, 1), (1, _ts(1), None, 2), (1, _ts(2), "a", 3)],
         "user_id long, ts timestamp, event_type string, event_id long",
     )
-    args = dict(keys=["user_id"], attrs=["event_type"], ts_col="ts", tiebreak="event_id")
+    args = dict(keys=["user_id"], attrs=["event_type"], tiebreak="event_id")
     dim = scd2_compress(b1, **args)
     versions = sorted((r["version"], r["event_type"]) for r in dim.collect())
     assert versions == [(1, None), (2, "a")]

@@ -361,9 +361,7 @@ def test_lsh_near_dup_groups_matches_pair_closure(dup_heavy_emb):
     }
     membership = {
         (r["vec_id"], r["group_id"])
-        for r in lsh_near_dup_groups(
-            dup_heavy_emb, threshold=0.4, n_planes=4, n_tables=8
-        ).collect()
+        for r in lsh_near_dup_groups(dup_heavy_emb).collect()
     }
     assert membership == closure
     # every triplicated vector is in a group canonicalized at its min id
@@ -421,7 +419,7 @@ def test_semantic_dedup_keep_first_and_clusters(dup_heavy_emb, emb):
     out = {
         r["vec_id"]: (r["cluster_id"], r["kept"])
         for r in semantic_dedup(
-            dup_heavy_emb, n_clusters=4, threshold=0.4, n_iters=0
+            dup_heavy_emb, n_clusters=4, threshold=0.4
         ).collect()
     }
     base_ids = {r["vec_id"] for r in dup_heavy_emb.select("vec_id").collect()}
@@ -520,7 +518,7 @@ def test_semantic_dedup_duplicates_add_zero_comparison_work(emb):
         # copies take ids ABOVE the base range, so the smallest-id seeds
         # (and with n_iters=0 the centroids) are identical by construction
         cents = train_ivf_centroids(df, n_list=4, n_iters=0)
-        mem = _vector_groups(df, "vec_id", "embedding", 64)
+        mem = _vector_groups(df, 64)
         reps = mem.where(F.col("__id") == F.col("__rid"))
         assigned = reps.select(
             F.col("__id").alias("rid"),
@@ -546,7 +544,7 @@ def test_semantic_dedup_cluster_scaling_reduces_comparisons(emb):
 
     def n_comparisons(k):
         cents = train_ivf_centroids(emb, n_list=k, n_iters=0)
-        mem = _vector_groups(emb, "vec_id", "embedding", 64)
+        mem = _vector_groups(emb, 64)
         assigned = mem.where(F.col("__id") == F.col("__rid")).select(
             F.col("__id").alias("rid"),
             _centroid_dists("__v", cents)[0]["cid"].alias("cid"),
@@ -597,13 +595,13 @@ def test_semantic_dedup_auto_k_matches_explicit_and_scales(emb):
     auto = {
         r["vec_id"]: (r["cluster_id"], r["kept"])
         for r in semantic_dedup(
-            emb, n_clusters=None, target_cluster_size=64, n_iters=0, dim=64
+            emb, n_clusters=None, target_cluster_size=64, dim=64
         ).collect()
     }
     explicit = {
         r["vec_id"]: (r["cluster_id"], r["kept"])
         for r in semantic_dedup(
-            emb, n_clusters=k, n_iters=0, dim=64
+            emb, n_clusters=k, dim=64
         ).collect()
     }
     assert auto == explicit
@@ -621,7 +619,7 @@ def test_semantic_dedup_auto_k_matches_explicit_and_scales(emb):
     assert n_big == 2 * n_reps
     assert auto_n_clusters(n_big, target_cluster_size=64) == 2 * k
     big_out = semantic_dedup(
-        bigger, n_clusters=None, target_cluster_size=64, n_iters=0, dim=64
+        bigger, n_clusters=None, target_cluster_size=64, dim=64
     )
     n_cells = big_out.select("cluster_id").distinct().count()
     assert n_cells > 8  # more cells actually materialize on the big corpus
@@ -714,7 +712,7 @@ def test_semantic_dedup_against_index_matches_batch_mode(emb):
     batch = emb.filter(F.col("vec_id") >= 25)
     cents = train_ivf_centroids(history, n_list=8, n_iters=0, dim=64)
     fresh, entries = semantic_dedup_against_index(
-        batch, history, cents, threshold=0.4, dim=64
+        batch, history, cents, dim=64
     )
     got = {r["vec_id"] for r in fresh.collect()}
     # batch-mode over the full corpus seeds from the same smallest-id
@@ -742,7 +740,7 @@ def test_semantic_dedup_against_index_reingest_and_growth(spark, emb):
     cents = train_ivf_centroids(history, n_list=4, n_iters=0, dim=64)
     batch1 = emb.filter((F.col("vec_id") >= 25) & (F.col("vec_id") < 40))
     fresh1, entries1 = semantic_dedup_against_index(
-        batch1, history.select("vec_id", "embedding"), cents, threshold=0.4, dim=64
+        batch1, history.select("vec_id", "embedding"), cents, dim=64
     )
     grown = history.select("vec_id", "embedding").unionByName(entries1)
     fresh1_ids = sorted(r["vec_id"] for r in fresh1.collect())
@@ -753,7 +751,7 @@ def test_semantic_dedup_against_index_reingest_and_growth(spark, emb):
         .select((F.col("vec_id") + F.lit(5000)).alias("vec_id"), "embedding")
     )
     fresh2, _ = semantic_dedup_against_index(
-        reingest, grown, cents, threshold=0.4, dim=64
+        reingest, grown, cents, dim=64
     )
     assert fresh2.count() == 0  # cosine 1.0 against its own index entry
     # empty history, no quantizer: distinct batch vectors all fresh
@@ -763,7 +761,7 @@ def test_semantic_dedup_against_index_reingest_and_growth(spark, emb):
     )
     fresh3, _ = semantic_dedup_against_index(
         doubled, spark.createDataFrame([], "vec_id long, embedding array<float>"),
-        [], threshold=0.4, dim=64,
+        [], dim=64,
     )
     got3 = {r["vec_id"] for r in fresh3.collect()}
     assert got3 == {r["vec_id"] for r in batch1.select("vec_id").collect()}
@@ -836,7 +834,7 @@ def test_semantic_contamination_duplicates_add_zero_scoring_work(emb):
     # identical between the two corpora
     def n_candidates(c, b):
         reps = (
-            _vector_groups(c, "vec_id", "embedding", 64)
+            _vector_groups(c, 64)
             .where(F.col("__id") == F.col("__rid"))
             .count()
         )
@@ -866,7 +864,7 @@ def test_ivf_index_search_matches_ivf_knn(spark, emb):
     index = build_ivf_index(corpus, cents, dim=64)
     got = sorted(
         map(tuple, ivf_knn_against_index(
-            queries, index, cents, k=3, n_probe=4, dim=64).collect())
+            queries, index, cents, n_probe=4, dim=64).collect())
     )
     want = sorted(
         map(tuple, ivf_knn(

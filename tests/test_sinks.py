@@ -218,8 +218,7 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
 
     assert len(glob.glob(f"{frag}/part-*.parquet")) == 50
     out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, frag, out, target_file_mb=256,
-                        sort_within_by=["ts"])
+    n = compact_parquet(spark, frag, out, sort_within_by=["ts"])
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == n == 1  # tiny table -> one right-sized file
     assert spark.read.parquet(out).count() == events.count()

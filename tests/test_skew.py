@@ -57,7 +57,7 @@ def test_with_salt_deterministic_and_bounded(spark):
 
 def test_skewed_key_stats_shares_sum_to_one(spark):
     events = load_table(spark, SF, "events")
-    stats = skewed_key_stats(events, ["event_type"], top_k=10).collect()
+    stats = skewed_key_stats(events, ["event_type"]).collect()
     assert 0 < len(stats) <= 10
     assert abs(sum(r["share"] for r in stats) - 1.0) < 1e-9  # 5 types < 10
     assert stats[0]["n_rows"] >= stats[-1]["n_rows"]

@@ -79,13 +79,13 @@ def test_hourly_counts_append_mode_respects_watermark(checkpointed):
 
 def test_sessionize_stream_matches_batch(checkpointed):
     spark = checkpointed
-    got_q = sessionize(read_events_stream(spark, SF), gap="30 minutes")
+    got_q = sessionize(read_events_stream(spark, SF))
     run_to_memory(got_q, "sessions_complete", output_mode="complete")
     got = _rows(
         spark.sql("SELECT * FROM sessions_complete"), ["user_id", "session_start"]
     )
     want = _rows(
-        sessionize(load_table(spark, SF, "events"), gap="30 minutes", watermark=None),
+        sessionize(load_table(spark, SF, "events"), watermark=None),
         ["user_id", "session_start"],
     )
     assert set(got) == set(want)
@@ -277,7 +277,6 @@ def test_stream_stream_interval_join_matches_batch_range_join(checkpointed):
     ).select("user_id", F.col("ts").alias("click_ts"))
     joined = interval_join_stream(
         s_err, s_clk, on="user_id", left_time="ts", right_time="click_ts",
-        lookback="10 minutes",
     )
     assert joined.isStreaming
     run_to_memory(joined, "interval_joined", output_mode="append")
@@ -879,7 +878,7 @@ def test_ivf_index_stream_matches_batch_build(checkpointed, tmp_path, n_list):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_ivf_index_stream(stream, cents, index_path, ckpt, dim=64)
+    run_ivf_index_stream(stream, cents, index_path, ckpt)
 
     landed = spark.read.parquet(index_path).select("vec_id", "cid", "embedding")
     batch = build_ivf_index(emb, cents, dim=64)
@@ -892,15 +891,15 @@ def test_ivf_index_stream_matches_batch_build(checkpointed, tmp_path, n_list):
 
     queries = emb.filter(F.col("vec_id") < 5)
     got = sorted(map(tuple, ivf_knn_against_index(
-        queries, landed, cents, k=3, n_probe=2, dim=64).collect()))
+        queries, landed, cents, n_probe=2, dim=64).collect()))
     want = sorted(map(tuple, ivf_knn_against_index(
-        queries, batch, cents, k=3, n_probe=2, dim=64).collect()))
+        queries, batch, cents, n_probe=2, dim=64).collect()))
     assert got == want and len(got) > 0
 
     # empty quantizer is a configuration error for the stream writer
     import pytest as _pytest
     with _pytest.raises(ValueError):
-        run_ivf_index_stream(stream, [], index_path, ckpt, dim=64)
+        run_ivf_index_stream(stream, [], index_path, ckpt)
 
 
 def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):

@@ -111,7 +111,7 @@ def test_top_ngrams_deterministic_tiebreak(spark):
     df = spark.createDataFrame(
         [("b a",), ("a b",), ("c d",)], "text string"
     )
-    rows = top_ngrams(df, "text", n=2, k=10).collect()
+    rows = top_ngrams(df, k=10).collect()
     # all three bigrams occur once; tie broken by ngram string ascending
     assert [(r["ngram"], r["n_occurrences"]) for r in rows] == [
         ("a b", 1), ("b a", 1), ("c d", 1),
@@ -158,7 +158,7 @@ def test_winnow_fingerprints_detect_shared_substring(spark):
     fp2 = [r["fps"] for r in winnow_fingerprints(df2, "doc_id", "text").collect()]
     assert fp2[0] == fp2[1]
 
-    pairs = winnow_pairs(df, min_shared=2, max_df=10).collect()
+    pairs = winnow_pairs(df, min_shared=2).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in pairs] == [(1, 2)]
     p = pairs[0]
     assert p["n_shared"] >= 2 and 0.0 < p["overlap"] <= 1.0
@@ -706,7 +706,7 @@ def test_bpe_trainer_rounds_hand_computed(spark):
     sym = {
         (r["l"] + r["r"]): r["n_pairs"]
         for r in bpe_symbol_pair_counts(
-            _initial_state(docs, "text", "word")
+            _initial_state(docs, "word")
         ).collect()
     }
     chr_pairs = {
@@ -764,7 +764,6 @@ def test_byte_pretokens_gpt2_style(spark):
         r["syms"]
         for r in _initial_state(
             spark.createDataFrame([(1, " t")], "doc_id int, text string"),
-            "text",
             "byte",
         ).collect()
     )
@@ -875,7 +874,7 @@ def test_bpe_trained_counts_arrow_matches_native(spark):
     arrow = {
         r["doc_id"]: r["n_tokens"]
         for r in TA._bpe_trained_counts_arrow(
-            docs, merges, "doc_id", "text"
+            docs, merges
         ).collect()
     }
     assert native == arrow
@@ -925,7 +924,7 @@ def test_bpe_byte_trained_counts_arrow_matches_native(spark):
     arrow = {
         r["doc_id"]: r["n_tokens"]
         for r in TA._bpe_trained_counts_arrow(
-            docs, merges, "doc_id", "text", pretokenizer="byte"
+            docs, merges, pretokenizer="byte"
         ).collect()
     }
     assert native == arrow
@@ -1052,7 +1051,7 @@ def test_bpe_byte_arrow_matches_native_on_unicode(spark):
     arrow = {
         r["doc_id"]: r["n_tokens"]
         for r in TA._bpe_trained_counts_arrow(
-            docs, merges, "doc_id", "text", pretokenizer="byte"
+            docs, merges, pretokenizer="byte"
         ).collect()
     }
     assert native == arrow
@@ -1275,7 +1274,7 @@ def test_bpe_word_oracles_on_unit_separator_text(spark, tmp_path):
         arrow = {
             r["doc_id"]: r["n_tokens"]
             for r in TA._bpe_trained_counts_arrow(
-                docs, merges, "doc_id", "text"
+                docs, merges
             ).collect()
         }
         assert native == arrow, merges
@@ -1629,7 +1628,7 @@ def test_bpe_symbol_pair_counts_match_old(spark, texts_df):
         bpe_symbol_pair_counts,
     )
 
-    state = _initial_state(texts_df, "text", "word")
+    state = _initial_state(texts_df, "word")
     a = F.split(F.col("syms"), BPE_SEP)
     old = (
         state.select(a.alias("__a"))

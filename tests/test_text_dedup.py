@@ -150,7 +150,7 @@ def test_minhash_lsh_matches_ground_truth(corpus):
         (r["doc_a"], r["doc_b"])
         for r in _jaccard_pairs_allpairs(corpus, threshold=0.6).collect()
     }
-    lsh = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(corpus, threshold=0.6).collect()}
+    lsh = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(corpus).collect()}
     # verification guarantees precision 1.0 (subset of exact); recall on
     # true near-dups (J≥0.9 here) is ~1 with 16 hashes / 4 bands
     assert lsh <= exact
@@ -166,12 +166,12 @@ def test_minhash_sig_agree_prefilter(corpus, dup_heavy_corpus):
     candidate join by construction) survive."""
     for c in (corpus, dup_heavy_corpus):
         off = {(r["doc_a"], r["doc_b"], r["jaccard"])
-               for r in minhash_lsh_pairs(c, threshold=0.6).collect()}
+               for r in minhash_lsh_pairs(c).collect()}
         on = {(r["doc_a"], r["doc_b"], r["jaccard"])
-              for r in minhash_lsh_pairs(c, threshold=0.6, sig_agree=6).collect()}
+              for r in minhash_lsh_pairs(c, sig_agree=6).collect()}
         assert on == off and len(on) > 0
     # floor > num_hashes: cross-set pairs cannot agree on 17 positions
-    sat = minhash_lsh_pairs(corpus, threshold=0.6, sig_agree=17).collect()
+    sat = minhash_lsh_pairs(corpus, sig_agree=17).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in sat}
     # docs 1/2/3 share an identical canonical shingle set → their member
     # pairs come from the self-row path and survive; the (1,4) near-dup
@@ -253,7 +253,7 @@ def test_minhash_duplicate_heavy_matches_pairwise_semantics(dup_heavy_corpus):
 
     pairs = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(dup_heavy_corpus, threshold=0.6).collect()
+        for r in minhash_lsh_pairs(dup_heavy_corpus).collect()
     }
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
@@ -280,14 +280,14 @@ def test_minhash_duplicate_heavy_matches_pairwise_semantics(dup_heavy_corpus):
     assert not any((20 in p or 21 in p) and not set(p) <= {20, 21} for p in pairs)
 
     # group surface == transitive closure of the emitted pairs
-    pair_df = minhash_lsh_pairs(dup_heavy_corpus, threshold=0.6)
+    pair_df = minhash_lsh_pairs(dup_heavy_corpus)
     closure = {
         (r["id"], r["component"])
         for r in near_dup_components(pair_df).collect()
     }
     membership = {
         (r["doc_id"], r["group_id"])
-        for r in minhash_dup_groups(dup_heavy_corpus, threshold=0.6).collect()
+        for r in minhash_dup_groups(dup_heavy_corpus).collect()
     }
     assert membership == closure
     # groups A+B merge under the bridge; C clusters on its own
@@ -320,9 +320,9 @@ def test_duplicates_add_zero_verification_work(spark, corpus, dup_heavy_corpus):
         )
 
     def work_facts(df):
-        grouped = _shingle_groups(df, "doc_id", "text", 4)
+        grouped = _shingle_groups(df)
         reps = grouped.where(F.col("id") == F.col("__rid"))
-        pairs = _rep_minhash_pairs(_rep_signatures(grouped, 16), 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b"))
+        pairs = _rep_minhash_pairs(_rep_signatures(grouped)).where(F.col("doc_a") != F.col("doc_b"))
         return reps.count(), pairs.count()
 
     n_reps_base, n_pairs_base = work_facts(base)
@@ -331,8 +331,8 @@ def test_duplicates_add_zero_verification_work(spark, corpus, dup_heavy_corpus):
     assert n_pairs_tripled == n_pairs_base  # same cross-rep verification work
     # while the ANSWER (pair expansion) did grow — the output is the
     # quadratic part, by definition of a pair surface
-    out_base = minhash_lsh_pairs(base, threshold=0.6).count()
-    out_tripled = minhash_lsh_pairs(tripled, threshold=0.6).count()
+    out_base = minhash_lsh_pairs(base).count()
+    out_tripled = minhash_lsh_pairs(tripled).count()
     assert out_tripled > 3 * out_base
 
 
@@ -363,16 +363,16 @@ def test_group_surfaces_flat_on_both_replica_corpora(spark, tmp_path):
 
     def facts(path):
         docs = spark.read.parquet(f"{path}/documents.parquet")
-        grouped = _shingle_groups(docs, "doc_id", "text", 4)
+        grouped = _shingle_groups(docs)
         reps = grouped.where(F.col("id") == F.col("__rid")).count()
-        pairs = _rep_minhash_pairs(_rep_signatures(grouped, 16), 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
-        members = minhash_dup_groups(docs, threshold=0.6).count()
+        pairs = _rep_minhash_pairs(_rep_signatures(grouped)).where(F.col("doc_a") != F.col("doc_b")).count()
+        members = minhash_dup_groups(docs).count()
         return reps, pairs, members
 
     base_docs = spark.read.parquet(f"{src}/documents.parquet")
-    base_grouped = _shingle_groups(base_docs, "doc_id", "text", 4)
+    base_grouped = _shingle_groups(base_docs)
     n_base_reps = base_grouped.where(F.col("id") == F.col("__rid")).count()
-    n_base_pairs = _rep_minhash_pairs(_rep_signatures(base_grouped, 16), 0.6, 16, 4).where(F.col("doc_a") != F.col("doc_b")).count()
+    n_base_pairs = _rep_minhash_pairs(_rep_signatures(base_grouped)).where(F.col("doc_a") != F.col("doc_b")).count()
 
     # identical-copy x4: every doc gains 4 exact copies, but the DISTINCT
     # work is EXACTLY the base corpus's — same reps, same verified rep
@@ -402,7 +402,7 @@ def test_release_builder_caches_unpersists(spark, corpus):
     )
 
     release_builder_caches()  # start clean
-    minhash_lsh_pairs(corpus, threshold=0.6).collect()
+    minhash_lsh_pairs(corpus).collect()
     assert len(_LIVE_BUILDER_CACHES) > 0
     tracked = list(_LIVE_BUILDER_CACHES)
     release_builder_caches()
@@ -492,7 +492,7 @@ def test_simhash_band_pairs_exact_below_band_count(spark, corpus):
     }
     banded = {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_near_dup_pairs(corpus, max_distance=3).collect()
+        for r in simhash_near_dup_pairs(corpus).collect()
     }
     assert banded == brute
     assert len(banded) > 0  # the exact-dup triple sketches identically
@@ -516,9 +516,9 @@ def test_simhash_duplicates_add_zero_verification_work(spark, corpus):
         )
 
     def work_facts(df):
-        grouped = _simhash_groups(df, "doc_id", "text", 60)
+        grouped = _simhash_groups(df, "doc_id")
         reps = grouped.where(F.col("id") == F.col("__rid"))
-        pairs = _rep_simhash_pairs(grouped, 3, 4, 60).where(
+        pairs = _rep_simhash_pairs(grouped, 4).where(
             F.col("doc_a") != F.col("doc_b")
         )
         return reps.count(), pairs.count()
@@ -627,8 +627,7 @@ def test_curate_corpus_funnel_stages(spark):
         ["doc_id", "text"],
     )
     rows = {r["stage"]: r["n_docs"] for r in
-            curate_corpus_funnel(df, min_quality=0.5,
-                                 jaccard_threshold=0.8).collect()}
+            curate_corpus_funnel(df).collect()}
     assert rows["all"] == 4
     assert rows["quality"] == 3          # junk dropped
     assert rows["exact_dedup"] == 2      # doc 2 collapses into doc 1
@@ -777,7 +776,7 @@ def span_corpus(spark):
 def test_duplicate_spans_merge_overlapping_windows(span_corpus):
     spans = {
         (r["doc_id"]): (r["span_start"], r["span_end"], r["span_tokens"])
-        for r in duplicate_spans(span_corpus, window=8).collect()
+        for r in duplicate_spans(span_corpus).collect()
     }
     # the three overlapping duplicated 8-windows inside the shared 10-token
     # run merge into ONE maximal span covering exactly the run
@@ -792,13 +791,13 @@ def test_duplicate_spans_within_one_doc(spark):
     )
     got = sorted(
         (r["span_start"], r["span_end"])
-        for r in duplicate_spans(df, window=8).collect()
+        for r in duplicate_spans(df).collect()
     )
     assert got == [(1, 11), (19, 29)]
 
 
 def test_duplicate_spans_disjoint_and_min_width(span_corpus):
-    rows = duplicate_spans(span_corpus, window=8).collect()
+    rows = duplicate_spans(span_corpus).collect()
     by_doc: dict[int, list[tuple[int, int]]] = {}
     for r in rows:
         assert r["span_tokens"] == r["span_end"] - r["span_start"] >= 8
@@ -812,7 +811,7 @@ def test_duplicate_spans_disjoint_and_min_width(span_corpus):
 def test_strip_duplicate_spans_rewrites_and_passes_through(span_corpus):
     out = {
         r["doc_id"]: (r["dedup_text"], r["n_tokens"], r["n_tokens_kept"])
-        for r in strip_duplicate_spans(span_corpus, window=8).collect()
+        for r in strip_duplicate_spans(span_corpus).collect()
     }
     assert out[1] == ("x1 x2 x3 x4 x5", 15, 5)
     assert out[2] == ("y1", 11, 1)
@@ -825,7 +824,7 @@ def test_strip_fully_duplicated_doc_becomes_empty(spark):
     df = spark.createDataFrame(
         [(1, _RUN), (2, _RUN)], "doc_id long, text string"
     )
-    out = {r["doc_id"]: r for r in strip_duplicate_spans(df, window=8).collect()}
+    out = {r["doc_id"]: r for r in strip_duplicate_spans(df).collect()}
     for i in (1, 2):
         assert out[i]["dedup_text"] == ""
         assert out[i]["n_tokens"] == 10
@@ -839,7 +838,7 @@ def test_strip_preserves_empty_and_whitespace_docs(spark):
         [(1, ""), (2, "   "), (3, "k1 k2 k3")], "doc_id long, text string"
     )
     out = {r["doc_id"]: (r["dedup_text"], r["n_tokens"], r["n_tokens_kept"])
-           for r in strip_duplicate_spans(df, window=8).collect()}
+           for r in strip_duplicate_spans(df).collect()}
     assert out[1] == ("", 0, 0)
     assert out[2] == ("", 0, 0)
     assert out[3] == ("k1 k2 k3", 3, 3)
@@ -946,7 +945,7 @@ def test_simhash_groups_explode_agg_equals_per_row_fold(spark, text_df):
         F.min("id").over(gw).alias("__rid"),
         F.size(F.collect_set(F.col("id")).over(gw)).alias("__n"),
     )
-    new = _simhash_groups(df, "id", "text", 60)
+    new = _simhash_groups(df, "id")
     key = lambda r: (r["id"], r["__sim"], r["__rid"], r["__n"])  # noqa: E731
     a = sorted(map(key, old.collect()))
     b = sorted(map(key, new.collect()))
@@ -985,7 +984,7 @@ def test_simhash_groups_sql_form_matches_fold(spark):
     # duplicate (id, text) rows and same-id-different-text rows
     rows += [(3, TOKEN_EDGE_TEXTS[5]), (3, TOKEN_EDGE_TEXTS[5]), (4, "другой текст")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    grouped = _simhash_groups(df, "doc_id", "text", 60)
+    grouped = _simhash_groups(df, "doc_id")
     fold = _simhash_fold(F.split(normalize_text(F.col("text")), " "))
     expect = df.select(F.col("doc_id").alias("id"), fold.alias("__sim"))
     diff = (
@@ -1035,9 +1034,7 @@ def test_simhash_band_pairs_verified_first_join(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_near_dup_pairs(
-            df, max_distance=3, n_bands=4, total_bits=60
-        ).collect()
+        for r in simhash_near_dup_pairs(df, n_bands=4).collect()
     )
     s = df.select(
         F.col("doc_id"),
