@@ -204,6 +204,12 @@ def gapfill_time_series(df: DataFrame) -> DataFrame:
     aggregation applies; the spine stays proportional to range/step, not
     to row count.
 
+    Cost model: output rows = (hours from the global min to the global
+    max + 1) x distinct event types. The spine is exploded from one row
+    in one task, so a single outlier timestamp sets the grid size: the
+    edge corpus, whose 144 rows span 1969 to 2200, gives 12.1M rows
+    (2.02M hours x 6 event types).
+
     Timeline contract (``functions/measurement.py``): NULL-``ts``
     rows are off the timeline — they can land in no bucket — and are
     excluded up front; the quality suite counts them."""

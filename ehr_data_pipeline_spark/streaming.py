@@ -224,8 +224,8 @@ EWMA_ALPHA = 0.3
 
 def _ewma_fold(values, n: int, ewma: float | None):
     """Order-dependent EWMA fold shared by the streaming state update and
-    the batch twin — one code path, so stream == batch exactly (same IEEE
-    ops in the same order)."""
+    the batch twin in ``tests/test_streaming.py`` — one code path, so
+    stream == batch exactly (same IEEE ops in the same order)."""
     for v in values:
         ewma = (
             float(v) if ewma is None
@@ -274,28 +274,6 @@ def user_value_ewma_stream(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def user_value_ewma_batch(events: DataFrame) -> DataFrame:
-    """Batch twin of :func:`user_value_ewma_stream` (``applyInPandas``,
-    same fold) — the correctness oracle for the stateful stream: an
-    ``availableNow`` drain over a static table must produce exactly these
-    rows. Shuffles once on user_id; per-group work is Arrow-batched."""
-    import pandas as pd
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts")
-        n, ewma = _ewma_fold(pdf["value"].to_list(), 0, None)
-        return pd.DataFrame(
-            [{
-                "user_id": pdf["user_id"].iloc[0],
-                "n_events": n,
-                "ewma": ewma,
-                "last_event_us": int(pdf["ts"].astype("int64").max()) // 1000,
-            }]
-        )
-
-    return events.groupBy("user_id").applyInPandas(fold, EWMA_OUTPUT_SCHEMA)
 
 
 def parquet_batch_sink(path: str):

@@ -1,14 +1,18 @@
 """Mimic the driver's DuckDB-oracle comparison: row count + column names +
 order-insensitive value equality. Strict by default — we engineered the
-queries so Spark and DuckDB produce bit-identical values."""
+queries so Spark and DuckDB produce bit-identical values.
+
+Both sides stay columnar: Spark's ``DataFrame.toArrow()`` against DuckDB's
+``.arrow()``, canonicalized and sorted on every column, then one
+``Table.equals``. Python rows are built only to describe a mismatch."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -25,137 +29,132 @@ def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _canon_value(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return None
-        # Driver-faithful typing: the driver hashes typed serializations, so
-        # an int-valued float (DuckDB HUGEINT -> pandas float64 -> "123.0")
-        # MISMATCHES a true int ("123"). Tag floats so 123.0 != 123 here too —
-        # this is the bug class that cost r2/r4 hash-red rows
-        # (doc_repetition_stats, media_meta_profile, doc_pack_sequences).
-        return ("__float__", v + 0.0)
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime().replace(tzinfo=None)
-    if isinstance(v, list):
-        return tuple(_canon_value(x) for x in v)
-    try:
-        import numpy as np
+def _oracle_arrow(con, sql: str) -> pa.Table:
+    """The oracle's result as Arrow. DECIMAL and HUGEINT columns are cast
+    to DOUBLE by DuckDB itself: ``.df()`` reads them as float64, with
+    DuckDB's rounding, which pyarrow's decimal cast does not
+    reproduce."""
+    rel = con.sql(sql)
 
-        if isinstance(v, np.generic):
-            return _canon_value(v.item())
-        if isinstance(v, np.ndarray):
-            return tuple(_canon_value(x) for x in v.tolist())
-    except ImportError:
-        pass
-    return v
+    def column(name, typ):
+        q = '"' + name.replace('"', '""') + '"'
+        wide = str(typ).startswith("DECIMAL") or str(typ) in ("HUGEINT", "UHUGEINT")
+        return f"CAST({q} AS DOUBLE) AS {q}" if wide else q
+
+    return rel.project(
+        ", ".join(column(c, t) for c, t in zip(rel.columns, rel.types))
+    ).arrow()
 
 
-def _in_ns_range(vals) -> bool:
-    """Whether a naive datetime64 array fits datetime64[ns]. numpy's
-    cast to ns wraps silently (e.g. DuckDB's [us] timestamps past 2262),
-    so the pandas Timestamp bounds are compared in the array's own unit,
-    as integer ticks rounded inward."""
-    import numpy as np
-
-    if not len(vals):
-        return True
-    unit, count = np.datetime_data(vals.dtype)
-    ns_per_tick = count * (np.timedelta64(1, unit) // np.timedelta64(1, "ns"))
-    ticks = vals.view("int64")
-    lo = -(-pd.Timestamp.min.value // ns_per_tick)
-    hi = pd.Timestamp.max.value // ns_per_tick
-    return lo <= ticks.min() and ticks.max() <= hi
-
-
-def _canon_column(s: pd.Series) -> list:
-    """Column-vectorized :func:`_canon_value`: dtype dispatch replaces a
-    per-cell Python call for the common dtypes (floats, ints, bools,
-    datetimes); object columns keep the per-value path. Semantics are
-    IDENTICAL to mapping _canon_value over the cells, including a null
-    timestamp staying ``pd.NaT``. ``NaT != NaT``, but ``pd.NaT`` is a
-    singleton and tuple and ``Counter`` equality check identity first, so
-    frames with null timestamps in the same rows compare equal, at any
-    datetime resolution."""
-    dt = s.dtype
-    if pd.api.types.is_float_dtype(dt):
-        return [None if v != v else ("__float__", v + 0.0) for v in s.tolist()]
-    if pd.api.types.is_integer_dtype(dt) or pd.api.types.is_bool_dtype(dt):
-        return s.tolist()
-    if pd.api.types.is_datetime64_any_dtype(dt):
-        # naive NaT-free datetimes canonicalize to int64 epoch-nanos —
-        # a C-speed conversion that is resolution-normalized (ns on both
-        # engines, so DuckDB's [us] and Spark's [ns] agree) and, within
-        # the multiset compare, verdict-identical to naive-datetime
-        # objects (both sides map through the same injection). Columns
-        # with NaT keep the object path, where each null stays the
-        # pd.NaT singleton; tz-aware or out-of-ns-range values fall back
-        # too.
-        if getattr(dt, "tz", None) is None and not s.isna().any():
-            vals = s.to_numpy()
-            if _in_ns_range(vals):
-                return [
-                    ("__dt__", v)  # tagged: a BIGINT column of epoch
-                    # nanos must not compare equal to a TIMESTAMP column
-                    for v in vals.astype("datetime64[ns]")
-                    .astype("int64").tolist()
-                ]
-        return [
-            v if v is pd.NaT else v.to_pydatetime().replace(tzinfo=None)
-            for v in s
-        ]
-    return [_canon_value(v) for v in s.tolist()]
+def _canon_type(t: pa.DataType, oracle: bool) -> pa.DataType:
+    """The type class each engine's pandas conversion gives a column, so
+    the verdicts match a typed hash of those values: integer widths agree,
+    int != float, BIGINT != TIMESTAMP, a Spark DECIMAL stays exact, a
+    DuckDB DATE reads as a timestamp while a Spark DATE stays a date.
+    Timestamps drop the tz=UTC Spark tags them with (the session runs in
+    UTC) and keep their unit, so no value past 2262 can wrap."""
+    if pa.types.is_integer(t):
+        return pa.int64()
+    if pa.types.is_floating(t):
+        return pa.float64()
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return pa.large_string()
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return pa.large_binary()
+    if pa.types.is_timestamp(t):
+        return pa.timestamp(t.unit)
+    if pa.types.is_date(t) and oracle:
+        return pa.timestamp("us")
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return pa.large_list(_canon_type(t.value_type, oracle))
+    if pa.types.is_map(t):
+        return pa.map_(_canon_type(t.key_type, oracle), _canon_type(t.item_type, oracle))
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _canon_type(f.type, oracle)) for f in t])
+    return t
 
 
-def _canon_multiset(pdf: pd.DataFrame):
-    """Order-insensitive canonical form as a Counter — no sort. Sorting
-    canonical tuples with a stringifying key was the suite's single
-    hottest spot (r15: ONE gapfill compare over a ~10M-row dense grid
-    took 767 s, nearly all in str()-keyed sorting + per-cell canon);
-    multiset equality gives the identical pass/fail verdict (two
-    multisets are equal iff their sorted lists are), and the sorted diff
-    is built only on the failure path for the error message."""
-    from collections import Counter
-
-    cols = sorted(pdf.columns)
-    return Counter(zip(*[_canon_column(pdf[c]) for c in cols])) if len(pdf) else Counter()
-
-
-def canon_rows(pdf: pd.DataFrame) -> list[tuple]:
-    cols = sorted(pdf.columns)
-    rows = [
-        tuple(_canon_value(v) for v in row)
-        for row in pdf[cols].itertuples(index=False, name=None)
-    ]
-    return sorted(rows, key=lambda r: tuple((x is None, str(type(x)), str(x)) for x in r))
+def _canon_values(a, oracle: bool):
+    """NaN -> NULL and -0.0 -> 0.0, also inside lists. Spark's toPandas
+    reads a list of integers that holds a NULL as a float array, DuckDB's
+    ``.df()`` as integers with None; that split is kept."""
+    if pa.types.is_floating(a.type):
+        return pc.add(pc.if_else(pc.is_nan(a), None, a), 0.0)
+    if pa.types.is_large_list(a.type):
+        a = pa.concat_arrays([a])  # from_arrays takes no sliced offsets with a mask
+        values = a.values
+        if not oracle and pa.types.is_integer(values.type) and values.null_count:
+            values = values.cast(pa.float64(), safe=False)
+        return pa.LargeListArray.from_arrays(
+            a.offsets, _canon_values(values, oracle), mask=a.is_null()
+        )
+    return a
 
 
-def prefetch_spark_pdfs(thunks: dict) -> dict:
-    """Run every thunk's DataFrame to pandas CONCURRENTLY and return
-    {name: pandas.DataFrame | Exception}.
+def _canon_column(col: pa.ChunkedArray, oracle: bool):
+    t = _canon_type(col.type, oracle)
+    # pandas reads an integer column with NULLs as float64, rounding past 2**53
+    lossy = pa.types.is_integer(t) and col.null_count > 0
+    col = col.cast(pa.float64() if lossy else t, safe=not lossy)
+    if pa.types.is_timestamp(t) and t.unit != "us":
+        try:  # one unit for both engines wherever that is exact
+            col = col.cast(pa.timestamp("us"))
+        except pa.ArrowInvalid:
+            pass
+    if pa.types.is_large_list(t):
+        col = col.combine_chunks()
+    col = _canon_values(col, oracle)
+    # pandas compares cells: a column without a value has no type to differ
+    return pa.nulls(len(col)) if col.null_count == len(col) else col
 
-    This is the r15 suite-duration fix (VERDICT r14 #2: the driver's
-    pytest run was killed mid-suite): the oracle-replay sweeps are
-    hundreds of INDEPENDENT tiny Spark queries whose cost is per-job
-    fixed latency, serialized by pytest — guide §2.6's exact case.
-    Spark's scheduler happily overlaps jobs submitted from driver
-    threads (later jobs back-fill executors a draining job leaves
-    idle), so a module-scoped fixture prefetches every query's result
-    through a small thread pool and each parametrized test just
-    compares its own precomputed frame against DuckDB. Per-test
-    granularity is unchanged: a query that raises has its exception
-    captured HERE and re-raised by the owning test (see
-    :func:`unwrap_prefetched`), not by the fixture. The pool is capped at
-    min(8, cores) to bound how many results are collected into driver
-    memory at once."""
+
+def _canon_sorted(t: pa.Table, oracle: bool) -> pa.Table:
+    """Canonical columns in name order, rows sorted on every column. pyarrow
+    cannot sort nested columns, so each sorts by the repr of its cells."""
+    t = pa.table({c: _canon_column(t.column(c), oracle) for c in sorted(t.column_names)})
+    keys = {
+        c: pa.array([repr(v) for v in col.to_pylist()], pa.large_string())
+        if pa.types.is_nested(col.type) else col
+        for c, col in zip(t.column_names, t.columns)
+    }
+    order = pc.sort_indices(pa.table(keys), sort_keys=[(c, "ascending") for c in keys])
+    return t.take(order)
+
+
+def _row_diff(got: pa.Table, want: pa.Table) -> str:
+    """The first differing rows of two sorted tables; only the first
+    block that differs becomes Python rows."""
+    block = 1024
+    for i in range(0, got.num_rows, block):
+        a, b = got.slice(i, block), want.slice(i, block)
+        if not a.equals(b):
+            bad = [
+                (i + j, x, y)
+                for j, (x, y) in enumerate(zip(a.to_pylist(), b.to_pylist()))
+                if x != y
+            ]
+            return f"sorted rows differ from block {i}; first (row, spark, duck): {bad[:3]}"
+    return "tables differ"
+
+
+def prefetch_spark_arrow(thunks: dict) -> dict:
+    """Collect every thunk's DataFrame with ``toArrow()`` CONCURRENTLY and
+    return {name: pyarrow.Table | Exception}.
+
+    The oracle sweeps are hundreds of independent tiny Spark queries
+    whose cost is per-job fixed latency; Spark overlaps jobs submitted
+    from driver threads, so a module-scoped fixture collects them through
+    a small thread pool and each parametrized test compares its own
+    table. A query that raises has its exception captured here and
+    re-raised by the owning test (see :func:`unwrap_prefetched`). The
+    pool is capped at min(8, cores) to bound how many results are
+    collected into driver memory at once."""
     from concurrent.futures import ThreadPoolExecutor
 
     def run(item):
         name, thunk = item
         try:
-            return name, thunk().toPandas()
+            return name, thunk().toArrow()
         except Exception as exc:  # noqa: BLE001 - re-raised per-test
             return name, exc
 
@@ -167,7 +166,7 @@ def unwrap_prefetched(results: dict, name: str):
     """Take one prefetched result out of ``results``, re-raising its
     captured exception so the failure surfaces in the owning
     parametrized test. The entry is popped, so a module's prefetched
-    frames are freed one by one as their tests compare them instead of
+    tables are freed one by one as their tests compare them instead of
     all living until the module fixture is torn down."""
     res = results.pop(name)
     if isinstance(res, Exception):
@@ -176,26 +175,21 @@ def unwrap_prefetched(results: dict, name: str):
 
 
 def compare_spark_vs_oracle(spark_df, con, sql: str, name: str = "?") -> None:
-    """``spark_df`` may be a DataFrame or an already-collected pandas
-    frame (the prefetch path)."""
-    spdf = spark_df if isinstance(spark_df, pd.DataFrame) else spark_df.toPandas()
-    ddf = con.execute(sql).df()
-    assert sorted(spdf.columns) == sorted(ddf.columns), (
-        f"{name}: column mismatch spark={sorted(spdf.columns)} duck={sorted(ddf.columns)}"
+    """``spark_df`` may be a DataFrame or its already-collected
+    ``toArrow()`` table (the prefetch path)."""
+    got = spark_df if isinstance(spark_df, pa.Table) else spark_df.toArrow()
+    want = _oracle_arrow(con, sql)
+    assert sorted(got.column_names) == sorted(want.column_names), (
+        f"{name}: column mismatch spark={sorted(got.column_names)} "
+        f"duck={sorted(want.column_names)}"
     )
-    assert len(spdf) == len(ddf), f"{name}: row count spark={len(spdf)} duck={len(ddf)}"
-    # fast path: multiset equality (same verdict as the sorted zip-wise
-    # compare, without the stringify-keyed sort); the detailed sorted
-    # diff runs only when something actually differs — or when a cell is
-    # unhashable (e.g. a map-typed column), where only the slow path works
-    try:
-        if _canon_multiset(spdf) == _canon_multiset(ddf):
-            return
-    except TypeError:
-        pass
-    srows, drows = canon_rows(spdf), canon_rows(ddf)
-    if srows == drows:
-        return
-    n_bad = sum(1 for a, b in zip(srows, drows) if a != b)
-    examples = [(a, b) for a, b in zip(srows, drows) if a != b][:3]
-    raise AssertionError(f"{name}: {n_bad}/{len(srows)} rows differ; first: {examples}")
+    assert got.num_rows == want.num_rows, (
+        f"{name}: row count spark={got.num_rows} duck={want.num_rows}"
+    )
+    got, want = _canon_sorted(got, oracle=False), _canon_sorted(want, oracle=True)
+    types = [
+        (f.name, str(f.type), str(g.type))
+        for f, g in zip(got.schema, want.schema) if f.type != g.type
+    ]
+    assert not types, f"{name}: column types differ (column, spark, duck): {types}"
+    assert got.equals(want), f"{name}: {_row_diff(got, want)}"

@@ -19,8 +19,9 @@ value other than the default. A literal equal to the default literal, or
 an expression with the default's source text (``k=DEFAULT_SHINGLE_K``),
 is the default. ``**name``, where ``name`` is bound once in the calling
 scope to a ``dict(...)`` call or a ``{...}`` display with literal keys,
-passes those items; any other ``*args`` or ``**kwargs`` sets every
-parameter.
+passes those items. ``*g(...)``, where every ``return`` of the package
+function ``g`` is a tuple display of n items, passes n positional
+arguments; any other ``*args`` or ``**kwargs`` sets every parameter.
 """
 from __future__ import annotations
 
@@ -127,6 +128,21 @@ def _direct(call: ast.Call) -> ast.Call:
     return ast.Call(func=fn, args=call.args[1:], keywords=call.keywords)
 
 
+def _tuple_width(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> int | None:
+    """n when every ``return`` of ``fn`` (not of functions nested in it)
+    is a tuple display of n items."""
+    widths, todo = set(), list(fn.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, ast.Return):
+            v = node.value
+            tup = isinstance(v, ast.Tuple) and not any(isinstance(e, ast.Starred) for e in v.elts)
+            widths.add(len(v.elts) if tup else None)
+        elif not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)):
+            todo.extend(ast.iter_child_nodes(node))
+    return widths.pop() if len(widths) == 1 else None
+
+
 def _callees(func: ast.expr, aliases: dict[str, str], bound: dict[str, ast.expr]) -> list[str]:
     if isinstance(func, ast.Attribute):
         return [func.attr]
@@ -134,6 +150,21 @@ def _callees(func: ast.expr, aliases: dict[str, str], bound: dict[str, ast.expr]
         return []
     names = _dispatched(bound.get(func.id)) or [func.id]
     return [aliases.get(n, n) for n in names]
+
+
+def _expand_stars(call: ast.Call, widths: dict[str, set], aliases: dict[str, str],
+                  bound: dict[str, ast.expr]) -> ast.Call:
+    """``*g(...)`` as n positional arguments when every package function
+    the call reaches has tuple width n (``widths``: name -> widths)."""
+    args = []
+    for a in call.args:
+        found = set()
+        if isinstance(a, ast.Starred) and isinstance(a.value, ast.Call):
+            for name in _callees(a.value.func, aliases, bound):
+                found |= widths.get(name, {None})
+        n = found.pop() if len(found) == 1 else None
+        args += [a.value] * n if n is not None else [a]
+    return ast.Call(func=call.func, args=args, keywords=call.keywords)
 
 
 def _set_by(call: ast.Call, fn: ast.FunctionDef, bound: dict[str, ast.expr]) -> set[str] | None:
@@ -173,13 +204,14 @@ def unset_options(sources: dict[str, str] | None = None) -> list[str]:
     if sources is None:
         sources = {str(p.relative_to(ROOT)): p.read_text() for p in _files()}
     trees = {p: ast.parse(text) for p, text in sources.items()}
-    defs = defaultdict(list)
+    defs, widths = defaultdict(list), defaultdict(set)
     for p, tree in trees.items():
         if p.startswith(PACKAGE + "/"):
             for node in tree.body:
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
-                        and not node.name.startswith("_"):
-                    defs[node.name].append((p, node))
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    widths[node.name].add(_tuple_width(node))
+                    if not node.name.startswith("_"):
+                        defs[node.name].append((p, node))
     set_params: dict[tuple, set[str] | None] = defaultdict(set)
     for tree in trees.values():
         aliases = _aliases(tree)
@@ -188,7 +220,7 @@ def unset_options(sources: dict[str, str] | None = None) -> list[str]:
             if id(scope) not in bound_cache:
                 bound_cache[id(scope)] = _bindings(scope)
             bound = bound_cache[id(scope)]
-            call = _direct(call)
+            call = _expand_stars(_direct(call), widths, aliases, bound)
             for name in _callees(call.func, aliases, bound):
                 for p, fn in defs.get(name, ()):
                     key = (p, fn.name, fn.lineno)
@@ -238,6 +270,14 @@ def test_scan_compares_values_and_resolves_aliases():
 
         def load(path, fmt="json", strict=True):
             pass
+
+        def index(df):
+            if df:
+                return df, 1
+            return df, 2
+
+        def search(idx, stats, terms, k1=1.2, b=0.75):
+            pass
     ''')
     caller = textwrap.dedent('''
         from ehr_data_pipeline_spark.lib import pairs, stats as st
@@ -249,7 +289,11 @@ def test_scan_compares_values_and_resolves_aliases():
             write(df, "p", mode="append")
             opts = dict(strict=True)
             pool.submit(wrap(df)(load), "p", "csv", **opts)
+            search(*index(df), ["t"], b=0.75)
     ''')
     unset = {u.split()[1] for u in unset_options(
         {f"{PACKAGE}/lib.py": lib, "tools/caller.py": caller})}
-    assert unset == {"pairs.threshold", "pairs.k", "pairs.keys", "stats.mode", "load.strict"}
+    assert unset == {
+        "pairs.threshold", "pairs.k", "pairs.keys", "stats.mode", "load.strict",
+        "search.k1", "search.b",
+    }

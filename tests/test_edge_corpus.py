@@ -28,7 +28,7 @@ import pytest
 from ehr_data_pipeline_spark.queries import REGISTRY
 from tests.oracle_utils import (
     compare_spark_vs_oracle,
-    prefetch_spark_pdfs,
+    prefetch_spark_arrow,
     unwrap_prefetched,
 )
 
@@ -168,7 +168,7 @@ def test_sweep_covers_the_expected_surface():
 def edge_doc_results(spark, edge_dir):
     # all sweep queries run CONCURRENTLY once per module (guide §2.6);
     # each test below just compares its own prefetched frame
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, edge_dir)) for n in DOC_ONLY}
     )
 
@@ -297,7 +297,7 @@ def test_events_sweep_covers_the_expected_surface():
 
 @pytest.fixture(scope="module")
 def edge_events_results(spark, edge_events_dir):
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, edge_events_dir))
          for n in EVENTS_ONLY}
     )
@@ -492,7 +492,7 @@ def test_relational_sweep_covers_the_expected_surface():
 @pytest.fixture(scope="module")
 def rel_results(spark, rel_corpus):
     corpus, dir_, con = rel_corpus
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, dir_)) for n in RELATIONAL_ONLY}
     )
 
@@ -592,7 +592,7 @@ def test_embeddings_sweep_covers_the_expected_surface():
 
 @pytest.fixture(scope="module")
 def edge_emb_results(spark, edge_emb_dir):
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, edge_emb_dir))
          for n in EMBEDDINGS_ONLY}
     )
@@ -735,7 +735,7 @@ def test_star_sweep_covers_the_expected_surface():
 @pytest.fixture(scope="module")
 def star_results(spark, star_corpus):
     dir_, con = star_corpus
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, dir_)) for n in STAR_ONLY}
     )
 
@@ -888,7 +888,7 @@ def empty_family_dir(tmp_path_factory):
 def empty_family_results(spark, empty_family_dir):
     dir_, con = empty_family_dir
     names = sorted(set(DOC_ONLY) | set(EVENTS_ONLY) | set(EMBEDDINGS_ONLY))
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, dir_)) for n in names}
     )
 

@@ -11,7 +11,7 @@ from ehr_data_pipeline_spark.queries import REGISTRY
 from tests.oracle_utils import (
     compare_spark_vs_oracle,
     duckdb_con,
-    prefetch_spark_pdfs,
+    prefetch_spark_arrow,
     unwrap_prefetched,
 )
 
@@ -32,7 +32,7 @@ def oracle_results(spark, sf_dir):
     # would otherwise serialize; the r15 fix for the driver's killed
     # suite run, VERDICT r14 #2); each test below compares its own
     # prefetched frame, so per-query reporting is unchanged
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir)) for n in NAMES}
     )
 
@@ -225,7 +225,7 @@ def con_sf01():
 
 @pytest.fixture(scope="module")
 def tie_prone_results(spark):
-    return prefetch_spark_pdfs(
+    return prefetch_spark_arrow(
         {n: (lambda n=n: REGISTRY[n].fn(spark, SF01_DIR)) for n in TIE_PRONE}
     )
 
@@ -271,115 +271,100 @@ def test_substring_dedup_oracle_preserves_empty_docs(spark, tmp_path):
     con.close()
 
 
-# --- oracle comparator fast path (suite-duration fix, VERDICT r14 #2) ------
+# --- the oracle comparator's verdicts -------------------------------------
 
-def test_canon_multiset_verdicts_match_slow_path():
-    """The multiset fast path must agree with the sorted zip-wise compare:
-    equal frames pass, reordered frames pass, value/type differences fail
-    (including the int-vs-float and timestamp-vs-bigint divergence classes
-    the driver's typed hashing catches)."""
-    import pandas as pd
+_TS = "TIMESTAMP'2024-01-01 00:00:00'"
 
-    from tests.oracle_utils import _canon_multiset, canon_rows
+# (id, Spark SQL, DuckDB oracle SQL, whether the comparator must pass)
+COMPARATOR_VERDICTS = [
+    ("reordered-rows",
+     "SELECT * FROM VALUES (1L, 'a'), (2L, 'b'), (3L, NULL) AS t(k, v)",
+     "SELECT * FROM (VALUES (3::BIGINT, NULL), (1, 'a'), (2, 'b')) t(k, v)", True),
+    ("one-value-differs",
+     "SELECT * FROM VALUES (1L, 'a'), (2L, 'b') AS t(k, v)",
+     "SELECT * FROM (VALUES (1::BIGINT, 'a'), (2, 'X')) t(k, v)", False),
+    ("column-names-differ",
+     "SELECT 1L AS k", "SELECT 1::BIGINT AS j", False),
+    ("row-count-differs",
+     "SELECT * FROM VALUES (1L), (1L) AS t(k)", "SELECT 1::BIGINT AS k", False),
+    ("int-widths-agree",
+     "SELECT CAST(1 AS INT) AS k, CAST(2 AS SMALLINT) AS s",
+     "SELECT 1::BIGINT AS k, 2::TINYINT AS s", True),
+    ("int-vs-float",
+     "SELECT 1L AS k", "SELECT 1.0::DOUBLE AS k", False),
+    ("bigint-vs-duckdb-hugeint",
+     "SELECT 1L AS k", "SELECT 1::HUGEINT AS k", False),
+    ("bigint-vs-duckdb-decimal",
+     "SELECT 1L AS k", "SELECT 1::DECIMAL(18, 0) AS k", False),
+    ("duckdb-decimal-reads-as-float",
+     "SELECT 1.5D AS x", "SELECT 1.5::DECIMAL(10, 2) AS x", True),
+    ("spark-decimal-stays-exact",
+     "SELECT CAST(1.5 AS DECIMAL(10, 2)) AS x", "SELECT 1.5::DECIMAL(10, 2) AS x", False),
+    ("empty-columns-carry-no-type",
+     "SELECT 1L AS k WHERE false", "SELECT 1.0::DOUBLE AS k WHERE false", True),
+    ("all-null-columns-carry-no-type",
+     "SELECT CAST(NULL AS STRING) AS s", "SELECT NULL::DOUBLE AS s", True),
+    ("int-column-with-null-reads-as-float",
+     "SELECT * FROM VALUES (1L), (NULL) AS t(k)",
+     "SELECT * FROM (VALUES (1.0::DOUBLE), (NULL)) t(k)", True),
+    ("int-past-2p53-column-with-null",
+     "SELECT * FROM VALUES (1152921504606846977L), (NULL) AS t(k)",
+     "SELECT * FROM (VALUES (1152921504606846977::BIGINT), (NULL)) t(k)", True),
+    ("nan-is-null",
+     "SELECT * FROM VALUES (1L, CAST('NaN' AS DOUBLE)), (2L, 0.5D) AS t(k, f)",
+     "SELECT * FROM (VALUES (2::BIGINT, 0.5::DOUBLE), (1, NULL)) t(k, f)", True),
+    ("nan-is-null-inside-lists",
+     "SELECT array(1.5D, CAST('NaN' AS DOUBLE)) AS l",
+     "SELECT [1.5, NULL]::DOUBLE[] AS l", True),
+    ("spark-int-list-with-null-reads-as-float",
+     "SELECT array(1L, NULL) AS l", "SELECT [1, NULL]::BIGINT[] AS l", False),
+    ("bigint-vs-timestamp",
+     "SELECT 1704067200000000L AS t", "SELECT TIMESTAMP '2024-01-01' AS t", False),
+    ("us-vs-ns-timestamps-with-a-null",
+     f"SELECT * FROM VALUES (1L, {_TS}), (2L, NULL) AS t(k, t)",
+     "SELECT * FROM (VALUES (2::BIGINT, NULL::TIMESTAMP_NS),"
+     " (1, '2024-01-01'::TIMESTAMP_NS)) t(k, t)", True),
+    ("null-moved-to-another-row",
+     f"SELECT * FROM VALUES (1L, {_TS}), (2L, NULL) AS t(k, t)",
+     "SELECT * FROM (VALUES (1::BIGINT, NULL::TIMESTAMP),"
+     " (2, '2024-01-01'::TIMESTAMP)) t(k, t)", False),
+    ("duckdb-date-reads-as-timestamp",
+     f"SELECT {_TS} AS d", "SELECT DATE '2024-01-01' AS d", True),
+    ("spark-date-stays-date",
+     "SELECT DATE'2024-01-01' AS d", "SELECT DATE '2024-01-01' AS d", False),
+    ("timestamp-past-2262",
+     "SELECT TIMESTAMP'2300-01-01 00:00:00' AS t", "SELECT TIMESTAMP '2300-01-01' AS t", True),
+    ("timestamp-past-2262-vs-its-ns-wrap",
+     "SELECT TIMESTAMP'2300-01-01 00:00:00' AS t",
+     "SELECT '1715-06-13 00:25:26.290448384'::TIMESTAMP_NS AS t", False),
+    ("maps-equal",
+     "SELECT * FROM VALUES (1L, map('a', 1L)), (2L, map('b', 2L)) AS t(k, m)",
+     "SELECT * FROM (VALUES (2::BIGINT, MAP {'b': 2::BIGINT}),"
+     " (1, MAP {'a': 1::BIGINT})) t(k, m)", True),
+    ("one-map-cell-differs",
+     "SELECT * FROM VALUES (1L, map('a', 1L)), (2L, map('b', 2L)) AS t(k, m)",
+     "SELECT * FROM (VALUES (1::BIGINT, MAP {'a': 1::BIGINT}),"
+     " (2, MAP {'b': 3::BIGINT})) t(k, m)", False),
+]
 
-    a = pd.DataFrame({
-        "i": [1, 2, 3],
-        "f": [1.5, float("nan"), 0.25],
-        "s": ["x", None, "z"],
-        "t": pd.to_datetime(["2024-01-01", "1969-12-31", "2200-06-15"]),
-    })
-    # reordered rows: equal multiset
-    b = a.iloc[[2, 0, 1]].reset_index(drop=True)
-    assert _canon_multiset(a) == _canon_multiset(b)
-    # us-resolution datetimes equal ns-resolution ones
-    c = b.copy()
-    c["t"] = c["t"].astype("datetime64[us]")
-    assert _canon_multiset(a) == _canon_multiset(c)
-    # value difference
-    d = a.copy(); d.loc[0, "i"] = 99
-    assert _canon_multiset(a) != _canon_multiset(d)
-    # int-valued float column must NOT equal an int column (driver-typed)
-    e = a.copy(); e["i"] = e["i"].astype("float64")
-    assert _canon_multiset(a) != _canon_multiset(e)
-    # epoch-nanos bigint must NOT equal a timestamp column
-    f = a.copy(); f["t"] = f["t"].astype("datetime64[ns]").astype("int64")
-    assert _canon_multiset(a) != _canon_multiset(f)
-    # NaN compares equal to NaN (canonicalized to None), like the old path
-    g = a.iloc[[1, 0, 2]].reset_index(drop=True)
-    assert _canon_multiset(a) == _canon_multiset(g)
-    # a null timestamp matches itself ([ns] vs [us], reordered): pd.NaT is
-    # a singleton and tuple/Counter equality checks identity first
-    n = a.copy(); n.loc[1, "t"] = pd.NaT
-    m = n.iloc[[2, 0, 1]].reset_index(drop=True)
-    m["t"] = m["t"].astype("datetime64[us]")
-    assert _canon_multiset(n) == _canon_multiset(m)
-    assert canon_rows(n) == canon_rows(m)
-    # ... but not once the null moves to another row
-    o = n.copy(); o.loc[1, "t"] = a.loc[1, "t"]; o.loc[0, "t"] = pd.NaT
-    assert _canon_multiset(n) != _canon_multiset(o)
-    assert canon_rows(n) != canon_rows(o)
 
-
-def test_compare_spark_vs_oracle_accepts_pandas(spark):
-    """The prefetch path hands compare_spark_vs_oracle an already-
-    collected pandas frame; verdicts must match the DataFrame path."""
+@pytest.mark.parametrize(
+    "spark_sql, duck_sql, same",
+    [c[1:] for c in COMPARATOR_VERDICTS],
+    ids=[c[0] for c in COMPARATOR_VERDICTS],
+)
+def test_comparator_verdicts(spark, spark_sql, duck_sql, same):
+    """The comparator's verdict on one Spark result against one oracle,
+    given both as a DataFrame and as the prefetched ``toArrow()`` table.
+    The type rules follow what each engine's pandas conversion reads."""
     import duckdb
-    import pytest as _pytest
-
-    from tests.oracle_utils import compare_spark_vs_oracle
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    con = duckdb.connect()
-    compare_spark_vs_oracle(df.toPandas(), con,
-                            "SELECT * FROM (VALUES (CAST(2 AS BIGINT), 'b'), (CAST(1 AS BIGINT), 'a')) t(k, v)",
-                            name="pdf-path")
-    with _pytest.raises(AssertionError):
-        compare_spark_vs_oracle(df.toPandas(), con,
-                                "SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'a'), (CAST(2 AS BIGINT), 'X')) t(k, v)",
-                                name="pdf-path-mismatch")
-    con.close()
-
-
-def test_compare_unhashable_cells_uses_sorted_rows():
-    """A MAP column has unhashable (dict) cells, so the multiset fast
-    path raises TypeError and the sorted-row compare decides. Equal
-    results must pass there; a one-cell difference must still fail,
-    counting at least one differing row."""
-    import duckdb
-    import pytest as _pytest
-
-    con = duckdb.connect()
-    sql = ("SELECT * FROM (VALUES (CAST(1 AS BIGINT), MAP {'a': CAST(1 AS BIGINT)}),"
-           " (CAST(2 AS BIGINT), MAP {'b': CAST(2 AS BIGINT)})) t(k, m)")
-    same = con.execute(sql).df().iloc[::-1].reset_index(drop=True)
-    compare_spark_vs_oracle(same, con, sql, name="map-equal")
-    diff = con.execute(sql).df()
-    diff.at[1, "m"] = {"key": ["b"], "value": [3]}
-    with _pytest.raises(AssertionError, match=r"map-diff: [1-9]\d*/2 rows differ"):
-        compare_spark_vs_oracle(diff, con, sql, name="map-diff")
-    con.close()
-
-
-def test_compare_timestamps_past_ns_range(spark):
-    """DuckDB returns TIMESTAMP as datetime64[us]; a value past 2262
-    does not fit datetime64[ns], and numpy's cast wraps it silently.
-    The comparator must fall back to datetime objects there, so the same
-    value from Spark compares equal and the wrapped value does not."""
-    import duckdb
-    import pandas as pd
-
-    from tests.oracle_utils import _canon_multiset
 
     con = duckdb.connect()
-    sql = "SELECT TIMESTAMP '2300-01-01' AS t"
-    # Arrow's toPandas cannot hold this value in datetime64[ns] either,
-    # so the Spark side is collected as rows
-    rows = spark.sql("SELECT TIMESTAMP '2300-01-01 00:00:00' AS t").collect()
-    compare_spark_vs_oracle(
-        pd.DataFrame([r.asDict() for r in rows]), con, sql, name="ts-2300"
-    )
-    wrapped = pd.DataFrame(
-        {"t": pd.to_datetime(["1715-06-13 00:25:26.290448384"])}
-    )
-    assert _canon_multiset(con.execute(sql).df()) != _canon_multiset(wrapped)
+    df = spark.sql(spark_sql)
+    for got in (df, df.toArrow()):
+        if same:
+            compare_spark_vs_oracle(got, con, duck_sql, name="case")
+        else:
+            with pytest.raises(AssertionError, match="^case: "):
+                compare_spark_vs_oracle(got, con, duck_sql, name="case")
     con.close()

@@ -9,11 +9,14 @@ from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.queries import REGISTRY
 from ehr_data_pipeline_spark.streaming import (
+    EWMA_OUTPUT_SCHEMA,
+    _ewma_fold,
     drain,
     hourly_event_counts,
     read_events_stream,
     run_to_memory,
     sessionize,
+    user_value_ewma_stream,
 )
 from ehr_data_pipeline_spark.tables import load_table
 
@@ -169,19 +172,35 @@ def test_fhir_ingest_stream_matches_batch(checkpointed):
         assert row == want[rid]
 
 
+def _ewma_batch(events):
+    """Batch twin of ``user_value_ewma_stream`` (``applyInPandas``, same
+    fold): an ``availableNow`` drain over a static table must produce
+    exactly these rows."""
+    import pandas as pd
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("ts")
+        n, ewma = _ewma_fold(pdf["value"].to_list(), 0, None)
+        return pd.DataFrame(
+            [{
+                "user_id": pdf["user_id"].iloc[0],
+                "n_events": n,
+                "ewma": ewma,
+                "last_event_us": int(pdf["ts"].astype("int64").max()) // 1000,
+            }]
+        )
+
+    return events.groupBy("user_id").applyInPandas(fold, EWMA_OUTPUT_SCHEMA)
+
+
 def test_user_value_ewma_stream_matches_batch_twin(checkpointed):
     """availableNow drain of the stateful EWMA operator == batch twin
     (same fold code path, so equality is exact, not approximate)."""
-    from ehr_data_pipeline_spark.streaming import (
-        user_value_ewma_batch,
-        user_value_ewma_stream,
-    )
-
     spark = checkpointed
     stream = user_value_ewma_stream(read_events_stream(spark, SF))
     run_to_memory(stream, "ewma_stream", output_mode="update")
     got = _rows(spark.sql("SELECT * FROM ewma_stream"), ["user_id"])
-    want = _rows(user_value_ewma_batch(load_table(spark, SF, "events")), ["user_id"])
+    want = _rows(_ewma_batch(load_table(spark, SF, "events")), ["user_id"])
     assert set(got) == set(want) and len(got) > 0
     for k, r in got.items():
         assert r["n_events"] == want[k]["n_events"]
@@ -197,11 +216,6 @@ def test_user_value_ewma_state_accumulates_across_microbatches(
     whole point of the state store), matching a batch fold over the union."""
     import os
     import time as _time
-
-    from ehr_data_pipeline_spark.streaming import (
-        user_value_ewma_batch,
-        user_value_ewma_stream,
-    )
 
     spark = checkpointed
     events = load_table(spark, SF, "events").filter(F.col("user_id") < 20)
@@ -237,7 +251,7 @@ def test_user_value_ewma_state_accumulates_across_microbatches(
         ),
         ["user_id"],
     )
-    want = _rows(user_value_ewma_batch(events), ["user_id"])
+    want = _rows(_ewma_batch(events), ["user_id"])
     assert set(final) == set(want)
     for k, r in final.items():
         assert r["n_events"] == want[k]["n_events"]
